@@ -169,6 +169,59 @@ def summary_payload(total: float, sf: float, n_queries: int, reps: int,
     return payload
 
 
+def _warm_streaming(spark, sf_dir: str, queries) -> None:
+    """One throwaway s01 run: the micro-batch and state-store code paths
+    JIT on first use, and the s-family's walls converge ~2.5x from cold
+    to warm (s25: 25.6 -> 10.4 s over reps in one session)."""
+    queries["s01_stream_tumbling"].builder(spark, sf_dir) \
+        .write.format("noop").mode("overwrite").save()
+
+
+def _warm_stateful_worker(spark) -> None:
+    """A 256-row micro-stream through applyInPandasWithState: s14/s15's
+    floor is that Python path (daemon fork, Arrow codec, state protocol),
+    which the JVM-side s01 warm-up never touches."""
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.plans._util import stream_state_partitions
+    from etl_docker_spark.streaming.stateful import running_user_totals
+    wdir = tempfile.mkdtemp(prefix="bench-pywarm-")
+    try:
+        src = os.path.join(wdir, "src")
+        (spark.range(256)
+         .select((F.col("id") % 16).alias("user_id"),
+                 F.timestamp_micros(F.col("id") * 1_000_000).alias("ts"),
+                 (F.col("id") * 1.0).alias("value"))
+         .write.parquet(src))
+        probe = spark.read.parquet(src)
+        with stream_state_partitions(spark, 4):
+            # both stateful code paths: plain NoTimeout update AND the
+            # watermark + EventTimeTimeout TTL machinery (s14/s15's exact
+            # shape — timeout registration and eviction JIT separately)
+            for kwargs in ({}, {"ttl_ms": 60_000,
+                                "watermark_delay": "0 seconds"}):
+                stream = spark.readStream.schema(probe.schema).parquet(src)
+                q = (running_user_totals(stream, **kwargs)
+                     .writeStream.outputMode("update").format("noop")
+                     .trigger(availableNow=True).start())
+                q.awaitTermination(120)
+                q.stop()
+    finally:
+        shutil.rmtree(wdir, ignore_errors=True)
+
+
+def _warm_map_in_pandas(spark) -> None:
+    """A 256-row batch through mapInPandas: the batch operator (d12/d40's
+    feature-extraction shape) JITs its own ArrowEvalPython pipeline, apart
+    from the stateful worker above."""
+    def _identity_batches(batches):
+        yield from batches
+
+    (spark.range(256).selectExpr("id", "cast(id as double) v")
+     .mapInPandas(_identity_batches, "id long, v double")
+     .write.format("noop").mode("overwrite").save())
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -204,91 +257,20 @@ def main() -> None:
     for name in TABLES:
         load_table(spark, sf_dir, name).limit(1).count()
 
-    # Pre-warm the STREAMING machinery: the micro-batch/state-store code
-    # paths JIT-compile on first use and the s-family's walls converge
-    # ~2.5x from cold to warm (s25 measured 25.6 -> 10.4 s over reps in
-    # one session; SCALE.md round-7 diagnosis). One throwaway stream run
-    # here moves every s-query's measurement toward its warm floor, so a
-    # single bench run approximates what the cross-run min-merge
-    # previously had to recover. Disable: SPARK_GRAFT_BENCH_STREAM_WARMUP=0
-    if os.environ.get("SPARK_GRAFT_BENCH_STREAM_WARMUP", "1") != "0":
-        warm = QUERIES.get("s01_stream_tumbling")
-        if warm is not None:
-            try:
-                warm.builder(spark, sf_dir).write.format("noop") \
-                    .mode("overwrite").save()
-                print("[bench] stream machinery pre-warmed (s01)",
-                      file=sys.stderr)
-            except Exception as exc:  # never let warmup kill the bench
-                print(f"[bench] stream pre-warm failed: {exc}",
-                      file=sys.stderr)
-
-    # Pre-warm the PYTHON STATEFUL WORKER pool: s14/s15's floor is the
-    # applyInPandasWithState path (Python daemon fork + Arrow codec +
-    # state-protocol code), which the JVM-side s01 pre-warm above never
-    # touches — their first timed run otherwise absorbs the cold start
-    # that the round-7 min-merge had to flush across runs. One throwaway
-    # 256-row micro-stream through the same operator warms it in ~2 s.
-    # Disable: SPARK_GRAFT_BENCH_PYWORKER_WARMUP=0
-    if os.environ.get("SPARK_GRAFT_BENCH_PYWORKER_WARMUP", "1") != "0":
+    # Pre-warm the code paths that JIT-compile on first use, so no timed
+    # query absorbs a cold start. Each warm-up is best-effort.
+    warmups = (
+        ("stream machinery (s01)",
+         lambda: _warm_streaming(spark, sf_dir, QUERIES)),
+        ("python stateful worker", lambda: _warm_stateful_worker(spark)),
+        ("mapInPandas worker", lambda: _warm_map_in_pandas(spark)),
+    )
+    for label, warm in warmups:
         try:
-            from pyspark.sql import functions as F
-
-            from etl_docker_spark.plans._util import stream_state_partitions
-            from etl_docker_spark.streaming.stateful import \
-                running_user_totals
-            wdir = tempfile.mkdtemp(prefix="bench-pywarm-")
-            try:
-                src = os.path.join(wdir, "src")
-                (spark.range(256)
-                 .select((F.col("id") % 16).alias("user_id"),
-                         F.timestamp_micros(F.col("id") * 1_000_000)
-                         .alias("ts"),
-                         (F.col("id") * 1.0).alias("value"))
-                 .write.parquet(src))
-                probe = spark.read.parquet(src)
-                with stream_state_partitions(spark, 4):
-                    # both stateful code paths: plain NoTimeout update AND
-                    # the watermark + EventTimeTimeout TTL machinery
-                    # (s14/s15's exact shape — timeout registration and
-                    # eviction JIT separately from the plain update)
-                    for kwargs in ({}, {"ttl_ms": 60_000,
-                                        "watermark_delay": "0 seconds"}):
-                        stream = (spark.readStream
-                                  .schema(probe.schema).parquet(src))
-                        q = (running_user_totals(stream, **kwargs)
-                             .writeStream.outputMode("update").format("noop")
-                             .trigger(availableNow=True).start())
-                        q.awaitTermination(120)
-                        q.stop()
-                print("[bench] python stateful worker pre-warmed",
-                      file=sys.stderr)
-            finally:
-                shutil.rmtree(wdir, ignore_errors=True)
-        except Exception as exc:  # never let warmup kill the bench
-            print(f"[bench] python worker pre-warm failed: {exc}",
-                  file=sys.stderr)
-
-    # Pre-warm the PLAIN mapInPandas Python-worker path: the stateful
-    # pre-warm above forks its own daemon workers, but the batch
-    # mapInPandas operator (d12/d40's feature-extraction shape) JITs a
-    # separate JVM-side ArrowEvalPython/MapInPandas pipeline — the
-    # driver's round-8 run read d12 at 12.2 s vs the committed 0.84 s
-    # floor, the same cold-start artifact class (VERDICT r8 item 3).
-    # One throwaway 256-row micro-batch retires it in ~1 s.
-    # Disable: SPARK_GRAFT_BENCH_MAPINPANDAS_WARMUP=0
-    if os.environ.get("SPARK_GRAFT_BENCH_MAPINPANDAS_WARMUP", "1") != "0":
-        try:
-            def _identity_batches(batches):
-                yield from batches
-
-            (spark.range(256).selectExpr("id", "cast(id as double) v")
-             .mapInPandas(_identity_batches, "id long, v double")
-             .write.format("noop").mode("overwrite").save())
-            print("[bench] mapInPandas worker pre-warmed", file=sys.stderr)
-        except Exception as exc:  # never let warmup kill the bench
-            print(f"[bench] mapInPandas pre-warm failed: {exc}",
-                  file=sys.stderr)
+            warm()
+            print(f"[bench] {label} pre-warmed", file=sys.stderr)
+        except Exception as exc:  # never let a warm-up kill the bench
+            print(f"[bench] {label} pre-warm failed: {exc}", file=sys.stderr)
 
     # best-of-N per query: scheduling noise on a busy box is +/- 1-2 s,
     # which would otherwise dominate sub-second queries

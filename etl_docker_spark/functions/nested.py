@@ -11,9 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+from etl_docker_spark.functions.dates import _c
 
 
 def fiscal_address_field(addresses: Column | str, field: str,

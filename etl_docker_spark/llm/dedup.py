@@ -92,23 +92,6 @@ def shingles_of(tokens: Column, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> list[Column]:
-    """MinHash signature columns over a pre-hashed shingle array.
-
-    Expects the BASE-HASH array (see `_base_hash`); per hash j takes
-    min((A_j*h + B_j) mod P) — pure integer arithmetic over longs.
-    """
-    def rehash(j: int):
-        a, b = MINHASH_COEFFS[j]
-        # single-arg lambda: PySpark passes (element, index) to 2-arg lambdas
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P)
-
-    return [
-        F.array_min(F.transform(shingles, rehash(j))).alias(f"mh{j}")
-        for j in range(num_hashes)
-    ]
-
-
 def shingle_rows(df: DataFrame, id_col: str, text_col: str,
                  n: int = 3) -> DataFrame:
     """Codegen-friendly shingling: one (doc, s) row per n-gram OCCURRENCE.

@@ -227,7 +227,3 @@ def clear_session_memo() -> None:
         _CACHE.clear()
         _LOCKS.clear()
         _FP_CACHE.clear()
-
-
-def clear_disk_cache() -> None:
-    shutil.rmtree(_cache_root(), ignore_errors=True)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_docker_spark.functions.dates import _c
+
 # BPE-ish token pattern: word runs or single non-word non-space symbols.
 TOKEN_PATTERN = r"\w+|[^\w\s]"
 
@@ -20,10 +22,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "es": ("el", "la", "de", "que", "y", "en", "los", "se", "del", "un"),
     "fr": ("le", "la", "de", "et", "les", "des", "un", "une", "du", "est"),
 }
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def tokens_of(col: Column | str, pattern: str = TOKEN_PATTERN) -> Column:

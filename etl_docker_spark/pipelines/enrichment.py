@@ -26,49 +26,11 @@ def codigo_proveedor(df: DataFrame, proveedores: DataFrame) -> DataFrame:
     return enrich(df, dim, on=["Proveedor", "ID_RAZON_SOCIAL"], how="inner")
 
 
-def codigo_proveedor_from_fantasia(df: DataFrame, proveedores: DataFrame,
-                                   col_prov: str, col_rz: str) -> DataFrame:
-    """J1 variant (:200-208): join by fantasy name."""
-    dim = proveedores.select(
-        "CODIGO_PROVEEDOR",
-        F.col("NOMBRE_FANTASIA_PROVEEDOR").alias(col_prov),
-        F.col("ID_RAZON_SOCIAL").alias(col_rz))
-    return enrich(df, dim, on=[col_prov, col_rz], how="inner")
-
-
 def rz_from_oc_prefix(df: DataFrame, col_oc: str) -> DataFrame:
     """F2+F6 (:209-214): company id from the OC number's 4-char prefix."""
     prefix = F.substring(F.col(col_oc), 1, 4)
     return df.withColumn(
         "ID_RAZON_SOCIAL", remap_values(prefix, {"0001": "1", "0014": "2"}).cast("int"))
-
-
-def id_metodo_pago(df: DataFrame, metodos_pago: DataFrame, col_name: str) -> DataFrame:
-    """J2 (:215-223): payment-method description -> id, inner."""
-    dim = metodos_pago.select(
-        "ID_METODO_PAGO", F.col("METODO_PAGO_DESCRIPCION").alias(col_name))
-    return enrich(df, dim, on=[col_name], how="inner")
-
-
-def tipo_y_subtipo_proveedor(df: DataFrame, tipos: DataFrame, subtipos: DataFrame) -> DataFrame:
-    """J3/J7 (:233-246): dim-side join (tipo x subtipo) then left merge."""
-    dim = (subtipos.join(F.broadcast(tipos), "ID_TIPO_PROVEEDOR", "inner")
-           .select(F.col("TIPO_PROVEEDOR_DESCRIPCION").alias("Tipo de proveedor"),
-                   F.col("SUB_TIPO_PROVEEDOR_DESCRIPCION").alias("Sub-tipo de proveedor"),
-                   "ID_TIPO_PROVEEDOR", "ID_SUB_TIPO_PROVEEDOR"))
-    left = df.withColumn("Sub-tipo de proveedor", F.col("Sub-tipo de proveedor").cast("string"))
-    return enrich(left, dim, on=["Tipo de proveedor", "Sub-tipo de proveedor"], how="left")
-
-
-def codigo_familia_y_categoria(df: DataFrame, familias: DataFrame, categorias: DataFrame,
-                               campo_familia: str, campo_categoria: str) -> DataFrame:
-    """J1 (:283-296): (family desc, category desc) -> both codes, inner."""
-    dim = (categorias.join(F.broadcast(familias), "CODIGO_FAMILIA", "inner")
-           .select(F.col("DESCRIPCION_FAMILIA").alias(campo_familia),
-                   F.col("DESCRIPCION_CATEGORIA").alias(campo_categoria),
-                   "CODIGO_FAMILIA", "CODIGO_CATEGORIA"))
-    out = enrich(df, dim, on=[campo_familia, campo_categoria], how="inner")
-    return out.drop(campo_familia, campo_categoria)
 
 
 def codigo_marca(df: DataFrame, marcas: DataFrame, campo_marca: str) -> DataFrame:
@@ -122,21 +84,6 @@ def id_precios_lista(df: DataFrame, precios_lista: DataFrame,
                        "ID_PRECIOS_LISTA", nombre_campo)
 
 
-def codigo_sucursal(df: DataFrame, sucursales: DataFrame,
-                    nombre_campo: str) -> DataFrame:
-    """J5 (:28-46): branch description -> (CODIGO_SUCURSAL, ID_RAZON_SOCIAL),
-    the two-hop desc->code->company map (keeps the description column,
-    matching the reference)."""
-    return sucursal_two_hop(df, sucursales, nombre_campo)
-
-
-def id_comprobante_tipo(df: DataFrame, comprobante_tipo: DataFrame,
-                        nombre_campo: str) -> DataFrame:
-    """J4 (:94-111): invoice-type description -> ID_COMPROBANTE_TIPO."""
-    return _map_lookup(df, comprobante_tipo, "DESCRIPCION_COMPROBANTE_TIPO",
-                       "ID_COMPROBANTE_TIPO", nombre_campo)
-
-
 def codigo_sucursal_desde_pv(df: DataFrame, puntos_venta: DataFrame) -> DataFrame:
     """J5 (:112-135): point-of-sale -> sucursal -> company, two chained
     broadcast joins (the reference's double loop-assign with int casts)."""
@@ -153,13 +100,6 @@ def codigo_razon_social(df: DataFrame, razon_social: DataFrame,
     """J4 (:159-175): company description -> ID_RAZON_SOCIAL."""
     return _map_lookup(df, razon_social, "RAZON_SOCIAL_DESCRIPCION",
                        "ID_RAZON_SOCIAL", nombre_campo)
-
-
-def codigo_comprador(df: DataFrame, compradores: DataFrame,
-                     nombre_campo: str) -> DataFrame:
-    """J2 (:136-153): buyer description -> CODIGO_COMPRADOR."""
-    return _map_lookup(df, compradores, "DESCRIPCION_COMPRADOR",
-                       "CODIGO_COMPRADOR", nombre_campo)
 
 
 def fix_client_code(df: DataFrame, col: str = "ID_CLIENTE") -> DataFrame:

@@ -10,10 +10,9 @@ is the usual broadcast lookup + null-drop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from etl_docker_spark.operators import enrich
-from etl_docker_spark.sources.excel import read_excel
 
 
 def transform_expense_assignments(assignments: DataFrame,
@@ -30,11 +29,3 @@ def transform_expense_assignments(assignments: DataFrame,
     joined = enrich(assignments, dim, on=["Sucursal"], how="left")
     return (joined.drop("Sucursal")
             .na.drop(subset=["CODIGO_SUCURSAL"]))
-
-
-def load_expense_assignments(spark: SparkSession, xlsx_path: str,
-                             sucursales: DataFrame) -> DataFrame:
-    """Full S7 path: Excel -> transform (sheet/columns as the reference)."""
-    raw = read_excel(spark, xlsx_path, sheet_name="Gastos",
-                     usecols=["CODIGO_GASTO", "Sucursal"])
-    return transform_expense_assignments(raw, sucursales)

@@ -72,13 +72,6 @@ def transform_attribute_values(attributes: DataFrame) -> DataFrame:
     return vals
 
 
-def transform_attribute_categories(categories: DataFrame) -> DataFrame:
-    return categories.select(
-        F.col("Id").alias("CODIGO_CATEGORIA_ATRIBUTO"),
-        F.col("Name").alias("CATEGORIA_ATRIBUTO_DESCRIPCION"),
-    )
-
-
 def transform_suppliers(suppliers: DataFrame) -> DataFrame:
     """CARGA_PROVEEDORES (:1954-1969); SupplierSubType may be absent."""
     return suppliers.select(

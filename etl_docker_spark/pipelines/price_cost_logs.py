@@ -38,37 +38,3 @@ def transform_price_logs(price_logs: DataFrame, price_list_id: int) -> DataFrame
     )
 
 
-def transform_price_logs_all(price_logs: DataFrame,
-                             list_id_col: str = "price_list_id") -> DataFrame:
-    """The idiomatic replacement for the reference's per-pricelist loop
-    (U1, CotyData_IPN.py:1775-1782): the price-list id is already a COLUMN
-    on the input (one DF for all lists), so the dedup key simply includes
-    it and the concat loop disappears."""
-    base = price_logs.select(
-        F.col("Item.Id").alias("ITEM_ID"),
-        F.col(list_id_col).alias("ID_PRECIOS_LISTA"),
-        parse_ts_mixed(F.col("Audit.CreationDatetime")).alias("_ts"),
-        F.col("NetValueNew").alias("PRECIO_NETO"),
-    )
-    deduped = dedup_first(
-        base, ["ITEM_ID", "ID_PRECIOS_LISTA"],
-        [F.desc("_ts"), F.desc("PRECIO_NETO")])
-    return deduped.select(
-        "ITEM_ID", "ID_PRECIOS_LISTA",
-        format_sqlserver_datetime("_ts").alias("PRECIO_VIGENCIA_DESDE"),
-        "PRECIO_NETO",
-    )
-
-
-def transform_cost_logs(cost_logs: DataFrame) -> DataFrame:
-    """COSTOS_HISTORICO (:1789-1801)."""
-    base = cost_logs.select(
-        F.col("Item.Id").alias("ITEM_ID"),
-        F.col("PriceCostValueNew").alias("COSTO_NETO"),
-        parse_ts_mixed(F.col("Audit.ModificationDatetime")).alias("_ts"),
-    )
-    deduped = dedup_first(base, ["ITEM_ID"], [F.desc("_ts"), F.desc("COSTO_NETO")])
-    return deduped.select(
-        "ITEM_ID", "COSTO_NETO",
-        format_sqlserver_datetime("_ts").alias("COSTO_VIGENCIA_DESDE"),
-    )

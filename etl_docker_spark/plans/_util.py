@@ -198,3 +198,82 @@ def stage_day_files(df: DataFrame, work: str, day_col: str = "dcol",
             os.utime(dst, (1700000000 + seq * 60,) * 2)
             seq += 1
     return arrivals
+
+
+# ---------------------------------------------------------------- shared
+# Constants and frames used by more than one query family.
+
+# sequential-fold dot product, identical shape to _DOT in plans/e.py — the
+# left-to-right fold makes DuckDB bit-match Spark's F.aggregate
+_DOT2 = ("list_reduce(list_transform(generate_series(1, len({a})), "
+         "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
+         "(acc, x) -> acc + x)")
+
+
+_DAY_US = 86_400_000_000
+
+
+_HLL_M = 64                     # registers (6 bucket bits)
+_HLL_RBITS = 54                 # 60-bit hash = 6 bucket + 54 rank bits
+_HLL_RHO_MAX = _HLL_RBITS + 1   # rho(0) := 55
+# alpha_64 * m^2 * 2^55 as ONE double literal: both engines parse the same
+# repr, so the estimators' single double division is IEEE-identical
+# cross-engine
+_HLL_ALPHA_NUM = repr(0.709 * _HLL_M * _HLL_M * float(2 ** _HLL_RHO_MAX))
+
+
+def prefix_jaccard_pairs_frame(spark: SparkSession, sf: str) -> DataFrame:
+    """Per-session memoized exact-Jaccard pair frame at the default
+    t = 1/2 (disk tier keyed on the corpus, like minhash_pairs_frame):
+    d47 gates it, d48 re-consumes it for the exact component labeling —
+    the shingle+md5 corpus pass and the prefix join run once per
+    session instead of once per consumer. Values are deterministic, so
+    cached == rebuilt for the gate."""
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+    from etl_docker_spark.llm.index_cache import memo_frame
+
+    return memo_frame(
+        spark, f"d47_pairs:{sf}",
+        lambda: prefix_filter_jaccard_pairs(
+            t(spark, sf, "documents"), "doc_id", "text", shingle_n=3),
+        sf_dir=sf)
+
+
+# Shared with D06_SQL (plans/d.py): identical tokenize -> 3-shingle ->
+# md5-32 hash pipeline, so the two oracles stay in lockstep by text.
+_D47_HASHED_CTES = """
+toks AS (
+  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+),
+sh AS (
+  SELECT doc_id,
+         list_distinct(list_transform(generate_series(1, greatest(len(tk) - 2, 1)),
+                                      i -> array_to_string(tk[i:i+2], ' '))) AS sh
+  FROM toks
+),
+hashed AS (
+  SELECT doc_id,
+         list_transform(sh, s -> CAST('0x' || substring(md5(s), 1, 8) AS BIGINT)) AS hh
+  FROM sh
+)"""
+
+
+# Bounded hash domain: projecting tokens into [0, 3000) caps each
+# sketch's distinct count at 3000 < 2^13 (= _D64_LGK) nominal entries,
+# so the theta sketches stay in EXACT mode at ANY corpus scale and the
+# estimates are integers the oracle reproduces as plain distinct counts
+# (the same exact-regime discipline d28 used for its portable HLL). A
+# production run sketching RAW token ids instead accepts the
+# ~1/sqrt(2^13) = 1.1% relative error — the machinery below is
+# identical either way.
+_D64_DOMAIN = 3000
+
+
+# DataSketches HLL stays in its coupon (LIST/SET) phase — where the
+# estimate is EXACT — until ~2^(lgK-2) distinct values; probed in this
+# build: lgK=16 exact through 8192, lgK=15 drifts at 4096, lgK=14 at
+# 3000. The 3000-bucket domain is safely inside lgK=16's exact phase,
+# for every per-lang sketch AND every union (unions of coupon sets stay
+# coupon sets at <= 3000 distinct), so the oracle pins every estimate
+# as a plain COUNT(DISTINCT ...).
+_D67_LGK = 16

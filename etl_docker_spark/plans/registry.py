@@ -7,47 +7,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_docker_spark.plans.advanced import ADVANCED
-from etl_docker_spark.plans.extended import EXTENDED
-from etl_docker_spark.plans.llm_queries import LLM_QUERIES
-from etl_docker_spark.plans.relational import RELATIONAL
-from etl_docker_spark.plans.round2 import ROUND2
-from etl_docker_spark.plans.round2b import ROUND2B
-from etl_docker_spark.plans.round2c import ROUND2C
-from etl_docker_spark.plans.round2d import ROUND2D
-from etl_docker_spark.plans.round2e import ROUND2E
-from etl_docker_spark.plans.round2f import ROUND2F
-from etl_docker_spark.plans.round2g import ROUND2G
-from etl_docker_spark.plans.round2h import ROUND2H
-from etl_docker_spark.plans.round2i import ROUND2I
-from etl_docker_spark.plans.round2j import ROUND2J
-from etl_docker_spark.plans.round2k import ROUND2K
-from etl_docker_spark.plans.round2l import ROUND2L
-from etl_docker_spark.plans.round2m import ROUND2M
-from etl_docker_spark.plans.round2n import ROUND2N
-from etl_docker_spark.plans.round2o import ROUND2O
-from etl_docker_spark.plans.round2p import ROUND2P
-from etl_docker_spark.plans.round2q import ROUND2Q
-from etl_docker_spark.plans.round3 import ROUND3
-from etl_docker_spark.plans.round4 import ROUND4
-from etl_docker_spark.plans.round4b import ROUND4B
-from etl_docker_spark.plans.round4c import ROUND4C
-from etl_docker_spark.plans.round5 import ROUND5
-from etl_docker_spark.plans.round5b import ROUND5B
-from etl_docker_spark.plans.round6 import ROUND6
-from etl_docker_spark.plans.round6b import ROUND6B
-from etl_docker_spark.plans.round6c import ROUND6C
-from etl_docker_spark.plans.round7 import ROUND7
-from etl_docker_spark.plans.round8 import ROUND8
-from etl_docker_spark.plans.round9 import ROUND9
-from etl_docker_spark.plans.round9b import ROUND9B
-from etl_docker_spark.plans.round10 import ROUND10
-from etl_docker_spark.plans.round10b import ROUND10B
-from etl_docker_spark.plans.round10c import ROUND10C
-from etl_docker_spark.plans.round10d import ROUND10D
-from etl_docker_spark.plans.round11 import ROUND11
-from etl_docker_spark.plans.round11b import ROUND11B
-from etl_docker_spark.plans.round12 import ROUND12
+from etl_docker_spark.plans import d, e, g, q, s
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -59,158 +19,49 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None -> rows-only check
 
 
-# The external correctness gate samples the FIRST 50 registry entries, so
-# plain build-order listing would gate only the oldest surface forever
-# (rounds 1-3: the gate never saw anything newer than round 1). This window
-# pins the first 50 to a deliberate cross-round sample: everything from
-# rounds 3-4 (newest, least externally verified), a round-2 cross-section
-# covering every operator family (including the three queries whose global
-# windows were rewritten two-phase in round 4: d21/e08/d24), and 4 round-1
-# anchors. Membership is what matters, not order within the window; the
-# remaining queries follow in build order and stay covered by the
-# full-surface artifact (CORRECTNESS_full_r*.json).
+# The external correctness gate samples the FIRST 50 registry entries. The
+# window holds the newest registrations, the once-red family
+# representatives, and at least one query from every family; the rest
+# follow in family order (q, s, d, e, g) and stay covered by the
+# full-surface oracle run (tools/check_oracle.py).
 _GATE_WINDOW = [
-    # round-1 anchors (q02/d01 rotated out for q82/q83 — both were
-    # under the driver gate in rounds 1-3 already)
-    "q01_pricing_summary", "s01_stream_tumbling",
-    # round-2 cross-section. Round-6 rotation: d21/g01 (HUGEINT-red in
-    # r4, fix driver-confirmed green in r5) rotate out now that the
-    # full-surface artifact is committed (CORRECTNESS_full_r6.json);
-    # d24/e08 stay as the reps of the same two once-red families
-    # (HUGEINT oracle casts, global-window rewrites).
-    "d24_perplexity_buckets",
-    "e05_ivf_train", "e08_hybrid_rrf",
-    "s05_stream_stream_join",
-    # round-9 registrations (newest surface, never externally verified).
-    # Rotation: d53 (d57 stays as the suffix-filter family rep), g06
-    # (g07 stays for graph), e22 (e23/e24 stay for ANN), d56 (d64's
-    # sketch-tier leakage matrix is in-window) — all driver-gated green
-    # 3+ consecutive rounds, families never red.
+    "q01_pricing_summary", "s01_stream_tumbling", "d24_perplexity_buckets",
+    "e05_ivf_train", "e08_hybrid_rrf", "s05_stream_stream_join",
     "q97_collation_battery", "q98_listagg_battery",
     "q99_variant_explode_lateral", "d65_holdout_calibrated_thresholds",
-    # round-8-continuation registrations (same session as the round-9
-    # four). Rotation: d55 (curation family repped by d60-d65), d50
-    # (d51 stays as the substring rep), e21 (e23/e24 stay for ANN
-    # serving), s21/s23/s17 (twelve s-entries remain in-window, incl.
-    # s05 as the stream-join rep) — all driver-gated green 3+
-    # consecutive rounds.
     "d66_heavy_hitter_buckets", "d67_hll_lang_coverage",
     "d68_model_score_drift", "q100_accent_collation_battery",
     "s32_stream_hll_cardinality", "d69_bitmap_exact_distinct",
-    # round-9 registrations (staged in round 8's plans/round10.py,
-    # registered first thing this round — never externally verified).
-    # Rotation: e23 (e24 stays as the binary-ANN funnel rep, e05 for
-    # IVF) and s28 (s29 stays as the foreachBatch-reconcile rep;
-    # s26/s27 keep the state-store family in-window) — both
-    # driver-gated green 3+ consecutive rounds, families never red.
     "d70_edit_distance_blocking", "q101_try_parse_json_quarantine",
-    # round-9 new surface (built this round, never externally verified).
-    # Rotation: d47 (the fuzzy tier d70/d71 now reps dedup-blocking
-    # in-window; d57 stays for prefix-stress) and d52 (quality family
-    # repped by d24) — both driver-gated green since round 4.
     "d71_fuzzy_dedup_depth2", "q102_seeded_synthetic_generator",
-    # round-10 registrations (staged oracle-verified in round 9's
-    # plans/round11.py, registered first thing this round — never
-    # externally verified). Rotation: q73_bucketed_cojoin and
-    # s24_watermark_policy_max (both driver-gated green since round 4;
-    # co-located joins stay pinned by the plan-shape tests and q86's
-    # pruning gate, s25 stays as the watermark+dedup stream rep).
     "d72_token_transposition_dedup", "s33_stream_json_quarantine",
-    # round-10 build (never externally verified; its oracle is an
-    # INDEPENDENT brute-force, so the gate is a true recall/precision
-    # check). Rotation: d58_linear_classifier_scores (driver-gated
-    # green since round 6; the classifier family keeps seven in-window
-    # reps d59-d63/d65/d68).
-    "d73_low_entropy_fuzzy_dedup",
-    # round-10 new-probe finds (never externally verified; q103's and
-    # g08's oracles are independent formulations — first-principles
-    # stats, unrolled recursion). Rotation: s26_state_datasource
-    # (green since r5; s27/s29 keep the state family in-window),
-    # q70_incremental_lifecycle (green since r4; q69 keeps
-    # orchestration), q93_interval_battery (green since r6; q85 keeps
-    # calendar/interval, q104 joins the family).
-    "q103_stats_battery", "q104_time_battery",
-    "g08_recursive_reachability",
-    # round-11 registrations (staged oracle-verified in round 10's
-    # plans/round12.py, registered first thing this round — never
-    # externally verified). Rotation: g07_bounded_sssp (driver-gated
-    # green since round 4; the graph family keeps g08 in-window and
-    # g09 joins it) and d59_classifier_weight_join (green since round
-    # 5; the classifier family keeps six in-window reps
-    # d60-d63/d65/d68).
-    "d74_topk_state_lifecycle", "g09_recursive_path_cost",
-    # round-11 build (never externally verified; its oracle is an
-    # INDEPENDENT all-pairs brute force over remove-one-token sorted
-    # alignments, so the gate is a true recall/precision check).
-    # Rotation: s25_stream_dedup_then_agg (driver-gated green since
-    # round 4; streaming keeps nine in-window reps incl. s16 for
-    # watermarked dedup).
-    "d75_transposed_typo_dedup",
-    # round-11 probe closure (never externally verified; the oracle is
-    # pure ARITHMETIC — DuckDB cannot hold the corrupted strings at
-    # all, so expected counts derive from the injection rule and
-    # length(text) alone). Rotation: s27_state_changefeed (driver-
-    # gated green since round 5; s29 keeps the state-store family
-    # in-window).
-    "q105_validate_utf8_battery",
-    # round-8, complete.
-    # Rotation: q87/q88/q89/q90/q91/q92 (the SQL-surface battery —
-    # driver-gated green for 2-3 consecutive rounds, families never
-    # red) rotate out to make room for the six round-8 queries.
-    "q95_variant_persistence", "s31_stream_variant_landing",
-    "d62_lang_calibrated_thresholds", "d63_holdout_generalization",
-    "q96_xml_battery", "d64_theta_source_overlap",
-    # round-7, complete.
-    # Rotation: g05/s18/d54/q81 (driver-gated green across rounds 4-6,
-    # families never red or represented elsewhere in the window)
-    # rotate out to make room.
-    "d60_trained_classifier", "d61_threshold_yield_curve",
-    "q94_variant_battery", "s30_stream_variant_ingest",
-    # round-6, complete: both halves — the core seven and the 6c four
-    # (d49/s13/s20/s22, driver-gated green in r4+r5, rotated out in r6;
-    # q92 rotated out in r8 with the rest of the SQL-surface battery)
-    "d57_shared_prefix_stress",
+    "d73_low_entropy_fuzzy_dedup", "q103_stats_battery", "q104_time_battery",
+    "g08_recursive_reachability", "d74_topk_state_lifecycle",
+    "g09_recursive_path_cost", "d75_transposed_typo_dedup",
+    "q105_validate_utf8_battery", "q95_variant_persistence",
+    "s31_stream_variant_landing", "d62_lang_calibrated_thresholds",
+    "d63_holdout_generalization", "q96_xml_battery",
+    "d64_theta_source_overlap", "d60_trained_classifier",
+    "d61_threshold_yield_curve", "q94_variant_battery",
+    "s30_stream_variant_ingest", "d57_shared_prefix_stress",
     "e24_ivf_binary_funnel", "s29_changefeed_metrics_reconcile",
-    # round-5, complete (q87 rotated out in r8; d53/g06 rotated out for
-    # the round-9 four, d55 for the continuation four — d57/g07 and the
-    # d60-d65 curation chain stay as the family reps)
-    # round-5b remainder (q75-q80 rotated out in r6; q88/q89/q90/q91
-    # rotated out in r8; d56/e22 rotated out for the round-9 four —
-    # d64/e23/e24 stay as the family reps)
-    # round-4 cross-section. Round-6 rotation: s14/s15 (HUGEINT-red in
-    # r4, driver-confirmed green in r5) rotate out with the full
-    # artifact committed; s16 stays as the applyInPandasWithState
-    # family rep.
-    "s16_stream_dedup_expiry",
-    # round-4c cross-section (q83/q84/s19 — all driver-gated green in
-    # BOTH r4 and r5 — rotated out for the round-6 seven; q85/q86 stay,
-    # the most quirk-prone calendar/pruning gates)
-    "q82_sql_udf_installments", "q85_calendar_tz_battery",
-    "q86_dynamic_partition_pruning",
-    "d51_substring_decontam",
-    # round-3 cross-section (the rest of round 3 rotated out across
-    # rounds 4b/4c — all stay green in the full artifact)
-    "q68_rest_paginated_ingest", "q69_dag_audit_trail",
+    "s16_stream_dedup_expiry", "q82_sql_udf_installments",
+    "q85_calendar_tz_battery", "q86_dynamic_partition_pruning",
+    "d51_substring_decontam", "q68_rest_paginated_ingest",
+    "q69_dag_audit_trail",
 ]
 
 
 def _build() -> dict[str, QuerySpec]:
     specs: dict[str, QuerySpec] = {}
-    for table in (RELATIONAL, LLM_QUERIES, ADVANCED, EXTENDED, ROUND2,
-                  ROUND2B, ROUND2C, ROUND2D, ROUND2E, ROUND2F, ROUND2G,
-                  ROUND2H, ROUND2I, ROUND2J, ROUND2K, ROUND2L, ROUND2M,
-                  ROUND2N, ROUND2O, ROUND2P, ROUND2Q, ROUND3, ROUND4,
-                  ROUND4B, ROUND4C, ROUND5, ROUND5B, ROUND6, ROUND6B,
-                  ROUND6C, ROUND7, ROUND8, ROUND9, ROUND9B, ROUND10,
-                  ROUND10B, ROUND10C, ROUND10D, ROUND11, ROUND11B,
-                  ROUND12):
-        for name, (builder, oracle) in table.items():
+    for family in (q, s, d, e, g):
+        for name, (builder, oracle) in family.QUERIES.items():
             specs[name] = QuerySpec(name, builder, oracle)
     assert len(_GATE_WINDOW) == 50, len(_GATE_WINDOW)
     missing = [n for n in _GATE_WINDOW if n not in specs]
     assert not missing, f"gate window names not in registry: {missing}"
     ordered = {name: specs[name] for name in _GATE_WINDOW}
-    ordered.update((n, s) for n, s in specs.items() if n not in ordered)
+    ordered.update((n, spec) for n, spec in specs.items() if n not in ordered)
     return ordered
 
 

@@ -1,19 +1,12 @@
-"""Lakehouse table-format edges (Delta/Iceberg) — gated.
+"""Lakehouse table-format edge (Delta) — gated.
 
 The engine's primary store here is plain parquet with the DataFrame-level
-merge in operators/merge.py. On a deployment with Delta or Iceberg jars,
-these helpers replace snapshot-rewrite merges with native row-level ops:
-
-- Delta:   `MERGE INTO target USING updates ON keys ...` == merge_upsert
-- Iceberg: `MERGE INTO` via Spark SQL with the Iceberg catalog
-
-Neither jar ships in this container, so both raise with the exact upgrade
-path. Keeping the mapping in code (not docs) makes the contract testable.
+merge in operators/merge.py. On a deployment with the Delta jars,
+`write_delta` lands the same frames as a Delta table. The jars do not
+ship in this container, so it raises with the exact upgrade path.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
@@ -28,20 +21,3 @@ def write_delta(df: DataFrame, path: str, mode: str = "append") -> None:
             "Until then operators.merge.merge_upsert_path provides the same "
             "latest-state-by-PK contract over parquet."
         ) from exc
-
-
-def merge_into_delta(spark, path: str, updates: DataFrame,
-                     keys: Sequence[str]) -> None:
-    """The native twin of operators.merge.merge_upsert_path."""
-    try:
-        from delta.tables import DeltaTable  # type: ignore[import-not-found]
-    except ImportError as exc:
-        raise NotImplementedError(
-            "delta-spark python package absent; use "
-            "operators.merge.merge_upsert_path (identical semantics) or add "
-            "the Delta dependencies"
-        ) from exc
-    target = DeltaTable.forPath(spark, path)
-    cond = " AND ".join(f"t.{k} = u.{k}" for k in keys)
-    (target.alias("t").merge(updates.alias("u"), cond)
-     .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())

@@ -1,50 +1,19 @@
-"""JDBC source/sink wrappers (SURVEY.md S5, K1).
+"""JDBC sink edge (SURVEY.md K1, K2, K10).
 
-The reference reads dimensions with SQL text over SQLAlchemy
-(Conectores_BD.py:124-131) and appends with chunked `to_sql`
-(Conectores_BD.py:105-113). Spark equivalents are thin config around the
-built-in JDBC relation; no driver jars ship in this environment, so these are
-untested pass-throughs kept at the edge of the engine.
+The reference appends with chunked `to_sql` (Conectores_BD.py:105-113)
+into a staging table and runs a server-side merge procedure around each
+load (Conectores_BD.py:114-123). Here: the staged merge over Spark's
+built-in JDBC relation, the dialect merge/upsert statement builders, and
+driver-side statement execution. No driver jars ship in this
+environment, so the I/O is gated; the statement builders are unit-tested.
 
-Scale notes baked into the defaults:
-- reads partition on a numeric column (`partitionColumn`/bounds) so a fact
-  pull is parallel, not a single-connection scan;
-- writes use `batchsize` (replacing the reference's ⌊2100/ncols⌋ chunk math,
-  utils.py:40-46) and `numPartitions` to bound connection count.
+The staging write uses `batchsize` (replacing the reference's ⌊2100/ncols⌋
+chunk math, utils.py:40-46).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def read_query(spark: SparkSession, url: str, query: str,
-               properties: dict[str, str] | None = None,
-               partition_column: str | None = None,
-               lower_bound: int | None = None, upper_bound: int | None = None,
-               num_partitions: int = 8) -> DataFrame:
-    """S5: SQL-text scan. With bounds, a parallel partitioned read."""
-    reader = (spark.read.format("jdbc").option("url", url).option("query", query))
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    if partition_column is not None:
-        reader = (reader.option("partitionColumn", partition_column)
-                  .option("lowerBound", str(lower_bound))
-                  .option("upperBound", str(upper_bound))
-                  .option("numPartitions", str(num_partitions)))
-    return reader.load()
-
-
-def write_append(df: DataFrame, url: str, table: str,
-                 properties: dict[str, str] | None = None,
-                 batchsize: int = 1000, num_partitions: int = 8) -> None:
-    """K1: batched append (the reference caps chunks at 1000 rows too)."""
-    (df.coalesce(num_partitions)
-       .write.format("jdbc").mode("append")
-       .option("url", url).option("dbtable", table)
-       .option("batchsize", str(batchsize))
-       .options(**(properties or {}))
-       .save())
+from pyspark.sql import DataFrame
 
 
 def execute_statement(url: str, sql: str,

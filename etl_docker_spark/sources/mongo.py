@@ -1,17 +1,15 @@
-"""MongoDB source/sink edge (SURVEY.md S8, K9).
+"""MongoDB delete-protection guard (SURVEY.md K9).
 
 The reference uses MongoDB only as an optional log sink with a CRUD helper
 (Conectores_BD.py:152-222); its one engine-relevant behavior is the
 delete-protection guard (refuse an unfiltered delete — :200-206).
 
 The Spark path is the mongo-spark-connector, whose jars are not in this
-container — reads/writes are gated; the delete guard is engine logic and
-lives here regardless of backend.
+container; the delete guard is engine logic and lives here regardless of
+backend.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
 
 
 class DeleteProtectionError(ValueError):
@@ -24,35 +22,3 @@ def guard_delete_filter(query: dict | None) -> dict:
         raise DeleteProtectionError(
             "refusing delete with empty filter: this would clear the collection")
     return query
-
-
-def read_collection(spark: SparkSession, uri: str, database: str,
-                    collection: str) -> DataFrame:
-    """S8: `spark.read.format('mongodb')` — requires mongo-spark-connector."""
-    try:
-        return (spark.read.format("mongodb")
-                .option("connection.uri", uri)
-                .option("database", database)
-                .option("collection", collection)
-                .load())
-    except Exception as exc:
-        raise NotImplementedError(
-            "mongo-spark-connector jars are not on the classpath in this "
-            "container; add org.mongodb.spark:mongo-spark-connector to use "
-            "the MongoDB source") from exc
-
-
-def write_collection(df: DataFrame, uri: str, database: str, collection: str,
-                     mode: str = "append") -> None:
-    """K9 insert-many; update/delete flows go through the connector's
-    upsert options on a real deployment."""
-    try:
-        (df.write.format("mongodb")
-         .option("connection.uri", uri)
-         .option("database", database)
-         .option("collection", collection)
-         .mode(mode).save())
-    except Exception as exc:
-        raise NotImplementedError(
-            "mongo-spark-connector jars are not on the classpath in this "
-            "container") from exc

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_docker_spark.operators.merge import merge_upsert_path
@@ -77,8 +77,3 @@ def scd2_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
     if trigger_once:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_parquet_source(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-based streaming source (one file per micro-batch by default)."""
-    return spark.readStream.schema(schema).parquet(path)

@@ -70,7 +70,7 @@ def session_aggregate(df: DataFrame, gap: str, aggs: dict[str, Column],
     """Session-window aggregation (dynamic-gap sessions).
 
     The streaming-native twin of the batch lag+cumsum sessionization
-    (plans.relational.q22_sessionize).
+    (plans.q.q22_sessionize).
     """
     src = with_watermark(df, ts_col, watermark)
     win = F.session_window(ts_col, gap)

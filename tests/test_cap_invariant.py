@@ -33,10 +33,10 @@ def test_e02_coarse_cells_under_cap(spark, sf):
 @pytest.mark.parametrize("sf", GATE_DIRS)
 def test_d33_trained_clusters_under_cap(spark, sf):
     """d33 sub-buckets e05 clusters past _SEM_CAP occupancy
-    (plans/round2k.py): gate clusters must stay under it so the oracle's
+    (plans/d.py): gate clusters must stay under it so the oracle's
     plain within-cluster form is the executed plan."""
-    from etl_docker_spark.plans.round2 import e05_assignments
-    from etl_docker_spark.plans.round2k import _SEM_CAP
+    from etl_docker_spark.plans.e import e05_assignments
+    from etl_docker_spark.plans.d import _SEM_CAP
 
     occ = (e05_assignments(spark, sf)
            .groupBy("cluster").count()

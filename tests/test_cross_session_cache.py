@@ -32,10 +32,10 @@ def counting_memo(spark, key, build, sf_dir=None):
         return build()
     return _orig(spark, key, counting_build, sf_dir=sf_dir)
 ic.memo_frame = counting_memo  # plan builders import it function-locally
-import etl_docker_spark.plans.round2 as r2
+import etl_docker_spark.plans.e as e
 
 spark = get_spark("xsession")
-df = r2.e06_trained_ivf_search(spark, {sf!r})
+df = e.e06_trained_ivf_search(spark, {sf!r})
 rows = sorted(map(tuple, ((r[c] for c in sorted(df.columns))
                           for r in df.collect())))
 print("RESULT:" + json.dumps({{"n_trained": trained["n"],

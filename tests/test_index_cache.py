@@ -110,7 +110,7 @@ def test_memoized_assignments_match_fresh_training(spark):
     """The served artifact must be bit-identical to retraining from
     scratch — the property that makes memoization invisible to the
     correctness gate."""
-    from etl_docker_spark.plans.round2 import e05_assignments, e05_ivf_train
+    from etl_docker_spark.plans.e import e05_assignments, e05_ivf_train
 
     served = {(r["vec_id"], r["cluster"])
               for r in e05_assignments(spark, SF_SMOKE).collect()}

@@ -265,7 +265,7 @@ def test_near_dup_refines_past_still_hot_subcell(spark):
 def test_pii_scrub_idempotent_and_ordered(spark):
     """Scrubbing is idempotent, and the email-before-URL order means an
     address inside a URL never leaves a dangling fragment."""
-    from etl_docker_spark.plans.round2 import scrub_pii
+    from etl_docker_spark.plans.d import scrub_pii
 
     rows = [
         (1, "mail me at a.b+c@ex-1.example.org please"),

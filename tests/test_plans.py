@@ -185,17 +185,16 @@ def test_gate_window_samples_every_round(spark):
     in ahead of it) and the invariants that make the window useful:
     every never-externally-verified registration from the two newest
     rounds is under the gate, round-1 anchors stay sampled, and every
-    query family is represented. Rotation details live in
-    registry._GATE_WINDOW's comments — duplicating the full list here
-    is exactly what went stale in rounds 8 and 9."""
+    query family is represented. The window policy is the rule stated
+    above registry._GATE_WINDOW; the list itself lives only there, so
+    this test pins invariants instead of repeating it."""
     import __spark_entry__ as entrymod
     from etl_docker_spark.plans import registry
 
     first50 = list(entrymod.queries())[:50]
     assert first50 == list(registry._GATE_WINDOW)
     window = set(first50)
-    # newest registrations (staged in round 10's plans/round12.py,
-    # registered round 11, never externally verified) MUST be gated
+    # newest registrations (never externally verified) MUST be gated
     assert {"d74_topk_state_lifecycle",
             "g09_recursive_path_cost",
             "d75_transposed_typo_dedup",
@@ -213,6 +212,20 @@ def test_gate_window_samples_every_round(spark):
     assert {"e08_hybrid_rrf", "d24_perplexity_buckets"} <= window
     # the window spans every query family, not just the newest round
     assert {"q", "d", "e", "s", "g"} <= {n[0] for n in window}
+
+
+def test_plans_are_grouped_by_family():
+    """plans/ holds one module per query family (q, s, d, e, g) next to
+    registry and _util, and no module named after a build round; every
+    builder lives in the module of its name's family letter."""
+    import pkgutil
+
+    import etl_docker_spark.plans as plans
+
+    modules = {m.name for m in pkgutil.iter_modules(plans.__path__)}
+    assert not [m for m in modules if m.startswith("round")], modules
+    for name, spec in QUERIES.items():
+        assert spec.builder.__module__ == f"etl_docker_spark.plans.{name[0]}", name
 
 
 @pytest.mark.parametrize("name", [

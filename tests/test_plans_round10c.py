@@ -1,7 +1,7 @@
 """d73 (low-entropy fuzzy dedup) — vocabulary contract + plan shape.
 
 The blocking's correctness argument leans on three vocabulary
-properties (round10c.py docstring); pin them so a future vocab edit
+properties (the _D73_VOCAB comment in plans/d.py); pin them so a future vocab edit
 cannot silently break the injected-alias ground truth:
   1. pairwise edit distance >= 2 (a vocab-vocab token pair can never be
      a typo match, so every typo pair traces to a corruption or t4)
@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import functools
 
-from etl_docker_spark.plans.round10c import _D73_VOCAB
+from etl_docker_spark.plans.d import _D73_VOCAB
 
 
 def _ed(a: str, b: str) -> int:

@@ -39,7 +39,7 @@ def test_prefix_sum_single_row_and_empty(spark):
 def test_kmv_estimate_within_tolerance(spark):
     """KMV with k=64 over ~5k distinct ids: relative error should land
     well inside the ~4/sqrt(k) (~50%) coarse bound — typically a few %."""
-    from etl_docker_spark.plans.round2b import _KMV_K, _KMV_RANGE
+    from etl_docker_spark.plans.d import _KMV_K, _KMV_RANGE
 
     n = 5_000
     h = spark.range(0, n).select(

@@ -63,7 +63,7 @@ FROM corpus a JOIN corpus b
 
 
 def test_d71_blocking_recall_vs_bruteforce(spark):
-    from etl_docker_spark.plans.round10b import d71_fuzzy_dedup_depth2
+    from etl_docker_spark.plans.d import d71_fuzzy_dedup_depth2
     con = _duck_with_tables(SF_SMOKE)
     brute = con.sql(_BRUTE).fetchone()
     row = d71_fuzzy_dedup_depth2(spark, SF_SMOKE).collect()[0]
@@ -82,7 +82,7 @@ def test_d71_blocking_recall_vs_bruteforce(spark):
 
 def test_d71_injects_every_fourth_customer(spark):
     from etl_docker_spark.catalog import load_table
-    from etl_docker_spark.plans.round10b import d71_fuzzy_dedup_depth2
+    from etl_docker_spark.plans.d import d71_fuzzy_dedup_depth2
     # custkeys are 0-based in this corpus (0..n-1), so count the actual
     # id%4==0 population rather than assuming 1-based keys
     n_aliases = (load_table(spark, SF_SMOKE, "customer")

@@ -1,4 +1,4 @@
-"""Round-11 staged-query pins (plans/round11.py, unregistered): the
+"""Round-11 staged-query pins (d72 and s33): the
 aggregate-only pair counting of d72 against a brute-force pair
 enumeration, and the corpus assumptions both engines' corruptions rely
 on. Pinned now so an environment or corpus regression before round-10
@@ -14,7 +14,7 @@ def test_d72_pair_counts_vs_bruteforce(spark):
     (C(n,2) - sum C(m,2)); pin that algebra against a literal pairwise
     enumeration over the same corpus on the smoke slice."""
     from etl_docker_spark.catalog import load_table
-    from etl_docker_spark.plans.round11 import d72_token_transposition_dedup
+    from etl_docker_spark.plans.d import d72_token_transposition_dedup
     load_table(spark, SF_SMOKE, "documents") \
         .createOrReplaceTempView("d72_docs")
     brute = spark.sql("""
@@ -67,8 +67,8 @@ def test_s33_streaming_verdicts_match_batch(spark):
     collapsing it recovers the batch counts)."""
     from pyspark.sql import functions as F
 
-    from etl_docker_spark.plans.round10 import q101_try_parse_json_quarantine
-    from etl_docker_spark.plans.round11 import s33_stream_json_quarantine
+    from etl_docker_spark.plans.q import q101_try_parse_json_quarantine
+    from etl_docker_spark.plans.s import s33_stream_json_quarantine
 
     def rollup(df):
         return {r["verdict"]: (r["n"], r["k"]) for r in

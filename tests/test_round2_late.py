@@ -30,7 +30,7 @@ def test_pagerank_mass_conserved(spark):
     """Total rank stays within integer-rounding slack of the scale S (each
     per-edge/per-node floor-div loses < 1 ppb unit, bounded well under
     0.01% of the mass for this graph)."""
-    from etl_docker_spark.plans.round2e import _PR_S, g01_pagerank
+    from etl_docker_spark.plans.g import _PR_S, g01_pagerank
 
     pr = g01_pagerank(spark, SF_SMOKE)
     total = pr.agg(F.sum("pagerank_ppb").alias("t")).collect()[0]["t"]
@@ -38,7 +38,7 @@ def test_pagerank_mass_conserved(spark):
 
 
 def test_funnel_stages_monotonic(spark):
-    from etl_docker_spark.plans.round2d import q38_funnel_conversion
+    from etl_docker_spark.plans.q import q38_funnel_conversion
 
     rows = {r["stage"]: r["n_users"]
             for r in q38_funnel_conversion(spark, SF_SMOKE).collect()}
@@ -48,7 +48,7 @@ def test_funnel_stages_monotonic(spark):
 def test_sequence_packing_bins_contiguous(spark):
     """Bins are 0..max with no gaps, and every bin holds >= 1 document
     (concat-and-split cannot produce an empty window)."""
-    from etl_docker_spark.plans.round2f import d25_sequence_packing
+    from etl_docker_spark.plans.d import d25_sequence_packing
 
     rows = d25_sequence_packing(spark, SF_SMOKE).collect()
     bins = sorted(r["bin"] for r in rows)
@@ -60,7 +60,7 @@ def test_curation_verdict_priority(spark):
     """A doc failing several rules reports the FIRST (too_short beats
     low_diversity beats exact_dup)."""
     import etl_docker_spark.plans._util as util
-    from etl_docker_spark.plans.round2f import d26_curation_verdict
+    from etl_docker_spark.plans.d import d26_curation_verdict
 
     rows = [(1, "tiny doc"),                      # too_short
             (2, " ".join(["w"] * 50)),            # long enough, no diversity

@@ -20,7 +20,7 @@ def test_cms_estimate_never_undercounts(spark):
 def test_cms_registers_merge_by_addition(spark):
     """The Count-Min property that makes it a 100 TB sketch: registers
     built on disjoint corpus shards sum to the whole-corpus registers."""
-    from etl_docker_spark.plans.round2j import _CMS_D, _CMS_W
+    from etl_docker_spark.plans.d import _CMS_D, _CMS_W
     from etl_docker_spark.plans._util import t
 
     def regs_of(df):
@@ -45,7 +45,7 @@ def test_cms_registers_merge_by_addition(spark):
 
 
 def test_zorder_interleave_is_bijective():
-    from etl_docker_spark.plans.round2k import _Z_BITS
+    from etl_docker_spark.plans.q import _Z_BITS
 
     g = 1 << _Z_BITS
     seen = set()
@@ -72,7 +72,7 @@ def test_triangle_count_respects_degree_bound(spark):
     """Mutual top-K construction bounds degree by K, so edges <= K*N/2 and
     triangles <= N*C(K,2)/3 — the inequality that makes the operator
     100 TB-safe is checked, not just asserted in prose."""
-    from etl_docker_spark.plans.round2j import _G02_K
+    from etl_docker_spark.plans.g import _G02_K
 
     row = QUERIES["g02_triangle_count"].builder(spark, SF_SMOKE).first()
     n, e, tri = row["n_nodes"], row["n_edges"], row["n_triangles"]

@@ -33,7 +33,7 @@ def test_route_rows_to_quarantine_splits_and_audits(spark, tmp_path):
 def test_q58_tolerance_actually_binds(spark):
     """The within_tol column is a real comparison, not a constant: at the
     smoke SF every group passes AND the exact counts are genuine."""
-    from etl_docker_spark.plans.round3 import q58_approx_distinct
+    from etl_docker_spark.plans.q import q58_approx_distinct
 
     rows = q58_approx_distinct(spark, SF_SMOKE).collect()
     assert len(rows) > 0
@@ -42,7 +42,7 @@ def test_q58_tolerance_actually_binds(spark):
 
 
 def test_q59_bounds_bracket_exact_percentile(spark):
-    from etl_docker_spark.plans.round3 import q59_approx_percentile
+    from etl_docker_spark.plans.q import q59_approx_percentile
 
     rows = q59_approx_percentile(spark, SF_SMOKE).collect()
     assert len(rows) > 0
@@ -51,7 +51,7 @@ def test_q59_bounds_bracket_exact_percentile(spark):
 
 
 def test_d36_merge_property_holds(spark):
-    from etl_docker_spark.plans.round3 import d36_sketch_shard_merge
+    from etl_docker_spark.plans.d import d36_sketch_shard_merge
 
     rows = d36_sketch_shard_merge(spark, SF_SMOKE).collect()
     assert len(rows) > 0
@@ -66,7 +66,7 @@ def test_e17_rebalance_engages_both_branches(spark):
     """The rebalance cap must sit between gate-corpus min and max cluster
     occupancy so the gate exercises split AND keep paths (the guarantee
     the e17 docstring claims)."""
-    from etl_docker_spark.plans.round3 import e17_cell_rebalance
+    from etl_docker_spark.plans.e import e17_cell_rebalance
 
     rows = e17_cell_rebalance(spark, SF_SMOKE).collect()
     assert any(r["was_split"] for r in rows)
@@ -78,7 +78,7 @@ def test_e17_rebalance_engages_both_branches(spark):
 
 
 def test_e18_tombstones_never_served(spark):
-    from etl_docker_spark.plans.round3 import e18_tombstone_search
+    from etl_docker_spark.plans.e import e18_tombstone_search
 
     rows = e18_tombstone_search(spark, SF_SMOKE).collect()
     assert len(rows) > 0
@@ -93,7 +93,7 @@ def test_e18_tombstones_never_served(spark):
 def test_d43_quarantine_only_ejects_train(spark):
     """Contamination ejection must only move TRAIN docs; val/test masses
     match the plain d37 split exactly."""
-    from etl_docker_spark.plans.round3 import d37_hash_split, d43_clean_split
+    from etl_docker_spark.plans.d import d37_hash_split, d43_clean_split
 
     plain = {(r["lang"], r["split"]): r["n_docs"]
              for r in d37_hash_split(spark, SF_SMOKE).collect()}

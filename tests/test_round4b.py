@@ -110,7 +110,7 @@ def test_q73_gate_frame_joins_without_exchange(spark):
     value oracle)."""
     import re
 
-    from etl_docker_spark.plans.round4b import _q73_bucketed_frames
+    from etl_docker_spark.plans.q import _q73_bucketed_frames
 
     joined, tables = _q73_bucketed_frames(spark, "/root/testdata/sf0.001")
     try:

@@ -157,7 +157,7 @@ def test_parquet_merge_schema_nulls_legacy_rows(spark, tmp_path):
 def test_null_safe_join_plans_as_hash_join(spark):
     """EqualNullSafe must stay an equi-join (hash/sort-merge), never
     BroadcastNestedLoop — the scale claim in q79's docstring."""
-    from etl_docker_spark.plans.round4c import q79_null_safe_join
+    from etl_docker_spark.plans.q import q79_null_safe_join
 
     df = q79_null_safe_join(spark, "/root/testdata/sf0.001")
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -169,7 +169,7 @@ def test_null_safe_join_plans_as_hash_join(spark):
 def test_correlated_subqueries_decorrelate_to_joins(spark):
     """q80's two correlated aggregate subqueries must decorrelate into
     grouped joins — no nested-loop re-scan per outer row."""
-    from etl_docker_spark.plans.round4c import q80_correlated_agg_subquery
+    from etl_docker_spark.plans.q import q80_correlated_agg_subquery
 
     df = q80_correlated_agg_subquery(spark, "/root/testdata/sf0.001")
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -186,7 +186,7 @@ def test_sql_udfs_inline_into_the_plan(spark):
     to its exact total."""
     from pyspark.sql import functions as F
 
-    from etl_docker_spark.plans.round4c import q82_sql_udf_installments
+    from etl_docker_spark.plans.q import q82_sql_udf_installments
 
     df = q82_sql_udf_installments(spark, "/root/testdata/sf0.001")
     plan = df._sc._jvm.PythonSQLUtils.explainString(
@@ -210,7 +210,7 @@ def test_q86_plan_has_dynamic_pruning(spark, tmp_path):
     """The q86 gate frame must carry a dynamicpruningexpression on the
     fact scan's PartitionFilters — a regression to filter-after-read
     would still pass the value oracle."""
-    from etl_docker_spark.plans.round4c import _q86_frames
+    from etl_docker_spark.plans.q import _q86_frames
 
     df = _q86_frames(spark, "/root/testdata/sf0.001", str(tmp_path / "f"))
     plan = df._sc._jvm.PythonSQLUtils.explainString(

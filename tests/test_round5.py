@@ -113,7 +113,7 @@ def test_self_dedup_curation_matches_bruteforce(spark, seed):
     the later copy of any repeated 2-gram' on random repetitive docs."""
     import random
 
-    from etl_docker_spark.plans.round5 import d55_self_dedup_curation
+    from etl_docker_spark.plans.d import d55_self_dedup_curation
 
     rng = random.Random(seed)
     vocab = [f"w{i}" for i in range(8)]  # tiny vocab -> dense repeats

@@ -118,22 +118,22 @@ def test_e23_full_shortlist_equals_bruteforce_knn(spark):
     """With the shortlist as wide as the corpus, e23's exact stage must
     reproduce brute-force top-k cosine exactly (the rerank is lossless;
     only the shortlist cut trades recall)."""
-    import etl_docker_spark.plans.round6 as r6
+    import etl_docker_spark.plans.e as e
     from etl_docker_spark.llm.similarity import brute_force_knn
     from etl_docker_spark.plans._util import t
 
-    orig = r6._E23_SHORTLIST
-    r6._E23_SHORTLIST = 10 ** 9
+    orig = e._E23_SHORTLIST
+    e._E23_SHORTLIST = 10 ** 9
     try:
         got = {(r.query_id, r.neighbor_id, r.exact_rank)
-               for r in r6.e23_binary_hamming_search(
+               for r in e.e23_binary_hamming_search(
                    spark, SF_SMOKE).collect()}
     finally:
-        r6._E23_SHORTLIST = orig
+        e._E23_SHORTLIST = orig
     emb = t(spark, SF_SMOKE, "embeddings")
     queries = emb.filter("vec_id < 8")
     expected = {(r["query_id"], r["neighbor_id"], r["rank"])
-                for r in brute_force_knn(emb, queries, k=r6._E23_K,
+                for r in brute_force_knn(emb, queries, k=e._E23_K,
                                          id_col="vec_id").collect()}
     assert got == expected
 
@@ -154,7 +154,7 @@ def test_d58_per_doc_scores_match_python(spark):
     reimplementation (hash, weight map, truncating division, bias)."""
     from pyspark.sql import functions as F
 
-    import etl_docker_spark.plans.round6 as r6
+    import etl_docker_spark.plans.d as d
 
     docs = [(1, "aa bb cc aa"), (2, "zz"), (3, "m n o p q r s t"),
             (4, "dup dup dup dup")]
@@ -162,18 +162,18 @@ def test_d58_per_doc_scores_match_python(spark):
         .withColumn("lang", F.lit("xx"))
     df.createOrReplaceTempView("d58_docs")
     w_ppm = ("(pmod(CAST(conv(substring(md5(f), 1, 8), 16, 10) AS BIGINT), "
-             f"{r6._D58_BUCKETS}) % 2001) - 1000")
+             f"{d._D58_BUCKETS}) % 2001) - 1000")
     scored = spark.sql(f"""
 SELECT doc_id,
-       size({r6.feats_sql()}) AS n_feats,
-       aggregate(transform({r6.feats_sql()}, f -> {w_ppm}),
+       size({d.feats_sql()}) AS n_feats,
+       aggregate(transform({d.feats_sql()}, f -> {w_ppm}),
                  CAST(0 AS BIGINT), (acc, w) -> acc + w)
-         DIV size({r6.feats_sql()}) + {r6._D58_BIAS_PPM} AS score_ppm
+         DIV size({d.feats_sql()}) + {d._D58_BIAS_PPM} AS score_ppm
 FROM d58_docs
 """).collect()
     for r in scored:
         text = dict(docs)[r.doc_id]
-        n, score = _py_d58_score(text, r6._D58_BUCKETS, r6._D58_BIAS_PPM)
+        n, score = _py_d58_score(text, d._D58_BUCKETS, d._D58_BIAS_PPM)
         assert (r.n_feats, r.score_ppm) == (n, score), r.doc_id
 
 
@@ -184,7 +184,7 @@ def test_q92_installments_conserve_totals(spark):
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round6 import q92_sql_table_function
+    from etl_docker_spark.plans.q import q92_sql_table_function
 
     out = q92_sql_table_function(spark, SF_SMOKE)
     got = out.agg(F.sum("total_cents").alias("s")).first().s
@@ -204,8 +204,8 @@ def test_s27_lifecycle_consistent_with_s26_snapshot(spark):
     snapshot: keys the feed says were NOT evicted are exactly the open
     windows s26 reads back, with identical buffered counts, and every
     key is written exactly once in its day-index batch."""
-    from etl_docker_spark.plans.round5 import s26_state_datasource
-    from etl_docker_spark.plans.round6b import s27_state_changefeed
+    from etl_docker_spark.plans.s import (s26_state_datasource,
+                                          s27_state_changefeed)
 
     feed = s27_state_changefeed(spark, SF_SMOKE).collect()
     assert feed
@@ -228,8 +228,8 @@ def test_s28_matches_batch_aggregate(spark):
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round6b import (_S27_CUTOFF,
-                                                s28_foreachbatch_idempotent)
+    from etl_docker_spark.plans.s import (_S27_CUTOFF,
+                                          s28_foreachbatch_idempotent)
 
     got = {(r.day, r.event_type): (r.n_events, r.total_cents)
            for r in s28_foreachbatch_idempotent(spark, SF_SMOKE).collect()}
@@ -250,8 +250,8 @@ def test_d59_totals_agree_with_d58(spark):
     model artifact grows."""
     from pyspark.sql import functions as F
 
-    from etl_docker_spark.plans.round6 import d58_linear_classifier_scores
-    from etl_docker_spark.plans.round6c import d59_classifier_weight_join
+    from etl_docker_spark.plans.d import (d58_linear_classifier_scores,
+                                          d59_classifier_weight_join)
 
     a = {r.lang: r.s for r in d58_linear_classifier_scores(spark, SF_SMOKE)
          .groupBy("lang").agg(F.sum("sum_score_ppm").alias("s")).collect()}
@@ -267,7 +267,7 @@ def test_q93_interval_path_equals_integer_path(spark):
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round6c import q93_interval_battery
+    from etl_docker_spark.plans.q import q93_interval_battery
 
     got = {r.o_orderpriority: (r.total_gap_secs, r.max_gap_secs)
            for r in q93_interval_battery(spark, SF_SMOKE).collect()}
@@ -288,16 +288,16 @@ def test_e24_full_shortlist_equals_e06(spark):
     """With the Hamming stage wide open, the funnel reduces to e06's
     trained-IVF search exactly (stage 2 is lossless unless it cuts;
     stages 1 and 3 are shared machinery)."""
-    import etl_docker_spark.plans.round6c as r6c
-    from etl_docker_spark.plans.round2 import e06_trained_ivf_search
+    import etl_docker_spark.plans.e as e
+    from etl_docker_spark.plans.e import e06_trained_ivf_search
 
-    orig = r6c._E24_SHORT
-    r6c._E24_SHORT = 10 ** 9
+    orig = e._E24_SHORT
+    e._E24_SHORT = 10 ** 9
     try:
         got = {(r.query_id, r.neighbor_id, r.exact_rank)
-               for r in r6c.e24_ivf_binary_funnel(spark, SF_SMOKE).collect()}
+               for r in e.e24_ivf_binary_funnel(spark, SF_SMOKE).collect()}
     finally:
-        r6c._E24_SHORT = orig
+        e._E24_SHORT = orig
     want = {(r.query_id, r.neighbor_id, r.rank)
             for r in e06_trained_ivf_search(spark, SF_SMOKE).collect()}
     assert got == want
@@ -322,8 +322,8 @@ def test_d58_both_keep_branches_carry_rows(spark):
     the verdict dimension of the rollup is actually exercised (round-6
     ADVICE: bias -2000 made keep constant-false), and d59's clamped
     grid must spread the same scores over several histogram buckets."""
-    from etl_docker_spark.plans.round6 import d58_linear_classifier_scores
-    from etl_docker_spark.plans.round6c import d59_classifier_weight_join
+    from etl_docker_spark.plans.d import (d58_linear_classifier_scores,
+                                          d59_classifier_weight_join)
 
     keeps = {r.keep for r in
              d58_linear_classifier_scores(spark, SF_SMOKE).collect()}
@@ -354,8 +354,7 @@ def test_d57_auto_k_matches_rule(spark):
 
     from etl_docker_spark.llm.dedup import (auto_suffix_buckets,
                                             shingle_rows, _base_hash)
-    from etl_docker_spark.plans.round6b import (_D57_K,
-                                                d57_adversarial_frame)
+    from etl_docker_spark.plans.d import _D57_K, d57_adversarial_frame
 
     adv = d57_adversarial_frame(spark, SF_SMOKE, cap=200)
     per_doc = (shingle_rows(adv, "doc_id", "text", 3)

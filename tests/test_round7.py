@@ -12,8 +12,8 @@ def test_d60_weights_are_prior_centered(spark):
     range, and one row per observed bucket."""
     from pyspark.sql import functions as F
 
-    from etl_docker_spark.plans.round6 import _D58_BUCKETS
-    from etl_docker_spark.plans.round7 import _D60_SCALE, d60_weights_frame
+    from etl_docker_spark.plans.d import (_D58_BUCKETS, _D60_SCALE,
+                                          d60_weights_frame)
 
     w = d60_weights_frame(spark, SF_SMOKE)
     stats = w.agg(F.min("w_ppm").alias("lo"), F.max("w_ppm").alias("hi"),
@@ -29,7 +29,7 @@ def test_d60_confusion_discriminates(spark):
     keep docs score higher on average than low_diversity docs, and both
     keep_pred branches carry rows (the d58 ADVICE regression, now on
     the trained path)."""
-    from etl_docker_spark.plans.round7 import d60_trained_classifier
+    from etl_docker_spark.plans.d import d60_trained_classifier
 
     rows = d60_trained_classifier(spark, SF_SMOKE).collect()
     assert {r.keep_pred for r in rows} == {True, False}
@@ -47,7 +47,7 @@ def test_d60_served_weights_equal_retrained(spark):
     run: clear the in-session memo (simulating a new session serving
     from disk) and compare the full weight table."""
     from etl_docker_spark.llm.index_cache import clear_session_memo
-    from etl_docker_spark.plans.round7 import d60_weights_frame
+    from etl_docker_spark.plans.d import d60_weights_frame
 
     first = {(r.bucket, r.w_ppm)
              for r in d60_weights_frame(spark, SF_SMOKE).collect()}
@@ -81,7 +81,7 @@ def test_s30_metric_covers_every_shape(spark):
     """Every event shape contributes a metric through its own path
     grammar (nested object, array-of-objects, int array, string, int),
     and only errors carry fatal counts."""
-    from etl_docker_spark.plans.round7 import s30_stream_variant_ingest
+    from etl_docker_spark.plans.s import s30_stream_variant_ingest
 
     rows = {r.grp: r for r in
             s30_stream_variant_ingest(spark, SF_SMOKE).collect()}
@@ -99,9 +99,9 @@ def test_d61_yield_curve_is_cumulative_and_total(spark):
     everything above the floor == keep all), and kept counts must be
     non-increasing as the threshold rises."""
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round7 import d61_threshold_yield_curve
+    from etl_docker_spark.plans.d import d61_threshold_yield_curve
 
-    from etl_docker_spark.plans.round7 import _D61_CELLS
+    from etl_docker_spark.plans.d import _D61_CELLS
 
     rows = d61_threshold_yield_curve(spark, SF_SMOKE).collect()
     assert len(rows) == _D61_CELLS  # every threshold reports, even empty

@@ -70,7 +70,7 @@ def test_s31_window_totals_match_batch(spark):
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round8 import s31_stream_variant_landing
+    from etl_docker_spark.plans.s import s31_stream_variant_landing
 
     got = s31_stream_variant_landing(spark, SF_SMOKE)
     ev = t(spark, SF_SMOKE, "events")
@@ -94,9 +94,8 @@ def test_d62_knife_is_calibrated_not_clamped(spark):
     (not the degenerate cell-0 'keep everything' answer, not the top
     clamp), the kept token fraction must meet the 60% target, and the
     knife must actually cut (docs_kept strictly between 0 and all)."""
-    from etl_docker_spark.plans.round7 import _D61_CELLS
-    from etl_docker_spark.plans.round8 import (_D62_KEEP_TARGET_PCT,
-                                               d62_lang_calibrated_thresholds)
+    from etl_docker_spark.plans.d import (_D61_CELLS, _D62_KEEP_TARGET_PCT,
+                                          d62_lang_calibrated_thresholds)
 
     rows = d62_lang_calibrated_thresholds(spark, SF_SMOKE).collect()
     assert len(rows) == 5  # one knife per language
@@ -111,8 +110,7 @@ def test_d63_split_weights_differ_from_full(spark):
     """The 80%-split model must be a genuinely different artifact from
     the full-corpus model (same buckets, different counts -> different
     weights somewhere), trained on train rows only."""
-    from etl_docker_spark.plans.round7 import d60_weights_frame
-    from etl_docker_spark.plans.round8 import d63_weights_frame
+    from etl_docker_spark.plans.d import d60_weights_frame, d63_weights_frame
 
     full = {r.bucket: r.w_ppm
             for r in d60_weights_frame(spark, SF_SMOKE).collect()}
@@ -128,7 +126,7 @@ def test_q96_both_xml_grammars_agree(spark):
     recover identical numbers from the same documents — pinned at the
     output level (the oracle already pins both against the relational
     truth; this pins them against each other row-wise)."""
-    from etl_docker_spark.plans.round8 import q96_xml_battery
+    from etl_docker_spark.plans.q import q96_xml_battery
 
     rows = q96_xml_battery(spark, SF_SMOKE).collect()
     assert rows
@@ -178,9 +176,8 @@ def test_d64_sketch_domain_stays_exact(spark):
     jaccard = common/union must hold on the emitted rows."""
     from pyspark.sql import functions as F
 
-    from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.round8 import (_D64_DOMAIN, _D64_LGK,
-                                               d64_theta_source_overlap)
+    from etl_docker_spark.plans._util import _D64_DOMAIN, t
+    from etl_docker_spark.plans.d import _D64_LGK, d64_theta_source_overlap
 
     assert _D64_DOMAIN < 2 ** _D64_LGK  # exact regime by construction
     rows = d64_theta_source_overlap(spark, SF_SMOKE).collect()
@@ -193,7 +190,7 @@ def test_d64_sketch_domain_stays_exact(spark):
 
 
 def test_collation_primitives(spark):
-    """Round-8 probe finds staged for round 9 (plans/round9.py): pin
+    """Round-8 probe finds staged for round 9 (q97): pin
     the collation behavior q97 depends on — UTF8_LCASE merges case
     variants under GROUP BY and equality, and the group key keeps the
     FIRST-SEEN representation (why q97 must canonicalize outputs)."""
@@ -242,7 +239,7 @@ def test_d63_generalization_gap_is_visible(spark):
     than holdout keep docs (memorization > generalization), and the
     holdout half must be non-degenerate: both keep_pred branches carry
     rows."""
-    from etl_docker_spark.plans.round8 import d63_holdout_generalization
+    from etl_docker_spark.plans.d import d63_holdout_generalization
 
     rows = d63_holdout_generalization(spark, SF_SMOKE).collect()
     assert {r.split for r in rows} == {"train", "holdout"}

@@ -86,7 +86,7 @@ def test_d68_holdout_drift_is_nonzero(spark):
     data moves at least some holdout scores (mean_abs_delta_ppm > 0 on
     the holdout split), while per-split doc counts partition the
     corpus. Pinned at smoke scale."""
-    from etl_docker_spark.plans.round9b import d68_model_score_drift
+    from etl_docker_spark.plans.d import d68_model_score_drift
 
     rows = {r["split"]: r
             for r in d68_model_score_drift(spark, SF_SMOKE).collect()}
@@ -130,7 +130,7 @@ def test_bitmap_family_exact_merge(spark):
 
 
 def test_round10_primitives_levenshtein_and_try_parse_json(spark):
-    """Round-10 staged-query primitives (plans/round10.py, unregistered):
+    """Round-10 staged-query primitives (d70 and q101):
     pinned now so an environment regression before registration is
     caught. Includes the cross-engine gotcha: Spark levenshtein counts
     CODEPOINTS ('café'->'cafe' = 1; DuckDB's byte-based counts 2),
@@ -165,7 +165,7 @@ def test_d70_deletion_blocking_complete_vs_bruteforce(spark):
         ON a.id < b.id AND length(a.key) = length(b.key)
            AND levenshtein(a.key, b.key) <= 1
     """).collect()[0][0]
-    from etl_docker_spark.plans.round10 import d70_edit_distance_blocking
+    from etl_docker_spark.plans.d import d70_edit_distance_blocking
     row = d70_edit_distance_blocking(spark, SF_SMOKE).collect()[0]
     assert row["n_pairs"] == brute
     assert row["n_cand"] == row["n_pairs"]  # precision 1.0

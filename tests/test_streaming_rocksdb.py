@@ -39,19 +39,19 @@ def test_rocksdb_is_default_inside_stream_scope(spark, monkeypatch):
 
 
 def test_s03_stateful_same_under_rocksdb(spark, monkeypatch):
-    from etl_docker_spark.plans.advanced import s03_stateful_running_totals
+    from etl_docker_spark.plans.s import s03_stateful_running_totals
 
     _run_both(monkeypatch, spark, s03_stateful_running_totals)
 
 
 def test_s04_dedup_same_under_rocksdb(spark, monkeypatch):
-    from etl_docker_spark.plans.advanced import s04_stream_dedup
+    from etl_docker_spark.plans.s import s04_stream_dedup
 
     _run_both(monkeypatch, spark, s04_stream_dedup)
 
 
 def test_s09_hll_same_under_rocksdb(spark, monkeypatch):
-    from etl_docker_spark.plans.round2h import s09_stream_hll_users
+    from etl_docker_spark.plans.s import s09_stream_hll_users
 
     _run_both(monkeypatch, spark, s09_stream_hll_users)
 
@@ -60,6 +60,6 @@ def test_chained_aggs_provider_parity(spark, monkeypatch):
     """s19's multi-stateful checkpoint (two windowed aggs in one query)
     is a distinct state layout from the single-operator shapes above —
     pin provider-independence for it too."""
-    from etl_docker_spark.plans.round4c import s19_stream_chained_aggs
+    from etl_docker_spark.plans.s import s19_stream_chained_aggs
 
     _run_both(monkeypatch, spark, s19_stream_chained_aggs)

@@ -249,7 +249,7 @@ def main() -> None:
             b = int(hashlib.md5(f.encode()).hexdigest()[:8], 16) % 4096
             s += (b % 2001) - 1000
         q = abs(s) // len(feats) * (1 if s >= 0 else -1)
-        return q - 50  # keep in lockstep with plans/round6.py _D58_BIAS_PPM
+        return q - 50  # keep in lockstep with plans/d.py _D58_BIAS_PPM
     score = documents.text.map(_d58)
     documents.assign(score=score, keep=score > 0).groupby(
         ["lang", "keep"]).agg(n_docs=("doc_id", "size"))

@@ -179,7 +179,7 @@ def main() -> None:
           "source/lang — constant at any corpus scale), d69's 1-row "
           "bitmap-total broadcast, q98's 1-row priority-roster "
           "crossJoin, the 1-row x 1-row stats crossJoins of "
-          "d72/d73/d75/d76 (pair-stat and corpus-count aggregates "
+          "d72/d73/d75 (pair-stat and corpus-count aggregates "
           "joined for the single output row), and the K-row "
           "partition-offset "
           "triangle join in "

@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from etl_docker_spark.llm.dedup import (_jaccard_candidates,
                                             prefix_filter_jaccard_pairs)
-    from etl_docker_spark.plans.round6b import _D57_K, d57_adversarial_frame
+    from etl_docker_spark.plans.d import _D57_K, d57_adversarial_frame
     from etl_docker_spark.session import get_spark
 
     spark = get_spark("stress_d57")
