@@ -24,6 +24,7 @@ from etl_docker_spark.pipelines import master_data as md
 from etl_docker_spark.pipelines import sales_documents as sd
 from etl_docker_spark.pipelines.customers import transform_clients_v2
 from etl_docker_spark.session import get_spark
+from etl_docker_spark.sinks.writers import overwrite_parquet
 
 ENTITY_SCHEMAS = {
     "families": schemas.FAMILY,
@@ -42,9 +43,7 @@ def _read(spark: SparkSession, fixtures: str, entity: str) -> DataFrame:
 
 
 def _write(ctx: JobContext, name: str, df: DataFrame) -> int:
-    n = df.count()
-    df.write.mode("overwrite").parquet(f"{ctx.warehouse}/{name}")
-    return n
+    return overwrite_parquet(df, f"{ctx.warehouse}/{name}")
 
 
 def build_tasks(spark: SparkSession, fixtures: str,
@@ -94,11 +93,9 @@ def build_tasks(spark: SparkSession, fixtures: str,
             keys = {"VENTAS": ["ID_VENTA"],
                     "CARGA_VENTAS_DETALLE": ["ID_VENTA_FILA"],
                     "VENTAS_METODOS_PAGO": ["ID_VENTA_METODO_PAGO"]}
-            total = 0
-            for name, df in tables.items():
-                merge_upsert_path(spark, f"{ctx.warehouse}/{name}", df, keys[name])
-                total += df.count()
-            return total
+            return sum(merge_upsert_path(spark, f"{ctx.warehouse}/{name}", df,
+                                         keys[name])
+                       for name, df in tables.items())
         return sum(_write(ctx, name, df) for name, df in tables.items())
 
     t_fam = task("families", load_families)

@@ -18,15 +18,17 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_docker_spark.operators.dedup import dedup_first
+from etl_docker_spark.sinks.writers import counting
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, keys: Sequence[str],
                  order_by: Sequence[Column | str] | None = None,
-                 compare_target: bool = False) -> DataFrame:
+                 compare_target: bool = False,
+                 observation: Observation | None = None) -> DataFrame:
     """Latest-state-by-PK merge: rows from `updates` replace target rows with
     the same key; unmatched target rows survive; unmatched updates insert.
 
@@ -40,35 +42,54 @@ def merge_upsert(target: DataFrame, updates: DataFrame, keys: Sequence[str],
     Requires `order_by`. Costs one shuffle on the keys instead of the
     broadcast anti join; at scale, partition the target so only affected
     key ranges re-sort.
+
+    `observation`, if given, counts the rows of `updates` (`["rows"]`) on
+    the one branch that carries them into the result; the broadcast key
+    set reads `updates` without it. `target` must then belong to
+    `updates`' session, or the count never arrives. Whenever `order_by` is
+    given, the count is taken below the dedup shuffle, in a map stage: a
+    task retry is counted once, but a map stage that Spark re-runs after
+    losing an executor counts its partitions again.
     """
+    fed = counting(updates, observation) if observation is not None else updates
     if compare_target:
         if not order_by:
             raise ValueError("compare_target=True requires order_by")
-        ups = updates.select(*target.columns)
+        ups = fed.select(*target.columns)
         return dedup_first(target.unionByName(ups), keys, order_by)
-    ups = dedup_first(updates, keys, order_by) if order_by else updates
-    ups = ups.select(*target.columns)  # align column order for union
-    kept = target.join(F.broadcast(ups.select(*keys).distinct()),
+    # dedup keeps one row per key, so the raw updates carry the same key set
+    kept = target.join(F.broadcast(updates.select(*keys).distinct()),
                        on=list(keys), how="left_anti")
-    return kept.unionByName(ups)
+    ups = dedup_first(fed, keys, order_by) if order_by else fed
+    return kept.unionByName(ups.select(*target.columns))  # align column order
 
 
 def merge_upsert_path(spark: SparkSession, path: str, updates: DataFrame,
                       keys: Sequence[str],
                       order_by: Sequence[Column | str] | None = None,
-                      compare_target: bool = False) -> None:
+                      compare_target: bool = False) -> int:
     """Path-based upsert into a parquet table (creates it on first write).
 
     Rewrites the snapshot (parquet has no row-level ops). On a real deployment
     the table would be date/company-partitioned and only affected partitions
     rewritten (dynamic partition overwrite); with Delta this becomes MERGE INTO.
+
+    Returns the number of rows in `updates`, observed by the pass that
+    writes (first write) or materializes (merge) the new snapshot, with
+    `merge_upsert`'s map-stage caveat whenever `order_by` is given. The
+    target is read in `updates`' session: an observation reports only to
+    actions run in the session of the frame it observes, and a
+    foreachBatch micro-batch lives in the stream's own session, not in
+    `spark`.
     """
+    obs = Observation()
     if not os.path.exists(path):
-        updates_final = (dedup_first(updates, keys, order_by) if order_by else updates)
-        updates_final.write.mode("overwrite").parquet(path)
-        return
-    target = spark.read.parquet(path)
-    merged = merge_upsert(target, updates, keys, order_by, compare_target)
+        fed = counting(updates, obs)
+        (dedup_first(fed, keys, order_by) if order_by else fed) \
+            .write.mode("overwrite").parquet(path)
+        return obs.get["rows"]
+    target = updates.sparkSession.read.parquet(path)
+    merged = merge_upsert(target, updates, keys, order_by, compare_target, obs)
     # Pin the merged snapshot BEFORE overwriting its own input, then write
     # once: replaces the tmp-parquet write + re-read + final rewrite (three
     # full passes of the snapshot through parquet encode/decode) with one
@@ -78,6 +99,7 @@ def merge_upsert_path(spark: SparkSession, path: str, updates: DataFrame,
     # question disappears.
     pinned = merged.localCheckpoint()
     pinned.write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
 
 
 def apply_updates(target: DataFrame, updates: DataFrame, keys: Sequence[str],

@@ -8,7 +8,8 @@ failure). Here:
 - O1  the DAG is an explicit ordered task list; dims load before facts.
 - O2  scheduling stays outside the engine (cron/Airflow around spark-submit).
 - O3  retries wrap each task (Spark task-level retries cover compute).
-- O4  every task outcome lands in the audit log (sinks.audit_log_entry).
+- O4  every task outcome lands in the audit log as a driver-side one-row
+      parquet file (sinks.audit_log_entry; no Spark job).
 - O5  the per-company loop is gone — company_id is a column.
 - O6  a failing task doesn't stop the DAG; it logs and continues (the
       reference's try/except-per-task), and the run result says who failed.

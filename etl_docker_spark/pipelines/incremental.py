@@ -84,11 +84,10 @@ def run_items_incremental(ctx: JobContext, fetch: FetchFn,
     modified = _target_shape(pull("modified"))
     deleted = _target_shape(pull("deleted"))
     updates = created.unionByName(modified).unionByName(deleted)
-    n = updates.count()
 
     target_path = f"{ctx.warehouse}/ARTICULOS_INCR"
-    merge_upsert_path(ctx.spark, target_path, updates, keys=_KEYS,
-                      order_by=_order(), compare_target=True)
+    n = merge_upsert_path(ctx.spark, target_path, updates, keys=_KEYS,
+                          order_by=_order(), compare_target=True)
     bm.advance(JOB_NAME, end)
     return {"status": "ok", "rows": n, "window": (start, end)}
 

@@ -1,15 +1,5 @@
-"""Sinks (SURVEY.md §2.2): append/overwrite/merge writers, quarantine, audit log."""
+"""Sinks (SURVEY.md §2.2): overwrite/merge writers, quarantine, audit log."""
 
-from etl_docker_spark.sinks.writers import (
-    append_parquet,
-    audit_log_entry,
-    overwrite_parquet,
-    write_with_quarantine,
-)
+from etl_docker_spark.sinks.writers import audit_log_entry, overwrite_parquet
 
-__all__ = [
-    "append_parquet",
-    "audit_log_entry",
-    "overwrite_parquet",
-    "write_with_quarantine",
-]
+__all__ = ["audit_log_entry", "overwrite_parquet"]

@@ -5,16 +5,18 @@
   parameter bookkeeping that Spark's JDBC writer replaces with `batchsize`.
 - K5 truncate-and-reload -> mode("overwrite").
 - K7 Excel quarantine dump on failure (CotyData_IPN.py:190 et al.) ->
-  parquet quarantine dir keyed by table+timestamp.
-- K8 audit-log row per load (CotyData_IPN.py:19-61) -> append-only log table.
+  row-level parquet quarantine dir (route_rows_to_quarantine).
+- K8 audit-log row per load (CotyData_IPN.py:19-61) -> append-only log table,
+  one driver-side one-row parquet file per row (no Spark job).
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import traceback
+import os
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,15 +31,24 @@ AUDIT_SCHEMA = T.StructType([
 ])
 
 
-def append_parquet(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
+def counting(df: DataFrame, obs: Observation) -> DataFrame:
+    """`df` with a row counter attached: `obs.get["rows"]` is its row count
+    once the first action over the returned frame has finished, taken by
+    that pass instead of a second scan."""
+    return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
 
-def overwrite_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
+def overwrite_parquet(df: DataFrame, path: str,
+                      partition_by: list[str] | None = None) -> int:
+    """K5: overwrite `path` with `df` in one pass; returns the rows written.
+    The counter sits directly under the write, in the result stage, where
+    Spark applies each partition's count once even when a task retries."""
+    obs = Observation()
+    w = counting(df, obs).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+    return obs.get["rows"]
 
 
 def overwrite_partitions_dynamic(df: DataFrame, path: str,
@@ -62,32 +73,29 @@ def audit_log_entry(spark: SparkSession, log_path: str, load_table: str,
                     inserted_rows: int | None, total_records: int | None,
                     status_ok: bool, error_msg: str | None = None,
                     source_url: str | None = None) -> None:
-    """K8: one audit row per load attempt, appended to the log table."""
-    row = [(load_table, inserted_rows, total_records, status_ok, error_msg,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None), source_url)]
-    spark.createDataFrame(row, AUDIT_SCHEMA).write.mode("append").parquet(log_path)
+    """K8: one audit row per load attempt, appended to the log table.
 
+    The row is a one-row parquet file written on the driver with pyarrow
+    (as the reference's single `to_sql` row), so it starts no Spark job;
+    `spark` is unused and `log_path` is a local directory. The schema is
+    `AUDIT_SCHEMA`'s. The file is written under a hidden `.part-*.tmp` name
+    and renamed into place: a reader never sees a partial file, since
+    Spark's reader skips dot-prefixed names.
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-def write_with_quarantine(spark: SparkSession, df: DataFrame, path: str,
-                          quarantine_dir: str, log_path: str,
-                          load_table: str, mode: str = "append",
-                          source_url: str | None = None) -> bool:
-    """K7+K8: attempt the load; on failure dump the batch to quarantine for
-    manual replay and log the error. Returns True on success."""
-    try:
-        n = df.count()
-        df.write.mode(mode).parquet(path)
-        audit_log_entry(spark, log_path, load_table, n, n, True, None, source_url)
-        return True
-    except Exception:
-        err = traceback.format_exc()[-2000:]
-        stamp = dt.datetime.now(dt.timezone.utc).strftime("%Y%m%dT%H%M%S%f")
-        try:
-            df.write.mode("overwrite").parquet(f"{quarantine_dir}/{load_table}/{stamp}")
-        except Exception:
-            pass  # quarantine itself failed; the audit row still records the error
-        audit_log_entry(spark, log_path, load_table, 0, None, False, err, source_url)
-        return False
+    row = {"load_table": load_table, "inserted_rows": inserted_rows,
+           "total_records": total_records, "status_ok": status_ok,
+           "error_msg": error_msg, "ts": dt.datetime.now(dt.timezone.utc),
+           "source_url": source_url}
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(AUDIT_SCHEMA))
+    os.makedirs(log_path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}"
+    tmp = os.path.join(log_path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(log_path, f"{name}.parquet"))
 
 
 def route_rows_to_quarantine(df: DataFrame, valid, quarantine_dir: str,
@@ -95,7 +103,8 @@ def route_rows_to_quarantine(df: DataFrame, valid, quarantine_dir: str,
                              load_table: str = "unknown") -> DataFrame:
     """K7 at ROW granularity: split `df` on the `valid` boolean column
     expression, persist the invalid rows to a quarantine parquet dir for
-    manual replay, and return the clean frame.
+    manual replay, and return the clean frame. The quarantine count comes
+    from the quarantine write itself.
 
     The reference quarantines whole failed batches (CotyData_IPN.py:190);
     at 100 TB one malformed row must not poison a partition-sized batch, so
@@ -112,12 +121,9 @@ def route_rows_to_quarantine(df: DataFrame, valid, quarantine_dir: str,
     non-deterministic upstream (a re-fetched REST source, a sample)
     must be localCheckpoint()ed by the caller first.
     """
-    spark = df.sparkSession
     decided = F.coalesce(valid, F.lit(False))
-    bad = df.filter(~decided)
-    bad.write.mode("overwrite").parquet(quarantine_dir)
-    n_bad = spark.read.parquet(quarantine_dir).count()
+    n_bad = overwrite_parquet(df.filter(~decided), quarantine_dir)
     if log_path is not None:
-        audit_log_entry(spark, log_path, load_table, None, n_bad,
+        audit_log_entry(df.sparkSession, log_path, load_table, None, n_bad,
                         False, f"{n_bad} rows quarantined")
     return df.filter(decided)
