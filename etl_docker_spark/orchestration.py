@@ -29,9 +29,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_docker_spark.functions import date_window
-from etl_docker_spark.sinks import audit_log_entry
+from etl_docker_spark.sinks.writers import append_row, audit_log_entry
 
 
 @dataclass
@@ -91,6 +92,12 @@ def run_dag(ctx: JobContext, tasks: Sequence[Task]) -> dict[str, str]:
 # ----------------------------------------------------------------- bookmarks
 
 
+BOOKMARK_SCHEMA = T.StructType([
+    T.StructField("job", T.StringType()),
+    T.StructField("window_end", T.DateType()),
+])
+
+
 class Bookmarks:
     """Per-job incremental high-water marks in a tiny parquet table."""
 
@@ -128,9 +135,10 @@ class Bookmarks:
         return None if start > end else (start, end)
 
     def advance(self, job: str, window_end: dt.date) -> None:
-        df = self.ctx.spark.createDataFrame(
-            [(job, window_end)], "job string, window_end date")
-        df.write.mode("append").parquet(self.path)
+        """Record `window_end` as `job`'s high-water mark: one driver-side
+        row (sinks.writers.append_row), no Spark job."""
+        append_row(self.path, {"job": job, "window_end": window_end},
+                   BOOKMARK_SCHEMA)
 
 
 MASTER_DATA_ORDER = (

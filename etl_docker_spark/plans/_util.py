@@ -13,10 +13,11 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from etl_docker_spark.catalog import load_table
 
@@ -50,25 +51,40 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
                      "RocksDBStateStoreProvider")
 
+# Spark 4 writes and verifies a checksum file for every streaming
+# checkpoint file (offset log, commit log, state deltas). The gate streams
+# checkpoint into a fresh temp dir that is deleted after the run, where
+# the checksums are pure per-batch latency (~1.5 s of s14's 16.5 s wall,
+# 126 ChecksumCheckpointFileManager threads observed), so they are off
+# inside `stream_state_partitions` only; sessions keep Spark's default.
+_CHECKPOINT_CHECKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+
+# Upper bound on one availableNow run of a gate stream.
+_STREAM_TIMEOUT_S = 300
+
 
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int | None = None,
+def stream_state_partitions(spark: SparkSession, n: int = 4,
                             track_rows: bool = False):
-    """Scope streaming state-store knobs for a gate query.
+    """Scope streaming state-store knobs for a gate query; each is
+    restored on exit.
 
     - `spark.sql.shuffle.partitions`: stateful streaming sizes its
       state-store instances (and their per-batch load/commit cost) to the
       shuffle-partition count, so the right number tracks STATE volume, not
       CPU count. The gate queries keep tiny state (hundreds of keys), where
       the default 32 stores are pure overhead — ~3x of each query's wall
-      time. On a real cluster the same knob is sized up with expected key
-      cardinality ($SPARK_GRAFT_STREAM_PARTITIONS).
+      time. Callers size `n` from their input (`s._state_partitions_for`)
+      or from their key population.
     - state-store provider: RocksDB by default ($SPARK_GRAFT_STATE_STORE=
       hdfs to fall back). The default HDFS-backed store keeps every
       versioned key in JVM heap — at 100 TB/day state (dedup horizons,
       stream-stream join buffers) that OOMs; RocksDB spills to local SSD
       and bounds heap. Results are provider-independent (the s-family gate
       queries prove bit-equality; see tests/test_streaming_rocksdb.py).
+      RocksDB changelog checkpointing stays off: it was measured WORSE at
+      gate-sized state (SCALE.md); s27/s29 turn it on with `scoped_conf`
+      because the state change feed needs it.
     - rocksdb.trackTotalNumberOfRows: OFF unless `track_rows=True`.
       Tracking makes every commit count its rows (extra gets on each
       put/delete); the knob only feeds the `numRowsTotal` progress
@@ -77,42 +93,63 @@ def stream_state_partitions(spark: SparkSession, n: int | None = None,
       (13.9 -> 10.3 s at sf0.1, optimization r11). Queries that GATE
       state-size observability (s21 numRowsTotal, s29 changefeed
       reconcile) pass track_rows=True and keep exact metrics.
+    - checkpoint file checksums: off (see `_CHECKPOINT_CHECKSUM`).
     """
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    n = int(env) if env else (n or 4)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    changelog_key = ("spark.sql.streaming.stateStore.rocksdb."
-                     "changelogCheckpointing.enabled")
-    track_key = ("spark.sql.streaming.stateStore.rocksdb."
-                 "trackTotalNumberOfRows")
-    want_rocks = os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") \
-        .lower() != "hdfs"
-    # Changelog checkpointing uploads per-batch deltas instead of full
-    # RocksDB snapshots — the right dial once snapshots are GBs (it was
-    # measured WORSE at gate-sized state, see SCALE.md). Off by default;
-    # $SPARK_GRAFT_ROCKSDB_CHANGELOG=1 flips it for re-measures.
-    want_changelog = want_rocks and os.environ.get(
-        "SPARK_GRAFT_ROCKSDB_CHANGELOG", "") == "1"
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    before_provider = spark.conf.get(provider_key, None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    if want_rocks:
-        spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
-        spark.conf.set(track_key, "true" if track_rows else "false")
-    if want_changelog:
-        spark.conf.set(changelog_key, "true")
-    try:
+    with ExitStack() as scope:
+        scope.enter_context(
+            scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)))
+        scope.enter_context(scoped_conf(spark, _CHECKPOINT_CHECKSUM, "false"))
+        if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") \
+                .lower() != "hdfs":
+            scope.enter_context(scoped_conf(
+                spark, "spark.sql.streaming.stateStore.providerClass",
+                _ROCKSDB_PROVIDER))
+            scope.enter_context(scoped_conf(
+                spark, "spark.sql.streaming.stateStore.rocksdb."
+                "trackTotalNumberOfRows", "true" if track_rows else "false"))
         yield
+
+
+def finish_stream(run: DataStreamWriter | StreamingQuery,
+                  name: str) -> StreamingQuery:
+    """Run one gate stream to its end and stop it.
+
+    `run` is a configured writer, started here under an availableNow
+    trigger, or a query already started under one. A run that has not
+    finished within `_STREAM_TIMEOUT_S` has landed only part of its input,
+    so it raises `RuntimeError` naming `name` instead of returning a
+    partial sink. The query is stopped either way; its progress
+    (`recentProgress`) stays readable."""
+    q = run.trigger(availableNow=True).start() \
+        if isinstance(run, DataStreamWriter) else run
+    try:
+        finished = q.awaitTermination(_STREAM_TIMEOUT_S)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
-        if want_rocks:
-            if before_provider is None:
-                spark.conf.unset(provider_key)
-            else:
-                spark.conf.set(provider_key, before_provider)
-            spark.conf.unset(track_key)
-        if want_changelog:
-            spark.conf.unset(changelog_key)
+        q.stop()
+    if not finished:
+        raise RuntimeError(
+            f"{name}: availableNow run did not finish within "
+            f"{_STREAM_TIMEOUT_S} s; refusing a partial result")
+    return q
+
+
+def memory_stream(df: DataFrame, name: str, mode: str, n: int) -> DataFrame:
+    """Run the streaming frame `df` into the memory sink `name` (output
+    mode `mode`) inside `stream_state_partitions(n)`, through
+    `finish_stream`, and return the sink's table."""
+    with stream_state_partitions(df.sparkSession, n):
+        finish_stream(df.writeStream.outputMode(mode).format("memory")
+                      .queryName(name), name)
+    return df.sparkSession.table(name)
+
+
+def day_file_stream(spark: SparkSession, arrivals: str) -> DataFrame:
+    """The day-files `stage_day_files` staged under `arrivals`, as a stream
+    that reads one file per micro-batch. The schema comes from a batch
+    probe of the staged files."""
+    probe = spark.read.parquet(arrivals)
+    return (spark.readStream.schema(probe.schema)
+            .option("maxFilesPerTrigger", "1").parquet(arrivals))
 
 
 @contextmanager
@@ -160,17 +197,17 @@ def stage_day_files(df: DataFrame, work: str, day_col: str = "dcol",
     replays it as one deterministic micro-batch per day (file i IS
     batch i). Returns the arrivals dir; `repeats` copies each day-file
     that many consecutive times (the at-least-once redelivery feeds).
+    The one day-file stager of the s family; `day_file_stream` reads
+    its output back as a stream.
 
     One-file-per-day comes from `repartition(day_col)`: each day's rows
     land wholly in one task, so each partition DIRECTORY gets exactly
-    one file, while distinct days still write in PARALLEL — the
-    coalesce(1) idiom this replaces serialized the whole feed through a
-    single task (~10 s per rep per query at ~sf1, measured; optimization
-    round 11 ported the round-6 `_stage_daily_arrivals` idiom to every
-    staging site). Day-file CONTENT is unchanged up to row order, and
-    every consumer aggregates order-insensitively within a batch
-    (sums/counts/min/max/dedup-by-key-on-identical-payload)."""
-    import os
+    one file, while distinct days still write in PARALLEL — a
+    coalesce(1) serializes the whole feed through a single task (~10 s
+    per rep per query at ~sf1, measured). Day-file CONTENT is unchanged
+    up to row order, and every consumer aggregates order-insensitively
+    within a batch (sums/counts/min/max/dedup-by-key-on-identical-
+    payload)."""
     import shutil
 
     staged = os.path.join(work, "staged")

@@ -12,12 +12,18 @@ oracle checks the landed result.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_docker_spark.plans._util import (_D64_DOMAIN, _D67_LGK, _DAY_US,
                                           _HLL_ALPHA_NUM, _HLL_M, _HLL_RHO_MAX,
-                                          dec, stream_state_partitions, t)
+                                          day_file_stream, dec, dsum,
+                                          finish_stream, memory_stream,
+                                          scoped_conf, stage_day_files,
+                                          stream_state_partitions, t)
 
 
 # ---------------------------------------------------------------- s01 streaming
@@ -33,8 +39,6 @@ def _events_stream(spark: SparkSession, sf: str):
     streams the directory itself — a glob filter there would match nothing
     and SILENTLY produce an empty stream.
     """
-    import os
-
     from pyspark.sql import types as T
 
     path = f"{sf}/events.parquet"
@@ -64,9 +68,7 @@ def _state_partitions_for(spark: SparkSession, sf: str) -> int:
     partition, clamped to [4, cores]. Tiny gate corpora keep the cheap
     4-store setup; replicated scale corpora fan the state (and the Python
     stateful workers, which are row-bound — the parquet is ~10x
-    compressed) back out. $SPARK_GRAFT_STREAM_PARTITIONS overrides."""
-    import os
-
+    compressed) back out."""
     path = f"{sf}/events.parquet"
     if os.path.isdir(path):
         size = sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
@@ -93,12 +95,8 @@ def s01_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["event_type"], watermark="1 minute")
     name = f"s01_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S01_SQL = """
@@ -131,12 +129,8 @@ def s02_stream_sessions(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["user_id"], watermark="1 minute")
     name = f"s02_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S02_SQL = """
@@ -180,15 +174,10 @@ def s03_stateful_running_totals(spark: SparkSession, sf: str) -> DataFrame:
     stream = _events_stream(spark, sf)
     out = running_user_totals(stream.select("user_id", "ts", "value"))
     name = f"s03_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (out.writeStream.outputMode("update").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
+    sink = memory_stream(out, name, "update", _state_partitions_for(spark, sf))
     # update-mode sink: keep the final state row per user
-    from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (spark.table(name)
+    return (sink
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("user_id", "n_events"))
@@ -210,12 +199,7 @@ def s04_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
         "day", F.date_trunc("day", F.col("ts")))
     out = streaming_dedup(stream, ["user_id", "event_type", "day"])
     name = f"s04_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (out.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(out, name, "append", _state_partitions_for(spark, sf))
 
 
 S04_SQL = """
@@ -237,8 +221,6 @@ def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
     watermark — the scalable formulation of "correlate two event streams".
     Oracle = the batch join; equality checks exactly-once emission.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -259,12 +241,8 @@ def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s05_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (joined.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(joined, name, "append",
+                         _state_partitions_for(spark, sf))
 
 
 S05_SQL = """
@@ -293,34 +271,29 @@ def s06_cdc_merge(spark: SparkSession, sf: str) -> DataFrame:
     reference's staging->merge load loop (CotyData_IPN.py:207-242) as a
     continuous pipeline.
     """
-    import shutil
-    import tempfile
-
     from etl_docker_spark.streaming.cdc import merge_stream_into
 
     ev = t(spark, sf, "events").select(
         "event_id", "user_id", "ts", "event_type", "value")
-    work = tempfile.mkdtemp(prefix="s06_")
-    src, target = f"{work}/src", f"{work}/target"
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s06_", ignore_cleanup_errors=True) as work:
+        src, target = f"{work}/src", f"{work}/target"
         # three deliberately time-interleaved batches
         ev.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(src)
         stream = (spark.readStream.schema(ev.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = merge_stream_into(
-            stream, target, keys=["user_id"],
-            order_by=[F.desc("ts"), F.desc("event_id")],
-            checkpoint=f"{work}/ckpt", compare_target=True)
-        q.awaitTermination(300)
-        q.stop()
+        with stream_state_partitions(
+                spark, spark.sparkContext.defaultParallelism):
+            finish_stream(merge_stream_into(
+                stream, target, keys=["user_id"],
+                order_by=[F.desc("ts"), F.desc("event_id")],
+                checkpoint=f"{work}/ckpt", compare_target=True), "s06")
         final = (spark.read.parquet(target)
                  .select("user_id", F.col("ts").alias("last_ts"),
                          F.col("event_type").alias("last_type"),
                          F.col("value").alias("last_value"))
                  .localCheckpoint())  # pin before the workdir is deleted
         return final
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S06_SQL = """
@@ -350,12 +323,8 @@ def s07_stream_sliding(spark: SparkSession, sf: str) -> DataFrame:
          .cast("double")},
         keys=["event_type"], watermark="1 minute", slide="12 hours")
     name = f"s07_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 _HALF_DAY_US = 12 * 3600 * 1_000_000
@@ -402,12 +371,8 @@ def s08_stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(dec("value")).cast("double")},
         keys=["segment"], watermark="1 minute")
     name = f"s08_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S08_SQL = f"""
@@ -442,8 +407,6 @@ def s09_stream_hll_users(spark: SparkSession, sf: str) -> DataFrame:
     exactly reproduces the batch sketch (d28's mergeability, now across
     micro-batches instead of partitions).
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     stream = _events_stream(spark, sf)
     h = F.conv(F.substring(F.md5(F.col("user_id").cast("string")
                                  .cast("binary")), 1, 15), 16, 10) \
@@ -457,14 +420,11 @@ def s09_stream_hll_users(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("m_rho")))
     name = f"s09_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (regs.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
+    sink = memory_stream(regs, name, "complete",
+                         _state_partitions_for(spark, sf))
     # empty registers contribute 2^RHO_MAX each, so the fill is arithmetic
     # (M - observed) — no bucket-completion join needed
-    z = (spark.table(name).groupBy("event_type")
+    z = (sink.groupBy("event_type")
          .agg((F.expr(f"sum(shiftleft(cast(1 as bigint),"
                       f" {_HLL_RHO_MAX} - m_rho))")
                + (F.lit(_HLL_M) - F.count("*"))
@@ -530,12 +490,8 @@ def s10_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
         stream, "1 day", {"n_events": F.count("*")},
         keys=["event_type"], watermark="1 minute")
     name = f"s10_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    sink = spark.table(name)
+    sink = memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"),
                                                    F.asc("event_type"))
     return (sink.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -577,30 +533,26 @@ def s11_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
     unique — the preconditions under which the fold is a pure function
     of the SET of updates, independent of batching.
     """
-    import shutil
-    import tempfile
-
     from etl_docker_spark.streaming.cdc import scd2_stream_into
 
     ev = t(spark, sf, "events").select("event_id", "user_id", "ts", "value")
     w = Window.partitionBy("user_id", "ts").orderBy(F.desc("event_id"))
     feed = (ev.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn"))
-    work = tempfile.mkdtemp(prefix="s11_")
-    src, target = f"{work}/src", f"{work}/hist"
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s11_", ignore_cleanup_errors=True) as work:
+        src, target = f"{work}/src", f"{work}/hist"
         feed.repartitionByRange(3, "event_id").write.mode(
             "overwrite").parquet(src)
         stream = (spark.readStream.schema(feed.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        q = scd2_stream_into(stream, target, keys=["user_id"],
-                             attrs=["value", "event_id"], ts_col="ts",
-                             checkpoint=f"{work}/ckpt")
-        q.awaitTermination(300)
-        q.stop()
+        with stream_state_partitions(
+                spark, spark.sparkContext.defaultParallelism):
+            finish_stream(scd2_stream_into(
+                stream, target, keys=["user_id"],
+                attrs=["value", "event_id"], ts_col="ts",
+                checkpoint=f"{work}/ckpt"), "s11")
         return spark.read.parquet(target).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S11_SQL = """
@@ -632,12 +584,8 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
     twin proves the stream parsed every good line, rejected every bad
     one, and counted each exactly once across batches.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
-    from etl_docker_spark.plans._util import stream_state_partitions
     from etl_docker_spark.sources.files import CORRUPT_COL
 
     ev = t(spark, sf, "events").select(
@@ -648,8 +596,8 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                   F.concat(F.lit('{"event_id":'),
                            F.col("event_id").cast("string"))
                   ).otherwise(payload)
-    work = tempfile.mkdtemp(prefix="s12_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s12_", ignore_cleanup_errors=True) as work:
         # three files -> three micro-batches (maxFilesPerTrigger=1)
         (ev.select(line.alias("value"))
          .repartitionByRange(3, "event_id")
@@ -674,14 +622,7 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                    .agg(F.count("*").alias("n_lines"),
                         F.sum("micros").alias("sum_micros")))
         name = f"s12_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(spark, 4):
-            q = (grouped.writeStream.outputMode("complete").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return memory_stream(grouped, name, "complete", 4).localCheckpoint()
 
 
 S12_SQL = """
@@ -732,11 +673,6 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
     if any late row survived (or any on-time row was dropped), counts
     or decimal-exact sums diverge.
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (dsum, stage_day_files,
-                                              stream_state_partitions, t)
     from etl_docker_spark.streaming import tumbling_aggregate
 
     ev = t(spark, sf, "events").select("ts", "event_type", "value")
@@ -750,8 +686,8 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
 
     bridge = one_row(_S13_BRIDGE, "_bridge")
 
-    work = tempfile.mkdtemp(prefix="s13_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s13_", ignore_cleanup_errors=True) as work:
         # one parallel staging job, one file per arrival slot (pidx IS
         # the batch index: on_time, bridge, late) — the serial
         # coalesce(1)-per-part loop this replaces additionally collapsed
@@ -762,26 +698,17 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
                  .unionByName(late.withColumn("pidx", F.lit(2))))
         arrivals = stage_day_files(parts, work, day_col="pidx")
 
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         agg = tumbling_aggregate(
             stream, "1 day",
             {"n_events": F.count("*"), "total_value": dsum("value")},
             keys=["event_type"], watermark="0 seconds")
         name = f"s13_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(spark, 4):
-            q = (agg.writeStream.outputMode("append").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return (spark.table(name)
+        return (memory_stream(agg, name, "append", 4)
                 .filter(F.col("event_type") != "_bridge")
                 .select(F.col("window_start").alias("day"), "event_type",
                         "n_events", "total_value")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S13_SQL = f"""
@@ -825,11 +752,6 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
     Integer-cents totals (pandas int64 sums) keep cross-engine equality
     exact — float accumulation order would diverge in the last ulp.
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions, t)
     from etl_docker_spark.streaming.stateful import keyed_ttl_totals
 
     ev = (t(spark, sf, "events")
@@ -842,12 +764,10 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
               F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
               .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s14_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s14_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         out = keyed_ttl_totals(
             stream, ttl_ms=_S14_TTL_DAYS * 86_400_000)
         name = f"s14_sink_{abs(hash(sf)) % 10 ** 8}"
@@ -858,20 +778,14 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
         # serialized 750k per-key invocations into 185 s at ~sf1; core
         # count is the measured sweet spot (SCALE.md: past ~2x cores,
         # task scheduling + state-store commits win back the losses).
-        with stream_state_partitions(
-                spark, spark.sparkContext.defaultParallelism):
-            q = (out.writeStream.outputMode("update").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
+        sink = memory_stream(out, name, "update",
+                             spark.sparkContext.defaultParallelism)
         w = Window.partitionBy("state_key").orderBy(F.desc("last_ts"))
-        return (spark.table(name)
+        return (sink
                 .withColumn("__rn", F.row_number().over(w))
                 .filter(F.col("__rn") == 1)
                 .select("state_key", "n_events", "total_cents", "last_ts")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S14_SQL = f"""
@@ -940,11 +854,6 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
     split rule, keep non-last sessions plus last sessions ending by
     day 6, aggregate events per session.
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions, t)
     from etl_docker_spark.streaming.stateful import session_close_stream
 
     ev = (t(spark, sf, "events")
@@ -957,29 +866,20 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
               F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
               .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s15_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s15_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         out = session_close_stream(
             stream, gap_ms=_S15_GAP_DAYS * 86_400_000)
         name = f"s15_sink_{abs(hash(sf)) % 10 ** 8}"
         # per-key Python stateful operator: partitions scale with the key
         # population (= cores; see s14 and the SCALE.md partition curve)
-        with stream_state_partitions(
-                spark, spark.sparkContext.defaultParallelism):
-            q = (out.writeStream.outputMode("update").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return (spark.table(name)
+        return (memory_stream(out, name, "update",
+                              spark.sparkContext.defaultParallelism)
                 .select("state_key", "session_start", "session_end",
                         "n_events", "total_cents")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S15_SQL = f"""
@@ -1060,12 +960,6 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
     what lets the oracle replay the rule with two aggregation passes
     instead of a recursive CTE.
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S16_CUTOFF).cast("timestamp"))
           .select(
@@ -1078,27 +972,18 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
                 F.sum("cents").alias("total_cents"))
            .withColumn("dcol", F.date_format("day", "yyyy-MM-dd")))
 
-    work = tempfile.mkdtemp(prefix="s16_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s16_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(per, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         out = (stream
                .withWatermark("day", f"{_S16_DELAY_DAYS} days")
                .dropDuplicatesWithinWatermark(["state_key"]))
         name = f"s16_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(
-                spark, spark.sparkContext.defaultParallelism):
-            q = (out.writeStream.outputMode("append").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return (spark.table(name)
+        return (memory_stream(out, name, "append",
+                              spark.sparkContext.defaultParallelism)
                 .select("state_key", "day", "n_events", "total_cents")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S16_SQL = f"""
@@ -1161,8 +1046,6 @@ def s17_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     Views whose window the final no-data batch leaves open simply never
     appear — the restart-from-checkpoint analog of s15's open sessions.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -1184,12 +1067,8 @@ def s17_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s17_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (joined.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name).localCheckpoint()
+    return memory_stream(joined, name, "append",
+                         _state_partitions_for(spark, sf)).localCheckpoint()
 
 
 S17_SQL = """
@@ -1254,12 +1133,6 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     <= final watermark (max event time - 1 min) — days 1..9 on this
     feed.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import dsum, stream_state_partitions
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S18_CUTOFF).cast("timestamp"))
           .select("ts", "event_type",
@@ -1268,54 +1141,35 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s18_")
-    try:
-        staged = os.path.join(work, "staged")
-        # repartition(dcol): one file per day via one TASK per day, with
-        # distinct days writing in parallel (round-6 staging idiom; the
-        # coalesce(1) form serialized the feed through a single task)
-        ev.repartition(F.col("dcol")).write.partitionBy("dcol") \
-            .mode("overwrite").parquet(staged)
-        arrivals = os.path.join(work, "arrivals")
-        os.makedirs(arrivals)
-        ckpt = os.path.join(work, "ckpt")
+    with tempfile.TemporaryDirectory(
+            prefix="s18_", ignore_cleanup_errors=True) as work:
+        arrivals = stage_day_files(ev, work)
+        # run 1 sees days 1-5: hold days 6-10 back (a rename keeps their
+        # mtimes, so they still arrive after days 1-5)
+        held = os.path.join(work, "held")
+        os.makedirs(held)
+        late = sorted(os.listdir(arrivals))[5:]
+        for f in late:
+            os.replace(os.path.join(arrivals, f), os.path.join(held, f))
+        stream = day_file_stream(spark, arrivals)
+        agg = (stream.withWatermark("ts", "1 minute")
+               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+               .agg(F.count("*").cast("long").alias("n_events"),
+                    F.sum("cents").alias("total_cents"))
+               .select(F.col("w.start").alias("day"), "event_type",
+                       "n_events", "total_cents"))
         sink = os.path.join(work, "sink")
-        days = sorted(d for d in os.listdir(staged) if d.startswith("dcol="))
-        probe_schema = None
-
-        def run_phase(phase_days, offset):
-            nonlocal probe_schema
-            for i, d in enumerate(phase_days):
-                src_dir = os.path.join(staged, d)
-                src = next(f for f in os.listdir(src_dir)
-                           if f.endswith(".parquet"))
-                dst = os.path.join(arrivals, f"{offset + i:03d}.parquet")
-                shutil.copyfile(os.path.join(src_dir, src), dst)
-                os.utime(dst, (1700000000 + (offset + i) * 60,) * 2)
-            if probe_schema is None:
-                probe_schema = spark.read.parquet(arrivals).schema
-            stream = (spark.readStream.schema(probe_schema)
-                      .option("maxFilesPerTrigger", "1").parquet(arrivals))
-            agg = (stream.withWatermark("ts", "1 minute")
-                   .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-                   .agg(F.count("*").cast("long").alias("n_events"),
-                        F.sum("cents").alias("total_cents"))
-                   .select(F.col("w.start").alias("day"), "event_type",
-                           "n_events", "total_cents"))
-            q = (agg.writeStream.outputMode("append").format("parquet")
-                 .option("path", sink).option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-
+        writer = (agg.writeStream.outputMode("append").format("parquet")
+                  .option("path", sink)
+                  .option("checkpointLocation", os.path.join(work, "ckpt")))
         with stream_state_partitions(spark, 4):
-            run_phase(days[:5], 0)   # run 1: days 1-5, then terminate
-            run_phase(days[5:], 5)   # run 2: resume from checkpoint
+            finish_stream(writer, "s18 run 1")   # days 1-5, then terminate
+            for f in late:
+                os.replace(os.path.join(held, f), os.path.join(arrivals, f))
+            finish_stream(writer, "s18 run 2")   # resume from checkpoint
         return (spark.read.parquet(sink)
                 .select("day", "event_type", "n_events", "total_cents")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S18_SQL = f"""
@@ -1364,12 +1218,6 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
     too, so the gated output equals the batch rollup over days 1..9 and
     the last day stays open (s15's open-session discipline).
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S19_CUTOFF).cast("timestamp"))
           .select("ts", "event_type",
@@ -1378,12 +1226,10 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s19_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s19_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         hourly = (stream.withWatermark("ts", "1 minute")
                   .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
                   .agg(F.count("*").cast("long").alias("n_events"),
@@ -1397,14 +1243,7 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("dw.start").alias("day"), "event_type",
                          "n_hours", "n_events", "total_cents"))
         name = f"s19_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(spark, 4):
-            q = (daily.writeStream.outputMode("append").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return memory_stream(daily, name, "append", 4).localCheckpoint()
 
 
 S19_SQL = f"""
@@ -1456,8 +1295,6 @@ def s20_stream_full_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     Rows the final no-data batch leaves open never appear — at 100 TB
     the watermark is the only bound on both sides' join state.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -1480,12 +1317,8 @@ def s20_stream_full_outer_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s20_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (joined.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name).localCheckpoint()
+    return memory_stream(joined, name, "append",
+                         _state_partitions_for(spark, sf)).localCheckpoint()
 
 
 S20_SQL = """
@@ -1555,24 +1388,16 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
     (RocksDB and HDFS providers agree — provider-independence is the
     same claim tests/test_streaming_rocksdb.py pins for the s-family.)
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S21_CUTOFF).cast("timestamp"))
           .select("ts", "event_type",
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s21_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s21_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
@@ -1580,21 +1405,16 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
         # track_rows: this query GATES numRowsTotal — keep the exact
         # state-row metric despite its per-commit counting cost
         with stream_state_partitions(spark, 4, track_rows=True):
-            q = (agg.writeStream.outputMode("append").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            state_rows = None
-            for p in reversed(q.recentProgress):
-                if p["stateOperators"]:
-                    state_rows = int(p["stateOperators"][0]["numRowsTotal"])
-                    break
-            q.stop()
+            q = finish_stream(agg.writeStream.outputMode("append")
+                              .format("memory").queryName(name), name)
+        state_rows = next(
+            (int(p["stateOperators"][0]["numRowsTotal"])
+             for p in reversed(q.recentProgress) if p["stateOperators"]),
+            None)
         emitted = spark.table(name).count()
         return spark.createDataFrame(
             [(state_rows, emitted)],
             "n_open_state_rows long, n_closed_emitted long")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S21_SQL = f"""
@@ -1637,12 +1457,6 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
     An engine that re-emitted all keys every batch (complete-mode
     semantics leaking into update) or missed a changed key diverges in
     n_updates; a state bug diverges in the finals."""
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S22_CUTOFF).cast("timestamp"))
           .select("ts", (F.col("user_id") % 10).alias("bucket"),
@@ -1651,12 +1465,10 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s22_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s22_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         agg = (stream.groupBy("bucket")
                .agg(F.count("*").cast("long").alias("n_events"),
                     F.sum("cents").alias("total_cents")))
@@ -1672,10 +1484,8 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
                 for r in batch_df.collect())
 
         with stream_state_partitions(spark, 4):
-            q = (agg.writeStream.outputMode("update").foreachBatch(sink)
-                 .trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
+            finish_stream(agg.writeStream.outputMode("update")
+                          .foreachBatch(sink), "s22")
         # per key: emission count + the last (= largest n_events) upsert
         per_key: dict[int, tuple[int, int, int]] = {}
         for bucket, n, tc in emissions:  # batches arrive in order
@@ -1684,8 +1494,6 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
         return spark.createDataFrame(
             [(b, c, n, tc) for b, (c, n, tc) in sorted(per_key.items())],
             "bucket long, n_updates long, n_events long, total_cents long")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S22_SQL = f"""
@@ -1720,8 +1528,6 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
     the batch join + the same window cutoff — equality proves the
     propagated watermark closed exactly the right windows through TWO
     stateful operators."""
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -1745,12 +1551,8 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
              .select(F.col("w.start").alias("day"), "n_conversions",
                      "pid_checksum"))
     name = f"s23_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (daily.writeStream.outputMode("append").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name).localCheckpoint()
+    return memory_stream(daily, name, "append",
+                         _state_partitions_for(spark, sf)).localCheckpoint()
 
 
 S23_SQL = """
@@ -1806,13 +1608,6 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
     The oracle restricts the batch left join to views of the two
     earliest days — if the policy, the lag, or the late filter moved,
     the surviving-day set changes and the gate diverges."""
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (scoped_conf, stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S24_CUTOFF).cast("timestamp")))
     views = (ev.filter(F.col("event_type") == "view")
@@ -1826,9 +1621,9 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("event_id").alias("purchase_id"),
                     F.col("ts").alias("buy_ts")))
 
-    work = tempfile.mkdtemp(prefix="s24_")
     policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s24_", ignore_cleanup_errors=True) as work:
         vdir = stage_day_files(views, work)
         bdir = os.path.join(work, "buys")
         # repartition(1), not coalesce(1): coalesce collapses the whole
@@ -1858,15 +1653,7 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                         (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                         .alias("delta_us")))
             name = f"s24_sink_{abs(hash(sf)) % 10 ** 8}"
-            with stream_state_partitions(spark, 4):
-                q = (joined.writeStream.outputMode("append")
-                     .format("memory")
-                     .queryName(name).trigger(availableNow=True).start())
-                q.awaitTermination(300)
-                q.stop()
-            return spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+            return memory_stream(joined, name, "append", 4).localCheckpoint()
 
 
 S24_SQL = f"""
@@ -1911,12 +1698,6 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
     which is the exactly-once-from-at-least-once contract production
     feeds rely on (upstream replays being absorbed by keyed dedup
     state bounded by the watermark, not by an unbounded seen-set)."""
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S25_CUTOFF).cast("timestamp"))
           .select("event_id", "ts", "event_type",
@@ -1925,13 +1706,11 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s25_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s25_", ignore_cleanup_errors=True) as work:
         # each day delivered twice, back to back (redelivery feed)
         arrivals = stage_day_files(ev, work, repeats=2)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         deduped = (stream.withWatermark("ts", "2 days")
                    .dropDuplicatesWithinWatermark(["event_id"]))
         daily = (deduped
@@ -1941,14 +1720,7 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("w.start").alias("day"), "event_type",
                          "n_events", "total_cents"))
         name = f"s25_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(spark, 4):
-            q = (daily.writeStream.outputMode("append").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return memory_stream(daily, name, "append", 4).localCheckpoint()
 
 
 S25_SQL = f"""
@@ -1992,42 +1764,23 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
     its group. The state reader runs under the same provider conf as
     the write (RocksDB by default), exercising the provider round-trip.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (stage_day_files,
-                                              stream_state_partitions)
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_S26_CUTOFF).cast("timestamp"))
           .select("ts", "event_type",
                   F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
                   .alias("dcol")))
 
-    work = tempfile.mkdtemp(prefix="s26_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s26_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+        stream = day_file_stream(spark, arrivals)
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
         with stream_state_partitions(spark, 4):
-            q = (agg.writeStream.outputMode("append").format("noop")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            # A timed-out availableNow run leaves PARTIAL aggregates in
-            # the store — reading them as the answer would be silently
-            # wrong, so a non-terminated run must raise, never proceed.
-            finished = q.awaitTermination(300)
-            q.stop()
-            if not finished:
-                raise RuntimeError(
-                    "s26: availableNow run did not terminate within "
-                    "300 s; refusing to read a partial state store")
+            finish_stream(agg.writeStream.outputMode("append").format("noop")
+                          .option("checkpointLocation", ckpt), "s26")
             # Read under the SAME provider conf the write used — the
             # reader materializes the store files, not the progress API.
             state = (spark.read.format("statestore").load(ckpt)
@@ -2040,8 +1793,6 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
                          .alias("n_events"))
                      .localCheckpoint())
         return state
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S26_SQL = f"""
@@ -2061,49 +1812,22 @@ HAVING w_start + INTERVAL 1 DAY > wm.w
 # ---------------------------------------------------------------- s27/s28
 
 _S27_CUTOFF = "2024-01-11"  # the s14/s15/s26 10-day feed
+# the state change feed reads per-batch changelogs, which RocksDB writes
+# only under changelog checkpointing (see s27)
+_CHANGELOG_KEY = ("spark.sql.streaming.stateStore.rocksdb."
+                  "changelogCheckpointing.enabled")
 
 
-def _stage_daily_arrivals(spark: SparkSession, sf: str, work: str) -> str:
-    """Stage the events feed as one parquet file per day with ascending
-    mtimes (s18/s26's arrival discipline), so `maxFilesPerTrigger=1`
-    replays it as one deterministic micro-batch per day: file i IS
-    batch i. Returns the arrivals dir.
-
-    One-file-per-day comes from `repartition(dcol)` — each day's rows
-    land wholly in one task, so each partition DIRECTORY gets exactly
-    one file, while distinct days still write in parallel (the
-    coalesce(1) idiom serializes the whole feed through a single task:
-    ~10 s per rep per query at ~sf1, measured)."""
-    import os
-    import shutil
-
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S27_CUTOFF).cast("timestamp"))
-          .select("ts", "event_type",
-                  F.round(F.col("value") * 100, 0).cast("long")
-                  .alias("cents"),
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-    staged = os.path.join(work, "staged")
-    ev.repartition(F.col("dcol")).write.partitionBy("dcol") \
-        .mode("overwrite").parquet(staged)
-    arrivals = os.path.join(work, "arrivals")
-    os.makedirs(arrivals)
-    days = sorted(d for d in os.listdir(staged) if d.startswith("dcol="))
-    for i, d in enumerate(days):
-        src_dir = os.path.join(staged, d)
-        matches = [f for f in os.listdir(src_dir) if f.endswith(".parquet")]
-        if len(matches) != 1:
-            # a foreign maxRecordsPerFile (or any future write-path change)
-            # splitting a day into multiple files must fail HERE, not as a
-            # confusing downstream mismatch in the s27/s28/s29 gates
-            raise RuntimeError(
-                f"expected exactly one parquet file per day in {src_dir}, "
-                f"found {matches}")
-        dst = os.path.join(arrivals, f"{i:03d}.parquet")
-        shutil.copyfile(os.path.join(src_dir, matches[0]), dst)
-        os.utime(dst, (1700000000 + i * 60,) * 2)
-    return arrivals
+def _s27_feed(spark: SparkSession, sf: str) -> DataFrame:
+    """The s27-s29 feed: ten days of events with integer cents, keyed by
+    day (`dcol`) for `stage_day_files`."""
+    return (t(spark, sf, "events")
+            .filter(F.col("ts") < F.lit(_S27_CUTOFF).cast("timestamp"))
+            .select("ts", "event_type",
+                    F.round(F.col("value") * 100, 0).cast("long")
+                    .alias("cents"),
+                    F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+                    .alias("dcol")))
 
 
 def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
@@ -2133,36 +1857,18 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
     ~sf1 negative result in SCALE.md), it is a PREREQUISITE for change
     feed introspection. Scoped on here for the run + read.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (scoped_conf,
-                                              stream_state_partitions)
-
-    work = tempfile.mkdtemp(prefix="s27_")
-    try:
-        arrivals = _stage_daily_arrivals(spark, sf, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+    with tempfile.TemporaryDirectory(
+            prefix="s27_", ignore_cleanup_errors=True) as work:
+        arrivals = stage_day_files(_s27_feed(spark, sf), work)
+        stream = day_file_stream(spark, arrivals)
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        changelog_key = ("spark.sql.streaming.stateStore.rocksdb."
-                        "changelogCheckpointing.enabled")
         with stream_state_partitions(spark, 4), \
-                scoped_conf(spark, changelog_key, "true"):
-            q = (agg.writeStream.outputMode("append").format("noop")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            finished = q.awaitTermination(300)
-            q.stop()
-            if not finished:
-                raise RuntimeError(
-                    "s27: availableNow run did not terminate within "
-                    "300 s; refusing to read a partial change feed")
+                scoped_conf(spark, _CHANGELOG_KEY, "true"):
+            finish_stream(agg.writeStream.outputMode("append").format("noop")
+                          .option("checkpointLocation", ckpt), "s27")
             feed = (spark.read.format("statestore")
                     .option("readChangeFeed", "true")
                     .option("changeStartBatchId", "0")
@@ -2180,8 +1886,6 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
                  .alias("n_events"),
                  F.bool_or(F.col("change_type") == "delete")
                  .alias("evicted")))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S27_SQL = f"""
@@ -2227,18 +1931,10 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
     read-back dedup check groups on (batch, key) — bench-scale bounded,
     and on a cluster it is the sink's own primary-key constraint.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import stream_state_partitions
-
-    work = tempfile.mkdtemp(prefix="s28_")
-    try:
-        arrivals = _stage_daily_arrivals(spark, sf, work)
-        probe = spark.read.parquet(arrivals)
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
+    with tempfile.TemporaryDirectory(
+            prefix="s28_", ignore_cleanup_errors=True) as work:
+        arrivals = stage_day_files(_s27_feed(spark, sf), work)
+        stream = day_file_stream(spark, arrivals)
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events"),
@@ -2268,16 +1964,9 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
                 out.unpersist()
 
         with stream_state_partitions(spark, 4):
-            q = (agg.writeStream.outputMode("update")
-                 .foreachBatch(write_batch)
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            finished = q.awaitTermination(300)
-            q.stop()
-            if not finished:
-                raise RuntimeError(
-                    "s28: availableNow run did not terminate within "
-                    "300 s; refusing to read a partial sink")
+            finish_stream(agg.writeStream.outputMode("update")
+                          .foreachBatch(write_batch)
+                          .option("checkpointLocation", ckpt), "s28")
         parts = [os.path.join(sink, d) for d in sorted(os.listdir(sink))]
         parts = [p for p in parts
                  if any(f.endswith(".parquet") for f in os.listdir(p))]
@@ -2293,8 +1982,6 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
         return (rows.withColumn("rn", F.row_number().over(w))
                 .filter("rn = 1")
                 .select("day", "event_type", "n_events", "total_cents"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 S28_SQL = f"""
@@ -2329,42 +2016,24 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
     the data-determined invariant). All four channels must equal the
     oracle's counts, which are plain GROUP BYs over the staged feed.
     """
-    import os
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import (scoped_conf,
-                                              stream_state_partitions)
-
-    work = tempfile.mkdtemp(prefix="s29_")
-    try:
-        arrivals = _stage_daily_arrivals(spark, sf, work)
-        probe = spark.read.parquet(arrivals)
+    with tempfile.TemporaryDirectory(
+            prefix="s29_", ignore_cleanup_errors=True) as work:
+        arrivals = stage_day_files(_s27_feed(spark, sf), work)
+        stream = day_file_stream(spark, arrivals)
         n_days = len(os.listdir(arrivals))
-        stream = (spark.readStream.schema(probe.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(arrivals))
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        changelog_key = ("spark.sql.streaming.stateStore.rocksdb."
-                         "changelogCheckpointing.enabled")
         # track_rows: the reconcile gate reads numRowsUpdated/Removed;
         # keep row tracking exact rather than relying on the untracked
         # fast path's metric semantics
         with stream_state_partitions(spark, 4, track_rows=True), \
-                scoped_conf(spark, changelog_key, "true"):
-            q = (agg.writeStream.outputMode("append").format("noop")
-                 .option("checkpointLocation", ckpt)
-                 .trigger(availableNow=True).start())
-            finished = q.awaitTermination(300)
-            if not finished:
-                q.stop()
-                raise RuntimeError(
-                    "s29: availableNow run did not terminate within "
-                    "300 s; refusing to reconcile a partial run")
+                scoped_conf(spark, _CHANGELOG_KEY, "true"):
+            q = finish_stream(agg.writeStream.outputMode("append")
+                              .format("noop")
+                              .option("checkpointLocation", ckpt), "s29")
             progress = [p for p in q.recentProgress if p is not None]
-            q.stop()
             feed = (spark.read.format("statestore")
                     .option("readChangeFeed", "true")
                     .option("changeStartBatchId", "0")
@@ -2397,8 +2066,6 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
                 .withColumn("total_metric_removed",
                             F.lit(removed_total).cast("long"))
                 .orderBy("batch_id"))
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 _S29_CUTOFF = "2024-01-11"
@@ -2458,11 +2125,6 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
     the cost IS the scan — identical to s12's, with the reader schema
     debt removed.
     """
-    import shutil
-    import tempfile
-
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     ev = t(spark, sf, "events").select(
         "event_id", "event_type",
         F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
@@ -2487,8 +2149,8 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
             F.lit("error").alias("t"), i.alias("id"),
             (i % 503).alias("code"),
             (i % 2 == 0).alias("fatal")))))
-    work = tempfile.mkdtemp(prefix="s30_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="s30_", ignore_cleanup_errors=True) as work:
         (ev.select(payload.alias("value"))
          .repartitionByRange(3, "event_id")
          .write.mode("overwrite").text(work))
@@ -2516,14 +2178,7 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum("metric").cast("long").alias("sum_metric"),
                  F.sum("flag").cast("long").alias("n_fatal")))
         name = f"s30_sink_{abs(hash(sf)) % 10 ** 8}"
-        with stream_state_partitions(spark, 4):
-            q = (grouped.writeStream.outputMode("complete").format("memory")
-                 .queryName(name).trigger(availableNow=True).start())
-            q.awaitTermination(300)
-            q.stop()
-        return spark.table(name).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return memory_stream(grouped, name, "complete", 4).localCheckpoint()
 
 
 S30_SQL = """
@@ -2572,8 +2227,6 @@ def s31_stream_variant_landing(spark: SparkSession, sf: str) -> DataFrame:
     one windowed shuffle — identical to s01's, with the JSON parsing
     folded into the same pass instead of a downstream re-parse job.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     stream = _events_stream(spark, sf)
     parsed = stream.select(
         "ts", "event_type",
@@ -2593,12 +2246,8 @@ def s31_stream_variant_landing(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "sum_k", "n_missing"))
     name = f"s31_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S31_SQL = """
@@ -2638,8 +2287,6 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     100 TB feed you would drop the bucketing and accept the ±0.8%
     HLL error — the plan does not change, only the exactness argument.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     stream = _events_stream(spark, sf)
     bucket = F.expr(
         f"pmod(CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), "
@@ -2654,12 +2301,8 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "n_user_buckets"))
     name = f"s32_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S32_SQL = f"""
@@ -2698,8 +2341,6 @@ def s33_stream_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
     (days x verdicts) windowed groups behind a watermark — s31's exact
     state bound with the quarantine verdict as the extra key.
     """
-    from etl_docker_spark.plans._util import stream_state_partitions
-
     stream = _events_stream(spark, sf)
     fed = stream.select(
         "ts",
@@ -2726,12 +2367,8 @@ def s33_stream_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "verdict", "n_rows", "sum_k"))
     name = f"s33_sink_{abs(hash(sf)) % 10 ** 8}"
-    with stream_state_partitions(spark, _state_partitions_for(spark, sf)):
-        q = (agg.writeStream.outputMode("complete").format("memory")
-             .queryName(name).trigger(availableNow=True).start())
-        q.awaitTermination(300)
-        q.stop()
-    return spark.table(name)
+    return memory_stream(agg, name, "complete",
+                         _state_partitions_for(spark, sf))
 
 
 S33_SQL = """

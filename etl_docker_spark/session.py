@@ -74,17 +74,6 @@ def get_spark(
         # path, COW-inherited imports; per-executor cost on any deployment.
         .config("spark.python.daemon.module", "etl_docker_spark.pydaemon")
         .config("spark.executorEnv.PYTHONPATH", _pythonpath_with_pkg_root())
-        # Spark 4 writes + verifies a checksum file for EVERY streaming
-        # checkpoint file (offset log, commit log, state deltas) — storage-
-        # corruption detection for long-lived checkpoints. Our streams
-        # create ephemeral per-run checkpoints (fresh temp dir each run),
-        # where the checksums are pure per-batch latency (~1.5 s of s14's
-        # 16.5 s wall, 126 ChecksumCheckpointFileManager threads observed).
-        # Default off here; $SPARK_GRAFT_CHECKPOINT_CHECKSUM=1 restores the
-        # Spark default for deployments with durable checkpoints.
-        .config("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-                "true" if os.environ.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM")
-                == "1" else "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

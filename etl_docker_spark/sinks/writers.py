@@ -69,33 +69,40 @@ def overwrite_partitions_dynamic(df: DataFrame, path: str,
         spark.conf.set(key, before)
 
 
+def append_row(path: str, row: dict, schema: T.StructType) -> None:
+    """Append `row` to the parquet table in the local directory `path` as
+    a one-row parquet file written on the driver with pyarrow, under
+    `schema`'s names and types, so it starts no Spark job. The file is
+    written under a hidden `.part-*.tmp` name and renamed into place: a
+    reader never sees a partial file, since Spark's reader skips
+    dot-prefixed names."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist([row], schema=to_arrow_schema(schema))
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}"
+    tmp = os.path.join(path, f".{name}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, f"{name}.parquet"))
+
+
 def audit_log_entry(spark: SparkSession, log_path: str, load_table: str,
                     inserted_rows: int | None, total_records: int | None,
                     status_ok: bool, error_msg: str | None = None,
                     source_url: str | None = None) -> None:
     """K8: one audit row per load attempt, appended to the log table.
 
-    The row is a one-row parquet file written on the driver with pyarrow
-    (as the reference's single `to_sql` row), so it starts no Spark job;
-    `spark` is unused and `log_path` is a local directory. The schema is
-    `AUDIT_SCHEMA`'s. The file is written under a hidden `.part-*.tmp` name
-    and renamed into place: a reader never sees a partial file, since
-    Spark's reader skips dot-prefixed names.
+    The row is appended with `append_row` (as the reference's single
+    `to_sql` row), so it starts no Spark job; `spark` is unused and
+    `log_path` is a local directory. The schema is `AUDIT_SCHEMA`'s.
     """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    row = {"load_table": load_table, "inserted_rows": inserted_rows,
-           "total_records": total_records, "status_ok": status_ok,
-           "error_msg": error_msg, "ts": dt.datetime.now(dt.timezone.utc),
-           "source_url": source_url}
-    table = pa.Table.from_pylist([row], schema=to_arrow_schema(AUDIT_SCHEMA))
-    os.makedirs(log_path, exist_ok=True)
-    name = f"part-{uuid.uuid4()}"
-    tmp = os.path.join(log_path, f".{name}.tmp")
-    pq.write_table(table, tmp)
-    os.replace(tmp, os.path.join(log_path, f"{name}.parquet"))
+    append_row(log_path, {
+        "load_table": load_table, "inserted_rows": inserted_rows,
+        "total_records": total_records, "status_ok": status_ok,
+        "error_msg": error_msg, "ts": dt.datetime.now(dt.timezone.utc),
+        "source_url": source_url}, AUDIT_SCHEMA)
 
 
 def route_rows_to_quarantine(df: DataFrame, valid, quarantine_dir: str,

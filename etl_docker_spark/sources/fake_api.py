@@ -1,19 +1,11 @@
 """Deterministic fake endpoint fetchers (test/demo backends for the REST
 source). Importable on executors by path — e.g.
-`etl_docker_spark.sources.fake_api:fetch_families`.
+`etl_docker_spark.sources.fake_api:fetch_items_windowed`.
 """
 
 from __future__ import annotations
 
 PAGE_SIZE = 3
-TOTAL = 8
-
-
-def fetch_families(page: int, params: dict) -> list[dict]:
-    """8 family records, 3 per page; respects a min_id filter param."""
-    min_id = int(params.get("min_id", "0"))
-    rows = [{"Id": i, "Name": f"fam{i}"} for i in range(TOTAL) if i >= min_id]
-    return rows[page * PAGE_SIZE:(page + 1) * PAGE_SIZE]
 
 
 # --------------------------------------------------------- windowed items

@@ -19,9 +19,9 @@ from etl_docker_spark.operators.merge import merge_upsert_path
 def merge_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
                       order_by: Sequence[Column] | None = None,
                       checkpoint: str | None = None,
-                      trigger_once: bool = True,
                       compare_target: bool = False) -> StreamingQuery:
-    """Continuously MERGE a stream of updates into a parquet table.
+    """MERGE a stream of updates into a parquet table; returns the query,
+    started under an availableNow trigger.
 
     `compare_target=True` (with `order_by`) makes the result independent of
     micro-batch arrival order — a late batch with an older version of a key
@@ -34,16 +34,14 @@ def merge_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
     writer = stream.writeStream.foreachBatch(upsert_batch)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()
 
 
 def scd2_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
                      attrs: Sequence[str], ts_col: str = "ts",
-                     checkpoint: str | None = None,
-                     trigger_once: bool = True) -> StreamingQuery:
-    """Maintain an SCD2 history table from a stream of updates.
+                     checkpoint: str | None = None) -> StreamingQuery:
+    """Maintain an SCD2 history table from a stream of updates; returns
+    the query, started under an availableNow trigger.
 
     Each micro-batch folds into the parquet history via
     operators.scd2.scd2_apply — the warehouse's slowly-changing-dimension
@@ -74,6 +72,4 @@ def scd2_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
     writer = stream.writeStream.foreachBatch(fold)
     if checkpoint:
         writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return writer.trigger(availableNow=True).start()

@@ -48,27 +48,6 @@ def test_json_roundtrip(spark, lineitem, tmp_path):
     assert agg(back) == agg(lineitem)
 
 
-def test_delta_gated(spark, lineitem, tmp_path):
-    from etl_docker_spark.sinks.lakehouse import write_delta
-
-    with pytest.raises(NotImplementedError):
-        write_delta(lineitem.limit(1), str(tmp_path / "delta"))
-
-
-def test_avro_gated(spark, lineitem, tmp_path):
-    """Avro is a gated source here (spark-avro module not bundled): the
-    gate must raise the actionable NotImplementedError, or — if a future
-    environment ships the module — the roundtrip must be exact."""
-    from etl_docker_spark.sources.avro import read_avro, write_avro
-
-    try:
-        write_avro(lineitem, str(tmp_path / "li_avro"))
-    except NotImplementedError as exc:
-        assert "spark-avro" in str(exc)
-        return
-    assert agg(read_avro(spark, str(tmp_path / "li_avro"))) == agg(lineitem)
-
-
 def test_dynamic_partition_overwrite(spark, tmp_path):
     """overwrite_partitions_dynamic rewrites only the partitions present in
     the incoming frame; siblings survive (static overwrite would drop them)."""

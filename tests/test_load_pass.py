@@ -1,5 +1,6 @@
 """One Spark pass per load: row counts come from the write itself, and the
-audit row is a driver-side parquet file that starts no Spark job."""
+audit and bookmark rows are driver-side parquet files that start no Spark
+job."""
 
 from __future__ import annotations
 
@@ -14,7 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_docker_spark import jobs
 from etl_docker_spark.operators.merge import merge_upsert_path
-from etl_docker_spark.orchestration import JobContext
+from etl_docker_spark.orchestration import Bookmarks, JobContext
 from etl_docker_spark.pipelines import master_data as md
 from etl_docker_spark.pipelines import sales_documents as sd
 from etl_docker_spark.sinks.writers import (
@@ -102,6 +103,29 @@ def test_stray_temp_file_is_invisible_to_readers(spark, tmp_path):
     with open(os.path.join(log, ".part-crashed.tmp"), "wb") as fh:
         fh.write(b"PAR1 truncated")
     assert sorted(map(tuple, spark.read.parquet(log).collect())) == before
+
+
+def test_bookmark_advance_starts_no_spark_job(spark, tmp_path):
+    bm = Bookmarks(_ctx(spark, tmp_path))
+    with jobs_started(spark, "bookmark") as started:
+        bm.advance("items", dt.date(2024, 3, 12))
+    assert started == []
+    assert bm.last_window_end("items") == dt.date(2024, 3, 12)
+
+
+def test_bookmarks_from_spark_and_driver_read_back_alike(spark, tmp_path):
+    ctx = _ctx(spark, tmp_path)
+    bm = Bookmarks(ctx)
+    spark.createDataFrame([("items", dt.date(2024, 3, 10))],
+                          "job string, window_end date") \
+        .write.mode("append").parquet(ctx.bookmarks_path)
+    run_date = dt.date(2024, 3, 20)
+    assert bm.next_window("items", run_date) == \
+        (dt.date(2024, 3, 11), dt.date(2024, 3, 19))
+    bm.advance("items", dt.date(2024, 3, 14))
+    assert bm.next_window("items", run_date) == \
+        (dt.date(2024, 3, 15), dt.date(2024, 3, 19))
+    assert bm.last_window_end("other") is None
 
 
 def test_quarantine_count_comes_from_its_write(spark, tmp_path):

@@ -305,6 +305,53 @@ def test_e19_exact_work_is_shortlist_bounded(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_finish_stream_raises_and_stops_a_cut_off_run():
+    """A gate stream that did not finish within its bound has landed only
+    part of its input: `finish_stream` must stop it and raise, naming the
+    query, instead of returning the partial sink."""
+    from etl_docker_spark.plans._util import finish_stream
+
+    class FakeQuery:
+        def __init__(self, finished: bool):
+            self.finished, self.stopped = finished, False
+
+        def awaitTermination(self, timeout):
+            return self.finished
+
+        def stop(self):
+            self.stopped = True
+
+    cut = FakeQuery(finished=False)
+    with pytest.raises(RuntimeError, match="s99"):
+        finish_stream(cut, "s99")
+    assert cut.stopped
+    done = FakeQuery(finished=True)
+    assert finish_stream(done, "s99") is done and done.stopped
+
+
+def test_gate_streams_finish_through_util():
+    """Every gate stream in plans/ is started, awaited and stopped by
+    `_util.finish_stream` (which raises when a run does not finish), and
+    s.py stages its temp dirs through `tempfile.TemporaryDirectory`."""
+    import os
+
+    import etl_docker_spark.plans as plans_pkg
+
+    plans_dir = os.path.dirname(plans_pkg.__file__)
+    offenders = []
+    for fname in sorted(os.listdir(plans_dir)):
+        if not fname.endswith(".py") or fname == "_util.py":
+            continue
+        banned = ["awaitTermination(", "trigger(availableNow=True)"]
+        if fname == "s.py":
+            banned.append("tempfile.mkdtemp(")
+        with open(os.path.join(plans_dir, fname)) as f:
+            for lineno, line in enumerate(f, 1):
+                if any(b in line for b in banned):
+                    offenders.append(f"{fname}:{lineno}: {line.strip()}")
+    assert not offenders, offenders
+
+
 def test_no_bare_conf_set_outside_util():
     """The grep-auditability contract `session_conf`'s docstring states:
     all runtime-conf mutation in plans/ goes through `_util.scoped_conf`

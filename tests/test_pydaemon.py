@@ -49,10 +49,10 @@ def test_session_wires_daemon_and_pythonpath(spark):
     pp = spark.conf.get("spark.executorEnv.PYTHONPATH")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     assert pp.split(":")[0] == repo
-    # checkpoint checksums default off (ephemeral per-run checkpoints);
-    # $SPARK_GRAFT_CHECKPOINT_CHECKSUM=1 restores the Spark default
+    # the session keeps Spark's checkpoint checksums; only the gate-stream
+    # scope (plans._util.stream_state_partitions) turns them off
     assert spark.conf.get(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false"
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "true"
 
 
 def test_stateful_worker_roundtrip(spark):

@@ -38,6 +38,18 @@ def test_rocksdb_is_default_inside_stream_scope(spark, monkeypatch):
     assert spark.conf.get(key, None) != _ROCKSDB_PROVIDER
 
 
+def test_checkpoint_checksums_off_only_inside_stream_scope(spark):
+    from etl_docker_spark.plans._util import stream_state_partitions
+
+    key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    for prior in ("true", "false"):
+        spark.conf.set(key, prior)
+        with stream_state_partitions(spark, 2):
+            assert spark.conf.get(key) == "false"
+        assert spark.conf.get(key) == prior
+    spark.conf.unset(key)
+
+
 def test_s03_stateful_same_under_rocksdb(spark, monkeypatch):
     from etl_docker_spark.plans.s import s03_stateful_running_totals
 
