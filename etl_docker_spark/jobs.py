@@ -4,8 +4,9 @@ Airflow DAG (dag_maestros.py), runnable as a module:
     python -m etl_docker_spark.jobs --fixtures <dir> --warehouse <dir>
 
 Reads entity JSONL files (schema-on-read with the declared StructTypes),
-runs the master-data + documents DAG in dependency order with per-task
-error isolation and audit logging, and writes warehouse parquet tables.
+runs the master-data + documents DAG (independent tasks at the same time,
+each after its declared dependencies) with per-task error isolation and
+audit logging, and writes warehouse parquet tables.
 `--make-demo-fixtures` materializes a small self-contained input set so the
 runner can be exercised anywhere.
 """
@@ -13,13 +14,15 @@ runner can be exercised anywhere.
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_docker_spark import schemas
-from etl_docker_spark.orchestration import JobContext, Task, run_dag
+from etl_docker_spark.orchestration import (JobContext, Task, run_concurrently,
+                                             run_dag)
 from etl_docker_spark.pipelines import master_data as md
 from etl_docker_spark.pipelines import sales_documents as sd
 from etl_docker_spark.pipelines.customers import transform_clients_v2
@@ -48,7 +51,12 @@ def _write(ctx: JobContext, name: str, df: DataFrame) -> int:
 
 def build_tasks(spark: SparkSession, fixtures: str,
                 incremental: bool = False) -> list[Task]:
-    """The DAG: dims in the reference's order, then documents.
+    """The DAG: the dims in the reference's order, and the documents.
+
+    Only categories declares a dependency (on families, whose codes its
+    rows carry); every other task starts at once. `sales_documents`
+    declares none because its pipeline reads no dimension table, so it
+    runs beside the dims.
 
     `incremental=True` MERGES sales documents by PK instead of overwriting
     — re-running the same window is a no-op (the K2 staging/proc contract).
@@ -85,6 +93,14 @@ def build_tasks(spark: SparkSession, fixtures: str,
                                            razon_social=1))
 
     def load_sales(ctx):
+        """Write, or merge, the three sales tables at the same time
+        (`run_concurrently`); returns their summed rows.
+
+        A table that fails does not stop the other two from being
+        written; the task then fails with the first table's error, and its
+        retry rewrites all three. That is safe because an overwrite and
+        `merge_upsert_path` are both idempotent on replay.
+        """
         tables = sd.sales_document_tables(_read(spark, fixtures, "sales_documents"))
         if incremental:
             # the staging+proc contract: latest state by PK, idempotent replay
@@ -93,10 +109,13 @@ def build_tasks(spark: SparkSession, fixtures: str,
             keys = {"VENTAS": ["ID_VENTA"],
                     "CARGA_VENTAS_DETALLE": ["ID_VENTA_FILA"],
                     "VENTAS_METODOS_PAGO": ["ID_VENTA_METODO_PAGO"]}
-            return sum(merge_upsert_path(spark, f"{ctx.warehouse}/{name}", df,
-                                         keys[name])
-                       for name, df in tables.items())
-        return sum(_write(ctx, name, df) for name, df in tables.items())
+            writes = [functools.partial(merge_upsert_path, spark,
+                                        f"{ctx.warehouse}/{name}", df, keys[name])
+                      for name, df in tables.items()]
+        else:
+            writes = [functools.partial(_write, ctx, name, df)
+                      for name, df in tables.items()]
+        return sum(run_concurrently(spark, writes))
 
     t_fam = task("families", load_families)
     t_cat = Task("categories", load_categories, retries=1, retry_delay_s=0.5,

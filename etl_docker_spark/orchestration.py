@@ -3,13 +3,18 @@
 Reference (SURVEY.md §2.11): 9 sequential PythonOperator tasks in dependency
 order (dag_maestros.py:112-159), weekday-aware date windows (:10-22), retry
 (:33-34), per-load audit logging, per-task error isolation (continue on
-failure). Here:
+failure). The reference runs them one after another only because Airflow
+`standalone` uses the SequentialExecutor. Here:
 
-- O1  the DAG is an explicit ordered task list; dims load before facts.
+- O1  the declared dependencies (`Task.depends_on`) are the only order: each
+      task starts, in its own thread, as soon as its dependencies have
+      finished, so independent tasks overlap their Spark jobs. A dependency
+      must name an earlier task, which also rules out cycles.
 - O2  scheduling stays outside the engine (cron/Airflow around spark-submit).
 - O3  retries wrap each task (Spark task-level retries cover compute).
 - O4  every task outcome lands in the audit log as a driver-side one-row
-      parquet file (sinks.audit_log_entry; no Spark job).
+      parquet file (sinks.audit_log_entry; no Spark job), in the order the
+      tasks finish.
 - O5  the per-company loop is gone — company_id is a column.
 - O6  a failing task doesn't stop the DAG; it logs and continues (the
       reference's try/except-per-task), and the run result says who failed.
@@ -22,11 +27,15 @@ failure). Here:
 from __future__ import annotations
 
 import datetime as dt
+import functools
 import os
+import threading
 import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,37 +65,102 @@ class Task:
     depends_on: Sequence[str] = field(default_factory=tuple)
 
 
-def run_dag(ctx: JobContext, tasks: Sequence[Task]) -> dict[str, str]:
-    """Run tasks in order with dependency + error isolation semantics.
+def run_concurrently(spark: SparkSession,
+                     fns: Sequence[Callable[[], Any]]) -> list[Any]:
+    """Call each of `fns` in its own thread; return their results in order.
 
-    Returns {task_name: 'ok' | 'failed' | 'skipped'}; a task whose
-    dependency failed is skipped (the reference's linear chain stops the
-    chain; explicit deps make that precise).
+    Each thread starts with the caller's Spark local properties and tags
+    (`inheritable_thread_target`), so job groups, descriptions and pools
+    set by the caller reach every job the calls start. Waits for every
+    call to finish, then re-raises the error of the first function in
+    `fns` that raised, so no call is still writing when the caller sees
+    the failure.
     """
-    status: dict[str, str] = {}
+    results: list[Any] = [None] * len(fns)
+    errors: list[BaseException | None] = [None] * len(fns)
+
+    def call(i: int, fn: Callable[[], Any]) -> None:
+        try:
+            results[i] = fn()
+        except BaseException as exc:  # noqa: BLE001 — re-raised below, after every call
+            errors[i] = exc
+
+    # one wrapper per thread: each clones the caller's properties, so a
+    # property one thread sets stays out of its siblings' jobs
+    threads = [threading.Thread(target=inheritable_thread_target(spark)(call),
+                                args=(i, fn))
+               for i, fn in enumerate(fns)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    for exc in errors:
+        if exc is not None:
+            raise exc
+    return results
+
+
+def _check_dependencies(tasks: Sequence[Task]) -> None:
+    """Every task name is unique and every dependency names an earlier
+    task; a forward or unknown name (or a cycle) would otherwise leave a
+    task waiting, or running before what it needs."""
+    seen: set[str] = set()
     for task in tasks:
-        if any(status.get(dep) in ("failed", "skipped") for dep in task.depends_on):
-            status[task.name] = "skipped"
-            audit_log_entry(ctx.spark, ctx.log_path, task.name, None, None,
-                            False, "skipped: dependency failed")
-            continue
-        err: str | None = None
-        for attempt in range(task.retries + 1):
-            try:
-                rows = task.fn(ctx)
-                audit_log_entry(ctx.spark, ctx.log_path, task.name,
-                                rows, rows, True, None)
-                status[task.name] = "ok"
-                err = None
-                break
-            except Exception as exc:  # noqa: BLE001 — O6 error isolation
-                err = f"{type(exc).__name__}: {exc}"
-                if attempt < task.retries:
-                    time.sleep(task.retry_delay_s * (attempt + 1))
-        if err is not None:
-            audit_log_entry(ctx.spark, ctx.log_path, task.name, 0, None, False, err[:2000])
-            status[task.name] = "failed"
-    return status
+        if task.name in seen:
+            raise ValueError(f"task {task.name!r} is listed twice")
+        bad = [dep for dep in task.depends_on if dep not in seen]
+        if bad:
+            raise ValueError(f"task {task.name!r} depends on {bad}, "
+                             "which are not earlier tasks")
+        seen.add(task.name)
+
+
+def _attempt(ctx: JobContext, task: Task) -> str:
+    """Run `task` with its retries; one audit row for the outcome."""
+    err: str | None = None
+    for attempt in range(task.retries + 1):
+        try:
+            rows = task.fn(ctx)
+            audit_log_entry(ctx.spark, ctx.log_path, task.name,
+                            rows, rows, True, None)
+            return "ok"
+        except Exception as exc:  # noqa: BLE001 — O6 error isolation
+            err = f"{type(exc).__name__}: {exc}"
+            if attempt < task.retries:
+                time.sleep(task.retry_delay_s * (attempt + 1))
+    audit_log_entry(ctx.spark, ctx.log_path, task.name, 0, None, False, err[:2000])
+    return "failed"
+
+
+def run_dag(ctx: JobContext, tasks: Sequence[Task]) -> dict[str, str]:
+    """Run tasks with dependency + error isolation semantics (O1, O3, O6).
+
+    Every task runs in its own thread and starts once its dependencies
+    have finished. Returns {task_name: 'ok' | 'failed' | 'skipped'} in
+    `tasks` order; a task whose dependency did not end 'ok' is skipped
+    (the reference's linear chain stops the chain; explicit deps make that
+    precise). Raises ValueError before running anything unless every
+    dependency names an earlier task.
+    """
+    _check_dependencies(tasks)
+    status: dict[str, str] = {}
+    finished = {task.name: threading.Event() for task in tasks}
+
+    def run(task: Task) -> None:
+        try:
+            for dep in task.depends_on:
+                finished[dep].wait()
+            if all(status.get(dep) == "ok" for dep in task.depends_on):
+                status[task.name] = _attempt(ctx, task)
+            else:
+                status[task.name] = "skipped"
+                audit_log_entry(ctx.spark, ctx.log_path, task.name, None, None,
+                                False, "skipped: dependency failed")
+        finally:
+            finished[task.name].set()
+
+    run_concurrently(ctx.spark, [functools.partial(run, task) for task in tasks])
+    return {task.name: status[task.name] for task in tasks}
 
 
 # ----------------------------------------------------------------- bookmarks
