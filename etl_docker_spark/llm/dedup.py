@@ -15,6 +15,8 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -26,12 +28,14 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     weight on the executors for the rest of the session — ADVICE r11).
     Best-effort through the JVM plan handle (the checkpointed frame's
     analyzed plan IS the LogicalRDD holding the persisted RDD); if the
-    handle shape ever changes, blocks just age out with the session as
-    before."""
+    handle shape ever changes, the blocks age out with the session and a
+    warning says so."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    except Exception as exc:  # noqa: BLE001 — best effort, but not silent
+        logging.getLogger(__name__).warning(
+            "localCheckpoint blocks not released, they stay until the "
+            "session ends: %s: %s", type(exc).__name__, exc)
 
 
 def _hash64_halves(s: Column) -> tuple[Column, Column]:

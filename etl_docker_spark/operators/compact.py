@@ -4,16 +4,17 @@ incremental writer eventually needs.
 Micro-batch appends and per-task writers leave tables as thousands of tiny
 files; each later scan then pays per-file open/footer costs and the
 scheduler pays per-split overhead. Compaction rewrites a table to
-size-targeted files (atomic swap via a staging dir), preserving content.
+size-targeted files through `overwrite_parquet`, preserving content.
 On Delta/Iceberg this is OPTIMIZE/rewrite_data_files; on parquet it's this.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from etl_docker_spark.sinks.writers import overwrite_parquet, read_table
 
 
 def table_file_stats(path: str) -> tuple[int, int]:
@@ -30,17 +31,9 @@ def table_file_stats(path: str) -> tuple[int, int]:
 def compact_table(spark: SparkSession, path: str,
                   target_file_bytes: int = 128 * 1024 * 1024) -> tuple[int, int]:
     """Rewrite `path` into ceil(total/target) files. Returns (before, after)
-    file counts. Content-preserving; the swap goes through a staging dir so
-    a crash mid-compact leaves the original table intact."""
+    file counts. Content-preserving; a crash mid-compact leaves the
+    original table, since `overwrite_parquet` writes beside it."""
+    df = read_table(spark, path)
     before, total = table_file_stats(path)
-    target_files = max(1, -(-total // target_file_bytes))  # ceil
-    df = spark.read.parquet(path)
-    staging = f"{path}__compacting"
-    df.coalesce(target_files).write.mode("overwrite").parquet(staging)
-    # atomic-ish swap: move old out, staging in, then drop old
-    old = f"{path}__precompact"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old, ignore_errors=True)
-    after, _ = table_file_stats(path)
-    return before, after
+    overwrite_parquet(df.coalesce(max(1, -(-total // target_file_bytes))), path)
+    return before, table_file_stats(path)[0]

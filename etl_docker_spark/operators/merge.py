@@ -15,14 +15,13 @@ would be `MERGE INTO`; the DataFrame-level semantics are identical.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from etl_docker_spark.operators.dedup import dedup_first
-from etl_docker_spark.sinks.writers import counting
+from etl_docker_spark.sinks.writers import counting, overwrite_parquet, read_table
 
 
 def merge_upsert(target: DataFrame, updates: DataFrame, keys: Sequence[str],
@@ -68,37 +67,23 @@ def merge_upsert_path(spark: SparkSession, path: str, updates: DataFrame,
                       keys: Sequence[str],
                       order_by: Sequence[Column | str] | None = None,
                       compare_target: bool = False) -> int:
-    """Path-based upsert into a parquet table (creates it on first write).
+    """Path-based upsert into a parquet table (creates it on first write):
+    the old snapshot is read while `overwrite_parquet` writes the new one
+    beside it and swaps it in, so a failed merge leaves the table as it was.
 
-    Rewrites the snapshot (parquet has no row-level ops). On a real deployment
-    the table would be date/company-partitioned and only affected partitions
-    rewritten (dynamic partition overwrite); with Delta this becomes MERGE INTO.
-
-    Returns the number of rows in `updates`, observed by the pass that
-    writes (first write) or materializes (merge) the new snapshot, with
+    Returns the number of rows in `updates`, counted by that write, with
     `merge_upsert`'s map-stage caveat whenever `order_by` is given. The
     target is read in `updates`' session: an observation reports only to
-    actions run in the session of the frame it observes, and a
-    foreachBatch micro-batch lives in the stream's own session, not in
-    `spark`.
-    """
+    actions in the session of the frame it observes, and a foreachBatch
+    micro-batch lives in the stream's own session, not in `spark`."""
+    target = read_table(updates.sparkSession, path)
     obs = Observation()
-    if not os.path.exists(path):
+    if target is None:
         fed = counting(updates, obs)
-        (dedup_first(fed, keys, order_by) if order_by else fed) \
-            .write.mode("overwrite").parquet(path)
-        return obs.get["rows"]
-    target = updates.sparkSession.read.parquet(path)
-    merged = merge_upsert(target, updates, keys, order_by, compare_target, obs)
-    # Pin the merged snapshot BEFORE overwriting its own input, then write
-    # once: replaces the tmp-parquet write + re-read + final rewrite (three
-    # full passes of the snapshot through parquet encode/decode) with one
-    # materialization and one write (optimization r12). Same
-    # half-overwritten-on-crash exposure as the tmp staging had on its
-    # final rewrite; on Delta this whole function is MERGE INTO and the
-    # question disappears.
-    pinned = merged.localCheckpoint()
-    pinned.write.mode("overwrite").parquet(path)
+        merged = dedup_first(fed, keys, order_by) if order_by else fed
+    else:
+        merged = merge_upsert(target, updates, keys, order_by, compare_target, obs)
+    overwrite_parquet(merged, path)
     return obs.get["rows"]
 
 

@@ -3,7 +3,9 @@
 - K1 chunked JDBC append -> `df.write.jdbc(batchsize=...)` (see sources.jdbc);
   the reference's ⌊2100/ncols⌋ chunk math (utils.py:40-46) is SQL Server bind-
   parameter bookkeeping that Spark's JDBC writer replaces with `batchsize`.
-- K5 truncate-and-reload -> mode("overwrite").
+- K5 truncate-and-reload -> overwrite_parquet, the one full-table rewrite:
+  it writes beside the table and renames it in, so a failed load keeps the
+  old table (the reference's staging-table guarantee).
 - K7 Excel quarantine dump on failure (CotyData_IPN.py:190 et al.) ->
   row-level parquet quarantine dir (route_rows_to_quarantine).
 - K8 audit-log row per load (CotyData_IPN.py:19-61) -> append-only log table,
@@ -14,6 +16,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -38,16 +41,47 @@ def counting(df: DataFrame, obs: Observation) -> DataFrame:
     return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
 
+def _settle(path: str) -> tuple[str, str]:
+    """Finish a swap that a crash cut off if `.next` is complete (has
+    `_SUCCESS`), else undo it; then drop what a failed write left. Returns
+    the hidden `.<name>.next` and `.<name>.old` paths beside `path`."""
+    head, name = os.path.split(os.path.normpath(path))
+    nxt, old = (os.path.join(head, f".{name}.{s}") for s in ("next", "old"))
+    if not os.path.exists(path):
+        src = nxt if os.path.exists(os.path.join(nxt, "_SUCCESS")) else old
+        if os.path.exists(src):
+            os.rename(src, path)
+    shutil.rmtree(nxt, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
+    return nxt, old
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table in the local directory `path`, or None if there
+    is none, after settling any swap a crash cut off."""
+    _settle(path)
+    return spark.read.parquet(path) if os.path.exists(path) else None
+
+
 def overwrite_parquet(df: DataFrame, path: str,
                       partition_by: list[str] | None = None) -> int:
-    """K5: overwrite `path` with `df` in one pass; returns the rows written.
-    The counter sits directly under the write, in the result stage, where
-    Spark applies each partition's count once even when a task retries."""
+    """K5: replace the table in the local directory `path` with `df` in
+    one pass; returns the rows written. `df` is written into the hidden
+    sibling `.<name>.next`; then `path` is renamed to `.<name>.old`,
+    `.next` to `path`, and `.old` is deleted. So a failed write leaves the
+    old table, and `df` may read `path`. The counter sits directly under
+    the write, in the result stage, where Spark applies each partition's
+    count once even when a task retries."""
+    nxt, old = _settle(path)
     obs = Observation()
     w = counting(df, obs).write.mode("overwrite")
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    w.parquet(nxt)
+    if os.path.exists(path):
+        os.rename(path, old)
+    os.rename(nxt, path)
+    shutil.rmtree(old, ignore_errors=True)
     return obs.get["rows"]
 
 
@@ -55,18 +89,10 @@ def overwrite_partitions_dynamic(df: DataFrame, path: str,
                                  partition_by: list[str]) -> None:
     """K5 at partition granularity: rewrite ONLY the partitions present in
     `df` (partitionOverwriteMode=dynamic), leaving sibling partitions
-    untouched. The idempotent re-load shape at 100 TB — re-running one
-    day's load replaces that day's partition; a static overwrite would
-    truncate the whole table first. The conf is scoped and restored so
-    callers relying on static semantics are unaffected."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set(key, before)
+    untouched: re-running one day's load replaces that day's partition. A
+    per-write option, so concurrent writers keep their own semantics."""
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy(*partition_by).parquet(path))
 
 
 def append_row(path: str, row: dict, schema: T.StructType) -> None:

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from etl_docker_spark.operators.merge import merge_upsert_path
+from etl_docker_spark.sinks.writers import overwrite_parquet, read_table
 
 
 def merge_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
@@ -51,23 +52,13 @@ def scd2_stream_into(stream: DataFrame, path: str, keys: Sequence[str],
     ARRIVAL ORDER and idempotent under replay — late batches insert
     their versions into the middle of history instead of clobbering it
     (provided (key, ts) is unique in the feed; pre-dedup upstream).
-    Snapshot-rewrite discipline as merge_upsert_path (staging tmp path);
-    on Delta this becomes a MERGE INTO with a time-travel-safe layout.
-    """
-    import os
-    import shutil
-
+    Each fold writes the new history in one pass, swapped in by
+    `overwrite_parquet` as in merge_upsert_path; on Delta, a MERGE INTO."""
     from etl_docker_spark.operators.scd2 import scd2_apply
 
-    spark = stream.sparkSession
-
     def fold(batch: DataFrame, epoch_id: int) -> None:
-        history = spark.read.parquet(path) if os.path.exists(path) else None
-        new_hist = scd2_apply(history, batch, keys, attrs, ts_col)
-        tmp = f"{path}__tmp_scd2"
-        new_hist.write.mode("overwrite").parquet(tmp)
-        spark.read.parquet(tmp).write.mode("overwrite").parquet(path)
-        shutil.rmtree(tmp, ignore_errors=True)
+        history = read_table(batch.sparkSession, path)
+        overwrite_parquet(scd2_apply(history, batch, keys, attrs, ts_col), path)
 
     writer = stream.writeStream.foreachBatch(fold)
     if checkpoint:

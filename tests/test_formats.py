@@ -72,3 +72,29 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
             assert after[k] == v
     assert (spark.conf.get("spark.sql.sources.partitionOverwriteMode",
                            "static") != "dynamic")
+
+
+def test_dynamic_partition_overwrite_sets_no_session_conf(spark, tmp_path,
+                                                          monkeypatch):
+    """The dynamic mode is a per-write option: a concurrent writer in the
+    same session never sees a session-wide partitionOverwriteMode."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from etl_docker_spark.sinks.writers import overwrite_partitions_dynamic
+
+    path = str(tmp_path / "part")
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "v long, p string")
+    df.write.partitionBy("p").parquet(path)
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def recording_set(self, key, value):
+        calls.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    overwrite_partitions_dynamic(df.filter("p = 'a'").withColumn("v", F.lit(9).cast("long")),
+                                 path, ["p"])
+    assert calls == []
+    got = sorted(map(tuple, spark.read.parquet(path).collect()))
+    assert got == [(2, "b"), (9, "a")]

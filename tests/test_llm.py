@@ -316,3 +316,18 @@ def test_hyperplane_lsh_candidates_are_band_collisions(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     got = hyperplane_lsh_pairs(df, threshold=0.5).collect()
     assert got == []
+
+
+def test_release_local_checkpoint_logs_its_fallback(caplog):
+    """A release that cannot reach the plan handle warns instead of
+    passing silently."""
+    import logging
+
+    from etl_docker_spark.llm.dedup import _release_local_checkpoint
+
+    with caplog.at_level(logging.WARNING, logger="etl_docker_spark.llm.dedup"):
+        _release_local_checkpoint(object())
+    (rec,) = caplog.records
+    assert rec.levelno == logging.WARNING
+    assert "not released" in rec.getMessage()
+    assert "AttributeError" in rec.getMessage()

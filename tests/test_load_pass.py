@@ -1,6 +1,7 @@
 """One Spark pass per load: row counts come from the write itself, and the
 audit and bookmark rows are driver-side parquet files that start no Spark
-job."""
+job. A table is replaced by writing beside it and renaming it in, so a
+failed or cut-off rewrite never loses it."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import json
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_docker_spark import jobs
@@ -18,9 +20,12 @@ from etl_docker_spark.operators.merge import merge_upsert_path
 from etl_docker_spark.orchestration import Bookmarks, JobContext
 from etl_docker_spark.pipelines import master_data as md
 from etl_docker_spark.pipelines import sales_documents as sd
+from etl_docker_spark.sinks import writers
 from etl_docker_spark.sinks.writers import (
     AUDIT_SCHEMA,
     audit_log_entry,
+    overwrite_parquet,
+    read_table,
     route_rows_to_quarantine,
 )
 
@@ -195,3 +200,78 @@ def test_sales_documents_total_matches_table_counts(spark, tmp_path):
     assert _sales_task(spark, window, True).fn(ctx) == sum(window_counts.values())
     for name, n in window_counts.items():   # the window covers every key
         assert spark.read.parquet(f"{ctx.warehouse}/{name}").count() == n
+
+
+def _rows(spark, path: str) -> list[tuple]:
+    return sorted(map(tuple, spark.read.parquet(path).collect()))
+
+
+def _leftovers(tmp_path) -> list[str]:
+    return sorted(n for n in os.listdir(tmp_path) if n.startswith("."))
+
+
+@pytest.mark.parametrize("rewrite", ["overwrite_parquet", "merge_upsert_path"])
+def test_failed_rewrite_keeps_the_old_table(spark, tmp_path, rewrite):
+    path = str(tmp_path / "t")
+    overwrite_parquet(spark.createDataFrame([(1, "a"), (2, "b")],
+                                            "k long, v string"), path)
+    bad = spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string") \
+        .withColumn("v", F.when(F.col("k") == 3, F.raise_error(F.lit("boom")))
+                    .otherwise(F.col("v")))
+    with pytest.raises(Exception, match="boom"):
+        if rewrite == "overwrite_parquet":
+            overwrite_parquet(bad, path)
+        else:
+            merge_upsert_path(spark, path, bad, ["k"])
+    assert _rows(spark, path) == [(1, "a"), (2, "b")]
+    merge_upsert_path(spark, path, bad.filter("k = 2"), ["k"])
+    assert _rows(spark, path) == [(1, "a"), (2, "b2")]
+    assert _leftovers(tmp_path) == []
+
+
+@pytest.mark.parametrize("resume", ["read_table", "merge_upsert_path"])
+def test_swap_cut_off_between_renames_rolls_forward(spark, tmp_path,
+                                                    monkeypatch, resume):
+    path = str(tmp_path / "t")
+    merge_upsert_path(spark, path, spark.createDataFrame(
+        [(1, "a")], "k long, v string"), ["k"])
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if dst == path:   # the old table has already been moved aside
+            raise OSError("crash between the renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(writers.os, "rename", rename)
+    with pytest.raises(OSError, match="between the renames"):
+        merge_upsert_path(spark, path, spark.createDataFrame(
+            [(1, "a2"), (2, "b")], "k long, v string"), ["k"])
+    monkeypatch.undo()
+    assert not os.path.exists(path)
+    assert _leftovers(tmp_path) == [".t.next", ".t.old"]
+
+    if resume == "read_table":
+        got = sorted(map(tuple, read_table(spark, path).collect()))
+        assert got == [(1, "a2"), (2, "b")]
+    else:
+        merge_upsert_path(spark, path, spark.createDataFrame(
+            [(3, "c")], "k long, v string"), ["k"])
+        assert _rows(spark, path) == [(1, "a2"), (2, "b"), (3, "c")]
+    assert _leftovers(tmp_path) == []
+
+
+@pytest.mark.parametrize("old_moved_aside", [False, True])
+def test_incomplete_next_is_dropped(spark, tmp_path, old_moved_aside):
+    """A `.next` without `_SUCCESS` is a write that never finished: it is
+    removed, and the table (moved back, if the swap had begun) is
+    unchanged."""
+    path = str(tmp_path / "t")
+    overwrite_parquet(spark.createDataFrame([(1, "a")], "k long, v string"), path)
+    nxt = str(tmp_path / ".t.next")
+    spark.createDataFrame([(9, "z")], "k long, v string").write.parquet(nxt)
+    os.remove(os.path.join(nxt, "_SUCCESS"))
+    if old_moved_aside:
+        os.rename(path, str(tmp_path / ".t.old"))
+    assert sorted(map(tuple, read_table(spark, path).collect())) == [(1, "a")]
+    assert _leftovers(tmp_path) == []
+    assert read_table(spark, str(tmp_path / "absent")) is None

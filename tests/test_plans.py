@@ -352,6 +352,40 @@ def test_gate_streams_finish_through_util():
     assert not offenders, offenders
 
 
+def test_table_rewrites_go_through_overwrite_parquet():
+    """Every full parquet table rewrite goes through
+    `sinks.writers.overwrite_parquet`'s swap: no module under operators/,
+    streaming/ or pipelines/, nor jobs.py, writes with mode("overwrite")
+    itself (`skew.write_bucketed`'s saveAsTable writes a catalog table),
+    and merge.py no longer pins its snapshot with localCheckpoint."""
+    import ast
+    import os
+
+    import etl_docker_spark as pkg
+
+    root = os.path.dirname(pkg.__file__)
+    files = ["jobs.py"] + [
+        os.path.join(d, f) for d in ("operators", "streaming", "pipelines")
+        for f in sorted(os.listdir(os.path.join(root, d))) if f.endswith(".py")]
+    offenders = []
+    for rel in files:
+        with open(os.path.join(root, rel)) as f:
+            tree = ast.parse(f.read())
+        exempt = [range(n.lineno, n.end_lineno + 1) for n in ast.walk(tree)
+                  if rel == os.path.join("operators", "skew.py")
+                  and isinstance(n, ast.FunctionDef) and n.name == "write_bucketed"]
+        for n in ast.walk(tree):
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "mode" and n.args
+                    and isinstance(n.args[0], ast.Constant)
+                    and n.args[0].value == "overwrite"
+                    and not any(n.lineno in r for r in exempt)):
+                offenders.append(f"{rel}:{n.lineno}")
+    assert not offenders, offenders
+    with open(os.path.join(root, "operators", "merge.py")) as f:
+        assert "localCheckpoint(" not in f.read()
+
+
 def test_no_bare_conf_set_outside_util():
     """The grep-auditability contract `session_conf`'s docstring states:
     all runtime-conf mutation in plans/ goes through `_util.scoped_conf`
