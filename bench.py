@@ -177,13 +177,15 @@ def _warm_streaming(spark, sf_dir: str, queries) -> None:
         .write.format("noop").mode("overwrite").save()
 
 
-def _warm_stateful_worker(spark) -> None:
+def _warm_stateful_worker(spark, sf_dir: str) -> None:
     """A 256-row micro-stream through applyInPandasWithState: s14/s15's
     floor is that Python path (daemon fork, Arrow codec, state protocol),
-    which the JVM-side s01 warm-up never touches."""
+    which the JVM-side s01 warm-up never touches. Its state-store count
+    follows the same rule as s14/s15 on `sf_dir`."""
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import stream_state_partitions
+    from etl_docker_spark.plans.s import _state_partitions_for
     from etl_docker_spark.streaming.stateful import running_user_totals
     wdir = tempfile.mkdtemp(prefix="bench-pywarm-")
     try:
@@ -194,7 +196,8 @@ def _warm_stateful_worker(spark) -> None:
                  (F.col("id") * 1.0).alias("value"))
          .write.parquet(src))
         probe = spark.read.parquet(src)
-        with stream_state_partitions(spark, 4):
+        with stream_state_partitions(spark,
+                                     _state_partitions_for(spark, sf_dir)):
             # both stateful code paths: plain NoTimeout update AND the
             # watermark + EventTimeTimeout TTL machinery (s14/s15's exact
             # shape — timeout registration and eviction JIT separately)
@@ -262,7 +265,8 @@ def main() -> None:
     warmups = (
         ("stream machinery (s01)",
          lambda: _warm_streaming(spark, sf_dir, QUERIES)),
-        ("python stateful worker", lambda: _warm_stateful_worker(spark)),
+        ("python stateful worker",
+         lambda: _warm_stateful_worker(spark, sf_dir)),
         ("mapInPandas worker", lambda: _warm_map_in_pandas(spark)),
     )
     for label, warm in warmups:

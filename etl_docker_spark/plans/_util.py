@@ -50,6 +50,9 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
                      "RocksDBStateStoreProvider")
+# The state-store provider of every gate stream; RocksDB is the only one
+# (see `stream_state_partitions`).
+_STATE_STORE_PROVIDER = _ROCKSDB_PROVIDER
 
 # Spark 4 writes and verifies a checksum file for every streaming
 # checkpoint file (offset log, commit log, state deltas). The gate streams
@@ -64,24 +67,25 @@ _STREAM_TIMEOUT_S = 300
 
 
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int = 4,
+def stream_state_partitions(spark: SparkSession, n: int,
                             track_rows: bool = False):
     """Scope streaming state-store knobs for a gate query; each is
     restored on exit.
 
     - `spark.sql.shuffle.partitions`: stateful streaming sizes its
-      state-store instances (and their per-batch load/commit cost) to the
-      shuffle-partition count, so the right number tracks STATE volume, not
-      CPU count. The gate queries keep tiny state (hundreds of keys), where
-      the default 32 stores are pure overhead — ~3x of each query's wall
-      time. Callers size `n` from their input (`s._state_partitions_for`)
-      or from their key population.
-    - state-store provider: RocksDB by default ($SPARK_GRAFT_STATE_STORE=
-      hdfs to fall back). The default HDFS-backed store keeps every
-      versioned key in JVM heap — at 100 TB/day state (dedup horizons,
-      stream-stream join buffers) that OOMs; RocksDB spills to local SSD
-      and bounds heap. Results are provider-independent (the s-family gate
-      queries prove bit-equality; see tests/test_streaming_rocksdb.py).
+      state-store instances to the shuffle-partition count, and every
+      micro-batch commits each store once, so the right number tracks
+      STATE volume, not CPU count. Stateful callers size `n` with
+      `s._state_partitions_for`: one store for a gate stream, whose state
+      is hundreds of keys, fanning out to `cores` at ~sf1. (A traced
+      perfbench `stream_microbatch` run, s07 + s16 on 4 cores, summed
+      6.4 s of state commit over 8 stores and 0.79 s over 2.)
+    - state-store provider: `_STATE_STORE_PROVIDER` (RocksDB). The
+      HDFS-backed store keeps every versioned key in JVM heap, which OOMs
+      on large state (dedup horizons, stream-stream join buffers);
+      RocksDB spills to local disk and bounds heap. Results are
+      provider-independent (tests/test_streaming_rocksdb.py), and a
+      one-store gate stream ran within noise of it on HDFS (SCALE.md).
       RocksDB changelog checkpointing stays off: it was measured WORSE at
       gate-sized state (SCALE.md); s27/s29 turn it on with `scoped_conf`
       because the state change feed needs it.
@@ -96,17 +100,14 @@ def stream_state_partitions(spark: SparkSession, n: int = 4,
     - checkpoint file checksums: off (see `_CHECKPOINT_CHECKSUM`).
     """
     with ExitStack() as scope:
-        scope.enter_context(
-            scoped_conf(spark, "spark.sql.shuffle.partitions", str(n)))
-        scope.enter_context(scoped_conf(spark, _CHECKPOINT_CHECKSUM, "false"))
-        if os.environ.get("SPARK_GRAFT_STATE_STORE", "rocksdb") \
-                .lower() != "hdfs":
-            scope.enter_context(scoped_conf(
-                spark, "spark.sql.streaming.stateStore.providerClass",
-                _ROCKSDB_PROVIDER))
-            scope.enter_context(scoped_conf(
-                spark, "spark.sql.streaming.stateStore.rocksdb."
-                "trackTotalNumberOfRows", "true" if track_rows else "false"))
+        for key, value in (
+                ("spark.sql.shuffle.partitions", str(n)),
+                (_CHECKPOINT_CHECKSUM, "false"),
+                ("spark.sql.streaming.stateStore.providerClass",
+                 _STATE_STORE_PROVIDER),
+                ("spark.sql.streaming.stateStore.rocksdb."
+                 "trackTotalNumberOfRows", "true" if track_rows else "false")):
+            scope.enter_context(scoped_conf(spark, key, value))
         yield
 
 

@@ -64,18 +64,19 @@ def _events_stream(spark: SparkSession, sf: str):
 
 
 def _state_partitions_for(spark: SparkSession, sf: str) -> int:
-    """Adaptive state-partition count: ~512 KB of source parquet per state
-    partition, clamped to [4, cores]. Tiny gate corpora keep the cheap
-    4-store setup; replicated scale corpora fan the state (and the Python
-    stateful workers, which are row-bound — the parquet is ~10x
-    compressed) back out."""
+    """State-store count of every stateful s-query: ~512 KB of source
+    parquet per state partition, clamped to [1, cores]. Each micro-batch
+    commits every store once, so a gate corpus, whose whole state fits
+    in one store, runs one; replicated scale corpora fan the state (and
+    the Python stateful workers, which are row-bound — the parquet is
+    ~10x compressed) back out to `cores`."""
     path = f"{sf}/events.parquet"
     if os.path.isdir(path):
         size = sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
     else:
         size = os.path.getsize(path)
     cores = spark.sparkContext.defaultParallelism
-    return max(4, min(cores, size // (512 * 1024)))
+    return max(1, min(cores, size // (512 * 1024)))
 
 
 def s01_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
@@ -282,6 +283,9 @@ def s06_cdc_merge(spark: SparkSession, sf: str) -> DataFrame:
         ev.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(src)
         stream = (spark.readStream.schema(ev.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
+        # stateless foreachBatch merge: no state store, so the scope only
+        # sets the merge's shuffle width, kept at the session's (one
+        # partition measured no faster)
         with stream_state_partitions(
                 spark, spark.sparkContext.defaultParallelism):
             finish_stream(merge_stream_into(
@@ -546,6 +550,7 @@ def s11_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
             "overwrite").parquet(src)
         stream = (spark.readStream.schema(feed.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
+        # stateless foreachBatch fold: session width, as s06
         with stream_state_partitions(
                 spark, spark.sparkContext.defaultParallelism):
             finish_stream(scd2_stream_into(
@@ -622,7 +627,9 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                    .agg(F.count("*").alias("n_lines"),
                         F.sum("micros").alias("sum_micros")))
         name = f"s12_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(grouped, name, "complete", 4).localCheckpoint()
+        return (memory_stream(grouped, name, "complete",
+                              _state_partitions_for(spark, sf))
+                .localCheckpoint())
 
 
 S12_SQL = """
@@ -704,7 +711,8 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
             {"n_events": F.count("*"), "total_value": dsum("value")},
             keys=["event_type"], watermark="0 seconds")
         name = f"s13_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(agg, name, "append", 4)
+        return (memory_stream(agg, name, "append",
+                              _state_partitions_for(spark, sf))
                 .filter(F.col("event_type") != "_bridge")
                 .select(F.col("window_start").alias("day"), "event_type",
                         "n_events", "total_value")
@@ -772,14 +780,11 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
             stream, ttl_ms=_S14_TTL_DAYS * 86_400_000)
         name = f"s14_sink_{abs(hash(sf)) % 10 ** 8}"
         # Python stateful operator: the update fn runs once per key per
-        # batch, so state partitions must scale with the KEY population —
-        # which outnumbers cores at every gate size — not with source
-        # bytes (the windowed queries' heuristic). 4 partitions
-        # serialized 750k per-key invocations into 185 s at ~sf1; core
-        # count is the measured sweet spot (SCALE.md: past ~2x cores,
-        # task scheduling + state-store commits win back the losses).
+        # batch. 4 partitions serialized 750k per-key invocations into
+        # 185 s at ~sf1, where `_state_partitions_for` gives `cores` (the
+        # measured sweet spot, SCALE.md); a gate corpus gets one store.
         sink = memory_stream(out, name, "update",
-                             spark.sparkContext.defaultParallelism)
+                             _state_partitions_for(spark, sf))
         w = Window.partitionBy("state_key").orderBy(F.desc("last_ts"))
         return (sink
                 .withColumn("__rn", F.row_number().over(w))
@@ -873,10 +878,9 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
         out = session_close_stream(
             stream, gap_ms=_S15_GAP_DAYS * 86_400_000)
         name = f"s15_sink_{abs(hash(sf)) % 10 ** 8}"
-        # per-key Python stateful operator: partitions scale with the key
-        # population (= cores; see s14 and the SCALE.md partition curve)
+        # per-key Python stateful operator: sized like s14
         return (memory_stream(out, name, "update",
-                              spark.sparkContext.defaultParallelism)
+                              _state_partitions_for(spark, sf))
                 .select("state_key", "session_start", "session_end",
                         "n_events", "total_cents")
                 .localCheckpoint())
@@ -981,7 +985,7 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
                .dropDuplicatesWithinWatermark(["state_key"]))
         name = f"s16_sink_{abs(hash(sf)) % 10 ** 8}"
         return (memory_stream(out, name, "append",
-                              spark.sparkContext.defaultParallelism)
+                              _state_partitions_for(spark, sf))
                 .select("state_key", "day", "n_events", "total_cents")
                 .localCheckpoint())
 
@@ -1162,7 +1166,8 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
         writer = (agg.writeStream.outputMode("append").format("parquet")
                   .option("path", sink)
                   .option("checkpointLocation", os.path.join(work, "ckpt")))
-        with stream_state_partitions(spark, 4):
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf)):
             finish_stream(writer, "s18 run 1")   # days 1-5, then terminate
             for f in late:
                 os.replace(os.path.join(held, f), os.path.join(arrivals, f))
@@ -1243,7 +1248,9 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("dw.start").alias("day"), "event_type",
                          "n_hours", "n_events", "total_cents"))
         name = f"s19_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(daily, name, "append", 4).localCheckpoint()
+        return (memory_stream(daily, name, "append",
+                              _state_partitions_for(spark, sf))
+                .localCheckpoint())
 
 
 S19_SQL = f"""
@@ -1404,7 +1411,8 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
         name = f"s21_sink_{abs(hash(sf)) % 10 ** 8}"
         # track_rows: this query GATES numRowsTotal — keep the exact
         # state-row metric despite its per-commit counting cost
-        with stream_state_partitions(spark, 4, track_rows=True):
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf), track_rows=True):
             q = finish_stream(agg.writeStream.outputMode("append")
                               .format("memory").queryName(name), name)
         state_rows = next(
@@ -1483,7 +1491,8 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
                 (r["bucket"], r["n_events"], r["total_cents"])
                 for r in batch_df.collect())
 
-        with stream_state_partitions(spark, 4):
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf)):
             finish_stream(agg.writeStream.outputMode("update")
                           .foreachBatch(sink), "s22")
         # per key: emission count + the last (= largest n_events) upsert
@@ -1653,7 +1662,9 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                         (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                         .alias("delta_us")))
             name = f"s24_sink_{abs(hash(sf)) % 10 ** 8}"
-            return memory_stream(joined, name, "append", 4).localCheckpoint()
+            return (memory_stream(joined, name, "append",
+                                  _state_partitions_for(spark, sf))
+                    .localCheckpoint())
 
 
 S24_SQL = f"""
@@ -1720,7 +1731,9 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("w.start").alias("day"), "event_type",
                          "n_events", "total_cents"))
         name = f"s25_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(daily, name, "append", 4).localCheckpoint()
+        return (memory_stream(daily, name, "append",
+                              _state_partitions_for(spark, sf))
+                .localCheckpoint())
 
 
 S25_SQL = f"""
@@ -1778,7 +1791,8 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        with stream_state_partitions(spark, 4):
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf)):
             finish_stream(agg.writeStream.outputMode("append").format("noop")
                           .option("checkpointLocation", ckpt), "s26")
             # Read under the SAME provider conf the write used — the
@@ -1865,7 +1879,8 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        with stream_state_partitions(spark, 4), \
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf)), \
                 scoped_conf(spark, _CHANGELOG_KEY, "true"):
             finish_stream(agg.writeStream.outputMode("append").format("noop")
                           .option("checkpointLocation", ckpt), "s27")
@@ -1963,7 +1978,8 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
             finally:
                 out.unpersist()
 
-        with stream_state_partitions(spark, 4):
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf)):
             finish_stream(agg.writeStream.outputMode("update")
                           .foreachBatch(write_batch)
                           .option("checkpointLocation", ckpt), "s28")
@@ -2028,7 +2044,8 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
         # track_rows: the reconcile gate reads numRowsUpdated/Removed;
         # keep row tracking exact rather than relying on the untracked
         # fast path's metric semantics
-        with stream_state_partitions(spark, 4, track_rows=True), \
+        with stream_state_partitions(
+                spark, _state_partitions_for(spark, sf), track_rows=True), \
                 scoped_conf(spark, _CHANGELOG_KEY, "true"):
             q = finish_stream(agg.writeStream.outputMode("append")
                               .format("noop")
@@ -2178,7 +2195,9 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum("metric").cast("long").alias("sum_metric"),
                  F.sum("flag").cast("long").alias("n_fatal")))
         name = f"s30_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(grouped, name, "complete", 4).localCheckpoint()
+        return (memory_stream(grouped, name, "complete",
+                              _state_partitions_for(spark, sf))
+                .localCheckpoint())
 
 
 S30_SQL = """

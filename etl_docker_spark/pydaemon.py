@@ -25,12 +25,17 @@ spark.executorEnv.PYTHONPATH.
 """
 
 import os
+import re
 import sys
 
 
+# The archives Spark puts on the worker PYTHONPATH.
+_SPARK_ARCHIVE = re.compile(r"pyspark\.zip|py4j-.*\.zip|spark-core.*\.jar")
+
+
 def _strip_zip_sys_paths() -> None:
-    """Drop .zip entries (pyspark.zip, py4j-*.zip) from sys.path when the
-    same modules resolve from an installed distribution.
+    """Drop Spark's own archives (`_SPARK_ARCHIVE`) from sys.path when
+    the same modules resolve from an installed distribution.
 
     Why: pyspark's worker calls `importlib.invalidate_caches()` once per
     task (worker_util.setup_spark_files), and CPython's zipimporter
@@ -40,17 +45,16 @@ def _strip_zip_sys_paths() -> None:
     the majority of all worker CPU — spent re-parsing pyspark.zip's
     directory, per task, forever. Directory-based finders invalidate in
     O(1); the installed pyspark/py4j are the same release the driver
-    itself runs. A zip entry whose module cannot be resolved without it
-    is restored untouched."""
+    itself runs. Any other archive (a user's `--py-files` deps.zip) may
+    hold modules found nowhere else, so it stays."""
     import importlib.util
     removed: list[tuple[int, str]] = []
     for i in range(len(sys.path) - 1, -1, -1):
         p = sys.path[i]
         # only archives that really exist get a zipimporter (a missing
-        # path caches None, which invalidates for free) — the observed
-        # offenders are pyspark.zip / py4j-*.zip and the spark-core JAR
-        # Spark puts on the worker PYTHONPATH
-        if p.endswith((".zip", ".jar")) and os.path.isfile(p):
+        # path caches None, which invalidates for free)
+        if (_SPARK_ARCHIVE.fullmatch(os.path.basename(p))
+                and os.path.isfile(p)):
             removed.append((i, p))
             del sys.path[i]
             sys.path_importer_cache.pop(p, None)

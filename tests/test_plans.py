@@ -407,3 +407,61 @@ def test_no_bare_conf_set_outside_util():
                 if ".conf.set(" in line or ".conf.unset(" in line:
                     offenders.append(f"{fname}:{lineno}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_state_partitions_for_sizes_by_source_bytes(spark, tmp_path):
+    """~512 KB of events parquet per state store, clamped to [1, cores]:
+    one store on the smoke corpus, `min(cores, k)` for a ~k x 512 KB
+    events.parquet directory."""
+    from etl_docker_spark.plans.s import _state_partitions_for
+
+    assert _state_partitions_for(spark, SF_SMOKE) == 1
+    cores = spark.sparkContext.defaultParallelism
+    for k in (2, 3, cores + 2):
+        sf = tmp_path / f"k{k}"
+        events = sf / "events.parquet"
+        events.mkdir(parents=True)
+        for i in range(k):
+            with open(events / f"part-{i}.parquet", "wb") as f:
+                f.truncate(512 * 1024)
+        assert _state_partitions_for(spark, str(sf)) == min(cores, k)
+
+
+def test_stateful_streams_size_state_through_one_rule():
+    """Every `memory_stream` / `stream_state_partitions` call in s.py
+    sizes its state stores with `_state_partitions_for(spark, sf)`; only
+    the stateless foreachBatch merges s06 and s11 keep the session width
+    (`defaultParallelism`), and nothing passes a literal count."""
+    import ast
+    import os
+
+    import etl_docker_spark.plans as plans_pkg
+
+    with open(os.path.join(os.path.dirname(plans_pkg.__file__), "s.py")) as f:
+        tree = ast.parse(f.read())
+    session_width = {"s06_cdc_merge", "s11_stream_scd2", "_state_partitions_for"}
+    offenders, sized = [], 0
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for n in ast.walk(fn):
+            if (isinstance(n, ast.Attribute) and n.attr == "defaultParallelism"
+                    and fn.name not in session_width):
+                offenders.append(f"{fn.name}:{n.lineno}: defaultParallelism")
+            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+                    and n.func.id in ("memory_stream",
+                                      "stream_state_partitions")):
+                continue
+            pos = 3 if n.func.id == "memory_stream" else 1
+            size = (n.args[pos] if len(n.args) > pos else
+                    next((k.value for k in n.keywords if k.arg == "n"), None))
+            sized += 1
+            if isinstance(size, ast.Constant) or size is None:
+                offenders.append(f"{fn.name}:{n.lineno}: literal size")
+            elif fn.name not in session_width and not (
+                    isinstance(size, ast.Call)
+                    and isinstance(size.func, ast.Name)
+                    and size.func.id == "_state_partitions_for"):
+                offenders.append(f"{fn.name}:{n.lineno}: {ast.unparse(size)}")
+    assert sized >= 30, sized
+    assert not offenders, offenders

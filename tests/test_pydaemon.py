@@ -14,33 +14,68 @@ import subprocess
 import sys
 
 
-def test_daemon_module_imports_and_keeps_pyspark_resolvable():
-    # fresh interpreter with the worker-style PYTHONPATH (archives first,
-    # as PythonWorkerFactory builds it) — module import must strip the
-    # archives yet keep pyspark/py4j/our package importable
-    import py4j
+def _spark_archives() -> list[str]:
+    """The archives Spark puts on a worker's PYTHONPATH: pyspark.zip, the
+    py4j source zip and the spark-core JAR."""
     import pyspark
-    pys_zip_dir = os.path.join(os.path.dirname(pyspark.__file__), "jars")
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    jar = next((os.path.join(pys_zip_dir, f) for f in os.listdir(pys_zip_dir)
-                if f.startswith("spark-core")), None)
-    assert jar is not None
+    home = os.path.dirname(pyspark.__file__)
+    lib, jars = os.path.join(home, "python", "lib"), os.path.join(home, "jars")
+    found = [os.path.join(lib, "pyspark.zip")]
+    found += [os.path.join(lib, f) for f in os.listdir(lib)
+              if f.startswith("py4j-") and f.endswith(".zip")]
+    found += [os.path.join(jars, f) for f in os.listdir(jars)
+              if f.startswith("spark-core")]
+    assert len(found) == 3 and all(map(os.path.isfile, found)), found
+    return found
+
+
+def _import_daemon(pythonpath: list[str], code: str) -> None:
+    """Import the daemon module in a fresh interpreter whose PYTHONPATH is
+    `pythonpath` (archives first, as PythonWorkerFactory builds it), then
+    run `code`, which prints DAEMON_IMPORT_OK."""
     env = dict(os.environ)
-    env["PYTHONPATH"] = f"{jar}:{repo}"
+    env["PYTHONPATH"] = ":".join(pythonpath)
+    out = subprocess.run(
+        [sys.executable, "-c", "import etl_docker_spark.pydaemon\n" + code],
+        env=env, capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert "DAEMON_IMPORT_OK" in out.stdout
+
+
+def test_daemon_module_imports_and_keeps_pyspark_resolvable():
+    # module import must strip the archives yet keep pyspark/py4j/our
+    # package importable
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = (
         "import sys\n"
-        "import etl_docker_spark.pydaemon\n"
         "assert not any(p.endswith(('.zip', '.jar')) and"
         " __import__('os').path.isfile(p) for p in sys.path), sys.path\n"
         "import pyspark, py4j, pandas, pyarrow, numpy\n"
         "import etl_docker_spark.streaming.stateful\n"
         "print('DAEMON_IMPORT_OK')\n"
     )
-    out = subprocess.run([sys.executable, "-c", code], env=env,
-                         capture_output=True, text=True, timeout=120)
-    assert out.returncode == 0, out.stderr
-    assert "DAEMON_IMPORT_OK" in out.stdout
-    assert py4j is not None
+    _import_daemon(_spark_archives() + [repo], code)
+
+
+def test_daemon_keeps_a_user_archive_importable(tmp_path):
+    """Only Spark's own archives are stripped: a user's deps.zip (say,
+    from --py-files) may hold modules found nowhere else."""
+    import zipfile
+
+    deps = str(tmp_path / "deps.zip")
+    with zipfile.ZipFile(deps, "w") as z:
+        z.writestr("user_dep_mod.py", "VALUE = 42\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    archives = _spark_archives()
+    code = (
+        "import sys\n"
+        f"assert {deps!r} in sys.path, sys.path\n"
+        f"assert not set({archives!r}) & set(sys.path), sys.path\n"
+        "import user_dep_mod\n"
+        "assert user_dep_mod.VALUE == 42\n"
+        "print('DAEMON_IMPORT_OK')\n"
+    )
+    _import_daemon(archives + [deps, repo], code)
 
 
 def test_session_wires_daemon_and_pythonpath(spark):

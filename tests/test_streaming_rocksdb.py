@@ -17,20 +17,24 @@ import pytest
 from tests.conftest import SF_SMOKE
 
 
+_HDFS_PROVIDER = ("org.apache.spark.sql.execution.streaming.state."
+                  "HDFSBackedStateStoreProvider")
+
+
 def _run_both(monkeypatch, spark, builder):
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
+    from etl_docker_spark.plans import _util
+
     rocks = sorted(map(tuple, builder(spark, SF_SMOKE).collect()))
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "hdfs")
+    monkeypatch.setattr(_util, "_STATE_STORE_PROVIDER", _HDFS_PROVIDER)
     hdfs = sorted(map(tuple, builder(spark, SF_SMOKE).collect()))
     assert len(rocks) > 0
     assert rocks == hdfs
 
 
-def test_rocksdb_is_default_inside_stream_scope(spark, monkeypatch):
+def test_rocksdb_is_default_inside_stream_scope(spark):
     from etl_docker_spark.plans._util import (_ROCKSDB_PROVIDER,
                                               stream_state_partitions)
 
-    monkeypatch.delenv("SPARK_GRAFT_STATE_STORE", raising=False)
     key = "spark.sql.streaming.stateStore.providerClass"
     with stream_state_partitions(spark, 2):
         assert spark.conf.get(key) == _ROCKSDB_PROVIDER
