@@ -180,12 +180,11 @@ def _warm_streaming(spark, sf_dir: str, queries) -> None:
 def _warm_stateful_worker(spark, sf_dir: str) -> None:
     """A 256-row micro-stream through applyInPandasWithState: s14/s15's
     floor is that Python path (daemon fork, Arrow codec, state protocol),
-    which the JVM-side s01 warm-up never touches. Its state-store count
-    follows the same rule as s14/s15 on `sf_dir`."""
+    which the JVM-side s01 warm-up never touches. It runs at s14/s15's
+    state width (the session's)."""
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import stream_state_partitions
-    from etl_docker_spark.plans.s import _state_partitions_for
     from etl_docker_spark.streaming.stateful import running_user_totals
     wdir = tempfile.mkdtemp(prefix="bench-pywarm-")
     try:
@@ -196,8 +195,7 @@ def _warm_stateful_worker(spark, sf_dir: str) -> None:
                  (F.col("id") * 1.0).alias("value"))
          .write.parquet(src))
         probe = spark.read.parquet(src)
-        with stream_state_partitions(spark,
-                                     _state_partitions_for(spark, sf_dir)):
+        with stream_state_partitions(spark, sf_dir, session_width=True):
             # both stateful code paths: plain NoTimeout update AND the
             # watermark + EventTimeTimeout TTL machinery (s14/s15's exact
             # shape — timeout registration and eviction JIT separately)

@@ -62,24 +62,60 @@ _STATE_STORE_PROVIDER = _ROCKSDB_PROVIDER
 # inside `stream_state_partitions` only; sessions keep Spark's default.
 _CHECKPOINT_CHECKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 
+# Each micro-batch writes three small checkpoint files (the source's
+# file log, the offset log, the commit log). Spark's default checkpoint
+# file manager writes them through Hadoop's FileContext, which took ~30
+# ms per file on local disk here (s16 at sf0.001, 4 cores: ~1.0 s of
+# its ~3.9 s warm run over 11 batches); the FileSystem-based manager
+# takes ~9 ms. Its one weakness, a rename that is not atomic when it
+# overwrites, cannot matter to a gate stream: one writer, a throwaway
+# checkpoint. So it is set inside `stream_state_partitions` only.
+_CHECKPOINT_FILE_MANAGER = (
+    "spark.sql.streaming.checkpointFileManagerClass",
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager")
+
 # Upper bound on one availableNow run of a gate stream.
 _STREAM_TIMEOUT_S = 300
 
 
+def _state_partitions_for(spark: SparkSession, sf: str) -> int:
+    """State-store count of a stateful gate stream over corpus `sf`: ~512
+    KB of events parquet per store, clamped to [1, cores]. Every
+    micro-batch commits each store once, so a gate corpus, whose whole
+    state fits in one store, runs one; replicated scale corpora fan the
+    state back out (30 stores on 32 cores at ~sf1, SCALE.md)."""
+    path = f"{sf}/events.parquet"
+    if os.path.isdir(path):
+        size = sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
+    else:
+        size = os.path.getsize(path)
+    cores = spark.sparkContext.defaultParallelism
+    return max(1, min(cores, size // (512 * 1024)))
+
+
 @contextmanager
-def stream_state_partitions(spark: SparkSession, n: int,
-                            track_rows: bool = False):
-    """Scope streaming state-store knobs for a gate query; each is
-    restored on exit.
+def stream_state_partitions(spark: SparkSession, sf: str,
+                            track_rows: bool = False,
+                            session_width: bool = False):
+    """Scope streaming state-store knobs for a gate query over corpus
+    `sf`; each is restored on exit.
 
     - `spark.sql.shuffle.partitions`: stateful streaming sizes its
       state-store instances to the shuffle-partition count, and every
       micro-batch commits each store once, so the right number tracks
-      STATE volume, not CPU count. Stateful callers size `n` with
-      `s._state_partitions_for`: one store for a gate stream, whose state
-      is hundreds of keys, fanning out to `cores` at ~sf1. (A traced
-      perfbench `stream_microbatch` run, s07 + s16 on 4 cores, summed
-      6.4 s of state commit over 8 stores and 0.79 s over 2.)
+      STATE volume, not CPU count: `_state_partitions_for(spark, sf)`,
+      one store for a gate stream, whose state is hundreds of keys. (A
+      traced perfbench `stream_microbatch` run, s07 + s16 on 4 cores,
+      summed 6.4 s of state commit over 8 stores and 0.79 s over 2.)
+      `session_width=True` keeps the session's width (`cores`) instead,
+      for two kinds of stream whose work is not sized by state bytes:
+      stateless foreachBatch merges (s06, s11), where the knob is only
+      the merge's shuffle width and one partition measured no faster,
+      and per-key Python stateful operators (s14, s15), whose update fn
+      runs once per key per batch over a key population that outnumbers
+      cores at every gate size (SCALE.md: at sf0.1 both run 9.2 s on 32
+      cores and 11.4-12.9 s on 8).
     - state-store provider: `_STATE_STORE_PROVIDER` (RocksDB). The
       HDFS-backed store keeps every versioned key in JVM heap, which OOMs
       on large state (dedup horizons, stream-stream join buffers);
@@ -98,11 +134,16 @@ def stream_state_partitions(spark: SparkSession, n: int,
       state-size observability (s21 numRowsTotal, s29 changefeed
       reconcile) pass track_rows=True and keep exact metrics.
     - checkpoint file checksums: off (see `_CHECKPOINT_CHECKSUM`).
+    - checkpoint file manager: FileSystem-based (see
+      `_CHECKPOINT_FILE_MANAGER`).
     """
+    n = (spark.sparkContext.defaultParallelism if session_width
+         else _state_partitions_for(spark, sf))
     with ExitStack() as scope:
         for key, value in (
                 ("spark.sql.shuffle.partitions", str(n)),
                 (_CHECKPOINT_CHECKSUM, "false"),
+                _CHECKPOINT_FILE_MANAGER,
                 ("spark.sql.streaming.stateStore.providerClass",
                  _STATE_STORE_PROVIDER),
                 ("spark.sql.streaming.stateStore.rocksdb."
@@ -134,11 +175,13 @@ def finish_stream(run: DataStreamWriter | StreamingQuery,
     return q
 
 
-def memory_stream(df: DataFrame, name: str, mode: str, n: int) -> DataFrame:
-    """Run the streaming frame `df` into the memory sink `name` (output
-    mode `mode`) inside `stream_state_partitions(n)`, through
+def memory_stream(df: DataFrame, name: str, mode: str, sf: str,
+                  session_width: bool = False) -> DataFrame:
+    """Run the streaming frame `df` over corpus `sf` into the memory sink
+    `name` (output mode `mode`) inside `stream_state_partitions`, through
     `finish_stream`, and return the sink's table."""
-    with stream_state_partitions(df.sparkSession, n):
+    with stream_state_partitions(df.sparkSession, sf,
+                                 session_width=session_width):
         finish_stream(df.writeStream.outputMode(mode).format("memory")
                       .queryName(name), name)
     return df.sparkSession.table(name)

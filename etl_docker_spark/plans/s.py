@@ -63,22 +63,6 @@ def _events_stream(spark: SparkSession, sf: str):
     return stream
 
 
-def _state_partitions_for(spark: SparkSession, sf: str) -> int:
-    """State-store count of every stateful s-query: ~512 KB of source
-    parquet per state partition, clamped to [1, cores]. Each micro-batch
-    commits every store once, so a gate corpus, whose whole state fits
-    in one store, runs one; replicated scale corpora fan the state (and
-    the Python stateful workers, which are row-bound — the parquet is
-    ~10x compressed) back out to `cores`."""
-    path = f"{sf}/events.parquet"
-    if os.path.isdir(path):
-        size = sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
-    else:
-        size = os.path.getsize(path)
-    cores = spark.sparkContext.defaultParallelism
-    return max(1, min(cores, size // (512 * 1024)))
-
-
 def s01_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
     """Tumbling-window aggregation executed through Structured Streaming.
 
@@ -96,8 +80,7 @@ def s01_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["event_type"], watermark="1 minute")
     name = f"s01_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S01_SQL = """
@@ -130,8 +113,7 @@ def s02_stream_sessions(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["user_id"], watermark="1 minute")
     name = f"s02_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S02_SQL = """
@@ -175,7 +157,7 @@ def s03_stateful_running_totals(spark: SparkSession, sf: str) -> DataFrame:
     stream = _events_stream(spark, sf)
     out = running_user_totals(stream.select("user_id", "ts", "value"))
     name = f"s03_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(out, name, "update", _state_partitions_for(spark, sf))
+    sink = memory_stream(out, name, "update", sf)
     # update-mode sink: keep the final state row per user
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (sink
@@ -200,7 +182,7 @@ def s04_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
         "day", F.date_trunc("day", F.col("ts")))
     out = streaming_dedup(stream, ["user_id", "event_type", "day"])
     name = f"s04_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(out, name, "append", _state_partitions_for(spark, sf))
+    return memory_stream(out, name, "append", sf)
 
 
 S04_SQL = """
@@ -242,8 +224,7 @@ def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s05_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(joined, name, "append", sf)
 
 
 S05_SQL = """
@@ -283,11 +264,9 @@ def s06_cdc_merge(spark: SparkSession, sf: str) -> DataFrame:
         ev.repartitionByRange(3, "event_id").write.mode("overwrite").parquet(src)
         stream = (spark.readStream.schema(ev.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
-        # stateless foreachBatch merge: no state store, so the scope only
-        # sets the merge's shuffle width, kept at the session's (one
-        # partition measured no faster)
-        with stream_state_partitions(
-                spark, spark.sparkContext.defaultParallelism):
+        # stateless foreachBatch merge: session width
+        # (`stream_state_partitions`)
+        with stream_state_partitions(spark, sf, session_width=True):
             finish_stream(merge_stream_into(
                 stream, target, keys=["user_id"],
                 order_by=[F.desc("ts"), F.desc("event_id")],
@@ -327,8 +306,7 @@ def s07_stream_sliding(spark: SparkSession, sf: str) -> DataFrame:
          .cast("double")},
         keys=["event_type"], watermark="1 minute", slide="12 hours")
     name = f"s07_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 _HALF_DAY_US = 12 * 3600 * 1_000_000
@@ -375,8 +353,7 @@ def s08_stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(dec("value")).cast("double")},
         keys=["segment"], watermark="1 minute")
     name = f"s08_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S08_SQL = f"""
@@ -424,8 +401,7 @@ def s09_stream_hll_users(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("m_rho")))
     name = f"s09_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(regs, name, "complete",
-                         _state_partitions_for(spark, sf))
+    sink = memory_stream(regs, name, "complete", sf)
     # empty registers contribute 2^RHO_MAX each, so the fill is arithmetic
     # (M - observed) — no bucket-completion join needed
     z = (sink.groupBy("event_type")
@@ -494,8 +470,7 @@ def s10_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
         stream, "1 day", {"n_events": F.count("*")},
         keys=["event_type"], watermark="1 minute")
     name = f"s10_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    sink = memory_stream(agg, name, "complete", sf)
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"),
                                                    F.asc("event_type"))
     return (sink.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -551,8 +526,7 @@ def s11_stream_scd2(spark: SparkSession, sf: str) -> DataFrame:
         stream = (spark.readStream.schema(feed.schema)
                   .option("maxFilesPerTrigger", "1").parquet(src))
         # stateless foreachBatch fold: session width, as s06
-        with stream_state_partitions(
-                spark, spark.sparkContext.defaultParallelism):
+        with stream_state_partitions(spark, sf, session_width=True):
             finish_stream(scd2_stream_into(
                 stream, target, keys=["user_id"],
                 attrs=["value", "event_id"], ts_col="ts",
@@ -627,9 +601,7 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                    .agg(F.count("*").alias("n_lines"),
                         F.sum("micros").alias("sum_micros")))
         name = f"s12_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(grouped, name, "complete",
-                              _state_partitions_for(spark, sf))
-                .localCheckpoint())
+        return memory_stream(grouped, name, "complete", sf).localCheckpoint()
 
 
 S12_SQL = """
@@ -711,8 +683,7 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
             {"n_events": F.count("*"), "total_value": dsum("value")},
             keys=["event_type"], watermark="0 seconds")
         name = f"s13_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(agg, name, "append",
-                              _state_partitions_for(spark, sf))
+        return (memory_stream(agg, name, "append", sf)
                 .filter(F.col("event_type") != "_bridge")
                 .select(F.col("window_start").alias("day"), "event_type",
                         "n_events", "total_value")
@@ -780,11 +751,14 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
             stream, ttl_ms=_S14_TTL_DAYS * 86_400_000)
         name = f"s14_sink_{abs(hash(sf)) % 10 ** 8}"
         # Python stateful operator: the update fn runs once per key per
-        # batch. 4 partitions serialized 750k per-key invocations into
-        # 185 s at ~sf1, where `_state_partitions_for` gives `cores` (the
-        # measured sweet spot, SCALE.md); a gate corpus gets one store.
-        sink = memory_stream(out, name, "update",
-                             _state_partitions_for(spark, sf))
+        # batch, so state partitions must scale with the KEY population —
+        # which outnumbers cores at every gate size — not with source
+        # bytes (the windowed queries' rule): session width. 4 partitions
+        # serialized 750k per-key invocations into 185 s at ~sf1; about
+        # one per core is the measured sweet spot (SCALE.md: past ~2x
+        # cores, task scheduling + state-store commits win back the
+        # losses).
+        sink = memory_stream(out, name, "update", sf, session_width=True)
         w = Window.partitionBy("state_key").orderBy(F.desc("last_ts"))
         return (sink
                 .withColumn("__rn", F.row_number().over(w))
@@ -878,9 +852,8 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
         out = session_close_stream(
             stream, gap_ms=_S15_GAP_DAYS * 86_400_000)
         name = f"s15_sink_{abs(hash(sf)) % 10 ** 8}"
-        # per-key Python stateful operator: sized like s14
-        return (memory_stream(out, name, "update",
-                              _state_partitions_for(spark, sf))
+        # per-key Python stateful operator: session width, as s14
+        return (memory_stream(out, name, "update", sf, session_width=True)
                 .select("state_key", "session_start", "session_end",
                         "n_events", "total_cents")
                 .localCheckpoint())
@@ -984,8 +957,7 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
                .withWatermark("day", f"{_S16_DELAY_DAYS} days")
                .dropDuplicatesWithinWatermark(["state_key"]))
         name = f"s16_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(out, name, "append",
-                              _state_partitions_for(spark, sf))
+        return (memory_stream(out, name, "append", sf)
                 .select("state_key", "day", "n_events", "total_cents")
                 .localCheckpoint())
 
@@ -1071,8 +1043,7 @@ def s17_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s17_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append",
-                         _state_partitions_for(spark, sf)).localCheckpoint()
+    return memory_stream(joined, name, "append", sf).localCheckpoint()
 
 
 S17_SQL = """
@@ -1166,8 +1137,7 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
         writer = (agg.writeStream.outputMode("append").format("parquet")
                   .option("path", sink)
                   .option("checkpointLocation", os.path.join(work, "ckpt")))
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf)):
+        with stream_state_partitions(spark, sf):
             finish_stream(writer, "s18 run 1")   # days 1-5, then terminate
             for f in late:
                 os.replace(os.path.join(held, f), os.path.join(arrivals, f))
@@ -1248,9 +1218,7 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("dw.start").alias("day"), "event_type",
                          "n_hours", "n_events", "total_cents"))
         name = f"s19_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(daily, name, "append",
-                              _state_partitions_for(spark, sf))
-                .localCheckpoint())
+        return memory_stream(daily, name, "append", sf).localCheckpoint()
 
 
 S19_SQL = f"""
@@ -1324,8 +1292,7 @@ def s20_stream_full_outer_join(spark: SparkSession, sf: str) -> DataFrame:
                 (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                 .alias("delta_us")))
     name = f"s20_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append",
-                         _state_partitions_for(spark, sf)).localCheckpoint()
+    return memory_stream(joined, name, "append", sf).localCheckpoint()
 
 
 S20_SQL = """
@@ -1411,8 +1378,7 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
         name = f"s21_sink_{abs(hash(sf)) % 10 ** 8}"
         # track_rows: this query GATES numRowsTotal — keep the exact
         # state-row metric despite its per-commit counting cost
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf), track_rows=True):
+        with stream_state_partitions(spark, sf, track_rows=True):
             q = finish_stream(agg.writeStream.outputMode("append")
                               .format("memory").queryName(name), name)
         state_rows = next(
@@ -1491,8 +1457,7 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
                 (r["bucket"], r["n_events"], r["total_cents"])
                 for r in batch_df.collect())
 
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf)):
+        with stream_state_partitions(spark, sf):
             finish_stream(agg.writeStream.outputMode("update")
                           .foreachBatch(sink), "s22")
         # per key: emission count + the last (= largest n_events) upsert
@@ -1560,8 +1525,7 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
              .select(F.col("w.start").alias("day"), "n_conversions",
                      "pid_checksum"))
     name = f"s23_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(daily, name, "append",
-                         _state_partitions_for(spark, sf)).localCheckpoint()
+    return memory_stream(daily, name, "append", sf).localCheckpoint()
 
 
 S23_SQL = """
@@ -1662,9 +1626,7 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                         (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                         .alias("delta_us")))
             name = f"s24_sink_{abs(hash(sf)) % 10 ** 8}"
-            return (memory_stream(joined, name, "append",
-                                  _state_partitions_for(spark, sf))
-                    .localCheckpoint())
+            return memory_stream(joined, name, "append", sf).localCheckpoint()
 
 
 S24_SQL = f"""
@@ -1731,9 +1693,7 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                  .select(F.col("w.start").alias("day"), "event_type",
                          "n_events", "total_cents"))
         name = f"s25_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(daily, name, "append",
-                              _state_partitions_for(spark, sf))
-                .localCheckpoint())
+        return memory_stream(daily, name, "append", sf).localCheckpoint()
 
 
 S25_SQL = f"""
@@ -1791,8 +1751,7 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf)):
+        with stream_state_partitions(spark, sf):
             finish_stream(agg.writeStream.outputMode("append").format("noop")
                           .option("checkpointLocation", ckpt), "s26")
             # Read under the SAME provider conf the write used — the
@@ -1879,8 +1838,7 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
         ckpt = os.path.join(work, "ckpt")
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf)), \
+        with stream_state_partitions(spark, sf), \
                 scoped_conf(spark, _CHANGELOG_KEY, "true"):
             finish_stream(agg.writeStream.outputMode("append").format("noop")
                           .option("checkpointLocation", ckpt), "s27")
@@ -1978,8 +1936,7 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
             finally:
                 out.unpersist()
 
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf)):
+        with stream_state_partitions(spark, sf):
             finish_stream(agg.writeStream.outputMode("update")
                           .foreachBatch(write_batch)
                           .option("checkpointLocation", ckpt), "s28")
@@ -2044,8 +2001,7 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
         # track_rows: the reconcile gate reads numRowsUpdated/Removed;
         # keep row tracking exact rather than relying on the untracked
         # fast path's metric semantics
-        with stream_state_partitions(
-                spark, _state_partitions_for(spark, sf), track_rows=True), \
+        with stream_state_partitions(spark, sf, track_rows=True), \
                 scoped_conf(spark, _CHANGELOG_KEY, "true"):
             q = finish_stream(agg.writeStream.outputMode("append")
                               .format("noop")
@@ -2195,9 +2151,7 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
                  F.sum("metric").cast("long").alias("sum_metric"),
                  F.sum("flag").cast("long").alias("n_fatal")))
         name = f"s30_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(grouped, name, "complete",
-                              _state_partitions_for(spark, sf))
-                .localCheckpoint())
+        return memory_stream(grouped, name, "complete", sf).localCheckpoint()
 
 
 S30_SQL = """
@@ -2265,8 +2219,7 @@ def s31_stream_variant_landing(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "sum_k", "n_missing"))
     name = f"s31_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S31_SQL = """
@@ -2320,8 +2273,7 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "n_user_buckets"))
     name = f"s32_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S32_SQL = f"""
@@ -2386,8 +2338,7 @@ def s33_stream_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("w.end").alias("window_end"),
                    "verdict", "n_rows", "sum_k"))
     name = f"s33_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete",
-                         _state_partitions_for(spark, sf))
+    return memory_stream(agg, name, "complete", sf)
 
 
 S33_SQL = """

