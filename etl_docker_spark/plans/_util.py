@@ -65,11 +65,12 @@ _CHECKPOINT_CHECKSUM = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
 # Each micro-batch writes three small checkpoint files (the source's
 # file log, the offset log, the commit log). Spark's default checkpoint
 # file manager writes them through Hadoop's FileContext, which took ~30
-# ms per file on local disk here (s16 at sf0.001, 4 cores: ~1.0 s of
+# ms per file on a 4-core host's local disk (s16 at sf0.001: ~1.0 s of
 # its ~3.9 s warm run over 11 batches); the FileSystem-based manager
-# takes ~9 ms. Its one weakness, a rename that is not atomic when it
-# overwrites, cannot matter to a gate stream: one writer, a throwaway
-# checkpoint. So it is set inside `stream_state_partitions` only.
+# takes ~9 ms. Its weakness, a check-then-rename that two writers of
+# one checkpoint can race, cannot arise in a gate stream: one writer, a
+# throwaway checkpoint. So it is set inside `stream_state_partitions`
+# only; sessions keep Spark's default.
 _CHECKPOINT_FILE_MANAGER = (
     "spark.sql.streaming.checkpointFileManagerClass",
     "org.apache.spark.sql.execution.streaming.checkpointing."
