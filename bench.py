@@ -84,6 +84,22 @@ class SentinelVerdict(NamedTuple):
     warmup_carveout: bool = False
 
 
+def mem_total_bytes() -> int:
+    """This host's physical memory (MemTotal in /proc/meminfo)."""
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) * 1024
+    raise RuntimeError("no MemTotal in /proc/meminfo")
+
+
+def default_driver_mem() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half of this
+    host's memory in whole GiB, capped at 24g (7g on a 15 GiB host, 24g
+    on a 128 GiB one), so the heap never outgrows the host."""
+    return f"{min(24, mem_total_bytes() // 2 // 2 ** 30)}g"
+
+
 def sentinel_verdict(anchor_times: list[float],
                      max_spread: float = SENTINEL_MAX_SPREAD
                      ) -> SentinelVerdict:
@@ -235,8 +251,10 @@ def main() -> None:
     # sentinel anchor at ~2x its middle reading on an idle box — GC
     # pressure from heap exhaustion, which mispriced every late-sweep
     # query and tripped the contention sentinel with no contention.
-    # 24g on the 128 GiB target leaves the page cache untouched.
-    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
+    # Half the host's memory (`default_driver_mem`) leaves the page cache
+    # room; an explicit SPARK_GRAFT_DRIVER_MEM wins.
+    if not os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        os.environ["SPARK_GRAFT_DRIVER_MEM"] = default_driver_mem()
 
     # Pin the artifact disk cache to a throwaway dir so every bench run
     # trains from cold and numbers are comparable across runs/machines.

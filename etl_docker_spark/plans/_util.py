@@ -176,11 +176,20 @@ def finish_stream(run: DataStreamWriter | StreamingQuery,
     return q
 
 
-def memory_stream(df: DataFrame, name: str, mode: str, sf: str,
+def sink_name(query_id: str, sf: str) -> str:
+    """The memory-sink table of gate stream `query_id` (e.g. "s01") over
+    corpus `sf`: one name per (query, corpus), so runs over different
+    corpora in one session never read each other's sink."""
+    return f"{query_id}_sink_{abs(hash(sf)) % 10 ** 8}"
+
+
+def memory_stream(df: DataFrame, query_id: str, mode: str, sf: str,
                   session_width: bool = False) -> DataFrame:
-    """Run the streaming frame `df` over corpus `sf` into the memory sink
-    `name` (output mode `mode`) inside `stream_state_partitions`, through
-    `finish_stream`, and return the sink's table."""
+    """Run the streaming frame `df` of gate stream `query_id` over corpus
+    `sf` into its memory sink (`sink_name`, output mode `mode`) inside
+    `stream_state_partitions`, through `finish_stream`, and return the
+    sink's table."""
+    name = sink_name(query_id, sf)
     with stream_state_partitions(df.sparkSession, sf,
                                  session_width=session_width):
         finish_stream(df.writeStream.outputMode(mode).format("memory")
@@ -293,6 +302,14 @@ _DOT2 = ("list_reduce(list_transform(generate_series(1, len({a})), "
 
 
 _DAY_US = 86_400_000_000
+
+
+def md5_bucket_sql(col: str, n: int) -> str:
+    """Spark SQL for the md5 bucket hash: the first 32 bits of md5(`col`)
+    as an integer, mod `n`. The oracles compute the same bucket as
+    `CAST('0x' || substring(md5(col), 1, 8) AS BIGINT) % n`."""
+    return (f"pmod(CAST(conv(substring(md5({col}), 1, 8), 16, 10) "
+            f"AS BIGINT), {n})")
 
 
 _HLL_M = 64                     # registers (6 bucket bits)

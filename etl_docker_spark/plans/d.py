@@ -23,6 +23,7 @@ from etl_docker_spark.llm.text import LANG_STOPWORDS, quality_features
 from etl_docker_spark.plans._util import (_D47_HASHED_CTES, _D64_DOMAIN,
                                           _D67_LGK, _DOT2, _HLL_ALPHA_NUM,
                                           _HLL_M, _HLL_RHO_MAX,
+                                          md5_bucket_sql,
                                           prefix_jaccard_pairs_frame, t)
 
 
@@ -54,12 +55,16 @@ def d02_token_stats(spark: SparkSession, sf: str) -> DataFrame:
                  (F.sum("n_tokens").cast("double") / F.count("*")).alias("avg_tokens")))
 
 
-D02_SQL = r"""
+# The DuckDB twin of `llm.text.tokens_of` on the `text` column: the
+# oracles' one tokenizer.
+_TOKENS_DUCK = r"regexp_extract_all(text, '\w+|[^\w\s]')"
+
+D02_SQL = rf"""
 SELECT lang, COUNT(*) AS n_docs,
        CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
        MAX(n_tokens) AS max_tokens,
        CAST(SUM(n_tokens) AS DOUBLE) / COUNT(*) AS avg_tokens
-FROM (SELECT lang, CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT) AS n_tokens
+FROM (SELECT lang, CAST(len({_TOKENS_DUCK}) AS BIGINT) AS n_tokens
       FROM documents)
 GROUP BY lang
 """
@@ -95,7 +100,7 @@ FROM (
          CAST(len(toks) AS BIGINT) AS n_tokens,
          CAST(len(list_filter(toks, tk -> list_contains([{_EN}], tk))) AS BIGINT) AS n_stopwords,
          CAST(len(list_distinct(toks)) AS BIGINT) AS n_unique_tokens
-  FROM (SELECT doc_id, text, regexp_extract_all(text, '\w+|[^\w\s]') AS toks FROM documents)
+  FROM (SELECT doc_id, text, {_TOKENS_DUCK} AS toks FROM documents)
 )
 """
 
@@ -124,7 +129,7 @@ FROM (
          ELSE 'und' END AS pred_lang
   FROM (
     SELECT lang, {_hits('en')} AS en, {_hits('es')} AS es, {_hits('fr')} AS fr
-    FROM (SELECT lang, regexp_extract_all(text, '\w+|[^\w\s]') AS toks FROM documents)
+    FROM (SELECT lang, {_TOKENS_DUCK} AS toks FROM documents)
   )
 )
 GROUP BY lang, pred_lang
@@ -846,7 +851,7 @@ _D18_EN = ", ".join(f"'{w}'" for w in
                      "that", "for"))
 D18_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, regexp_extract_all(text, '\w+|[^\w\s]') AS toks
+  SELECT doc_id, {_TOKENS_DUCK} AS toks
   FROM documents
 ),
 q AS (
@@ -872,6 +877,21 @@ FROM c WHERE 2 * cum_tokens <= total
 
 
 # ---------------------------------------------------------------- d19
+
+def _ngram_ctes(n: int) -> str:
+    """`toks` (doc_id, tk: the space tokens) and `sh` (doc_id, sh): each
+    document's distinct word n-grams, one shingle for a shorter doc."""
+    return f"""toks AS (
+  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+),
+sh AS (
+  SELECT doc_id,
+         list_distinct(list_transform(
+             generate_series(1, greatest(len(tk) - {n - 1}, 1)),
+             i -> array_to_string(tk[i:i+{n - 1}], ' '))) AS sh
+  FROM toks
+)"""
+
 
 _CONTAM_N = 4  # n-gram order: long enough to be selective, short enough to hit
 
@@ -916,16 +936,7 @@ def d19_contamination(spark: SparkSession, sf: str) -> DataFrame:
 
 
 D19_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-             generate_series(1, greatest(len(tk) - {_CONTAM_N - 1}, 1)),
-             i -> array_to_string(tk[i:i+{_CONTAM_N - 1}], ' '))) AS sh
-  FROM toks
-),
+WITH {_ngram_ctes(_CONTAM_N)},
 ev AS (
   SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 = 0
 ),
@@ -1158,16 +1169,7 @@ def d22_boilerplate_phrases(spark: SparkSession, sf: str) -> DataFrame:
 
 
 D22_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-             generate_series(1, greatest(len(tk) - {_BP_N - 1}, 1)),
-             i -> array_to_string(tk[i:i+{_BP_N - 1}], ' '))) AS sh
-  FROM toks
-),
+WITH {_ngram_ctes(_BP_N)},
 grams AS (
   SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_grams, unnest(sh) AS g FROM sh
 ),
@@ -1377,13 +1379,22 @@ def d26_curation_verdict(spark: SparkSession, sf: str) -> DataFrame:
     is priority-ordered so each document reports the FIRST failing rule
     (what curation pipelines log for ablation accounting).
     """
+    staged, verdict = _d26_rules(t(spark, sf, "documents"), "doc_id")
+    return staged.select("doc_id", "n_tokens", "n_unique",
+                         verdict.alias("verdict"))
+
+
+def _d26_rules(docs: DataFrame, *keep: str) -> tuple[DataFrame, Column]:
+    """d26's rules over `docs`: the `keep` columns with n_tokens,
+    n_unique, digest and dup_rn (rank in the digest window), and the
+    verdict over them, the first failing rule or "keep". Shared with
+    the d60 classifier's training labels (`_labeled_docs`)."""
     from etl_docker_spark.llm.text import token_count, tokens_of
 
-    docs = t(spark, sf, "documents")
     toks = tokens_of(F.col("text"))
     wdig = Window.partitionBy("digest").orderBy("doc_id")
     staged = (docs.select(
-        "doc_id",
+        *keep,
         token_count(F.col("text")).alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("long").alias("n_unique"),
         F.md5(F.col("text").cast("binary")).alias("digest"))
@@ -1393,16 +1404,15 @@ def d26_curation_verdict(spark: SparkSession, sf: str) -> DataFrame:
                      "low_diversity")
                .when(F.col("dup_rn") > 1, "exact_dup")
                .otherwise("keep"))
-    return staged.select("doc_id", "n_tokens", "n_unique",
-                         verdict.alias("verdict"))
+    return staged, verdict
 
 
 D26_SQL = rf"""
 WITH staged AS (
   SELECT doc_id,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
+         CAST(len({_TOKENS_DUCK}) AS BIGINT)
            AS n_tokens,
-         CAST(len(list_distinct(regexp_extract_all(text, '\w+|[^\w\s]')))
+         CAST(len(list_distinct({_TOKENS_DUCK}))
               AS BIGINT) AS n_unique,
          row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id)
            AS dup_rn
@@ -1977,20 +1987,10 @@ def d33_semdedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _d33_sql() -> str:
-    from etl_docker_spark.plans.e import _E05_BODY
+    from etl_docker_spark.plans.e import _E05_EA_CTES
 
     return f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
-emb AS (
-  SELECT vec_id, embedding,
-         {_DOT2.format(a='embedding', b='embedding')} AS n2
-  FROM embeddings
-),
-ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id)),
+WITH {_E05_EA_CTES},
 losers AS (
   SELECT DISTINCT b.vec_id AS loser
   FROM ea a JOIN ea b
@@ -2734,16 +2734,7 @@ def d43_clean_split(spark: SparkSession, sf: str) -> DataFrame:
 
 
 D43_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-             generate_series(1, greatest(len(tk) - {_D43_N - 1}, 1)),
-             i -> array_to_string(tk[i:i+{_D43_N - 1}], ' '))) AS sh
-  FROM toks
-),
+WITH {_ngram_ctes(_D43_N)},
 ev AS (
   SELECT DISTINCT unnest(sh) AS g FROM sh WHERE doc_id % 20 = 0
 ),
@@ -3012,10 +3003,10 @@ def d47_prefix_filter_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     return prefix_jaccard_pairs_frame(spark, sf)
 
 
-D47_SQL = f"""
-WITH {_D47_HASHED_CTES},
-hs AS (SELECT doc_id, list_distinct(hh) AS hs FROM hashed),
-tok AS (SELECT doc_id, unnest(hs) AS h FROM hs),
+# Every doc pair sharing a shingle hash in `hs` (doc_id, hs), with its
+# intersection and union sizes: the brute-force Jaccard tail of the D47,
+# D49 and d57 oracles, each of which adds its own threshold WHERE.
+_HS_PAIRS_SQL = """tok AS (SELECT doc_id, unnest(hs) AS h FROM hs),
 pair AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(COUNT(*) AS BIGINT) AS inter_n
@@ -3026,7 +3017,12 @@ SELECT p.doc_a, p.doc_b, p.inter_n,
        CAST(len(sa.hs) + len(sb.hs) AS BIGINT) - p.inter_n AS union_n
 FROM pair p
 JOIN hs sa ON sa.doc_id = p.doc_a
-JOIN hs sb ON sb.doc_id = p.doc_b
+JOIN hs sb ON sb.doc_id = p.doc_b"""
+
+D47_SQL = f"""
+WITH {_D47_HASHED_CTES},
+hs AS (SELECT doc_id, list_distinct(hh) AS hs FROM hashed),
+{_HS_PAIRS_SQL}
 WHERE 2 * p.inter_n >= len(sa.hs) + len(sb.hs) - p.inter_n
 """
 
@@ -3179,18 +3175,7 @@ def d49_positional_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 D49_SQL = f"""
 WITH {_D47_HASHED_CTES},
 hs AS (SELECT doc_id, list_distinct(hh) AS hs FROM hashed),
-tok AS (SELECT doc_id, unnest(hs) AS h FROM hs),
-pair AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(COUNT(*) AS BIGINT) AS inter_n
-  FROM tok a JOIN tok b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT p.doc_a, p.doc_b, p.inter_n,
-       CAST(len(sa.hs) + len(sb.hs) AS BIGINT) - p.inter_n AS union_n
-FROM pair p
-JOIN hs sa ON sa.doc_id = p.doc_a
-JOIN hs sb ON sb.doc_id = p.doc_b
+{_HS_PAIRS_SQL}
 WHERE 10 * p.inter_n >= 7 * (len(sa.hs) + len(sb.hs) - p.inter_n)
 """
 
@@ -3215,17 +3200,23 @@ def d50_substring_runs(spark: SparkSession, sf: str) -> DataFrame:
         t(spark, sf, "documents"), "doc_id", "text", k=5, min_run=8)
 
 
-D50_SQL = """
-WITH toks AS (
+def _kgram_ctes(k: int) -> str:
+    """`toks` (doc_id, tk: the space tokens) and `g` (doc_id, p, h): the
+    md5-32 hash h of each k-token window, p its 1-based start."""
+    return f"""toks AS (
   SELECT doc_id, string_split(text, ' ') AS tk FROM documents
 ),
 g AS (
   SELECT doc_id, i AS p,
          CAST('0x' || substring(
-           md5(array_to_string(tk[i:i+4], ' ')), 1, 8) AS BIGINT) AS h
-  FROM toks, LATERAL unnest(generate_series(1, len(tk) - 4)) AS u(i)
-  WHERE len(tk) >= 5
-),
+           md5(array_to_string(tk[i:i+{k - 1}], ' ')), 1, 8) AS BIGINT) AS h
+  FROM toks, LATERAL unnest(generate_series(1, len(tk) - {k - 1})) AS u(i)
+  WHERE len(tk) >= {k}
+)"""
+
+
+D50_SQL = f"""
+WITH {_kgram_ctes(5)},
 m AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.p AS pa, a.p - b.p AS d
   FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id
@@ -3371,17 +3362,8 @@ def d52_internal_repetition(spark: SparkSession, sf: str) -> DataFrame:
             .filter(F.col("max_repeat_tokens") >= min_run))
 
 
-D52_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-),
-g AS (
-  SELECT doc_id, i AS p,
-         CAST('0x' || substring(
-           md5(array_to_string(tk[i:i+1], ' ')), 1, 8) AS BIGINT) AS h
-  FROM toks, LATERAL unnest(generate_series(1, len(tk) - 1)) AS u(i)
-  WHERE len(tk) >= 2
-),
+D52_SQL = f"""
+WITH {_kgram_ctes(2)},
 m AS (
   SELECT a.doc_id AS doc, a.p AS pa, b.p - a.p AS d
   FROM g a JOIN g b ON a.doc_id = b.doc_id AND a.h = b.h AND a.p < b.p
@@ -3660,17 +3642,8 @@ def d55_self_dedup_curation(spark: SparkSession, sf: str) -> DataFrame:
                     .alias("dup_ppm")))
 
 
-D55_SQL = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-),
-g AS (
-  SELECT doc_id, i AS p,
-         CAST('0x' || substring(
-           md5(array_to_string(tk[i:i+1], ' ')), 1, 8) AS BIGINT) AS h
-  FROM toks, LATERAL unnest(generate_series(1, len(tk) - 1)) AS u(i)
-  WHERE len(tk) >= 2
-),
+D55_SQL = f"""
+WITH {_kgram_ctes(2)},
 dup AS (
   SELECT DISTINCT a.doc_id AS doc, b.p AS pb
   FROM g a JOIN g b ON a.doc_id = b.doc_id AND a.h = b.h AND a.p < b.p
@@ -3815,9 +3788,7 @@ def d58_linear_classifier_scores(spark: SparkSession, sf: str) -> DataFrame:
     models (vs transformer scorers) as the first filtering tier.
     """
     docs = t(spark, sf, "documents")
-    bucket = ("pmod(CAST(conv(substring(md5({f}), 1, 8), 16, 10) AS BIGINT), "
-              f"{_D58_BUCKETS})")
-    w_ppm = f"({bucket.format(f='f')} % 2001) - 1000"
+    w_ppm = f"({md5_bucket_sql('f', _D58_BUCKETS)} % 2001) - 1000"
     # Tokenize ONCE per row, then build the feature array ONCE per row
     # (guide §4.1/§2.3: a non-lambda subexpression inside a HOF lambda is
     # re-evaluated per element — the old element_at(split(text), i + 2)
@@ -4045,18 +4016,7 @@ hs AS (
            sh, s -> CAST('0x' || substring(md5(s), 1, 8) AS BIGINT))) AS hs
   FROM sh
 ),
-tok AS (SELECT doc_id, unnest(hs) AS h FROM hs),
-pair AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         CAST(COUNT(*) AS BIGINT) AS inter_n
-  FROM tok a JOIN tok b ON a.h = b.h AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT p.doc_a, p.doc_b, p.inter_n,
-       CAST(len(sa.hs) + len(sb.hs) AS BIGINT) - p.inter_n AS union_n
-FROM pair p
-JOIN hs sa ON sa.doc_id = p.doc_a
-JOIN hs sb ON sb.doc_id = p.doc_b
+{_HS_PAIRS_SQL}
 WHERE 2 * p.inter_n >= len(sa.hs) + len(sb.hs) - p.inter_n
 """
 
@@ -4115,8 +4075,7 @@ def d59_classifier_weight_join(spark: SparkSession, sf: str) -> DataFrame:
             .select("doc_id", "lang",
                     F.explode(F.expr(feats_sql("tk"))).alias("f"))
             .select("doc_id", "lang",
-                    F.expr(f"pmod(CAST(conv(substring(md5(f), 1, 8), 16, "
-                           f"10) AS BIGINT), {_D59_BUCKETS})")
+                    F.expr(md5_bucket_sql("f", _D59_BUCKETS))
                     .alias("bucket")))
     scored = (feat.join(F.broadcast(weights), "bucket")
               .groupBy("doc_id", "lang")
@@ -4182,15 +4141,10 @@ ORDER BY lang, decile
 """
 
 
-_ORACLE_MIN_TOKENS = _MIN_TOKENS
-
 
 # ---------------------------------------------------------------- d60
 
 _D60_SCALE = 1_000_000  # fixed point: ppm of per-bucket label polarity
-
-_BUCKET_SPARK = (f"pmod(CAST(conv(substring(md5(f), 1, 8), 16, 10) "
-                 f"AS BIGINT), {_D58_BUCKETS})")
 
 
 def _labeled_docs(spark: SparkSession, sf: str) -> DataFrame:
@@ -4198,24 +4152,8 @@ def _labeled_docs(spark: SparkSession, sf: str) -> DataFrame:
     training label (y = 1 for keep, 0 for any drop reason), computed
     inline on the corpus frame so the feature explode can carry the
     label without a second corpus-sized join."""
-    from pyspark.sql import Window
-
-    from etl_docker_spark.llm.text import token_count, tokens_of
-
-    docs = t(spark, sf, "documents")
-    toks = tokens_of(F.col("text"))
-    wdig = Window.partitionBy("digest").orderBy("doc_id")
-    staged = (docs.select(
-        "doc_id", "lang", "text",
-        token_count(F.col("text")).alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_unique"),
-        F.md5(F.col("text").cast("binary")).alias("digest"))
-        .withColumn("dup_rn", F.row_number().over(wdig)))
-    verdict = (F.when(F.col("n_tokens") < _MIN_TOKENS, "too_short")
-               .when(2 * F.col("n_unique") < F.col("n_tokens"),
-                     "low_diversity")
-               .when(F.col("dup_rn") > 1, "exact_dup")
-               .otherwise("keep"))
+    staged, verdict = _d26_rules(t(spark, sf, "documents"),
+                                 "doc_id", "lang", "text")
     return staged.select(
         "doc_id", "lang", "text", verdict.alias("verdict"),
         (verdict == "keep").cast("long").alias("y"))
@@ -4267,9 +4205,25 @@ def classifier_occ_frame(spark: SparkSession, sf: str) -> DataFrame:
             F.explode("feats").alias("f"))
         return labeled.select(
             "doc_id", "lang", "verdict", "y", "split", "n_tokens",
-            F.expr(_BUCKET_SPARK).alias("bucket"))
+            F.expr(md5_bucket_sql("f", _D58_BUCKETS)).alias("bucket"))
 
     return memo_frame(spark, f"classifier_occ:{sf}", build, sf_dir=sf)
+
+
+def _polarity_weights(occ: DataFrame) -> DataFrame:
+    """(bucket, w_ppm): per-bucket label polarity of the occurrences
+    `occ` (y, bucket), (n1 - n0) / (n1 + n0) in integer ppm, minus the
+    prior polarity of all of `occ` — the d60 and d63 models."""
+    counts = (occ.groupBy("bucket")
+              .agg(F.sum("y").cast("long").alias("n1"),
+                   F.sum(1 - F.col("y")).cast("long").alias("n0")))
+    prior = counts.agg(F.sum("n1").alias("g1"), F.sum("n0").alias("g0"))
+    pol = f"(n1 - n0) * {_D60_SCALE} DIV (n1 + n0)"
+    gpol = f"(g1 - g0) * {_D60_SCALE} DIV (g1 + g0)"
+    return (counts.crossJoin(F.broadcast(prior))
+            .select("bucket",
+                    F.expr(f"{pol} - {gpol}").cast("long")
+                    .alias("w_ppm")))
 
 
 def d60_weights_frame(spark: SparkSession, sf: str) -> DataFrame:
@@ -4298,17 +4252,8 @@ def d60_weights_frame(spark: SparkSession, sf: str) -> DataFrame:
     from etl_docker_spark.llm.index_cache import memo_frame
 
     def build() -> DataFrame:
-        occ = classifier_occ_frame(spark, sf).select("y", "bucket")
-        counts = (occ.groupBy("bucket")
-                  .agg(F.sum("y").cast("long").alias("n1"),
-                       F.sum(1 - F.col("y")).cast("long").alias("n0")))
-        prior = counts.agg(F.sum("n1").alias("g1"), F.sum("n0").alias("g0"))
-        pol = f"(n1 - n0) * {_D60_SCALE} DIV (n1 + n0)"
-        gpol = f"(g1 - g0) * {_D60_SCALE} DIV (g1 + g0)"
-        return (counts.crossJoin(F.broadcast(prior))
-                .select("bucket",
-                        F.expr(f"{pol} - {gpol}").cast("long")
-                        .alias("w_ppm")))
+        return _polarity_weights(
+            classifier_occ_frame(spark, sf).select("y", "bucket"))
 
     return memo_frame(spark, f"d60_weights:{sf}", build, sf_dir=sf)
 
@@ -4376,42 +4321,58 @@ list_concat(
     i -> string_split(text, ' ')[i] || '_'
          || string_split(text, ' ')[i + 1]))
 """
-
-D60_SQL = rf"""
-WITH labeled AS (
+# d26's verdict per document, as the d60 and d63 oracles label training
+# rows (the digest window breaks exact duplicates by doc_id).
+_D60_VERDICTS_DUCK = rf"""labeled AS (
   SELECT doc_id, text,
-         CASE WHEN n_tokens < {_ORACLE_MIN_TOKENS} THEN 'too_short'
+         CASE WHEN n_tokens < {_MIN_TOKENS} THEN 'too_short'
               WHEN 2 * n_unique < n_tokens THEN 'low_diversity'
               WHEN dup_rn > 1 THEN 'exact_dup'
               ELSE 'keep' END AS verdict
   FROM (
     SELECT doc_id, text,
-           CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
+           CAST(len({_TOKENS_DUCK}) AS BIGINT)
              AS n_tokens,
-           CAST(len(list_distinct(regexp_extract_all(text, '\w+|[^\w\s]')))
+           CAST(len(list_distinct({_TOKENS_DUCK}))
                 AS BIGINT) AS n_unique,
            row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id)
              AS dup_rn
     FROM documents
   )
-),
-lab AS (
-  SELECT doc_id, verdict,
-         CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END AS y,
-         {_D60_FEATS_DUCK} AS feats
-  FROM labeled
-),
-occ AS (
-  SELECT doc_id, verdict, y,
+)"""
+# The same verdict as 0/1 rule columns, for oracles that label by y:
+# n_tokens, then the too-short and low-diversity WHENs of the y CASE.
+_D60_RULES_DUCK = rf"""         CAST(len({_TOKENS_DUCK}) AS BIGINT)
+           AS n_tokens,
+         CASE WHEN CAST(len({_TOKENS_DUCK})
+                        AS BIGINT) < {_MIN_TOKENS} THEN 0
+              WHEN 2 * CAST(len(list_distinct(
+                       {_TOKENS_DUCK}))
+                       AS BIGINT)
+                   < CAST(len({_TOKENS_DUCK})
+                          AS BIGINT) THEN 0"""
+
+
+def _d60_occ_cte(cols: str, src: str) -> str:
+    """`occ`: one row per feature occurrence of the labeled rows `src`,
+    carrying `cols` and the feature's md5 bucket (`_D58_BUCKETS`)."""
+    return f"""occ AS (
+  SELECT {cols},
          CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
            % {_D58_BUCKETS} AS bucket
-  FROM lab
-),
-counts AS (
+  FROM {src}
+)"""
+
+
+def _d60_weight_ctes(occ: str) -> str:
+    """counts/prior/w: d60's trained model over the occurrences `occ` —
+    per-bucket label polarity in integer ppm, centered on the prior
+    polarity (`d60_weights_frame`)."""
+    return f"""counts AS (
   SELECT bucket,
          CAST(SUM(y) AS BIGINT) AS n1,
          CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ GROUP BY bucket
+  FROM {occ} GROUP BY bucket
 ),
 prior AS (
   SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
@@ -4422,7 +4383,18 @@ w AS (
          CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
               - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w_ppm
   FROM counts, prior
+)"""
+
+D60_SQL = rf"""
+WITH {_D60_VERDICTS_DUCK},
+lab AS (
+  SELECT doc_id, verdict,
+         CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END AS y,
+         {_D60_FEATS_DUCK} AS feats
+  FROM labeled
 ),
+{_d60_occ_cte('doc_id, verdict, y', 'lab')},
+{_d60_weight_ctes('occ')},
 scored AS (
   SELECT doc_id, verdict,
          CAST(COUNT(*) AS BIGINT) AS n_feats,
@@ -4498,43 +4470,15 @@ def d61_threshold_yield_curve(spark: SparkSession, sf: str) -> DataFrame:
 D61_SQL = rf"""
 WITH labeled AS (
   SELECT doc_id, text,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
-           AS n_tokens,
-         CASE WHEN CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                        AS BIGINT) < {_ORACLE_MIN_TOKENS} THEN 0
-              WHEN 2 * CAST(len(list_distinct(
-                       regexp_extract_all(text, '\w+|[^\w\s]')))
-                       AS BIGINT)
-                   < CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                          AS BIGINT) THEN 0
+{_D60_RULES_DUCK}
               WHEN row_number() OVER (PARTITION BY md5(text)
                                       ORDER BY doc_id) > 1 THEN 0
               ELSE 1 END AS y,
          {_D60_FEATS_DUCK} AS feats
   FROM documents
 ),
-occ AS (
-  SELECT doc_id, n_tokens, y,
-         CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
-           % {_D58_BUCKETS} AS bucket
-  FROM labeled
-),
-counts AS (
-  SELECT bucket,
-         CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ GROUP BY bucket
-),
-prior AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM counts
-),
-w AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w_ppm
-  FROM counts, prior
-),
+{_d60_occ_cte('doc_id, n_tokens, y', 'labeled')},
+{_d60_weight_ctes('occ')},
 scored AS (
   SELECT doc_id, any_value(n_tokens) AS n_tokens,
          CAST(COUNT(*) AS BIGINT) AS n_feats,
@@ -4611,12 +4555,20 @@ def d62_lang_calibrated_thresholds(spark: SparkSession, sf: str) -> DataFrame:
     """
     scored = d60_scores_frame(spark, sf)
     docs = t(spark, sf, "documents").select("doc_id", "lang")
+    return _calibrated_knife(spark, scored.join(docs, "doc_id"))
+
+
+def _calibrated_knife(spark: SparkSession, per_doc: DataFrame) -> DataFrame:
+    """The per-language knife of d62 and d65 over `per_doc` (lang,
+    score_ppm, n_tokens): a (lang x `_D61_CELLS`) histogram on the d62
+    grid, cumulatives from the top through the literal-grid triangle
+    join, and per lang the highest cell that keeps
+    >= `_D62_KEEP_TARGET_PCT` of the language's token mass."""
     cell_w = _D62_GRID_W * 1.0 / _D61_CELLS
     cell = F.least(F.greatest(
         F.floor((F.col("score_ppm") - _D62_GRID_LO) / cell_w), F.lit(0)),
         F.lit(_D61_CELLS - 1)).cast("long")
-    hist = (scored.join(docs, "doc_id")
-            .select("lang", cell.alias("hcell"), "n_tokens")
+    hist = (per_doc.select("lang", cell.alias("hcell"), "n_tokens")
             .groupBy("lang", "hcell")
             .agg(F.count("*").cast("long").alias("n_docs"),
                  F.sum("n_tokens").cast("long").alias("n_tokens")))
@@ -4647,58 +4599,9 @@ def d62_lang_calibrated_thresholds(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("lang"))
 
 
-# Oracle: re-derives the trained scores end-to-end (training included,
-# as in D61), joins lang back, then the same histogram -> cumulative ->
-# per-lang arg_max pick. All-integer arithmetic throughout.
-D62_SQL = rf"""
-WITH labeled AS (
-  SELECT doc_id, lang, text,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
-           AS n_tokens,
-         CASE WHEN CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                        AS BIGINT) < {_MIN_TOKENS} THEN 0
-              WHEN 2 * CAST(len(list_distinct(
-                       regexp_extract_all(text, '\w+|[^\w\s]')))
-                       AS BIGINT)
-                   < CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                          AS BIGINT) THEN 0
-              WHEN row_number() OVER (PARTITION BY md5(text)
-                                      ORDER BY doc_id) > 1 THEN 0
-              ELSE 1 END AS y,
-         {_D60_FEATS_DUCK} AS feats
-  FROM documents
-),
-occ AS (
-  SELECT doc_id, lang, n_tokens, y,
-         CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
-           % {_D58_BUCKETS} AS bucket
-  FROM labeled
-),
-counts AS (
-  SELECT bucket,
-         CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ GROUP BY bucket
-),
-prior AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM counts
-),
-w AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w_ppm
-  FROM counts, prior
-),
-scored AS (
-  SELECT doc_id, any_value(lang) AS lang,
-         any_value(n_tokens) AS n_tokens,
-         CAST(COUNT(*) AS BIGINT) AS n_feats,
-         CAST(SUM(w.w_ppm) AS BIGINT) AS sum_ppm
-  FROM occ JOIN w USING (bucket)
-  GROUP BY doc_id
-),
-cells AS (
+# `_calibrated_knife` in SQL, over `scored` (lang, n_tokens, sum_ppm,
+# n_feats): the d62 and d65 oracles from the histogram to the end.
+_D62_KNIFE_DUCK = f"""cells AS (
   SELECT lang,
          least(greatest(CAST(floor(
            ((sum_ppm // n_feats) - {_D62_GRID_LO})
@@ -4747,6 +4650,32 @@ ORDER BY lang
 """
 
 
+# Oracle: re-derives the trained scores end-to-end (training included,
+# as in D61), joins lang back, then the same histogram -> cumulative ->
+# per-lang arg_max pick. All-integer arithmetic throughout.
+D62_SQL = rf"""
+WITH labeled AS (
+  SELECT doc_id, lang, text,
+{_D60_RULES_DUCK}
+              WHEN row_number() OVER (PARTITION BY md5(text)
+                                      ORDER BY doc_id) > 1 THEN 0
+              ELSE 1 END AS y,
+         {_D60_FEATS_DUCK} AS feats
+  FROM documents
+),
+{_d60_occ_cte('doc_id, lang, n_tokens, y', 'labeled')},
+{_d60_weight_ctes('occ')},
+scored AS (
+  SELECT doc_id, any_value(lang) AS lang,
+         any_value(n_tokens) AS n_tokens,
+         CAST(COUNT(*) AS BIGINT) AS n_feats,
+         CAST(SUM(w.w_ppm) AS BIGINT) AS sum_ppm
+  FROM occ JOIN w USING (bucket)
+  GROUP BY doc_id
+),
+{_D62_KNIFE_DUCK}"""
+
+
 # ---------------------------------------------------------------- d63
 
 # d37's content-free hash split, reused verbatim: train on buckets < 80,
@@ -4754,6 +4683,13 @@ ORDER BY lang
 # engines, runs, and corpus growth — the property that makes the
 # generalization gap measurable at all.
 _D63_TRAIN_PCT = 80
+
+
+# `_d63_split` in the oracles: the split CASE column of a labeled row.
+_D63_SPLIT_DUCK = f"""         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
+                                          1, 8) AS BIGINT) % 100
+                   < {_D63_TRAIN_PCT}
+              THEN 'train' ELSE 'holdout' END AS split,"""
 
 
 def _d63_split() -> F.Column:
@@ -4773,20 +4709,9 @@ def d63_weights_frame(spark: SparkSession, sf: str) -> DataFrame:
     from etl_docker_spark.llm.index_cache import memo_frame
 
     def build() -> DataFrame:
-        occ = (classifier_occ_frame(spark, sf)
-               .filter(F.col("split") == "train")
-               .select("y", "bucket"))
-        counts = (occ.groupBy("bucket")
-                  .agg(F.sum("y").cast("long").alias("n1"),
-                       F.sum(1 - F.col("y")).cast("long").alias("n0")))
-        prior = counts.agg(F.sum("n1").alias("g1"),
-                           F.sum("n0").alias("g0"))
-        pol = f"(n1 - n0) * {_D60_SCALE} DIV (n1 + n0)"
-        gpol = f"(g1 - g0) * {_D60_SCALE} DIV (g1 + g0)"
-        return (counts.crossJoin(F.broadcast(prior))
-                .select("bucket",
-                        F.expr(f"{pol} - {gpol}").cast("long")
-                        .alias("w_ppm")))
+        return _polarity_weights(classifier_occ_frame(spark, sf)
+                                 .filter(F.col("split") == "train")
+                                 .select("y", "bucket"))
 
     return memo_frame(spark, f"d63_weights:{sf}", build, sf_dir=sf)
 
@@ -4830,55 +4755,16 @@ def d63_holdout_generalization(spark: SparkSession, sf: str) -> DataFrame:
 
 
 D63_SQL = rf"""
-WITH labeled AS (
-  SELECT doc_id, text,
-         CASE WHEN n_tokens < {_MIN_TOKENS} THEN 'too_short'
-              WHEN 2 * n_unique < n_tokens THEN 'low_diversity'
-              WHEN dup_rn > 1 THEN 'exact_dup'
-              ELSE 'keep' END AS verdict
-  FROM (
-    SELECT doc_id, text,
-           CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
-             AS n_tokens,
-           CAST(len(list_distinct(regexp_extract_all(text, '\w+|[^\w\s]')))
-                AS BIGINT) AS n_unique,
-           row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id)
-             AS dup_rn
-    FROM documents
-  )
-),
+WITH {_D60_VERDICTS_DUCK},
 lab AS (
   SELECT doc_id, verdict,
          CASE WHEN verdict = 'keep' THEN 1 ELSE 0 END AS y,
-         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                                          1, 8) AS BIGINT) % 100
-                   < {_D63_TRAIN_PCT}
-              THEN 'train' ELSE 'holdout' END AS split,
+{_D63_SPLIT_DUCK}
          {_D60_FEATS_DUCK} AS feats
   FROM labeled
 ),
-occ AS (
-  SELECT doc_id, verdict, split, y,
-         CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
-           % {_D58_BUCKETS} AS bucket
-  FROM lab
-),
-counts AS (
-  SELECT bucket,
-         CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ WHERE split = 'train' GROUP BY bucket
-),
-prior AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM counts
-),
-w AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w_ppm
-  FROM counts, prior
-),
+{_d60_occ_cte('doc_id, verdict, split, y', 'lab')},
+{_d60_weight_ctes("occ WHERE split = 'train'")},
 scored AS (
   SELECT o.doc_id, any_value(o.verdict) AS verdict,
          any_value(o.split) AS split,
@@ -4906,8 +4792,7 @@ _D64_LGK = 13
 # The one definition of the bounded token-hash domain, shared by every
 # sketch-tier consumer (d64 theta, d66 approx_top_k, d67 HLL, s32
 # streaming HLL) so the exactness arguments can never desynchronize.
-_TOK_BUCKET_SPARK = (f"pmod(CAST(conv(substring(md5(tok), 1, 8), 16, 10) "
-                     f"AS BIGINT), {_D64_DOMAIN})")
+_TOK_BUCKET_SPARK = md5_bucket_sql("tok", _D64_DOMAIN)
 _TOK_BUCKET_DUCK = (f"CAST('0x' || substring(md5(tok), 1, 8) AS BIGINT) "
                     f"% {_D64_DOMAIN}")
 
@@ -5023,59 +4908,16 @@ def d65_holdout_calibrated_thresholds(spark: SparkSession,
                    .cast("long").alias("sum_ppm")))
     per_doc = scored.select("lang", "n_tokens",
                             F.expr("sum_ppm DIV n_feats").alias("score_ppm"))
-    cell_w = _D62_GRID_W * 1.0 / _D61_CELLS
-    cell = F.least(F.greatest(
-        F.floor((F.col("score_ppm") - _D62_GRID_LO) / cell_w), F.lit(0)),
-        F.lit(_D61_CELLS - 1)).cast("long")
-    hist = (per_doc.select("lang", cell.alias("hcell"), "n_tokens")
-            .groupBy("lang", "hcell")
-            .agg(F.count("*").cast("long").alias("n_docs"),
-                 F.sum("n_tokens").cast("long").alias("n_tokens")))
-    totals = (hist.groupBy("lang")
-              .agg(F.sum("n_docs").cast("long").alias("total_docs"),
-                   F.sum("n_tokens").cast("long").alias("total_tokens")))
-    grid = spark.range(_D61_CELLS).select(F.col("id").alias("cell"))
-    cum = (F.broadcast(grid)
-           .join(hist, F.col("hcell") >= F.col("cell"))
-           .groupBy("lang", "cell")
-           .agg(F.sum("n_docs").cast("long").alias("docs_kept"),
-                F.sum("n_tokens").cast("long").alias("tokens_kept")))
-    ok = (cum.join(totals, "lang")
-          .filter(F.col("tokens_kept") * 100
-                  >= _D62_KEEP_TARGET_PCT * F.col("total_tokens")))
-    return (ok.groupBy("lang")
-            .agg(F.max("cell").cast("long").alias("chosen_cell"),
-                 F.max_by("docs_kept", "cell").cast("long")
-                 .alias("docs_kept"),
-                 F.max_by("tokens_kept", "cell").cast("long")
-                 .alias("tokens_kept"),
-                 F.max("total_docs").cast("long").alias("total_docs"),
-                 F.max("total_tokens").cast("long").alias("total_tokens"))
-            .select("lang", "chosen_cell", "docs_kept", "tokens_kept",
-                    "total_docs", "total_tokens",
-                    F.expr("tokens_kept * 1000000 DIV total_tokens")
-                    .cast("long").alias("kept_ppm"))
-            .orderBy("lang"))
+    return _calibrated_knife(spark, per_doc)
 
 
 def _d65_sql() -> str:
     return rf"""
 WITH labeled AS (
   SELECT doc_id, lang, text,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
-           AS n_tokens,
-         CASE WHEN CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                        AS BIGINT) < {_MIN_TOKENS} THEN 0
-              WHEN 2 * CAST(len(list_distinct(
-                       regexp_extract_all(text, '\w+|[^\w\s]')))
-                       AS BIGINT)
-                   < CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                          AS BIGINT) THEN 0
+{_D60_RULES_DUCK}
               ELSE 1 END AS y0,
-         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                                          1, 8) AS BIGINT) % 100
-                   < {_D63_TRAIN_PCT}
-              THEN 'train' ELSE 'holdout' END AS split,
+{_D63_SPLIT_DUCK}
          {_D60_FEATS_DUCK} AS feats
   FROM documents
 ),
@@ -5087,28 +4929,8 @@ lab AS (
               ELSE 1 END AS y
   FROM labeled
 ),
-occ AS (
-  SELECT doc_id, lang, n_tokens, split, y,
-         CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
-           % {_D58_BUCKETS} AS bucket
-  FROM lab
-),
-counts AS (
-  SELECT bucket,
-         CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ WHERE split = 'train' GROUP BY bucket
-),
-prior AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM counts
-),
-w AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w_ppm
-  FROM counts, prior
-),
+{_d60_occ_cte('doc_id, lang, n_tokens, split, y', 'lab')},
+{_d60_weight_ctes("occ WHERE split = 'train'")},
 scored AS (
   SELECT o.doc_id, any_value(o.lang) AS lang,
          any_value(o.n_tokens) AS n_tokens,
@@ -5118,53 +4940,7 @@ scored AS (
   WHERE o.split = 'holdout'
   GROUP BY o.doc_id
 ),
-cells AS (
-  SELECT lang,
-         least(greatest(CAST(floor(
-           ((sum_ppm // n_feats) - {_D62_GRID_LO})
-           / ({_D62_GRID_W} * 1.0 / {_D61_CELLS})) AS BIGINT), 0),
-           {_D61_CELLS - 1}) AS hcell,
-         n_tokens
-  FROM scored
-),
-hist AS (
-  SELECT lang, hcell, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
-  FROM cells GROUP BY lang, hcell
-),
-totals AS (
-  SELECT lang, CAST(SUM(n_docs) AS BIGINT) AS total_docs,
-         CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
-  FROM hist GROUP BY lang
-),
-grid AS (
-  SELECT unnest(generate_series(0, {_D61_CELLS - 1})) AS cell
-),
-cum AS (
-  SELECT h.lang, g.cell,
-         CAST(SUM(h.n_docs) AS BIGINT) AS docs_kept,
-         CAST(SUM(h.n_tokens) AS BIGINT) AS tokens_kept
-  FROM grid g JOIN hist h ON h.hcell >= g.cell
-  GROUP BY h.lang, g.cell
-),
-ok AS (
-  SELECT c.lang, c.cell, c.docs_kept, c.tokens_kept,
-         t.total_docs, t.total_tokens
-  FROM cum c JOIN totals t USING (lang)
-  WHERE c.tokens_kept * 100 >= {_D62_KEEP_TARGET_PCT} * t.total_tokens
-)
-SELECT lang,
-       CAST(MAX(cell) AS BIGINT) AS chosen_cell,
-       CAST(arg_max(docs_kept, cell) AS BIGINT) AS docs_kept,
-       CAST(arg_max(tokens_kept, cell) AS BIGINT) AS tokens_kept,
-       CAST(MAX(total_docs) AS BIGINT) AS total_docs,
-       CAST(MAX(total_tokens) AS BIGINT) AS total_tokens,
-       CAST(arg_max(tokens_kept, cell) * 1000000 // MAX(total_tokens)
-            AS BIGINT) AS kept_ppm
-FROM ok
-GROUP BY lang
-ORDER BY lang
-"""
+{_D62_KNIFE_DUCK}"""
 
 
 # ---------------------------------------------------------------- d66
@@ -5370,24 +5146,33 @@ def d68_model_score_drift(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("split"))
 
 
+def _d68_weight_ctes(tag: str, occ: str) -> str:
+    """c<tag>/p<tag>/w<tag>: `_d60_weight_ctes` in d68's layout, the
+    weight column named `w`, so one oracle holds two models."""
+    return f"""c{tag} AS (
+  SELECT bucket, CAST(SUM(y) AS BIGINT) AS n1,
+         CAST(SUM(1 - y) AS BIGINT) AS n0
+  FROM {occ} GROUP BY bucket
+),
+p{tag} AS (
+  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
+  FROM c{tag}
+),
+w{tag} AS (
+  SELECT bucket,
+         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
+              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w
+  FROM c{tag}, p{tag}
+)"""
+
+
 def _d68_sql() -> str:
     return rf"""
 WITH labeled AS (
   SELECT doc_id, text,
-         CAST(len(regexp_extract_all(text, '\w+|[^\w\s]')) AS BIGINT)
-           AS n_tokens,
-         CASE WHEN CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                        AS BIGINT) < {_MIN_TOKENS} THEN 0
-              WHEN 2 * CAST(len(list_distinct(
-                       regexp_extract_all(text, '\w+|[^\w\s]')))
-                       AS BIGINT)
-                   < CAST(len(regexp_extract_all(text, '\w+|[^\w\s]'))
-                          AS BIGINT) THEN 0
+{_D60_RULES_DUCK}
               ELSE 1 END AS y0,
-         CASE WHEN CAST('0x' || substring(md5(CAST(doc_id AS VARCHAR)),
-                                          1, 8) AS BIGINT) % 100
-                   < {_D63_TRAIN_PCT}
-              THEN 'train' ELSE 'holdout' END AS split,
+{_D63_SPLIT_DUCK}
          {_D60_FEATS_DUCK} AS feats
   FROM documents
 ),
@@ -5399,42 +5184,9 @@ lab AS (
               ELSE 1 END AS y
   FROM labeled
 ),
-occ AS (
-  SELECT doc_id, split, y,
-         CAST('0x' || substring(md5(unnest(feats)), 1, 8) AS BIGINT)
-           % {_D58_BUCKETS} AS bucket
-  FROM lab
-),
-cfull AS (
-  SELECT bucket, CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ GROUP BY bucket
-),
-pfull AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM cfull
-),
-wfull AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w
-  FROM cfull, pfull
-),
-ctr AS (
-  SELECT bucket, CAST(SUM(y) AS BIGINT) AS n1,
-         CAST(SUM(1 - y) AS BIGINT) AS n0
-  FROM occ WHERE split = 'train' GROUP BY bucket
-),
-ptr AS (
-  SELECT CAST(SUM(n1) AS BIGINT) AS g1, CAST(SUM(n0) AS BIGINT) AS g0
-  FROM ctr
-),
-wtr AS (
-  SELECT bucket,
-         CAST((n1 - n0) * {_D60_SCALE} // (n1 + n0)
-              - (g1 - g0) * {_D60_SCALE} // (g1 + g0) AS BIGINT) AS w
-  FROM ctr, ptr
-),
+{_d60_occ_cte('doc_id, split, y', 'lab')},
+{_d68_weight_ctes('full', 'occ')},
+{_d68_weight_ctes('tr', "occ WHERE split = 'train'")},
 scored AS (
   SELECT o.doc_id, any_value(o.split) AS split,
          CAST(COUNT(*) AS BIGINT) AS nf,
@@ -5882,6 +5634,60 @@ def _d73_spark_tokens() -> str:
     return "array(" + ", ".join(toks) + ")"
 
 
+def _typo_aliases(frame: DataFrame, offset: int) -> DataFrame:
+    """One-edit aliases of `frame` (id, toks), keyed id + `offset`: token
+    ((id div 4) % 4) + 1 gets one char substituted ('q'), deleted or
+    inserted ('x') at (id % length) + 1, the op picked by (id div 16) %
+    3 — d73's typo table, shared with d75's rotated aliases."""
+    return (frame
+            .withColumn("ti", F.expr(
+                "CAST((id div 4) % 4 AS INT) + 1"))
+            .withColumn("tok", F.expr("element_at(toks, ti)"))
+            .withColumn("p", F.expr(
+                "CAST(id % length(tok) AS INT) + 1"))
+            .withColumn("ct", F.expr("""
+                CASE (id div 16) % 3
+                  WHEN 0 THEN concat(substring(tok, 1, p - 1), 'q',
+                                     substring(tok, p + 1))
+                  WHEN 1 THEN concat(substring(tok, 1, p - 1),
+                                     substring(tok, p + 1))
+                  ELSE concat(substring(tok, 1, p - 1), 'x',
+                              substring(tok, p))
+                END"""))
+            .select((F.col("id") + F.lit(offset))
+                    .alias("id"),
+                    F.expr("transform(toks, (t, j) -> "
+                           "CASE WHEN j + 1 = ti THEN ct ELSE t END)")
+                    .alias("toks")))
+
+
+def _one_edit_pairs(slots: DataFrame) -> DataFrame:
+    """Blocking + verify over token slots (id, tok, rest): each slot's
+    signatures are `rest` joined to `tok` with no char or one char
+    deleted, so two ids share a signature when their other tokens match
+    and the slot tokens are within one edit; the shared pairs (id_a <
+    id_b) are verified by levenshtein <= 1. d73's and d75's pair frame."""
+    sigs = (slots
+            .select("id", "tok", "rest",
+                    F.explode(F.expr("sequence(0, length(tok))"))
+                    .alias("p"))
+            .select("id", "tok", F.concat(
+                F.col("rest"), F.lit("|"),
+                F.expr("CASE WHEN p = 0 THEN tok "
+                       "ELSE concat(substring(tok, 1, p - 1), "
+                       "substring(tok, p + 1)) END")).alias("sig")))
+    a = sigs.select(F.col("id").alias("id_a"),
+                    F.col("tok").alias("tok_a"), "sig")
+    b = sigs.select(F.col("id").alias("id_b"),
+                    F.col("tok").alias("tok_b"), "sig")
+    return (a.join(b, "sig")
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b",
+                    F.levenshtein("tok_a", "tok_b").alias("dist"))
+            .distinct()
+            .filter(F.col("dist") <= 1))
+
+
 def d73_low_entropy_fuzzy_dedup(spark: SparkSession,
                                 sf: str) -> DataFrame:
     """Single-edited-token fuzzy dedup on a c_name-DERIVED 4-token
@@ -5930,56 +5736,20 @@ def d73_low_entropy_fuzzy_dedup(spark: SparkSession,
     exacts = (base.filter("id % 10 = 5")
               .select((F.col("id") + F.lit(2 * _D73_ALIAS_OFFSET))
                       .alias("id"), "toks"))
-    aliases = (base.filter("id % 4 = 0")
-               .withColumn("ti", F.expr(
-                   "CAST((id div 4) % 4 AS INT) + 1"))
-               .withColumn("tok", F.expr("element_at(toks, ti)"))
-               .withColumn("p", F.expr(
-                   "CAST(id % length(tok) AS INT) + 1"))
-               .withColumn("ct", F.expr("""
-                   CASE (id div 16) % 3
-                     WHEN 0 THEN concat(substring(tok, 1, p - 1), 'q',
-                                        substring(tok, p + 1))
-                     WHEN 1 THEN concat(substring(tok, 1, p - 1),
-                                        substring(tok, p + 1))
-                     ELSE concat(substring(tok, 1, p - 1), 'x',
-                                 substring(tok, p))
-                   END"""))
-               .select((F.col("id") + F.lit(_D73_ALIAS_OFFSET))
-                       .alias("id"),
-                       F.expr("transform(toks, (t, j) -> "
-                              "CASE WHEN j + 1 = ti THEN ct ELSE t END)")
-                       .alias("toks")))
+    aliases = _typo_aliases(base.filter("id % 4 = 0"), _D73_ALIAS_OFFSET)
     corpus = base.unionByName(aliases).unionByName(exacts)
     # blocking signatures: 4 positions x (identity + per-char deletion)
-    sigs = (corpus
-            .select("id", "toks",
-                    F.explode(F.expr(f"sequence(1, {_D73_NTOK})"))
-                    .alias("i"))
-            .select("id",
-                    F.expr("element_at(toks, i)").alias("tok"),
-                    F.expr(f"concat(CAST(i AS STRING), '|', "
-                           f"concat_ws(' ', slice(toks, 1, i - 1)), '|', "
-                           f"concat_ws(' ', slice(toks, i + 1, "
-                           f"{_D73_NTOK} - i)))").alias("rest"))
-            .select("id", "tok", "rest",
-                    F.explode(F.expr("sequence(0, length(tok))"))
-                    .alias("p"))
-            .select("id", "tok", F.concat(
-                F.col("rest"), F.lit("|"),
-                F.expr("CASE WHEN p = 0 THEN tok "
-                       "ELSE concat(substring(tok, 1, p - 1), "
-                       "substring(tok, p + 1)) END")).alias("sig")))
-    a = sigs.select(F.col("id").alias("id_a"),
-                    F.col("tok").alias("tok_a"), "sig")
-    b = sigs.select(F.col("id").alias("id_b"),
-                    F.col("tok").alias("tok_b"), "sig")
-    verified = (a.join(b, "sig")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b",
-                        F.levenshtein("tok_a", "tok_b").alias("dist"))
-                .distinct()
-                .filter(F.col("dist") <= 1))
+    slots = (corpus
+             .select("id", "toks",
+                     F.explode(F.expr(f"sequence(1, {_D73_NTOK})"))
+                     .alias("i"))
+             .select("id",
+                     F.expr("element_at(toks, i)").alias("tok"),
+                     F.expr(f"concat(CAST(i AS STRING), '|', "
+                            f"concat_ws(' ', slice(toks, 1, i - 1)), '|', "
+                            f"concat_ws(' ', slice(toks, i + 1, "
+                            f"{_D73_NTOK} - i)))").alias("rest")))
+    verified = _one_edit_pairs(slots)
     stats = verified.agg(
         F.count("*").cast("long").alias("n_pairs"),
         F.sum(F.when(F.col("dist") == 0, 1).otherwise(0)).cast("long")
@@ -6237,27 +6007,9 @@ def _d75_corpus(spark: SparkSession, sf: str) -> DataFrame:
                         F.expr(rotated).alias("toks")))
     # rotation+typo aliases: every 4th id — rotate, then corrupt one
     # char of one token (d73's op table, on the ROTATED position)
-    rot_typo = (base.filter("id % 4 = 0")
-                .select("id", F.expr(rotated).alias("toks"))
-                .withColumn("ti", F.expr(
-                    "CAST((id div 4) % 4 AS INT) + 1"))
-                .withColumn("tok", F.expr("element_at(toks, ti)"))
-                .withColumn("p", F.expr(
-                    "CAST(id % length(tok) AS INT) + 1"))
-                .withColumn("ct", F.expr("""
-                    CASE (id div 16) % 3
-                      WHEN 0 THEN concat(substring(tok, 1, p - 1), 'q',
-                                         substring(tok, p + 1))
-                      WHEN 1 THEN concat(substring(tok, 1, p - 1),
-                                         substring(tok, p + 1))
-                      ELSE concat(substring(tok, 1, p - 1), 'x',
-                                  substring(tok, p))
-                    END"""))
-                .select((F.col("id") + F.lit(_D75_ALIAS_OFFSET))
-                        .alias("id"),
-                        F.expr("transform(toks, (t, j) -> "
-                               "CASE WHEN j + 1 = ti THEN ct ELSE t "
-                               "END)").alias("toks")))
+    rot_typo = _typo_aliases(
+        base.filter("id % 4 = 0").select("id", F.expr(rotated).alias("toks")),
+        _D75_ALIAS_OFFSET)
     return (base.unionByName(rot_typo).unionByName(rot_only)
             .select("id", F.sort_array("toks").alias("st")))
 
@@ -6268,34 +6020,17 @@ def _d75_verified_pairs(corpus: DataFrame) -> DataFrame:
     (see d75's docstring for the argument)."""
     # signatures: NTOK multiset slots x (identity + per-char deletion);
     # rest = the OTHER tokens of the SORTED list, verbatim
-    sigs = (corpus
-            .select("id", "st",
-                    F.explode(F.expr(f"sequence(1, {_D75_NTOK})"))
-                    .alias("i"))
-            .select("id",
-                    F.expr("element_at(st, i)").alias("tok"),
-                    F.expr(f"concat_ws(' ', concat("
-                           f"slice(st, 1, i - 1), "
-                           f"slice(st, i + 1, {_D75_NTOK} - i)))")
-                    .alias("rest"))
-            .select("id", "tok", "rest",
-                    F.explode(F.expr("sequence(0, length(tok))"))
-                    .alias("p"))
-            .select("id", "tok", F.concat(
-                F.col("rest"), F.lit("|"),
-                F.expr("CASE WHEN p = 0 THEN tok "
-                       "ELSE concat(substring(tok, 1, p - 1), "
-                       "substring(tok, p + 1)) END")).alias("sig")))
-    a = sigs.select(F.col("id").alias("id_a"),
-                    F.col("tok").alias("tok_a"), "sig")
-    b = sigs.select(F.col("id").alias("id_b"),
-                    F.col("tok").alias("tok_b"), "sig")
-    return (a.join(b, "sig")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    F.levenshtein("tok_a", "tok_b").alias("dist"))
-            .distinct()
-            .filter(F.col("dist") <= 1))
+    slots = (corpus
+             .select("id", "st",
+                     F.explode(F.expr(f"sequence(1, {_D75_NTOK})"))
+                     .alias("i"))
+             .select("id",
+                     F.expr("element_at(st, i)").alias("tok"),
+                     F.expr(f"concat_ws(' ', concat("
+                            f"slice(st, 1, i - 1), "
+                            f"slice(st, i + 1, {_D75_NTOK} - i)))")
+                     .alias("rest")))
+    return _one_edit_pairs(slots)
 
 
 def d75_transposed_typo_dedup(spark: SparkSession, sf: str) -> DataFrame:
@@ -6452,8 +6187,7 @@ _D74_DOMAIN = 64          # token-hash bucket domain
 _D74_K = 12
 _D74_TRACK = 256          # >= domain -> the sketch is EXACT (d66 regime)
 
-_D74_BUCKET_SPARK = (f"pmod(CAST(conv(substring(md5(tok), 1, 8), 16, 10) "
-                     f"AS BIGINT), {_D74_DOMAIN})")
+_D74_BUCKET_SPARK = md5_bucket_sql("tok", _D74_DOMAIN)
 _D74_BUCKET_DUCK = (f"CAST(('0x' || substring(md5(tok), 1, 8))::BIGINT "
                     f"% {_D74_DOMAIN} AS BIGINT)")
 

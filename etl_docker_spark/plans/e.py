@@ -32,15 +32,30 @@ def e01_knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
 _DOT = ("list_reduce(list_transform(generate_series(1, len({a})), "
         "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)")
 
-E01_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
+# The exact cosine scan of queries vec_id < 8 against every other vector
+# (E01), and its top-5 beside each vector's floor-grid cell (E03, E04).
+_EXACT_SCAN_CTES = f"""q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
          {_DOT.format(a='q.qv', b='e.embedding')}
            / sqrt({_DOT.format(a='q.qv', b='q.qv')} * {_DOT.format(a='e.embedding', b='e.embedding')}) AS cos_raw
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> q.query_id
-)
+)"""
+_EXACT_GRID_CTES = _EXACT_SCAN_CTES + """,
+exact AS (
+  SELECT query_id, neighbor_id FROM scored
+  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC) <= 5
+),
+b AS (
+  SELECT vec_id,
+         CAST(floor(CAST(embedding[1] AS DOUBLE) * 4) AS BIGINT) AS b1,
+         CAST(floor(CAST(embedding[2] AS DOUBLE) * 4) AS BIGINT) AS b2
+  FROM embeddings
+)"""
+
+E01_SQL = f"""
+WITH {_EXACT_SCAN_CTES}
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
        CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC) AS BIGINT) AS rank
 FROM scored
@@ -112,24 +127,7 @@ def e03_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 E03_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_DOT.format(a='q.qv', b='e.embedding')}
-           / sqrt({_DOT.format(a='q.qv', b='q.qv')} * {_DOT.format(a='e.embedding', b='e.embedding')}) AS cos_raw
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM scored
-  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC) <= 5
-),
-b AS (
-  SELECT vec_id,
-         CAST(floor(CAST(embedding[1] AS DOUBLE) * 4) AS BIGINT) AS b1,
-         CAST(floor(CAST(embedding[2] AS DOUBLE) * 4) AS BIGINT) AS b2
-  FROM embeddings
-),
+WITH {_EXACT_GRID_CTES},
 cand AS (
   SELECT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
   FROM b qb JOIN b nb ON qb.b1 = nb.b1 AND qb.b2 = nb.b2 AND qb.vec_id <> nb.vec_id
@@ -187,24 +185,7 @@ def e04_multiprobe_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 E04_SQL = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
-scored AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_DOT.format(a='q.qv', b='e.embedding')}
-           / sqrt({_DOT.format(a='q.qv', b='q.qv')} * {_DOT.format(a='e.embedding', b='e.embedding')}) AS cos_raw
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM scored
-  QUALIFY row_number() OVER (PARTITION BY query_id ORDER BY cos_raw DESC, neighbor_id ASC) <= 5
-),
-b AS (
-  SELECT vec_id,
-         CAST(floor(CAST(embedding[1] AS DOUBLE) * 4) AS BIGINT) AS b1,
-         CAST(floor(CAST(embedding[2] AS DOUBLE) * 4) AS BIGINT) AS b2
-  FROM embeddings
-),
+WITH {_EXACT_GRID_CTES},
 offs AS (SELECT unnest([-1, 0, 1]) AS d1),
 cand1 AS (
   SELECT DISTINCT qb.vec_id AS query_id, nb.vec_id AS neighbor_id
@@ -361,6 +342,43 @@ SELECT vec_id, cluster FROM d2
 QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
 """
 
+# e05's k-means training CTEs (everything before its final pick), then
+# that pick as `assign`: the coarse-cell prefix of every oracle routed
+# through e05's trained cells. String-level reuse keeps each k-means
+# replay in lockstep with E05_SQL.
+_E05_CLUSTER_CTES = (E05_SQL.strip().removeprefix("WITH")
+                     .rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip())
+_E05_ASSIGN_CTES = _E05_CLUSTER_CTES + """,
+assign AS (
+  SELECT vec_id, cluster FROM d2
+  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
+)"""
+# `_E05_ASSIGN_CTES` plus each vector's squared norm, joined to its cell
+# as `ea` (the e16/e18 and d33 oracles).
+_E05_EA_CTES = f"""{_E05_ASSIGN_CTES},
+emb AS (
+  SELECT vec_id, embedding,
+         {_DOT2.format(a='embedding', b='embedding')} AS n2
+  FROM embeddings
+),
+ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id))"""
+
+
+def _cell_knn_ctes(nq: int) -> str:
+    """The queries vec_id < `nq` (`q`) and the cosine of each against
+    every other vector of its cell (`scored`, left open for a candidate
+    filter): the routed search of the e06, e16 and e18 oracles over
+    `ea`."""
+    return f"""q AS (
+  SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, cluster
+  FROM ea WHERE vec_id < {nq}
+),
+scored AS (
+  SELECT q.query_id, ea.vec_id AS neighbor_id,
+         {_DOT2.format(a='q.qv', b='ea.embedding')}
+           / sqrt(q.qn2 * ea.n2) AS cos_raw
+  FROM ea JOIN q ON ea.cluster = q.cluster AND ea.vec_id <> q.query_id"""
+
 
 # ---------------------------------------------------------------- e06
 
@@ -407,27 +425,14 @@ def e06_trained_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
                     F.round("cosine", 8).alias("cosine"), "rank"))
 
 
-_E05_BODY = E05_SQL.strip().removeprefix("WITH")
 E06_SQL = f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
+WITH {_E05_ASSIGN_CTES},
 emb AS (
   SELECT vec_id, embedding, {_DOT2.format(a='embedding', b='embedding')} AS n2
   FROM embeddings
 ),
 ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id)),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, cluster
-  FROM ea WHERE vec_id < {_KM_K}
-),
-scored AS (
-  SELECT q.query_id, ea.vec_id AS neighbor_id,
-         {_DOT2.format(a='q.qv', b='ea.embedding')}
-           / sqrt(q.qn2 * ea.n2) AS cos_raw
-  FROM ea JOIN q ON ea.cluster = q.cluster AND ea.vec_id <> q.query_id
+{_cell_knn_ctes(_KM_K)}
 )
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
        CAST(row_number() OVER (PARTITION BY query_id
@@ -465,9 +470,6 @@ def e07_hyperplane_lsh(spark: SparkSession, sf: str) -> DataFrame:
     return hyperplane_lsh_pairs(emb, threshold=0.4, signatures=sig)
 
 
-E07_DOT = ("list_reduce(list_transform(generate_series(1, len({a})), "
-           "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-           "(x, y) -> x + y)")
 E07_SQL = f"""
 WITH e AS (SELECT vec_id AS id, embedding AS v FROM embeddings),
 comps AS (
@@ -511,9 +513,9 @@ cand AS (
 ),
 ver AS (
   SELECT id_a, id_b,
-         {E07_DOT.format(a='ea.v', b='eb.v')}
-           / sqrt({E07_DOT.format(a='ea.v', b='ea.v')}
-                  * {E07_DOT.format(a='eb.v', b='eb.v')}) AS cos_raw
+         {_DOT.format(a='ea.v', b='eb.v')}
+           / sqrt({_DOT.format(a='ea.v', b='ea.v')}
+                  * {_DOT.format(a='eb.v', b='eb.v')}) AS cos_raw
   FROM cand JOIN e ea ON ea.id = id_a JOIN e eb ON eb.id = id_b
 )
 SELECT id_a, id_b, round(cos_raw, 8) AS cosine
@@ -584,9 +586,6 @@ def e08_hybrid_rrf(spark: SparkSession, sf: str) -> DataFrame:
             .filter(F.col("fused_rank") <= _RRF_TOP))
 
 
-_E08_DOT = ("list_reduce(list_transform(generate_series(1, len({a})), "
-            "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-            "(x, y) -> x + y)")
 E08_SQL = f"""
 WITH bm AS (
   SELECT doc_id, rank AS bm25_rank FROM ({D21_SQL})
@@ -596,9 +595,9 @@ qv AS (
 ),
 cos AS (
   SELECT vec_id AS doc_id,
-         round({_E08_DOT.format(a='embedding', b='q')}
-               / sqrt({_E08_DOT.format(a='embedding', b='embedding')}
-                      * {_E08_DOT.format(a='q', b='q')}), 8) AS cosine
+         round({_DOT.format(a='embedding', b='q')}
+               / sqrt({_DOT.format(a='embedding', b='embedding')}
+                      * {_DOT.format(a='q', b='q')}), 8) AS cosine
   FROM embeddings, qv
 ),
 ct AS (
@@ -827,8 +826,14 @@ def e10_pq_adc_search(spark: SparkSession, sf: str) -> DataFrame:
     every distance bit-for-bit; ties (vectors sharing all 4 codes have
     identical ADC distance by construction) break by neighbor id.
     """
+    return _adc_top(_adc_scored(spark, sf))
+
+
+def _adc_top(scored: DataFrame) -> DataFrame:
+    """The `_ADC_K` nearest neighbors of each query by ADC distance `adc`
+    (ties broken by neighbor id), ranked: the e10 and e11 output."""
     wq = Window.partitionBy("query_id")
-    return (_adc_scored(spark, sf)
+    return (scored
             .withColumn("rank", F.row_number().over(
                 wq.orderBy(F.asc("adc"), F.asc("neighbor_id"))).cast("long"))
             .filter(F.col("rank") <= _ADC_K)
@@ -836,10 +841,12 @@ def e10_pq_adc_search(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("adc").alias("adc_dist"), "rank"))
 
 
-def _adc_scored(spark: SparkSession, sf: str) -> DataFrame:
-    """(query_id, neighbor_id, adc) for every corpus vector: e10's scored
-    frame before ranking — also the shortlist source for e19's exact
-    re-rank stage."""
+def _adc_tables(spark: SparkSession,
+                sf: str) -> tuple[DataFrame, list[DataFrame]]:
+    """The PQ index as e10 and e11 search it: every vector's codes
+    (vec_id, code0..code3), and per subspace s the distance table
+    (query_id, code{s}, d{s}) from each query vec_id < `_ADC_NQ` to each
+    of its centroids."""
     base = _pq_base(spark, sf)
     out = None
     dts = []
@@ -855,7 +862,14 @@ def _adc_scored(spark: SparkSession, sf: str) -> DataFrame:
                     _pq_dbl_dist(F.col("qvq"), F.col("cv")).alias(f"d{s}")))
         codes = codes.withColumnRenamed("cluster", f"code{s}")
         out = codes if out is None else out.join(codes, "vec_id")
-    scored = out
+    return out, dts
+
+
+def _adc_scored(spark: SparkSession, sf: str) -> DataFrame:
+    """(query_id, neighbor_id, adc) for every corpus vector: e10's scored
+    frame before ranking — also the shortlist source for e19's exact
+    re-rank stage."""
+    scored, dts = _adc_tables(spark, sf)
     for s, dt in enumerate(dts):
         on = [f"code{s}"] if s == 0 else ["query_id", f"code{s}"]
         scored = scored.join(F.broadcast(dt), on)
@@ -877,15 +891,19 @@ dt_{s} AS (
 )"""
 
 
-E10_SQL = (
-    "WITH " + ",".join(_pq_sub_sql(s) for s in range(_PQ_SUBS))
-    + "," + ",".join(_adc_dt_sql(s) for s in range(_PQ_SUBS))
-    + f""",
+# The 4 PQ subspace codebooks, per-query distance tables and codes
+# (`codes`), shared by E10, e19, e20 and the IVFPQ prefix.
+_PQ_CODE_CTES = (",".join(_pq_sub_sql(s) for s in range(_PQ_SUBS))
+                 + "," + ",".join(_adc_dt_sql(s) for s in range(_PQ_SUBS))
+                 + """,
 codes AS (
   SELECT vec_id, code0, code1, code2, code3
   FROM code_0 JOIN code_1 USING (vec_id)
   JOIN code_2 USING (vec_id) JOIN code_3 USING (vec_id)
-),
+)""")
+# `_PQ_CODE_CTES` and every corpus vector's ADC distance to each query
+# (`scored`): e10's frame before ranking, e19/e20's shortlist source.
+_ADC_SCORED_CTES = "WITH " + _PQ_CODE_CTES + """,
 scored AS (
   SELECT d0.query_id, c.vec_id AS neighbor_id,
          d0.d + d1.d + d2.d + d3.d AS adc
@@ -895,12 +913,14 @@ scored AS (
   JOIN dt_2 d2 ON d2.query_id = d0.query_id AND d2.code = c.code2
   JOIN dt_3 d3 ON d3.query_id = d0.query_id AND d3.code = c.code3
   WHERE c.vec_id <> d0.query_id
-)
+)"""
+
+E10_SQL = _ADC_SCORED_CTES + f"""
 SELECT query_id, neighbor_id, adc AS adc_dist,
        CAST(row_number() OVER (PARTITION BY query_id
                                ORDER BY adc, neighbor_id) AS BIGINT) AS rank
 FROM scored
-QUALIFY rank <= {_ADC_K}""")
+QUALIFY rank <= {_ADC_K}"""
 
 
 # ---------------------------------------------------------------- e11
@@ -925,22 +945,7 @@ def e11_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
     bit-for-bit; ties break by neighbor id.
     """
     assign = e05_assignments(spark, sf)
-    base = _pq_base(spark, sf)
-    codes_all = None
-    dts = []
-    for s in range(_PQ_SUBS):
-        sub = base.select("vec_id", F.col(f"qv{s}").alias("qv"))
-        codes, cents = _pq_trained(spark, sf, s)
-        q = (sub.filter(F.col("vec_id") < _ADC_NQ)
-             .select(F.col("vec_id").alias("query_id"),
-                     F.col("qv").alias("qvq")))
-        dts.append(
-            q.crossJoin(F.broadcast(cents))
-            .select("query_id", F.col("cluster").alias(f"code{s}"),
-                    _pq_dbl_dist(F.col("qvq"), F.col("cv")).alias(f"d{s}")))
-        codes = codes.withColumnRenamed("cluster", f"code{s}")
-        codes_all = codes if codes_all is None else codes_all.join(codes,
-                                                                   "vec_id")
+    codes_all, dts = _adc_tables(spark, sf)
     qa = (assign.filter(F.col("vec_id") < _ADC_NQ)
           .select(F.col("vec_id").alias("query_id"),
                   F.col("cluster").alias("qcell")))
@@ -950,39 +955,16 @@ def e11_ivfpq_search(spark: SparkSession, sf: str) -> DataFrame:
     scored = cand
     for s, dt in enumerate(dts):
         scored = scored.join(F.broadcast(dt), ["query_id", f"code{s}"])
-    wq = Window.partitionBy("query_id")
-    return (scored
-            .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                    (F.col("d0") + F.col("d1") + F.col("d2")
-                     + F.col("d3")).alias("adc"))
-            .withColumn("rank", F.row_number().over(
-                wq.orderBy(F.asc("adc"), F.asc("neighbor_id"))).cast("long"))
-            .filter(F.col("rank") <= _ADC_K)
-            .select("query_id", "neighbor_id",
-                    F.col("adc").alias("adc_dist"), "rank"))
+    return _adc_top(scored.select(
+        "query_id", F.col("vec_id").alias("neighbor_id"),
+        (F.col("d0") + F.col("d1") + F.col("d2") + F.col("d3")).alias("adc")))
 
 
 def ivfpq_common_sql() -> str:
     """The WITH-prefix shared by e11/e12: e05's coarse training through
     `assign`, the 4 PQ subspace codebooks and codes, per-query distance
     tables, and the routed `adc_top` result (e11's output shape)."""
-    e05_body = E05_SQL.strip().removeprefix("WITH")
-    e05_head = e05_body.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()
-    return (
-        f"WITH {e05_head},\n"
-        "assign AS (\n"
-        "  SELECT vec_id, cluster FROM d2\n"
-        "  QUALIFY row_number() OVER (PARTITION BY vec_id"
-        " ORDER BY dist, cluster) = 1\n"
-        "),"
-        + ",".join(_pq_sub_sql(s) for s in range(_PQ_SUBS))
-        + "," + ",".join(_adc_dt_sql(s) for s in range(_PQ_SUBS))
-        + f""",
-codes AS (
-  SELECT vec_id, code0, code1, code2, code3
-  FROM code_0 JOIN code_1 USING (vec_id)
-  JOIN code_2 USING (vec_id) JOIN code_3 USING (vec_id)
-),
+    return f"""WITH {_E05_ASSIGN_CTES},{_PQ_CODE_CTES},
 qa AS (
   SELECT vec_id AS query_id, cluster AS qcell FROM assign
   WHERE vec_id < {_ADC_NQ}
@@ -1005,7 +987,7 @@ adc_top AS (
              AS rank
   FROM adc_scored
   QUALIFY rank <= {_ADC_K}
-)""")
+)"""
 
 
 def _e11_sql() -> str:
@@ -1280,11 +1262,7 @@ def e15_filtered_knn(spark: SparkSession, sf: str) -> DataFrame:
 
 def _e15_sql() -> str:
     return f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
+WITH {_E05_ASSIGN_CTES},
 emb AS (
   SELECT vec_id, label, embedding,
          {_DOT2.format(a='embedding', b='embedding')} AS n2
@@ -1353,26 +1331,8 @@ def e16_range_search(spark: SparkSession, sf: str) -> DataFrame:
 
 def _e16_sql() -> str:
     return f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
-emb AS (
-  SELECT vec_id, embedding,
-         {_DOT2.format(a='embedding', b='embedding')} AS n2
-  FROM embeddings
-),
-ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id)),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, cluster
-  FROM ea WHERE vec_id < {_E16_NQ}
-),
-scored AS (
-  SELECT q.query_id, ea.vec_id AS neighbor_id,
-         {_DOT2.format(a='q.qv', b='ea.embedding')}
-           / sqrt(q.qn2 * ea.n2) AS cos_raw
-  FROM ea JOIN q ON ea.cluster = q.cluster AND ea.vec_id <> q.query_id
+WITH {_E05_EA_CTES},
+{_cell_knn_ctes(_E16_NQ)}
 )
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine
 FROM scored WHERE cos_raw >= {_E16_TAU}
@@ -1422,11 +1382,7 @@ def e17_cell_rebalance(spark: SparkSession, sf: str) -> DataFrame:
 
 def _e17_sql() -> str:
     return f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
+WITH {_E05_ASSIGN_CTES},
 occ AS (SELECT cluster, COUNT(*) AS occ FROM assign GROUP BY cluster),
 cells AS (
   SELECT a.cluster,
@@ -1490,26 +1446,8 @@ def e18_tombstone_search(spark: SparkSession, sf: str) -> DataFrame:
 
 def _e18_sql() -> str:
     return f"""
-WITH {_E05_BODY.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
-emb AS (
-  SELECT vec_id, embedding,
-         {_DOT2.format(a='embedding', b='embedding')} AS n2
-  FROM embeddings
-),
-ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id)),
-q AS (
-  SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, cluster
-  FROM ea WHERE vec_id < {_E18_NQ}
-),
-scored AS (
-  SELECT q.query_id, ea.vec_id AS neighbor_id,
-         {_DOT2.format(a='q.qv', b='ea.embedding')}
-           / sqrt(q.qn2 * ea.n2) AS cos_raw
-  FROM ea JOIN q ON ea.cluster = q.cluster AND ea.vec_id <> q.query_id
+WITH {_E05_EA_CTES},
+{_cell_knn_ctes(_E18_NQ)}
   WHERE ea.vec_id % 13 <> 0
 )
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
@@ -1572,28 +1510,7 @@ def e19_adc_exact_rerank(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _e19_sql() -> str:
-    dot = ("list_reduce(list_transform(generate_series(1, len({a})), "
-           "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-           "(x, y) -> x + y)")
-    return (
-        "WITH " + ",".join(_pq_sub_sql(s) for s in range(_PQ_SUBS))
-        + "," + ",".join(_adc_dt_sql(s) for s in range(_PQ_SUBS))
-        + f""",
-codes AS (
-  SELECT vec_id, code0, code1, code2, code3
-  FROM code_0 JOIN code_1 USING (vec_id)
-  JOIN code_2 USING (vec_id) JOIN code_3 USING (vec_id)
-),
-scored AS (
-  SELECT d0.query_id, c.vec_id AS neighbor_id,
-         d0.d + d1.d + d2.d + d3.d AS adc
-  FROM codes c
-  JOIN dt_0 d0 ON d0.code = c.code0
-  JOIN dt_1 d1 ON d1.query_id = d0.query_id AND d1.code = c.code1
-  JOIN dt_2 d2 ON d2.query_id = d0.query_id AND d2.code = c.code2
-  JOIN dt_3 d3 ON d3.query_id = d0.query_id AND d3.code = c.code3
-  WHERE c.vec_id <> d0.query_id
-),
+    return _ADC_SCORED_CTES + f""",
 shortlist AS (
   SELECT query_id, neighbor_id,
          CAST(row_number() OVER (PARTITION BY query_id
@@ -1604,9 +1521,9 @@ shortlist AS (
 ),
 exact AS (
   SELECT s.query_id, s.neighbor_id, s.adc_rank,
-         round({dot.format(a='n.embedding', b='q.embedding')}
-               / sqrt({dot.format(a='n.embedding', b='n.embedding')}
-                      * {dot.format(a='q.embedding', b='q.embedding')}),
+         round({_DOT.format(a='n.embedding', b='q.embedding')}
+               / sqrt({_DOT.format(a='n.embedding', b='n.embedding')}
+                      * {_DOT.format(a='q.embedding', b='q.embedding')}),
                8) AS cosine
   FROM shortlist s
   JOIN embeddings n ON n.vec_id = s.neighbor_id
@@ -1618,7 +1535,7 @@ SELECT query_id, neighbor_id, cosine,
             AS BIGINT) AS exact_rank,
        adc_rank
 FROM exact
-QUALIFY exact_rank <= {_E19_K}""")
+QUALIFY exact_rank <= {_E19_K}"""
 
 
 # ---------------------------------------------------------------- e20
@@ -1679,9 +1596,6 @@ def e20_rerank_recall_sweep(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _e20_sql() -> str:
-    dot = ("list_reduce(list_transform(generate_series(1, len({a})), "
-           "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-           "(x, y) -> x + y)")
     width_rows = "\nUNION ALL\n".join(f"""
 SELECT CAST({r} AS BIGINT) AS shortlist_width,
        CAST((SELECT COUNT(*) FROM exact5 e
@@ -1699,25 +1613,7 @@ rr_{r} AS (
     FROM cand WHERE adc_rank <= {r}
   ) WHERE rn <= {_E20_K}
 )""" for r in _E20_WIDTHS)
-    return (
-        "WITH " + ",".join(_pq_sub_sql(s) for s in range(_PQ_SUBS))
-        + "," + ",".join(_adc_dt_sql(s) for s in range(_PQ_SUBS))
-        + f""",
-codes AS (
-  SELECT vec_id, code0, code1, code2, code3
-  FROM code_0 JOIN code_1 USING (vec_id)
-  JOIN code_2 USING (vec_id) JOIN code_3 USING (vec_id)
-),
-scored AS (
-  SELECT d0.query_id, c.vec_id AS neighbor_id,
-         d0.d + d1.d + d2.d + d3.d AS adc
-  FROM codes c
-  JOIN dt_0 d0 ON d0.code = c.code0
-  JOIN dt_1 d1 ON d1.query_id = d0.query_id AND d1.code = c.code1
-  JOIN dt_2 d2 ON d2.query_id = d0.query_id AND d2.code = c.code2
-  JOIN dt_3 d3 ON d3.query_id = d0.query_id AND d3.code = c.code3
-  WHERE c.vec_id <> d0.query_id
-),
+    return _ADC_SCORED_CTES + f""",
 sl AS (
   SELECT query_id, neighbor_id,
          row_number() OVER (PARTITION BY query_id
@@ -1726,9 +1622,9 @@ sl AS (
 ),
 cand AS (
   SELECT s.query_id, s.neighbor_id, s.adc_rank,
-         round({dot.format(a='n.embedding', b='q.embedding')}
-               / sqrt({dot.format(a='n.embedding', b='n.embedding')}
-                      * {dot.format(a='q.embedding', b='q.embedding')}),
+         round({_DOT.format(a='n.embedding', b='q.embedding')}
+               / sqrt({_DOT.format(a='n.embedding', b='n.embedding')}
+                      * {_DOT.format(a='q.embedding', b='q.embedding')}),
                8) AS cosine
   FROM sl s
   JOIN embeddings n ON n.vec_id = s.neighbor_id
@@ -1739,9 +1635,9 @@ exact5 AS (
     SELECT q.vec_id AS query_id, e.vec_id AS neighbor_id,
            row_number() OVER (
              PARTITION BY q.vec_id
-             ORDER BY {dot.format(a='q.embedding', b='e.embedding')}
-               / sqrt({dot.format(a='q.embedding', b='q.embedding')}
-                      * {dot.format(a='e.embedding', b='e.embedding')})
+             ORDER BY {_DOT.format(a='q.embedding', b='e.embedding')}
+               / sqrt({_DOT.format(a='q.embedding', b='q.embedding')}
+                      * {_DOT.format(a='e.embedding', b='e.embedding')})
                DESC, e.vec_id) AS rank
     FROM embeddings e
     CROSS JOIN (SELECT vec_id, embedding FROM embeddings
@@ -1749,7 +1645,7 @@ exact5 AS (
     WHERE e.vec_id <> q.vec_id
   ) WHERE rank <= {_E20_K}
 ),{rr_ctes}
-{width_rows}""")
+{width_rows}"""
 
 
 # ---------------------------------------------------------------- e21
@@ -1828,15 +1724,10 @@ def _e21_sql() -> str:
     (string-level reuse keeps the two k-means replays in lockstep),
     then the merged base-cell + delta-scan ranking."""
     base_filter = f"WHERE vec_id % {_E21_MOD} <> {_E21_REM}"
-    body = E05_SQL.strip().removeprefix("WITH").replace(
+    assign_ctes = _E05_ASSIGN_CTES.replace(
         "FROM embeddings\n)", f"FROM embeddings {base_filter}\n)", 1)
-    train = body.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()
     return f"""
-WITH {train},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
+WITH {assign_ctes},
 emb AS (
   SELECT vec_id, embedding, {_DOT2.format(a='embedding', b='embedding')} AS n2
   FROM embeddings
@@ -1940,10 +1831,6 @@ def e22_matryoshka_search(spark: SparkSession, sf: str) -> DataFrame:
                 "exact_rank", "prefix_rank"))
 
 
-_E22_DOT = ("list_reduce(list_transform(generate_series(1, len({a})), "
-            "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-            "(x, y) -> x + y)")
-
 E22_SQL = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS qv,
@@ -1952,9 +1839,9 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id, e.embedding AS nv, q.qv,
-         {_E22_DOT.format(a='q.qp', b='e.embedding[1:' + str(_E22_PREFIX) + ']')}
-           / sqrt({_E22_DOT.format(a='q.qp', b='q.qp')}
-                  * {_E22_DOT.format(a='e.embedding[1:' + str(_E22_PREFIX) + ']',
+         {_DOT.format(a='q.qp', b='e.embedding[1:' + str(_E22_PREFIX) + ']')}
+           / sqrt({_DOT.format(a='q.qp', b='q.qp')}
+                  * {_DOT.format(a='e.embedding[1:' + str(_E22_PREFIX) + ']',
                                      b='e.embedding[1:' + str(_E22_PREFIX) + ']')}) AS pcos
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id <> q.query_id
@@ -1969,9 +1856,9 @@ short AS (
 ),
 exact AS (
   SELECT query_id, neighbor_id, prefix_rank,
-         {_E22_DOT.format(a='nv', b='qv')}
-           / sqrt({_E22_DOT.format(a='nv', b='nv')}
-                  * {_E22_DOT.format(a='qv', b='qv')}) AS cos_raw
+         {_DOT.format(a='nv', b='qv')}
+           / sqrt({_DOT.format(a='nv', b='nv')}
+                  * {_DOT.format(a='qv', b='qv')}) AS cos_raw
   FROM short
 )
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
@@ -2057,10 +1944,6 @@ def e23_binary_hamming_search(spark: SparkSession, sf: str) -> DataFrame:
                 "exact_rank", "hamming", "ham_rank"))
 
 
-_E23_DOT = ("list_reduce(list_transform(generate_series(1, len({a})), "
-            "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), "
-            "(x, y) -> x + y)")
-
 _E23_HALF = ("list_reduce(list_transform(generate_series({lo} + 1, "
              "{lo} + 32), i -> CASE WHEN embedding[i] > 0 THEN "
              "(CAST(1 AS BIGINT) << (i - {lo} - 1)) ELSE "
@@ -2094,9 +1977,9 @@ short AS (
 ),
 exact AS (
   SELECT query_id, neighbor_id, hamming, ham_rank,
-         {_E23_DOT.format(a='nv', b='qv')}
-           / sqrt({_E23_DOT.format(a='nv', b='nv')}
-                  * {_E23_DOT.format(a='qv', b='qv')}) AS cos_raw
+         {_DOT.format(a='nv', b='qv')}
+           / sqrt({_DOT.format(a='nv', b='nv')}
+                  * {_DOT.format(a='qv', b='qv')}) AS cos_raw
   FROM short
 )
 SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
@@ -2175,14 +2058,8 @@ def e24_ivf_binary_funnel(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _e24_sql() -> str:
-    body = E05_SQL.strip().removeprefix("WITH")
-    assign_ctes = body.rsplit("SELECT vec_id, cluster FROM d2", 1)[0].strip()
     return f"""
-WITH {assign_ctes},
-assign AS (
-  SELECT vec_id, cluster FROM d2
-  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dist, cluster) = 1
-),
+WITH {_E05_ASSIGN_CTES},
 sig AS (
   SELECT s.vec_id, s.embedding, a.cluster,
          {_E23_HALF.format(lo=0)} AS lo,

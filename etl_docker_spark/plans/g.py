@@ -189,8 +189,11 @@ def g02_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
             .select("n_nodes", "n_edges", "n_triangles"))
 
 
-G02_SQL = f"""
-WITH os AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
+def _g02_edge_ctes(edges: str) -> str:
+    """The G02 graph in SQL: supplier pairs co-shipping an order, each
+    supplier's `_G02_K` heaviest partners, and the mutual top-k edges
+    (a < b) as CTE `edges` — the prefix of the G02 and G04 oracles."""
+    return f"""os AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
 pairs AS (
   SELECT x.l_suppkey AS s1, y.l_suppkey AS s2, COUNT(*) AS n
   FROM os x JOIN os y
@@ -207,12 +210,16 @@ top AS (
            row_number() OVER (PARTITION BY s1 ORDER BY n DESC, s2) AS rn
     FROM directed) WHERE rn <= {_G02_K}
 ),
-edges AS (
+{edges} AS (
   SELECT s1 AS a, s2 AS b
   FROM (SELECT s1, s2 FROM top
         INTERSECT SELECT s2 AS s1, s1 AS s2 FROM top)
   WHERE s1 < s2
-),
+)"""
+
+
+G02_SQL = f"""
+WITH {_g02_edge_ctes("edges")},
 tri AS (
   SELECT COUNT(*) AS n_triangles
   FROM edges e1
@@ -334,29 +341,7 @@ def g04_kcore_peel(spark: SparkSession, sf: str) -> DataFrame:
 
 def _g04_sql() -> str:
     parts = [f"""
-WITH os AS (SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem),
-pairs AS (
-  SELECT x.l_suppkey AS s1, y.l_suppkey AS s2, COUNT(*) AS n
-  FROM os x JOIN os y
-    ON x.l_orderkey = y.l_orderkey AND x.l_suppkey < y.l_suppkey
-  GROUP BY 1, 2
-),
-directed AS (
-  SELECT s1, s2, n FROM pairs
-  UNION ALL SELECT s2, s1, n FROM pairs
-),
-top AS (
-  SELECT s1, s2 FROM (
-    SELECT s1, s2,
-           row_number() OVER (PARTITION BY s1 ORDER BY n DESC, s2) AS rn
-    FROM directed) WHERE rn <= {_G02_K}
-),
-e0 AS (
-  SELECT s1 AS a, s2 AS b
-  FROM (SELECT s1, s2 FROM top
-        INTERSECT SELECT s2 AS s1, s1 AS s2 FROM top)
-  WHERE s1 < s2
-)"""]
+WITH {_g02_edge_ctes("e0")}"""]
     for r in range(1, _G04_ROUNDS + 1):
         parts.append(f""",
 deg{r} AS (

@@ -4631,6 +4631,22 @@ ORDER BY 1
 # ---------------------------------------------------------------- q95
 
 
+def _order_items(spark: SparkSession, sf: str) -> DataFrame:
+    """(l_orderkey, items): each order's lines as a sorted array of
+    (ln, qty) structs, the document body of q95, q96 and q99."""
+    li = t(spark, sf, "lineitem")
+    return (li.select(
+        "l_orderkey",
+        # explicit floor before the bigint cast — same truncate-vs-round
+        # cross-engine rationale as q94 (values positive: floor == trunc)
+        F.struct(
+            F.col("l_linenumber").cast("int").alias("ln"),
+            F.floor(F.col("l_quantity").cast("decimal(12,4)"))
+            .cast("bigint").alias("qty")).alias("it"))
+        .groupBy("l_orderkey")
+        .agg(F.sort_array(F.collect_list("it")).alias("items")))
+
+
 def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
     """The STORAGE half of the VARIANT story (q94 covers the expression
     half): semi-structured documents land in the lake AS a variant
@@ -4646,7 +4662,7 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
     to parquet, read them back, recover the per-priority rollup via
     variant_get, and pin it against the oracle's direct relational
     computation. Construction parity with q94's parse_json(to_json(..))
-    path is pinned separately in tests/test_round7.py.
+    path is pinned separately in tests/test_round8.py.
 
     Scale shape: the write is the workload (one items aggregation
     shuffle, then a parallel parquet write); reads after it are
@@ -4658,18 +4674,8 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
     import shutil
     import tempfile
 
-    li = t(spark, sf, "lineitem")
+    items = _order_items(spark, sf)
     orders = t(spark, sf, "orders")
-    items = (li.select(
-        "l_orderkey",
-        # explicit floor before the bigint cast — same truncate-vs-round
-        # cross-engine rationale as q94 (values positive: floor == trunc)
-        F.struct(
-            F.col("l_linenumber").cast("int").alias("ln"),
-            F.floor(F.col("l_quantity").cast("decimal(12,4)"))
-            .cast("bigint").alias("qty")).alias("it"))
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("it")).alias("items")))
     # Same coalesced-width finding as q96/q94: without the explicit
     # exchange the variant ENCODE and the parquet write both run at the
     # items-aggregate's AQE-coalesced width (one task at gate scale —
@@ -4753,16 +4759,8 @@ def q96_xml_battery(spark: SparkSession, sf: str) -> DataFrame:
     the measured argument for landing XML feeds INTO variant/parquet
     once (q95) rather than re-parsing text downstream.
     """
-    li = t(spark, sf, "lineitem")
+    items = _order_items(spark, sf)
     orders = t(spark, sf, "orders")
-    items = (li.select(
-        "l_orderkey",
-        F.struct(
-            F.col("l_linenumber").cast("int").alias("ln"),
-            F.floor(F.col("l_quantity").cast("decimal(12,4)"))
-            .cast("bigint").alias("qty")).alias("it"))
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("it")).alias("items")))
     # The XML build + double parse below is the workload (~40 µs/row of
     # expression CPU); orders broadcasts, so the whole battery runs at
     # the items-aggregate's AQE-coalesced width — measured ONE task at
@@ -4974,16 +4972,8 @@ def q99_variant_explode_lateral(spark: SparkSession, sf: str) -> DataFrame:
     Scale shape: identical to q94 (the per-order aggregation is the
     shuffle; variant_explode is a per-row generator like explode).
     """
-    li = t(spark, sf, "lineitem")
+    items = _order_items(spark, sf)
     orders = t(spark, sf, "orders")
-    items = (li.select(
-        "l_orderkey",
-        F.struct(
-            F.col("l_linenumber").cast("int").alias("ln"),
-            F.floor(F.col("l_quantity").cast("decimal(12,4)"))
-            .cast("bigint").alias("qty")).alias("it"))
-        .groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("it")).alias("items")))
     docs = (orders.join(items, orders.o_orderkey == items.l_orderkey)
             .select("o_orderpriority",
                     F.expr("to_variant_object(named_struct('items', items))")

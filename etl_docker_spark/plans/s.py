@@ -21,8 +21,9 @@ from pyspark.sql import functions as F
 from etl_docker_spark.plans._util import (_D64_DOMAIN, _D67_LGK, _DAY_US,
                                           _HLL_ALPHA_NUM, _HLL_M, _HLL_RHO_MAX,
                                           day_file_stream, dec, dsum,
-                                          finish_stream, memory_stream,
-                                          scoped_conf, stage_day_files,
+                                          finish_stream, md5_bucket_sql,
+                                          memory_stream, scoped_conf,
+                                          sink_name, stage_day_files,
                                           stream_state_partitions, t)
 
 
@@ -79,8 +80,7 @@ def s01_stream_tumbling(spark: SparkSession, sf: str) -> DataFrame:
         {"n_events": F.count("*"),
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["event_type"], watermark="1 minute")
-    name = f"s01_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s01", "complete", sf)
 
 
 S01_SQL = """
@@ -112,8 +112,7 @@ def s02_stream_sessions(spark: SparkSession, sf: str) -> DataFrame:
         {"n_events": F.count("*"),
          "total_value": F.sum(F.col("value").cast("decimal(12,4)")).cast("double")},
         keys=["user_id"], watermark="1 minute")
-    name = f"s02_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s02", "complete", sf)
 
 
 S02_SQL = """
@@ -156,8 +155,7 @@ def s03_stateful_running_totals(spark: SparkSession, sf: str) -> DataFrame:
 
     stream = _events_stream(spark, sf)
     out = running_user_totals(stream.select("user_id", "ts", "value"))
-    name = f"s03_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(out, name, "update", sf)
+    sink = memory_stream(out, "s03", "update", sf)
     # update-mode sink: keep the final state row per user
     w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (sink
@@ -181,8 +179,7 @@ def s04_stream_dedup(spark: SparkSession, sf: str) -> DataFrame:
     stream = _events_stream(spark, sf).withColumn(
         "day", F.date_trunc("day", F.col("ts")))
     out = streaming_dedup(stream, ["user_id", "event_type", "day"])
-    name = f"s04_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(out, name, "append", sf)
+    return memory_stream(out, "s04", "append", sf)
 
 
 S04_SQL = """
@@ -195,15 +192,11 @@ FROM events
 # ---------------------------------------------------------------- s05
 
 
-def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Stream-stream interval join THROUGH Structured Streaming: each view
-    event joined to the same user's purchases within the following 6 h.
-
-    Both sides are watermarked streams; the join state is range-bounded by
-    the event-time condition, so state eviction is automatic at the
-    watermark — the scalable formulation of "correlate two event streams".
-    Oracle = the batch join; equality checks exactly-once emission.
-    """
+def _view_buy_join(spark: SparkSession, sf: str, how: str) -> DataFrame:
+    """The stream-stream interval join of s05 (inner), s17 (left outer)
+    and s20 (full outer): each watermarked view event joined (`how`) to
+    the same user's watermarked purchases within the following 6 h, with
+    the purchase's lag as `delta_us`."""
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -215,16 +208,29 @@ def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("event_id").alias("purchase_id"),
                     F.col("ts").alias("buy_ts"))
             .withWatermark("buy_ts", "1 minute"))
-    joined = (views.join(
+    return (views.join(
         buys,
         F.expr("""v_user = b_user
                   AND buy_ts >= view_ts
-                  AND buy_ts <= view_ts + interval 6 hours"""))
-        .select(F.col("v_user").alias("user_id"), "view_id", "purchase_id",
-                (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
-                .alias("delta_us")))
-    name = f"s05_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append", sf)
+                  AND buy_ts <= view_ts + interval 6 hours"""),
+        how)
+        .withColumn("delta_us",
+                    F.unix_micros("buy_ts") - F.unix_micros("view_ts")))
+
+
+def s05_stream_stream_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Stream-stream interval join THROUGH Structured Streaming: each view
+    event joined to the same user's purchases within the following 6 h.
+
+    Both sides are watermarked streams; the join state is range-bounded by
+    the event-time condition, so state eviction is automatic at the
+    watermark — the scalable formulation of "correlate two event streams".
+    Oracle = the batch join; equality checks exactly-once emission.
+    """
+    joined = _view_buy_join(spark, sf, "inner").select(
+        F.col("v_user").alias("user_id"), "view_id", "purchase_id",
+        "delta_us")
+    return memory_stream(joined, "s05", "append", sf)
 
 
 S05_SQL = """
@@ -305,8 +311,7 @@ def s07_stream_sliding(spark: SparkSession, sf: str) -> DataFrame:
          "total_value": F.sum(F.col("value").cast("decimal(12,4)"))
          .cast("double")},
         keys=["event_type"], watermark="1 minute", slide="12 hours")
-    name = f"s07_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s07", "complete", sf)
 
 
 _HALF_DAY_US = 12 * 3600 * 1_000_000
@@ -352,8 +357,7 @@ def s08_stream_static_join(spark: SparkSession, sf: str) -> DataFrame:
         {"n_events": F.count("*"),
          "total_value": F.sum(dec("value")).cast("double")},
         keys=["segment"], watermark="1 minute")
-    name = f"s08_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s08", "complete", sf)
 
 
 S08_SQL = f"""
@@ -400,8 +404,7 @@ def s09_stream_hll_users(spark: SparkSession, sf: str) -> DataFrame:
     regs = (keyed.select("event_type", "bucket", rho.alias("rho"))
             .groupBy("event_type", "bucket")
             .agg(F.max("rho").alias("m_rho")))
-    name = f"s09_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(regs, name, "complete", sf)
+    sink = memory_stream(regs, "s09", "complete", sf)
     # empty registers contribute 2^RHO_MAX each, so the fill is arithmetic
     # (M - observed) — no bucket-completion join needed
     z = (sink.groupBy("event_type")
@@ -469,8 +472,7 @@ def s10_stream_topk(spark: SparkSession, sf: str) -> DataFrame:
     agg = tumbling_aggregate(
         stream, "1 day", {"n_events": F.count("*")},
         keys=["event_type"], watermark="1 minute")
-    name = f"s10_sink_{abs(hash(sf)) % 10 ** 8}"
-    sink = memory_stream(agg, name, "complete", sf)
+    sink = memory_stream(agg, "s10", "complete", sf)
     w = Window.partitionBy("window_start").orderBy(F.desc("n_events"),
                                                    F.asc("event_type"))
     return (sink.withColumn("rank", F.row_number().over(w).cast("long"))
@@ -600,8 +602,7 @@ def s12_stream_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                    .groupBy("grp")
                    .agg(F.count("*").alias("n_lines"),
                         F.sum("micros").alias("sum_micros")))
-        name = f"s12_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(grouped, name, "complete", sf).localCheckpoint()
+        return memory_stream(grouped, "s12", "complete", sf).localCheckpoint()
 
 
 S12_SQL = """
@@ -682,8 +683,7 @@ def s13_stream_late_data_drop(spark: SparkSession, sf: str) -> DataFrame:
             stream, "1 day",
             {"n_events": F.count("*"), "total_value": dsum("value")},
             keys=["event_type"], watermark="0 seconds")
-        name = f"s13_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(agg, name, "append", sf)
+        return (memory_stream(agg, "s13", "append", sf)
                 .filter(F.col("event_type") != "_bridge")
                 .select(F.col("window_start").alias("day"), "event_type",
                         "n_events", "total_value")
@@ -749,7 +749,6 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
         stream = day_file_stream(spark, arrivals)
         out = keyed_ttl_totals(
             stream, ttl_ms=_S14_TTL_DAYS * 86_400_000)
-        name = f"s14_sink_{abs(hash(sf)) % 10 ** 8}"
         # Python stateful operator: the update fn runs once per key per
         # batch, so state partitions must scale with the KEY population —
         # which outnumbers cores at every gate size — not with source
@@ -758,7 +757,7 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
         # one per core is the measured sweet spot (SCALE.md: past ~2x
         # cores, task scheduling + state-store commits win back the
         # losses).
-        sink = memory_stream(out, name, "update", sf, session_width=True)
+        sink = memory_stream(out, "s14", "update", sf, session_width=True)
         w = Window.partitionBy("state_key").orderBy(F.desc("last_ts"))
         return (sink
                 .withColumn("__rn", F.row_number().over(w))
@@ -851,9 +850,8 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
         stream = day_file_stream(spark, arrivals)
         out = session_close_stream(
             stream, gap_ms=_S15_GAP_DAYS * 86_400_000)
-        name = f"s15_sink_{abs(hash(sf)) % 10 ** 8}"
         # per-key Python stateful operator: session width, as s14
-        return (memory_stream(out, name, "update", sf, session_width=True)
+        return (memory_stream(out, "s15", "update", sf, session_width=True)
                 .select("state_key", "session_start", "session_end",
                         "n_events", "total_cents")
                 .localCheckpoint())
@@ -956,8 +954,7 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
         out = (stream
                .withWatermark("day", f"{_S16_DELAY_DAYS} days")
                .dropDuplicatesWithinWatermark(["state_key"]))
-        name = f"s16_sink_{abs(hash(sf)) % 10 ** 8}"
-        return (memory_stream(out, name, "append", sf)
+        return (memory_stream(out, "s16", "append", sf)
                 .select("state_key", "day", "n_events", "total_cents")
                 .localCheckpoint())
 
@@ -1022,32 +1019,17 @@ def s17_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     Views whose window the final no-data batch leaves open simply never
     appear — the restart-from-checkpoint analog of s15's open sessions.
     """
-    ev = _events_stream(spark, sf)
-    views = (ev.filter(F.col("event_type") == "view")
-             .select(F.col("user_id").alias("v_user"),
-                     F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "1 minute"))
-    buys = (ev.filter(F.col("event_type") == "purchase")
-            .select(F.col("user_id").alias("b_user"),
-                    F.col("event_id").alias("purchase_id"),
-                    F.col("ts").alias("buy_ts"))
-            .withWatermark("buy_ts", "1 minute"))
-    joined = (views.join(
-        buys,
-        F.expr("""v_user = b_user
-                  AND buy_ts >= view_ts
-                  AND buy_ts <= view_ts + interval 6 hours"""),
-        "leftOuter")
-        .select(F.col("v_user").alias("user_id"), "view_id", "purchase_id",
-                (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
-                .alias("delta_us")))
-    name = f"s17_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append", sf).localCheckpoint()
+    joined = _view_buy_join(spark, sf, "leftOuter").select(
+        F.col("v_user").alias("user_id"), "view_id", "purchase_id",
+        "delta_us")
+    return memory_stream(joined, "s17", "append", sf).localCheckpoint()
 
 
-S17_SQL = """
-WITH v AS (
+# The batch form of `_view_buy_join` shared by the S17 and S20 oracles:
+# the view (`v`) and purchase (`b`) sides, the final watermark (`wm`,
+# the MIN over both sides of max event time - 1 min), the matched pairs,
+# and (`_UNMATCHED_VIEWS`) the views the watermark has closed unmatched.
+_VIEW_BUY_CTES = """v AS (
   SELECT user_id, event_id AS view_id, ts AS vts
   FROM events WHERE event_type = 'view'
 ),
@@ -1064,9 +1046,8 @@ matched AS (
          epoch_us(b.bts) - epoch_us(v.vts) AS delta_us
   FROM v JOIN b ON v.user_id = b.bu
    AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR
-),
-unmatched AS (
-  SELECT v.user_id, v.view_id,
+)"""
+_UNMATCHED_VIEWS = """  SELECT v.user_id, v.view_id,
          CAST(NULL AS BIGINT) AS purchase_id,
          CAST(NULL AS BIGINT) AS delta_us
   FROM v, wm
@@ -1074,7 +1055,12 @@ unmatched AS (
     AND NOT EXISTS (
       SELECT 1 FROM b
       WHERE b.bu = v.user_id
-        AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR)
+        AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR)"""
+
+S17_SQL = f"""
+WITH {_VIEW_BUY_CTES},
+unmatched AS (
+{_UNMATCHED_VIEWS}
 )
 SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 """
@@ -1217,8 +1203,7 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
                       F.sum("cents").cast("long").alias("total_cents"))
                  .select(F.col("dw.start").alias("day"), "event_type",
                          "n_hours", "n_events", "total_cents"))
-        name = f"s19_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(daily, name, "append", sf).localCheckpoint()
+        return memory_stream(daily, "s19", "append", sf).localCheckpoint()
 
 
 S19_SQL = f"""
@@ -1270,60 +1255,16 @@ def s20_stream_full_outer_join(spark: SparkSession, sf: str) -> DataFrame:
     Rows the final no-data batch leaves open never appear — at 100 TB
     the watermark is the only bound on both sides' join state.
     """
-    ev = _events_stream(spark, sf)
-    views = (ev.filter(F.col("event_type") == "view")
-             .select(F.col("user_id").alias("v_user"),
-                     F.col("event_id").alias("view_id"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "1 minute"))
-    buys = (ev.filter(F.col("event_type") == "purchase")
-            .select(F.col("user_id").alias("b_user"),
-                    F.col("event_id").alias("purchase_id"),
-                    F.col("ts").alias("buy_ts"))
-            .withWatermark("buy_ts", "1 minute"))
-    joined = (views.join(
-        buys,
-        F.expr("""v_user = b_user
-                  AND buy_ts >= view_ts
-                  AND buy_ts <= view_ts + interval 6 hours"""),
-        "fullOuter")
-        .select(F.coalesce("v_user", "b_user").alias("user_id"),
-                "view_id", "purchase_id",
-                (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
-                .alias("delta_us")))
-    name = f"s20_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(joined, name, "append", sf).localCheckpoint()
+    joined = _view_buy_join(spark, sf, "fullOuter").select(
+        F.coalesce("v_user", "b_user").alias("user_id"),
+        "view_id", "purchase_id", "delta_us")
+    return memory_stream(joined, "s20", "append", sf).localCheckpoint()
 
 
-S20_SQL = """
-WITH v AS (
-  SELECT user_id, event_id AS view_id, ts AS vts
-  FROM events WHERE event_type = 'view'
-),
-b AS (
-  SELECT user_id AS bu, event_id AS purchase_id, ts AS bts
-  FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT MAX(vts) FROM v), (SELECT MAX(bts) FROM b))
-         - INTERVAL 1 MINUTE AS w
-),
-matched AS (
-  SELECT v.user_id, v.view_id, b.purchase_id,
-         epoch_us(b.bts) - epoch_us(v.vts) AS delta_us
-  FROM v JOIN b ON v.user_id = b.bu
-   AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR
-),
+S20_SQL = f"""
+WITH {_VIEW_BUY_CTES},
 unmatched_v AS (
-  SELECT v.user_id, v.view_id,
-         CAST(NULL AS BIGINT) AS purchase_id,
-         CAST(NULL AS BIGINT) AS delta_us
-  FROM v, wm
-  WHERE v.vts + INTERVAL 6 HOUR < wm.w
-    AND NOT EXISTS (
-      SELECT 1 FROM b
-      WHERE b.bu = v.user_id
-        AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR)
+{_UNMATCHED_VIEWS}
 ),
 unmatched_b AS (
   SELECT b.bu AS user_id, CAST(NULL AS BIGINT) AS view_id, b.purchase_id,
@@ -1375,7 +1316,7 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
-        name = f"s21_sink_{abs(hash(sf)) % 10 ** 8}"
+        name = sink_name("s21", sf)
         # track_rows: this query GATES numRowsTotal — keep the exact
         # state-row metric despite its per-commit counting cost
         with stream_state_partitions(spark, sf, track_rows=True):
@@ -1524,8 +1465,7 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                   F.sum("purchase_id").cast("long").alias("pid_checksum"))
              .select(F.col("w.start").alias("day"), "n_conversions",
                      "pid_checksum"))
-    name = f"s23_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(daily, name, "append", sf).localCheckpoint()
+    return memory_stream(daily, "s23", "append", sf).localCheckpoint()
 
 
 S23_SQL = """
@@ -1625,8 +1565,7 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                         "purchase_id",
                         (F.unix_micros("buy_ts") - F.unix_micros("view_ts"))
                         .alias("delta_us")))
-            name = f"s24_sink_{abs(hash(sf)) % 10 ** 8}"
-            return memory_stream(joined, name, "append", sf).localCheckpoint()
+            return memory_stream(joined, "s24", "append", sf).localCheckpoint()
 
 
 S24_SQL = f"""
@@ -1692,8 +1631,7 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
                       F.sum("cents").cast("long").alias("total_cents"))
                  .select(F.col("w.start").alias("day"), "event_type",
                          "n_events", "total_cents"))
-        name = f"s25_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(daily, name, "append", sf).localCheckpoint()
+        return memory_stream(daily, "s25", "append", sf).localCheckpoint()
 
 
 S25_SQL = f"""
@@ -2150,8 +2088,7 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
             .agg(F.count("*").cast("long").alias("n_events"),
                  F.sum("metric").cast("long").alias("sum_metric"),
                  F.sum("flag").cast("long").alias("n_fatal")))
-        name = f"s30_sink_{abs(hash(sf)) % 10 ** 8}"
-        return memory_stream(grouped, name, "complete", sf).localCheckpoint()
+        return memory_stream(grouped, "s30", "complete", sf).localCheckpoint()
 
 
 S30_SQL = """
@@ -2218,8 +2155,7 @@ def s31_stream_variant_landing(spark: SparkSession, sf: str) -> DataFrame:
            .select(F.col("w.start").alias("window_start"),
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "sum_k", "n_missing"))
-    name = f"s31_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s31", "complete", sf)
 
 
 S31_SQL = """
@@ -2260,9 +2196,7 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     HLL error — the plan does not change, only the exactness argument.
     """
     stream = _events_stream(spark, sf)
-    bucket = F.expr(
-        f"pmod(CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8), "
-        f"16, 10) AS BIGINT), {_D64_DOMAIN})")
+    bucket = F.expr(md5_bucket_sql("CAST(user_id AS STRING)", _D64_DOMAIN))
     agg = (stream.select("ts", "event_type", bucket.alias("b"))
            .withWatermark("ts", "1 minute")
            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
@@ -2272,8 +2206,7 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
            .select(F.col("w.start").alias("window_start"),
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "n_user_buckets"))
-    name = f"s32_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s32", "complete", sf)
 
 
 S32_SQL = f"""
@@ -2337,8 +2270,7 @@ def s33_stream_json_quarantine(spark: SparkSession, sf: str) -> DataFrame:
            .select(F.col("w.start").alias("window_start"),
                    F.col("w.end").alias("window_end"),
                    "verdict", "n_rows", "sum_k"))
-    name = f"s33_sink_{abs(hash(sf)) % 10 ** 8}"
-    return memory_stream(agg, name, "complete", sf)
+    return memory_stream(agg, "s33", "complete", sf)
 
 
 S33_SQL = """

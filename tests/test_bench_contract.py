@@ -223,3 +223,13 @@ def test_summary_carries_warmup_carveout_flag():
     clean = bench.summary_payload(1.0, 0.1, 244, 2, "cold")
     assert "warmup_carveout" not in clean
     assert "start_anchor_spread" not in clean
+
+
+def test_driver_heap_default_fits_the_host(monkeypatch):
+    """Unpinned, the driver heap is half the host's memory capped at
+    24g: 7g on a 15 GiB host (a flat 24g default would exceed it), 24g
+    on a 128 GiB one."""
+    monkeypatch.setattr(bench, "mem_total_bytes", lambda: 15 * 2 ** 30)
+    assert bench.default_driver_mem() == "7g"
+    monkeypatch.setattr(bench, "mem_total_bytes", lambda: 128 * 2 ** 30)
+    assert bench.default_driver_mem() == "24g"

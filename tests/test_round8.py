@@ -1,5 +1,5 @@
-"""Round-8: VARIANT persistence/landing + the calibrated/held-out
-consumers of the trained classifier."""
+"""Round-8: VARIANT persistence/landing, XML, collation, listagg and
+theta-sketch primitives."""
 
 from __future__ import annotations
 
@@ -89,38 +89,6 @@ def test_s31_window_totals_match_batch(spark):
         assert miss == n  # the absent path must be NULL on EVERY row
 
 
-def test_d62_knife_is_calibrated_not_clamped(spark):
-    """Every language's chosen cell must sit strictly inside the grid
-    (not the degenerate cell-0 'keep everything' answer, not the top
-    clamp), the kept token fraction must meet the 60% target, and the
-    knife must actually cut (docs_kept strictly between 0 and all)."""
-    from etl_docker_spark.plans.d import (_D61_CELLS, _D62_KEEP_TARGET_PCT,
-                                          d62_lang_calibrated_thresholds)
-
-    rows = d62_lang_calibrated_thresholds(spark, SF_SMOKE).collect()
-    assert len(rows) == 5  # one knife per language
-    for r in rows:
-        assert 0 < r.chosen_cell < _D61_CELLS - 1
-        assert r.tokens_kept * 100 >= _D62_KEEP_TARGET_PCT * r.total_tokens
-        assert 0 < r.docs_kept < r.total_docs
-        assert r.kept_ppm == r.tokens_kept * 1_000_000 // r.total_tokens
-
-
-def test_d63_split_weights_differ_from_full(spark):
-    """The 80%-split model must be a genuinely different artifact from
-    the full-corpus model (same buckets, different counts -> different
-    weights somewhere), trained on train rows only."""
-    from etl_docker_spark.plans.d import d60_weights_frame, d63_weights_frame
-
-    full = {r.bucket: r.w_ppm
-            for r in d60_weights_frame(spark, SF_SMOKE).collect()}
-    split = {r.bucket: r.w_ppm
-             for r in d63_weights_frame(spark, SF_SMOKE).collect()}
-    assert split and full
-    common = set(full) & set(split)
-    assert any(full[b] != split[b] for b in common)
-
-
 def test_q96_both_xml_grammars_agree(spark):
     """The from_xml schema read and the xpath path language must
     recover identical numbers from the same documents — pinned at the
@@ -168,27 +136,6 @@ def test_theta_exact_mode_set_algebra(spark):
     assert (row.u, row.i, row.d) == (180, 50, 50)
 
 
-def test_d64_sketch_domain_stays_exact(spark):
-    """The gate's exactness precondition: every per-source distinct
-    bucket count must stay below the sketch's nominal entries (the
-    bounded-domain projection guarantees it at any corpus scale), and
-    the pairwise identities union = common + only_a + only_b and
-    jaccard = common/union must hold on the emitted rows."""
-    from pyspark.sql import functions as F
-
-    from etl_docker_spark.plans._util import _D64_DOMAIN, t
-    from etl_docker_spark.plans.d import _D64_LGK, d64_theta_source_overlap
-
-    assert _D64_DOMAIN < 2 ** _D64_LGK  # exact regime by construction
-    rows = d64_theta_source_overlap(spark, SF_SMOKE).collect()
-    n_src = (t(spark, SF_SMOKE, "documents")
-             .agg(F.count_distinct("source")).first()[0])
-    assert len(rows) == n_src * (n_src - 1) // 2
-    for r in rows:
-        assert 0 < r.n_common <= r.n_union <= _D64_DOMAIN
-        assert r.jaccard_ppm == r.n_common * 1_000_000 // r.n_union
-
-
 def test_collation_primitives(spark):
     """Round-8 probe finds staged for round 9 (q97): pin
     the collation behavior q97 depends on — UTF8_LCASE merges case
@@ -232,25 +179,3 @@ def test_variant_explode_lateral(spark):
              LATERAL variant_explode(t.vv) e ORDER BY e.key
     """).collect()
     assert [r.key for r in keys] == ["a", "b"]
-
-
-def test_d63_generalization_gap_is_visible(spark):
-    """Train-side keep docs must be predicted keep at a higher rate
-    than holdout keep docs (memorization > generalization), and the
-    holdout half must be non-degenerate: both keep_pred branches carry
-    rows."""
-    from etl_docker_spark.plans.d import d63_holdout_generalization
-
-    rows = d63_holdout_generalization(spark, SF_SMOKE).collect()
-    assert {r.split for r in rows} == {"train", "holdout"}
-
-    def keep_rate(split):
-        n = sum(r.n_docs for r in rows
-                if r.split == split and r.verdict == "keep")
-        k = sum(r.n_docs for r in rows
-                if r.split == split and r.verdict == "keep" and r.keep_pred)
-        return k / n
-
-    assert keep_rate("train") >= keep_rate("holdout")
-    holdout_preds = {r.keep_pred for r in rows if r.split == "holdout"}
-    assert holdout_preds == {True, False}
