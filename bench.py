@@ -201,24 +201,27 @@ def _warm_stateful_worker(spark, sf_dir: str) -> None:
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import stream_state_partitions
-    from etl_docker_spark.streaming.stateful import running_user_totals
+    from etl_docker_spark.streaming.stateful import (keyed_ttl_totals,
+                                                     running_user_totals)
     wdir = tempfile.mkdtemp(prefix="bench-pywarm-")
     try:
         src = os.path.join(wdir, "src")
         (spark.range(256)
          .select((F.col("id") % 16).alias("user_id"),
+                 (F.col("id") % 16).cast("string").alias("state_key"),
                  F.timestamp_micros(F.col("id") * 1_000_000).alias("ts"),
-                 (F.col("id") * 1.0).alias("value"))
+                 (F.col("id") * 1.0).alias("value"),
+                 F.col("id").alias("cents"))
          .write.parquet(src))
         probe = spark.read.parquet(src)
         with stream_state_partitions(spark, sf_dir, session_width=True):
-            # both stateful code paths: plain NoTimeout update AND the
-            # watermark + EventTimeTimeout TTL machinery (s14/s15's exact
-            # shape — timeout registration and eviction JIT separately)
-            for kwargs in ({}, {"ttl_ms": 60_000,
-                                "watermark_delay": "0 seconds"}):
+            # both stateful code paths: plain NoTimeout update AND s14's
+            # watermark + EventTimeTimeout TTL operator (timeout
+            # registration and eviction JIT separately)
+            for op in (running_user_totals,
+                       lambda stream: keyed_ttl_totals(stream, 60_000)):
                 stream = spark.readStream.schema(probe.schema).parquet(src)
-                q = (running_user_totals(stream, **kwargs)
+                q = (op(stream)
                      .writeStream.outputMode("update").format("noop")
                      .trigger(availableNow=True).start())
                 q.awaitTermination(120)

@@ -20,6 +20,8 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_docker_spark.session import scoped_conf
+
 
 def _release_local_checkpoint(df: DataFrame) -> None:
     """Unpersist the RDD blocks behind a localCheckpoint()ed frame whose
@@ -527,19 +529,11 @@ def _jaccard_candidates(df: DataFrame, id_col: str, text_col: str,
     # conf only around this bounded materialization keeps the session's
     # scale-adaptive width (shuffle.partitions: cores locally, the
     # deliberately-high cluster number) without an extra exchange.
-    # (optimization r12; inline set/restore because importing
-    # plans._util.scoped_conf here would cycle plans -> llm -> plans)
-    _spark = per_doc.sparkSession
-    _coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    _before = _spark.conf.get(_coalesce_key, None)
-    _spark.conf.set(_coalesce_key, "false")
-    try:
+    # (optimization r12)
+    with scoped_conf(per_doc.sparkSession,
+                     "spark.sql.adaptive.coalescePartitions.enabled",
+                     "false"):
         per_doc = per_doc.localCheckpoint()
-    finally:
-        if _before is None:
-            _spark.conf.unset(_coalesce_key)
-        else:
-            _spark.conf.set(_coalesce_key, _before)
     _release_local_checkpoint(dset)
     if suffix_buckets == "auto":
         # Resolve K from the corpus itself (the d57 design rule). One

@@ -13,6 +13,7 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import os
+import tempfile
 from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from etl_docker_spark.catalog import load_table
+from etl_docker_spark.session import scoped_conf
 
 # Precision discipline: DECIMAL(12,4) money × DECIMAL(6,4) rate × DECIMAL(6,4)
 # rate = scale-12 result under 38 digits in BOTH Spark ((26,12)) and DuckDB
@@ -207,21 +209,15 @@ def day_file_stream(spark: SparkSession, arrivals: str) -> DataFrame:
 
 
 @contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str):
-    """Set-then-restore a runtime conf around a bounded EXECUTION (an
-    action, a stream run) — the default tool for query-local conf. Not
-    usable around a returned LAZY frame: the conf would be restored
-    before the caller's action runs (the q87 recursion-limit lesson);
-    for that case use `session_conf` and justify at the call site."""
-    before = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if before is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, before)
+def staged_day_stream(df: DataFrame, query_id: str, repeats: int = 1):
+    """Stage `df` one file per `dcol` day (`stage_day_files`) in a temp
+    work dir that lives for the block, and yield `(stream, work)`: the
+    `day_file_stream` over those files and the work dir, where the
+    caller keeps its checkpoint and sinks."""
+    with tempfile.TemporaryDirectory(
+            prefix=f"{query_id}_", ignore_cleanup_errors=True) as work:
+        arrivals = stage_day_files(df, work, repeats=repeats)
+        yield day_file_stream(df.sparkSession, arrivals), work
 
 
 def session_conf(spark: SparkSession, key: str, value: str) -> None:

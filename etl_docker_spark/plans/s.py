@@ -15,16 +15,17 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_docker_spark.plans._util import (_D64_DOMAIN, _D67_LGK, _DAY_US,
                                           _HLL_ALPHA_NUM, _HLL_M, _HLL_RHO_MAX,
                                           day_file_stream, dec, dsum,
                                           finish_stream, md5_bucket_sql,
-                                          memory_stream, scoped_conf,
-                                          sink_name, stage_day_files,
+                                          memory_stream, sink_name,
+                                          stage_day_files, staged_day_stream,
                                           stream_state_partitions, t)
+from etl_docker_spark.session import scoped_conf
 
 
 # ---------------------------------------------------------------- s01 streaming
@@ -701,10 +702,71 @@ GROUP BY 1, 2
 """
 
 
-# ---------------------------------------------------------------- s14
+# ---------------------------------------------------------------- ten-day feed
 
-_S14_CUTOFF = "2024-01-11"   # first 10 event days -> 10 micro-batches
-_S14_TTL_DAYS = 3
+# The first ten event days. Staged one file per day, they replay as ten
+# micro-batches: the feed whose timing s14-s29 pin.
+_TEN_DAY_CUTOFF = "2024-01-11"
+_S27_CUTOFF = _TEN_DAY_CUTOFF  # imported by tests/test_plans_s.py
+
+
+def _cents() -> Column:
+    """`value` in integer cents, whose sums are exact in both engines."""
+    return F.round(F.col("value") * 100, 0).cast("long").alias("cents")
+
+
+def _ten_day_feed(spark: SparkSession, sf: str, *cols) -> DataFrame:
+    """The events before `_TEN_DAY_CUTOFF` as `cols`, plus their day
+    (`dcol`) for `stage_day_files`."""
+    return (t(spark, sf, "events")
+            .filter(F.col("ts") < F.lit(_TEN_DAY_CUTOFF).cast("timestamp"))
+            .select(*cols,
+                    F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
+                    .alias("dcol")))
+
+
+# ---------------------------------------------------------------- s14/s15
+
+# A key idle this many days loses its state (s14's TTL) or closes its
+# session (s15's gap).
+_IDLE_DAYS = 3
+
+
+def _key_day_feed(spark: SparkSession, sf: str) -> DataFrame:
+    """The s14/s15 feed: each event keyed `user_id:event_type`, at its
+    day's midnight, in integer cents."""
+    return _ten_day_feed(
+        spark, sf,
+        F.concat_ws(":", F.col("user_id").cast("string"),
+                    "event_type").alias("state_key"),
+        F.date_trunc("day", F.col("ts")).alias("ts"), _cents())
+
+
+# The batch form of `_key_day_feed` (`ev`, events at their day `d`) and
+# each key's activity segments (`grp`): an activity day at least
+# `_IDLE_DAYS` + 3 days after the key's previous one starts a new
+# segment `g` (s14's restart rule, s15's session split).
+_KEY_SEGMENT_CTES = f"""ev AS (
+  SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS state_key,
+         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
+         CAST(round(value * 100, 0) AS BIGINT) AS cents
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
+),
+dd AS (SELECT DISTINCT state_key, d FROM ev),
+lg AS (
+  SELECT state_key, d,
+         CASE WHEN lag(d) OVER w IS NULL THEN 0
+              WHEN d >= lag(d) OVER w
+                        + INTERVAL {_IDLE_DAYS + 3} DAY THEN 1
+              ELSE 0 END AS restart
+  FROM dd WINDOW w AS (PARTITION BY state_key ORDER BY d)
+),
+grp AS (
+  SELECT state_key, d,
+         SUM(restart) OVER (PARTITION BY state_key ORDER BY d
+                            ROWS UNBOUNDED PRECEDING) AS g
+  FROM lg
+)"""
 
 
 def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
@@ -733,22 +795,8 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
     """
     from etl_docker_spark.streaming.stateful import keyed_ttl_totals
 
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S14_CUTOFF).cast("timestamp"))
-          .select(
-              F.concat_ws(":", F.col("user_id").cast("string"),
-                          "event_type").alias("state_key"),
-              F.date_trunc("day", F.col("ts")).alias("ts"),
-              F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-              F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
-              .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s14_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
-        out = keyed_ttl_totals(
-            stream, ttl_ms=_S14_TTL_DAYS * 86_400_000)
+    with staged_day_stream(_key_day_feed(spark, sf), "s14") as (stream, _):
+        out = keyed_ttl_totals(stream, ttl_ms=_IDLE_DAYS * 86_400_000)
         # Python stateful operator: the update fn runs once per key per
         # batch, so state partitions must scale with the KEY population —
         # which outnumbers cores at every gate size — not with source
@@ -767,27 +815,7 @@ def s14_stream_ttl_eviction(spark: SparkSession, sf: str) -> DataFrame:
 
 
 S14_SQL = f"""
-WITH ev AS (
-  SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS state_key,
-         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events WHERE ts < TIMESTAMP '{_S14_CUTOFF} 00:00:00'
-),
-dd AS (SELECT DISTINCT state_key, d FROM ev),
-lg AS (
-  SELECT state_key, d,
-         CASE WHEN lag(d) OVER w IS NULL THEN 0
-              WHEN d >= lag(d) OVER w
-                        + INTERVAL {_S14_TTL_DAYS + 3} DAY THEN 1
-              ELSE 0 END AS restart
-  FROM dd WINDOW w AS (PARTITION BY state_key ORDER BY d)
-),
-grp AS (
-  SELECT state_key, d,
-         SUM(restart) OVER (PARTITION BY state_key ORDER BY d
-                            ROWS UNBOUNDED PRECEDING) AS g
-  FROM lg
-),
+WITH {_KEY_SEGMENT_CTES},
 lastg AS (SELECT state_key, MAX(g) AS g FROM grp GROUP BY state_key),
 seg AS (SELECT grp.state_key, grp.d FROM grp JOIN lastg USING (state_key, g))
 SELECT e.state_key,
@@ -800,9 +828,6 @@ GROUP BY e.state_key
 
 
 # ---------------------------------------------------------------- s15
-
-_S15_CUTOFF = "2024-01-11"  # same 10-day / 10-batch feed as s14
-_S15_GAP_DAYS = 3
 
 
 def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
@@ -831,25 +856,22 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
     The oracle replays exactly that: sessionize activity days by the
     split rule, keep non-last sessions plus last sessions ending by
     day 6, aggregate events per session.
+
+    The built-in `session_window` (append mode, 0 s watermark, entirely
+    in the JVM) cannot replace this operator: it splits and closes with
+    one gap, where this rule splits at a 6-day gap (`_IDLE_DAYS` + 3)
+    and closes once the end-of-stream watermark passes session_end + 3
+    days. Measured on this feed, as (sessions equal to the oracle's,
+    oracle sessions, session_window sessions): a 6-day gap gives
+    (6, 19, 6) at sf0.001, (86, 204, 86) at sf0.01 and (756, 1918, 756)
+    at sf0.1, since every last session ending on day 5 or 6 stays open;
+    a 4-day gap gives (18, 19, 27), (198, 204, 294) and
+    (1896, 1918, 2709), since it splits sessions at 4- and 5-day gaps.
     """
     from etl_docker_spark.streaming.stateful import session_close_stream
 
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S15_CUTOFF).cast("timestamp"))
-          .select(
-              F.concat_ws(":", F.col("user_id").cast("string"),
-                          "event_type").alias("state_key"),
-              F.date_trunc("day", F.col("ts")).alias("ts"),
-              F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-              F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd")
-              .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s15_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
-        out = session_close_stream(
-            stream, gap_ms=_S15_GAP_DAYS * 86_400_000)
+    with staged_day_stream(_key_day_feed(spark, sf), "s15") as (stream, _):
+        out = session_close_stream(stream, gap_ms=_IDLE_DAYS * 86_400_000)
         # per-key Python stateful operator: session width, as s14
         return (memory_stream(out, "s15", "update", sf, session_width=True)
                 .select("state_key", "session_start", "session_end",
@@ -858,27 +880,7 @@ def s15_stream_session_close(spark: SparkSession, sf: str) -> DataFrame:
 
 
 S15_SQL = f"""
-WITH ev AS (
-  SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS state_key,
-         CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
-         CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events WHERE ts < TIMESTAMP '{_S15_CUTOFF} 00:00:00'
-),
-dd AS (SELECT DISTINCT state_key, d FROM ev),
-lg AS (
-  SELECT state_key, d,
-         CASE WHEN lag(d) OVER w IS NULL THEN 0
-              WHEN d >= lag(d) OVER w
-                        + INTERVAL {_S15_GAP_DAYS + 3} DAY THEN 1
-              ELSE 0 END AS restart
-  FROM dd WINDOW w AS (PARTITION BY state_key ORDER BY d)
-),
-grp AS (
-  SELECT state_key, d,
-         SUM(restart) OVER (PARTITION BY state_key ORDER BY d
-                            ROWS UNBOUNDED PRECEDING) AS g
-  FROM lg
-),
+WITH {_KEY_SEGMENT_CTES},
 lastd AS (SELECT MAX(d) AS last_day FROM ev),
 sessions AS (
   SELECT state_key, g, MIN(d) AS session_start, MAX(d) AS session_end
@@ -889,7 +891,7 @@ closed AS (
   FROM sessions s, lastd
   WHERE s.g < (SELECT MAX(g) FROM sessions s2
                WHERE s2.state_key = s.state_key)
-     OR lastd.last_day > s.session_end + INTERVAL {_S15_GAP_DAYS} DAY
+     OR lastd.last_day > s.session_end + INTERVAL {_IDLE_DAYS} DAY
 )
 SELECT c.state_key, c.session_start, c.session_end,
        COUNT(*) AS n_events, CAST(SUM(e.cents) AS BIGINT) AS total_cents
@@ -902,7 +904,6 @@ GROUP BY c.state_key, c.session_start, c.session_end
 
 # ---------------------------------------------------------------- s16
 
-_S16_CUTOFF = "2024-01-11"  # same 10-day / 10-batch feed as s14/s15
 _S16_DELAY_DAYS = 2
 
 
@@ -936,21 +937,17 @@ def s16_stream_dedup_expiry(spark: SparkSession, sf: str) -> DataFrame:
     instead of a recursive CTE.
     """
     ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S16_CUTOFF).cast("timestamp"))
+          .filter(F.col("ts") < F.lit(_TEN_DAY_CUTOFF).cast("timestamp"))
           .select(
               F.concat_ws(":", F.col("user_id").cast("string"),
                           "event_type").alias("state_key"),
-              F.date_trunc("day", F.col("ts")).alias("day"),
-              F.round(F.col("value") * 100, 0).cast("long").alias("cents")))
+              F.date_trunc("day", F.col("ts")).alias("day"), _cents()))
     per = (ev.groupBy("state_key", "day")
            .agg(F.count("*").cast("long").alias("n_events"),
                 F.sum("cents").alias("total_cents"))
            .withColumn("dcol", F.date_format("day", "yyyy-MM-dd")))
 
-    with tempfile.TemporaryDirectory(
-            prefix="s16_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(per, work)
-        stream = day_file_stream(spark, arrivals)
+    with staged_day_stream(per, "s16") as (stream, _):
         out = (stream
                .withWatermark("day", f"{_S16_DELAY_DAYS} days")
                .dropDuplicatesWithinWatermark(["state_key"]))
@@ -964,7 +961,7 @@ WITH ev AS (
   SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS state_key,
          CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
          CAST(round(value * 100, 0) AS BIGINT) AS cents
-  FROM events WHERE ts < TIMESTAMP '{_S16_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 kd AS (
   SELECT state_key, day, CAST(COUNT(*) AS BIGINT) AS n_events,
@@ -1068,8 +1065,6 @@ SELECT * FROM matched UNION ALL SELECT * FROM unmatched
 
 # ---------------------------------------------------------------- s18
 
-_S18_CUTOFF = "2024-01-11"
-
 
 def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     """CHECKPOINT RECOVERY exactly-once, gated — the property every
@@ -1094,14 +1089,7 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
     <= final watermark (max event time - 1 min) — days 1..9 on this
     feed.
     """
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S18_CUTOFF).cast("timestamp"))
-          .select("ts", "event_type",
-                  F.round(F.col("value") * 100, 0).cast("long")
-                  .alias("cents"),
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
+    ev = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
     with tempfile.TemporaryDirectory(
             prefix="s18_", ignore_cleanup_errors=True) as work:
         arrivals = stage_day_files(ev, work)
@@ -1137,7 +1125,7 @@ S18_SQL = f"""
 WITH ev AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type,
          CAST(round(value * 100, 0) AS BIGINT) AS cents, ts
-  FROM events WHERE ts < TIMESTAMP '{_S18_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev)
 SELECT e.day, e.event_type,
@@ -1150,8 +1138,6 @@ GROUP BY e.day, e.event_type
 
 
 # ---------------------------------------------------------------- s19
-
-_S19_CUTOFF = "2024-01-11"
 
 
 def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
@@ -1179,18 +1165,8 @@ def s19_stream_chained_aggs(spark: SparkSession, sf: str) -> DataFrame:
     too, so the gated output equals the batch rollup over days 1..9 and
     the last day stays open (s15's open-session discipline).
     """
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S19_CUTOFF).cast("timestamp"))
-          .select("ts", "event_type",
-                  F.round(F.col("value") * 100, 0).cast("long")
-                  .alias("cents"),
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s19_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
+    with staged_day_stream(feed, "s19") as (stream, _):
         hourly = (stream.withWatermark("ts", "1 minute")
                   .groupBy(F.window("ts", "1 hour").alias("hw"), "event_type")
                   .agg(F.count("*").cast("long").alias("n_events"),
@@ -1210,7 +1186,7 @@ S19_SQL = f"""
 WITH ev AS (
   SELECT date_trunc('day', ts) AS day, date_trunc('hour', ts) AS hr,
          event_type, CAST(round(value * 100, 0) AS BIGINT) AS cents, ts
-  FROM events WHERE ts < TIMESTAMP '{_S19_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev),
 hourly AS (
@@ -1284,8 +1260,6 @@ UNION ALL SELECT * FROM unmatched_b
 
 # ---------------------------------------------------------------- s21
 
-_S21_CUTOFF = "2024-01-11"
-
 
 def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
     """STATE-SIZE accounting via StreamingQueryProgress, gated — the
@@ -1303,16 +1277,8 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
     (RocksDB and HDFS providers agree — provider-independence is the
     same claim tests/test_streaming_rocksdb.py pins for the s-family.)
     """
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S21_CUTOFF).cast("timestamp"))
-          .select("ts", "event_type",
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s21_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts", "event_type")
+    with staged_day_stream(feed, "s21") as (stream, _):
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
@@ -1335,7 +1301,7 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
 S21_SQL = f"""
 WITH ev AS (
   SELECT date_trunc('day', ts) AS day, event_type, ts
-  FROM events WHERE ts < TIMESTAMP '{_S21_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev),
 groups AS (SELECT DISTINCT day, event_type FROM ev)
@@ -1350,8 +1316,6 @@ SELECT
 
 
 # ---------------------------------------------------------------- s22
-
-_S22_CUTOFF = "2024-01-11"
 
 
 def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
@@ -1372,18 +1336,9 @@ def s22_stream_update_mode(spark: SparkSession, sf: str) -> DataFrame:
     An engine that re-emitted all keys every batch (complete-mode
     semantics leaking into update) or missed a changed key diverges in
     n_updates; a state bug diverges in the finals."""
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S22_CUTOFF).cast("timestamp"))
-          .select("ts", (F.col("user_id") % 10).alias("bucket"),
-                  F.round(F.col("value") * 100, 0).cast("long")
-                  .alias("cents"),
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s22_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts",
+                         (F.col("user_id") % 10).alias("bucket"), _cents())
+    with staged_day_stream(feed, "s22") as (stream, _):
         agg = (stream.groupBy("bucket")
                .agg(F.count("*").cast("long").alias("n_events"),
                     F.sum("cents").alias("total_cents")))
@@ -1417,7 +1372,7 @@ SELECT user_id % 10 AS bucket,
        CAST(COUNT(*) AS BIGINT) AS n_events,
        CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
          AS total_cents
-FROM events WHERE ts < TIMESTAMP '{_S22_CUTOFF} 00:00:00'
+FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 GROUP BY user_id % 10
 """
 
@@ -1494,8 +1449,6 @@ GROUP BY m.day
 
 # ---------------------------------------------------------------- s24
 
-_S24_CUTOFF = "2024-01-11"
-
 
 def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
     """multipleWatermarkPolicy = MAX, gated — the operational knob whose
@@ -1522,7 +1475,7 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
     earliest days — if the policy, the lag, or the late filter moved,
     the surviving-day set changes and the gate diverges."""
     ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S24_CUTOFF).cast("timestamp")))
+          .filter(F.col("ts") < F.lit(_TEN_DAY_CUTOFF).cast("timestamp")))
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
                      F.col("event_id").alias("view_id"),
@@ -1535,9 +1488,7 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("ts").alias("buy_ts")))
 
     policy_key = "spark.sql.streaming.multipleWatermarkPolicy"
-    with tempfile.TemporaryDirectory(
-            prefix="s24_", ignore_cleanup_errors=True) as work:
-        vdir = stage_day_files(views, work)
+    with staged_day_stream(views, "s24") as (sv, work):
         bdir = os.path.join(work, "buys")
         # repartition(1), not coalesce(1): coalesce collapses the whole
         # events scan+filter into ONE task; the exchange keeps the scan
@@ -1548,11 +1499,8 @@ def s24_watermark_policy_max(spark: SparkSession, sf: str) -> DataFrame:
         buys.repartition(1).write.mode("overwrite").parquet(bdir)
 
         with scoped_conf(spark, policy_key, "max"):
-            pv = spark.read.parquet(vdir)
             pb = spark.read.parquet(bdir)
-            sv = (spark.readStream.schema(pv.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(vdir)
-                  .drop("dcol").withWatermark("view_ts", "1 minute"))
+            sv = sv.drop("dcol").withWatermark("view_ts", "1 minute")
             sb = (spark.readStream.schema(pb.schema).parquet(bdir)
                   .withWatermark("buy_ts", "1 minute"))
             joined = (sv.join(
@@ -1573,7 +1521,7 @@ WITH v0 AS (
   SELECT user_id, event_id AS view_id, ts AS vts,
          date_trunc('day', ts) AS vday
   FROM events
-  WHERE event_type = 'view' AND ts < TIMESTAMP '{_S24_CUTOFF} 00:00:00'
+  WHERE event_type = 'view' AND ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 keep_days AS (
   SELECT DISTINCT vday FROM v0 ORDER BY vday LIMIT 2
@@ -1582,7 +1530,7 @@ v AS (SELECT * FROM v0 WHERE vday IN (SELECT vday FROM keep_days)),
 b AS (
   SELECT user_id AS bu, event_id AS purchase_id, ts AS bts
   FROM events
-  WHERE event_type = 'purchase' AND ts < TIMESTAMP '{_S24_CUTOFF} 00:00:00'
+  WHERE event_type = 'purchase' AND ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 )
 SELECT v.user_id, v.view_id, b.purchase_id,
        epoch_us(b.bts) - epoch_us(v.vts) AS delta_us
@@ -1592,8 +1540,6 @@ FROM v LEFT JOIN b ON v.user_id = b.bu
 
 
 # ---------------------------------------------------------------- s25
-
-_S25_CUTOFF = "2024-01-11"
 
 
 def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
@@ -1610,19 +1556,9 @@ def s25_stream_dedup_then_agg(spark: SparkSession, sf: str) -> DataFrame:
     which is the exactly-once-from-at-least-once contract production
     feeds rely on (upstream replays being absorbed by keyed dedup
     state bounded by the watermark, not by an unbounded seen-set)."""
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S25_CUTOFF).cast("timestamp"))
-          .select("event_id", "ts", "event_type",
-                  F.round(F.col("value") * 100, 0).cast("long")
-                  .alias("cents"),
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s25_", ignore_cleanup_errors=True) as work:
-        # each day delivered twice, back to back (redelivery feed)
-        arrivals = stage_day_files(ev, work, repeats=2)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "event_id", "ts", "event_type", _cents())
+    # each day delivered twice, back to back (redelivery feed)
+    with staged_day_stream(feed, "s25", repeats=2) as (stream, _):
         deduped = (stream.withWatermark("ts", "2 days")
                    .dropDuplicatesWithinWatermark(["event_id"]))
         daily = (deduped
@@ -1638,7 +1574,7 @@ S25_SQL = f"""
 WITH ev AS (
   SELECT DISTINCT event_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
          event_type, CAST(round(value * 100, 0) AS BIGINT) AS cents, ts
-  FROM events WHERE ts < TIMESTAMP '{_S25_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 2 DAY AS w FROM ev)
 SELECT e.day, e.event_type,
@@ -1651,8 +1587,6 @@ GROUP BY e.day, e.event_type
 
 
 # ---------------------------------------------------------------- s26
-
-_S26_CUTOFF = "2024-01-11"
 
 
 def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
@@ -1675,16 +1609,8 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
     its group. The state reader runs under the same provider conf as
     the write (RocksDB by default), exercising the provider round-trip.
     """
-    ev = (t(spark, sf, "events")
-          .filter(F.col("ts") < F.lit(_S26_CUTOFF).cast("timestamp"))
-          .select("ts", "event_type",
-                  F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                  .alias("dcol")))
-
-    with tempfile.TemporaryDirectory(
-            prefix="s26_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(ev, work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts", "event_type")
+    with staged_day_stream(feed, "s26") as (stream, work):
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
@@ -1710,7 +1636,7 @@ S26_SQL = f"""
 WITH ev AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS w_start,
          event_type, ts
-  FROM events WHERE ts < TIMESTAMP '{_S26_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev)
 SELECT w_start, event_type, CAST(COUNT(*) AS BIGINT) AS n_events
@@ -1722,23 +1648,10 @@ HAVING w_start + INTERVAL 1 DAY > wm.w
 
 # ---------------------------------------------------------------- s27/s28
 
-_S27_CUTOFF = "2024-01-11"  # the s14/s15/s26 10-day feed
 # the state change feed reads per-batch changelogs, which RocksDB writes
 # only under changelog checkpointing (see s27)
 _CHANGELOG_KEY = ("spark.sql.streaming.stateStore.rocksdb."
                   "changelogCheckpointing.enabled")
-
-
-def _s27_feed(spark: SparkSession, sf: str) -> DataFrame:
-    """The s27-s29 feed: ten days of events with integer cents, keyed by
-    day (`dcol`) for `stage_day_files`."""
-    return (t(spark, sf, "events")
-            .filter(F.col("ts") < F.lit(_S27_CUTOFF).cast("timestamp"))
-            .select("ts", "event_type",
-                    F.round(F.col("value") * 100, 0).cast("long")
-                    .alias("cents"),
-                    F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
-                    .alias("dcol")))
 
 
 def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
@@ -1768,10 +1681,8 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
     ~sf1 negative result in SCALE.md), it is a PREREQUISITE for change
     feed introspection. Scoped on here for the run + read.
     """
-    with tempfile.TemporaryDirectory(
-            prefix="s27_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(_s27_feed(spark, sf), work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
+    with staged_day_stream(feed, "s27") as (stream, work):
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
@@ -1799,16 +1710,21 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
                  .alias("evicted")))
 
 
-S27_SQL = f"""
-WITH ev AS (
+# The batch form of the s27-s29 stream: the ten-day feed's events at
+# their day (`ev`), the end-of-stream watermark (`wm`) and each day's
+# micro-batch index (`idx`, one file per day).
+_DAY_BATCH_CTES = f"""ev AS (
   SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type, ts
-  FROM events WHERE ts < TIMESTAMP '{_S27_CUTOFF} 00:00:00'
+  FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev),
 idx AS (
   SELECT day, CAST(dense_rank() OVER (ORDER BY day) - 1 AS BIGINT) AS di
   FROM (SELECT DISTINCT day FROM ev)
-)
+)"""
+
+S27_SQL = f"""
+WITH {_DAY_BATCH_CTES}
 SELECT e.day, e.event_type,
        i.di AS first_update_batch,
        CAST(1 AS BIGINT) AS n_updates,
@@ -1842,10 +1758,8 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
     read-back dedup check groups on (batch, key) — bench-scale bounded,
     and on a cluster it is the sink's own primary-key constraint.
     """
-    with tempfile.TemporaryDirectory(
-            prefix="s28_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(_s27_feed(spark, sf), work)
-        stream = day_file_stream(spark, arrivals)
+    feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
+    with staged_day_stream(feed, "s28") as (stream, work):
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events"),
@@ -1901,7 +1815,7 @@ SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type,
        CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
          AS total_cents
 FROM events
-WHERE ts < TIMESTAMP '{_S27_CUTOFF} 00:00:00'
+WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 GROUP BY 1, 2
 """
 
@@ -1927,11 +1841,9 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
     the data-determined invariant). All four channels must equal the
     oracle's counts, which are plain GROUP BYs over the staged feed.
     """
-    with tempfile.TemporaryDirectory(
-            prefix="s29_", ignore_cleanup_errors=True) as work:
-        arrivals = stage_day_files(_s27_feed(spark, sf), work)
-        stream = day_file_stream(spark, arrivals)
-        n_days = len(os.listdir(arrivals))
+    feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
+    with staged_day_stream(feed, "s29") as (stream, work):
+        n_days = len(os.listdir(os.path.join(work, "arrivals")))
         agg = (stream.withWatermark("ts", "1 minute")
                .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
                .agg(F.count("*").cast("long").alias("n_events")))
@@ -1979,18 +1891,8 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
                 .orderBy("batch_id"))
 
 
-_S29_CUTOFF = "2024-01-11"
-
 S29_SQL = f"""
-WITH ev AS (
-  SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day, event_type, ts
-  FROM events WHERE ts < TIMESTAMP '{_S29_CUTOFF} 00:00:00'
-),
-wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev),
-idx AS (
-  SELECT day, CAST(dense_rank() OVER (ORDER BY day) - 1 AS BIGINT) AS di
-  FROM (SELECT DISTINCT day FROM ev)
-),
+WITH {_DAY_BATCH_CTES},
 keys AS (SELECT DISTINCT day, event_type FROM ev),
 closed AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n
@@ -2036,9 +1938,7 @@ def s30_stream_variant_ingest(spark: SparkSession, sf: str) -> DataFrame:
     the cost IS the scan — identical to s12's, with the reader schema
     debt removed.
     """
-    ev = t(spark, sf, "events").select(
-        "event_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
+    ev = t(spark, sf, "events").select("event_id", "event_type", _cents())
     i = F.col("event_id")
     payload = (
         F.when(F.col("event_type") == "view", F.to_json(F.struct(

@@ -19,6 +19,7 @@ right call on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -80,3 +81,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, key: str, value: str):
+    """Set-then-restore a runtime conf around a bounded EXECUTION (an
+    action, a stream run) — the default tool for query-local conf. Not
+    usable around a returned LAZY frame: the conf would be restored
+    before the caller's action runs (the q87 recursion-limit lesson);
+    for that case use `plans._util.session_conf` and justify at the call
+    site."""
+    before = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)

@@ -1,10 +1,16 @@
-"""Custom stateful streaming operator via applyInPandasWithState.
+"""Custom stateful streaming operators via applyInPandasWithState.
 
-Example operator: per-key running aggregates that survive across
-micro-batches (count + sum + last-seen timestamp), emitting one updated row
-per key per batch. This is the escape hatch for stateful logic the built-in
-windows can't express (custom eviction, per-key models, counters with
-business rules); state lives in the streaming state store, sized per key.
+The escape hatch for stateful logic the built-in windows can't express
+(custom eviction, per-key models, counters with business rules); state
+lives in the streaming state store, sized per key. Three operators, one
+per output discipline:
+
+- `running_user_totals`: per-user running totals (count + sum + last-seen
+  timestamp) kept forever, one updated row per key per batch (s03).
+- `keyed_ttl_totals`: per-key running totals in integer cents with
+  event-time TTL eviction: emits on data, evicts silently (s14).
+- `session_close_stream`: gap sessions that absorb data silently and
+  emit only when the watermark closes them (s15).
 
 Per-invocation cost discipline (guide §4.1/§4.2/§4.5): the update fn runs
 once per key per micro-batch — ~27k invocations per run at sf0.1, ~750k at
@@ -48,6 +54,11 @@ OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, last_ts timest
 _TOTALS_RAW_SCHEMA = ("user_id long, n_events long, total_value double, "
                       "last_us long")
 STATE_SCHEMA = "n long, total double"
+# Watermark delay of the two event-time operators. Their callers feed
+# event time in order (s14/s15: one day per micro-batch), and the timeout
+# rules their docstrings pin are derived for a watermark at the max
+# event time seen.
+_WATERMARK_DELAY = "0 seconds"
 
 # 1-row output templates with the declared dtypes; each yield copies a
 # template and assigns scalars — 2.5x cheaper than constructing a fresh
@@ -91,75 +102,26 @@ def _update(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
     yield out
 
 
-def _make_ttl_update(ttl_ms: int):
-    """Update fn with event-time TTL: a key idle past `ttl_ms` (measured
-    against the stream's watermark) has its state REMOVED — on an unbounded
-    key space, NoTimeout state grows monotonically and this is the dial
-    that bounds it. The timeout timestamp re-arms on every batch that
-    brings the key data; Spark invokes the fn once more with
-    `hasTimedOut=True` (and no data) after the watermark passes it."""
-
-    def _update_ttl(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-            yield  # pragma: no cover — keeps this a generator
-        n, total = state.get if state.exists else (0, 0.0)
-        last_us = None
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].values.sum())
-            mx = int(pdf["ts"].values.max()) // 1_000  # dt64 ns -> us
-            last_us = mx if last_us is None else max(last_us, mx)
-        state.update((n, total))
-        # must be strictly ahead of the current watermark; late batches pin
-        # to watermark + ttl instead of their own (older) event time
-        event_ms = last_us // 1_000  # epoch micros -> epoch ms
-        state.setTimeoutTimestamp(
-            max(event_ms, state.getCurrentWatermarkMs()) + ttl_ms)
-        out = _TOTALS_TMPL.copy()
-        out.iat[0, 0] = key[0]
-        out.iat[0, 1] = n
-        out.iat[0, 2] = total
-        out.iat[0, 3] = last_us
-        yield out
-
-    return _update_ttl
-
-
-def running_user_totals(stream: DataFrame, ttl_ms: int | None = None,
-                        watermark_delay: str = "0 seconds") -> DataFrame:
-    """Per-user running totals with persistent state.
-
-    ttl_ms=None keeps state forever — right when the key space is bounded
-    (a user population). For unbounded keys (session ids, request ids) pass
-    a TTL: state is evicted once the key has been idle `ttl_ms` of EVENT
-    time past the watermark, so the state store tracks the live key set,
-    not history. A key that reappears after eviction restarts from zero.
+def running_user_totals(stream: DataFrame) -> DataFrame:
+    """Per-user running totals with persistent state, kept forever —
+    right when the key space is bounded (a user population). For
+    unbounded keys (session ids, request ids) `keyed_ttl_totals` evicts
+    idle keys.
 
     Spark 4 upgrade path: `transformWithStateInPandas` exposes the same
     semantics as a first-class stateful processor (per-state-variable TTLConfig,
-    timers, multiple state variables) — this operator's contract (update +
-    event-time TTL) maps 1:1 onto it when we bump the minimum Spark version.
+    timers, multiple state variables) — this operator's contract (update,
+    and `keyed_ttl_totals`' event-time TTL) maps 1:1 onto it when we bump
+    the minimum Spark version.
     """
-    back = [F.col("user_id"), F.col("n_events"), F.col("total_value"),
-            F.timestamp_micros("last_us").alias("last_ts")]
-    if ttl_ms is None:
-        out = (stream
-               .select("user_id", F.unix_micros("ts").alias("ts_us"),
-                       "value")
-               .groupBy("user_id")
-               .applyInPandasWithState(
-                   _update, _TOTALS_RAW_SCHEMA, STATE_SCHEMA,
-                   "update", GroupStateTimeout.NoTimeout))
-        return out.select(*back)
-    out = (stream.withWatermark("ts", watermark_delay)
-           .select("user_id", "ts", "value")
+    out = (stream
+           .select("user_id", F.unix_micros("ts").alias("ts_us"), "value")
            .groupBy("user_id")
            .applyInPandasWithState(
-               _make_ttl_update(ttl_ms), _TOTALS_RAW_SCHEMA, STATE_SCHEMA,
-               "update", GroupStateTimeout.EventTimeTimeout))
-    return out.select(*back)
+               _update, _TOTALS_RAW_SCHEMA, STATE_SCHEMA,
+               "update", GroupStateTimeout.NoTimeout))
+    return out.select("user_id", "n_events", "total_value",
+                      F.timestamp_micros("last_us").alias("last_ts"))
 
 
 KEYED_TTL_SCHEMA = ("state_key string, n_events long, total_cents long, "
@@ -169,12 +131,30 @@ _KEYED_TTL_RAW_SCHEMA = ("state_key string, n_events long, "
 KEYED_TTL_STATE = "n long, cents long"
 
 
+def _fold_cents(pdfs: Iterable[pd.DataFrame], n: int, cents: int):
+    """Add a key's batch to its running (n, cents) and return those with
+    the batch's first and last event time in epoch ns (the dt64 `ts`
+    values, read without boxing). Integer cents (int64 numpy sums) keep
+    totals free of float summation-order divergence vs a batch oracle."""
+    lo = hi = None
+    for pdf in pdfs:
+        n += len(pdf)
+        cents += int(pdf["cents"].values.sum())
+        ns = pdf["ts"].values
+        a, b = int(ns.min()), int(ns.max())
+        lo = a if lo is None else min(lo, a)
+        hi = b if hi is None else max(hi, b)
+    return n, cents, lo, hi
+
+
 def _make_keyed_ttl_update(ttl_ms: int):
-    """String-keyed, integer-exact variant of the TTL update: totals in
-    cents (int64 numpy sum — no float summation-order divergence vs a
-    batch oracle), one emitted row per key per batch it has data in,
-    state REMOVED once the key idles `ttl_ms` of event time past the
-    watermark. Same timeout discipline as `_make_ttl_update`."""
+    """Update fn with event-time TTL: one emitted row per key per batch
+    it has data in, and state REMOVED once the key idles `ttl_ms` of
+    event time past the watermark — on an unbounded key space,
+    NoTimeout state grows monotonically and this is the dial that
+    bounds it. The timeout timestamp re-arms on every batch that brings
+    the key data; Spark invokes the fn once more with `hasTimedOut=True`
+    (and no data) after the watermark passes it."""
 
     def _fn(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
         if state.hasTimedOut:
@@ -182,16 +162,13 @@ def _make_keyed_ttl_update(ttl_ms: int):
             return
             yield  # pragma: no cover — keeps this a generator
         n, cents = state.get if state.exists else (0, 0)
-        last_us = None
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int(pdf["cents"].values.sum())
-            mx = int(pdf["ts"].values.max()) // 1_000  # dt64 ns -> us
-            last_us = mx if last_us is None else max(last_us, mx)
+        n, cents, _, last_ns = _fold_cents(pdfs, n, cents)
         state.update((n, cents))
-        event_ms = last_us // 1_000
+        last_us = last_ns // 1_000
+        # must be strictly ahead of the current watermark; late batches pin
+        # to watermark + ttl instead of their own (older) event time
         state.setTimeoutTimestamp(
-            max(event_ms, state.getCurrentWatermarkMs()) + ttl_ms)
+            max(last_us // 1_000, state.getCurrentWatermarkMs()) + ttl_ms)
         out = _KEYED_TTL_TMPL.copy()
         out.iat[0, 0] = key[0]
         out.iat[0, 1] = n
@@ -202,13 +179,13 @@ def _make_keyed_ttl_update(ttl_ms: int):
     return _fn
 
 
-def keyed_ttl_totals(stream: DataFrame, ttl_ms: int,
-                     watermark_delay: str = "0 seconds") -> DataFrame:
-    """Per-key (string `state_key` column) running totals with event-time
-    TTL eviction — the generic form of `running_user_totals(ttl_ms=...)`
-    for composite/unbounded key spaces, where eviction is what keeps the
-    state store tracking the LIVE key set instead of history."""
-    out = (stream.withWatermark("ts", watermark_delay)
+def keyed_ttl_totals(stream: DataFrame, ttl_ms: int) -> DataFrame:
+    """Per-key (string `state_key` column) running totals in integer
+    cents with event-time TTL eviction: state is evicted once the key has
+    been idle `ttl_ms` of EVENT time past the watermark, so the state
+    store tracks the LIVE key set (composite or unbounded keys), not
+    history. A key that reappears after eviction restarts from zero."""
+    out = (stream.withWatermark("ts", _WATERMARK_DELAY)
            .select("state_key", "ts", "cents")
            .groupBy("state_key")
            .applyInPandasWithState(
@@ -251,14 +228,11 @@ def _make_session_close_update(gap_ms: int):
             return
         start, end, n, cents = (state.get if state.exists
                                 else (None, None, 0, 0))
-        for pdf in pdfs:
-            n += len(pdf)
-            cents += int(pdf["cents"].values.sum())
-            ns = pdf["ts"].values
-            lo = int(ns.min()) // 1_000_000  # dt64 ns -> epoch ms
-            hi = int(ns.max()) // 1_000_000
-            start = lo if start is None else min(start, lo)
-            end = hi if end is None else max(end, hi)
+        n, cents, lo, hi = _fold_cents(pdfs, n, cents)
+        lo //= 1_000_000  # epoch ns -> ms
+        hi //= 1_000_000
+        start = lo if start is None else min(start, lo)
+        end = hi if end is None else max(end, hi)
         state.update((start, end, n, cents))
         state.setTimeoutTimestamp(
             max(end, state.getCurrentWatermarkMs()) + gap_ms)
@@ -268,13 +242,12 @@ def _make_session_close_update(gap_ms: int):
     return _fn
 
 
-def session_close_stream(stream: DataFrame, gap_ms: int,
-                         watermark_delay: str = "0 seconds") -> DataFrame:
+def session_close_stream(stream: DataFrame, gap_ms: int) -> DataFrame:
     """Gap-based sessions that EMIT on close (timeout handler output):
     the state store holds exactly the open sessions, the sink receives
     exactly the closed ones — the streaming shape of gaps-and-islands
     sessionization (q22/q45's batch twin)."""
-    out = (stream.withWatermark("ts", watermark_delay)
+    out = (stream.withWatermark("ts", _WATERMARK_DELAY)
            .select("state_key", "ts", "cents")
            .groupBy("state_key")
            .applyInPandasWithState(

@@ -199,50 +199,6 @@ def test_q92_installments_conserve_totals(spark):
     assert n1 == t(spark, SF_SMOKE, "orders").count()
 
 
-def test_s27_lifecycle_consistent_with_s26_snapshot(spark):
-    """The change feed's lifecycle view must agree with the state
-    snapshot: keys the feed says were NOT evicted are exactly the open
-    windows s26 reads back, with identical buffered counts, and every
-    key is written exactly once in its day-index batch."""
-    from etl_docker_spark.plans.s import (s26_state_datasource,
-                                          s27_state_changefeed)
-
-    feed = s27_state_changefeed(spark, SF_SMOKE).collect()
-    assert feed
-    days = sorted({r.day for r in feed})
-    idx = {d: i for i, d in enumerate(days)}
-    for r in feed:
-        assert r.n_updates == 1, r
-        assert r.first_update_batch == idx[r.day], r
-    open_feed = {(r.day, r.event_type): r.n_events
-                 for r in feed if not r.evicted}
-    snap = {(r.w_start, r.event_type): r.n_events
-            for r in s26_state_datasource(spark, SF_SMOKE).collect()}
-    assert open_feed == snap
-
-
-def test_s28_matches_batch_aggregate(spark):
-    """The idempotent sink's latest-per-key read-back equals the plain
-    batch aggregate over the same staged feed (exactly-once despite the
-    deliberate double-apply of every batch)."""
-    from pyspark.sql import functions as F
-
-    from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.s import (_S27_CUTOFF,
-                                          s28_foreachbatch_idempotent)
-
-    got = {(r.day, r.event_type): (r.n_events, r.total_cents)
-           for r in s28_foreachbatch_idempotent(spark, SF_SMOKE).collect()}
-    batch = (t(spark, SF_SMOKE, "events")
-             .filter(F.col("ts") < F.lit(_S27_CUTOFF).cast("timestamp"))
-             .groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
-             .agg(F.count("*").cast("long").alias("n"),
-                  F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                  .alias("c")))
-    want = {(r.day, r.event_type): (r.n, r.c) for r in batch.collect()}
-    assert got == want
-
-
 def test_d59_totals_agree_with_d58(spark):
     """The model-as-data join (d59) and the folded-formula path (d58)
     compute the SAME per-doc scores, so their per-lang score mass must

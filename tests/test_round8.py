@@ -1,4 +1,4 @@
-"""Round-8: VARIANT persistence/landing, XML, collation, listagg and
+"""Round-8: VARIANT persistence, XML, collation, listagg and
 theta-sketch primitives."""
 
 from __future__ import annotations
@@ -48,45 +48,6 @@ def test_q95_native_construction_matches_parse_json(spark):
         FROM s
     """).first()
     assert row.native == row.via_json == '{"a":1,"b":[2,3]}'
-
-
-def test_s31_from_json_variant_landing(spark):
-    """from_json(..., 'variant') must parse arbitrary JSON text into a
-    typed-extractable variant, including rows whose shapes differ —
-    the schema-evolution property s31 relies on."""
-    df = spark.createDataFrame(
-        [('{"k": 7}',), ('{"k": 9, "extra": [1]}',), ('{"other": true}',)],
-        "js string")
-    rows = df.selectExpr(
-        "try_variant_get(from_json(js, 'variant'), '$.k', 'bigint') AS k"
-    ).collect()
-    assert sorted([r.k for r in rows], key=lambda x: (x is None, x)) \
-        == [7, 9, None]
-
-
-def test_s31_window_totals_match_batch(spark):
-    """The streamed windowed rollup must reproduce the batch answer
-    over the same extraction (exactly-once across micro-batches)."""
-    from pyspark.sql import functions as F
-
-    from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.s import s31_stream_variant_landing
-
-    got = s31_stream_variant_landing(spark, SF_SMOKE)
-    ev = t(spark, SF_SMOKE, "events")
-    want = (ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 F.sum(F.get_json_object("props", "$.k").cast("long"))
-                 .cast("long").alias("sum_k")))
-    gots = {(r.window_start, r.event_type): (r.n_events, r.sum_k,
-                                             r.n_missing)
-            for r in got.collect()}
-    wants = {(r.w.start, r.event_type): (r.n_events, r.sum_k)
-             for r in want.collect()}
-    assert set(gots) == set(wants)
-    for key, (n, k, miss) in gots.items():
-        assert (n, k) == wants[key]
-        assert miss == n  # the absent path must be NULL on EVERY row
 
 
 def test_q96_both_xml_grammars_agree(spark):

@@ -2,7 +2,8 @@
 
 from __future__ import annotations
 
-from etl_docker_spark.streaming.stateful import running_user_totals
+from etl_docker_spark.streaming.stateful import (keyed_ttl_totals,
+                                                 running_user_totals)
 
 
 def test_state_survives_across_batches(spark, tmp_path):
@@ -45,10 +46,13 @@ def test_state_survives_across_batches(spark, tmp_path):
 
 
 def test_ttl_evicts_idle_state(spark, tmp_path):
-    """Event-time TTL: a key idle past the TTL (watermark-driven) is
-    evicted; when it reappears, totals restart from zero instead of
-    resuming — the observable proof the state store dropped it."""
+    """Event-time TTL (`keyed_ttl_totals`): a key idle past the TTL
+    (watermark-driven) is evicted; when it reappears, totals restart from
+    zero instead of resuming — the observable proof the state store
+    dropped it."""
     import datetime as dt
+
+    from pyspark.sql import functions as F
 
     src = str(tmp_path / "ttl_src")
     schema = "user_id long, ts timestamp, value double"
@@ -63,8 +67,10 @@ def test_ttl_evicts_idle_state(spark, tmp_path):
     append((1, dt.datetime(2024, 1, 1, 10), 5.0),
            (2, dt.datetime(2024, 1, 1, 10), 1.0))
     stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (running_user_totals(stream, ttl_ms=ttl_ms)
+              .option("maxFilesPerTrigger", "1").parquet(src)
+              .select(F.col("user_id").cast("string").alias("state_key"),
+                      "ts", (F.col("value") * 100).cast("long").alias("cents")))
+    q = (keyed_ttl_totals(stream, ttl_ms=ttl_ms)
          .writeStream.outputMode("update").format("memory")
          .queryName("ttl_totals").start())
     try:
@@ -81,9 +87,9 @@ def test_ttl_evicts_idle_state(spark, tmp_path):
         q.processAllAvailable()
         latest = {}
         for r in spark.sql("SELECT * FROM ttl_totals ORDER BY last_ts").collect():
-            latest[r.user_id] = (r.n_events, r.total_value)
-        assert latest[1] == (3, 14.0)   # never idle: state kept across batches
-        assert latest[2] == (1, 4.0)    # evicted, then restarted — not (2, 5.0)
+            latest[r.state_key] = (r.n_events, r.total_cents)
+        assert latest["1"] == (3, 1400)  # never idle: state kept across batches
+        assert latest["2"] == (1, 400)   # evicted, then restarted — not (2, 500)
     finally:
         q.stop()
 
