@@ -35,6 +35,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import logging
 import os
 import re
 import shutil
@@ -146,9 +147,12 @@ def _disk_load(spark: SparkSession, key: str, sf_dir: str) -> DataFrame | None:
         df = spark.read.parquet(path)
         df.limit(1).count()  # force footer read: surfaces truncation now
         return df
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — retrain, but not silently
         # corrupt/truncated/schema-drifted artifact: drop it and retrain
         # instead of failing the query forever (ADVICE r2)
+        logging.getLogger(__name__).warning(
+            "artifact %s is unreadable, dropping and retraining it: %s: %s",
+            path, type(exc).__name__, exc)
         shutil.rmtree(path, ignore_errors=True)
         return None
 
@@ -190,9 +194,12 @@ def _disk_store(df: DataFrame, key: str, sf_dir: str) -> None:
         except OSError:
             # another session won the race; its artifact is identical
             shutil.rmtree(tmp, ignore_errors=True)
-    except Exception:
+    except Exception as exc:  # noqa: BLE001 — serve anyway, but not silently
         # unwritable cache root / disk full: serving still works, the
         # next session just retrains
+        logging.getLogger(__name__).warning(
+            "artifact %s not persisted, the next session retrains it: "
+            "%s: %s", path, type(exc).__name__, exc)
         shutil.rmtree(tmp, ignore_errors=True)
 
 

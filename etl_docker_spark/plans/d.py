@@ -1491,6 +1491,23 @@ QUALIFY rank <= {_BPE_TOP}
 # ---------------------------------------------------------------- d28
 
 
+def _positional_grams(docs: DataFrame, k: int, doc: str,
+                      *keep: str) -> DataFrame:
+    """(doc, *keep, sz, pos, g): every k-gram of each doc's space-split
+    text, g the k tokens from position pos joined by spaces; doc_id is
+    renamed to doc. The lead window partitions by doc, so it is bounded
+    by one document."""
+    toks = F.split(F.col("text"), " ")
+    rows = docs.select(
+        F.col("doc_id").alias(doc), *keep, F.size(toks).alias("sz"),
+        F.posexplode(toks).alias("pos", "tok"))
+    w = Window.partitionBy(doc).orderBy("pos")
+    leads = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, k)]
+    return (rows.select(doc, *keep, "sz", "pos",
+                        F.concat_ws(" ", *leads).alias("g"))
+            .filter(F.col("pos") <= F.col("sz") - k))
+
+
 def d28_hll_sketch(spark: SparkSession, sf: str) -> DataFrame:
     """Distinct 3-gram estimate per language + the merged corpus sketch.
 
@@ -1510,17 +1527,7 @@ def d28_hll_sketch(spark: SparkSession, sf: str) -> DataFrame:
     docs = t(spark, sf, "documents").select("doc_id", "lang", "text")
     if docs.rdd.getNumPartitions() < target:
         docs = docs.repartition(target, "doc_id")
-    toks = F.split(F.col("text"), " ")
-    rows = docs.select(
-        "doc_id", "lang", F.size(toks).alias("sz"),
-        F.posexplode(toks).alias("pos", "tok"))
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    grams = (rows.select(
-        "lang", "pos", "sz",
-        F.concat_ws(" ", F.col("tok"), F.lead("tok", 1).over(w),
-                    F.lead("tok", 2).over(w)).alias("g"))
-        .filter(F.col("pos") <= F.col("sz") - 3)
-        .select("lang", "g"))
+    grams = _positional_grams(docs, 3, "doc_id", "lang").select("lang", "g")
     # ONE corpus-width shuffle: collapse occurrences to (lang, gram-TYPE)
     # rows first, checkpoint the vocab-sized type table, and derive
     # registers AND both exact-distinct measurements from it. The previous
@@ -1686,6 +1693,84 @@ FROM counted GROUP BY doc_id
 _BPE_STEPS = 3
 
 
+def _bpe_spelled() -> Column:
+    """The word w as a space-separated symbol string: 'low' -> ' l o w '."""
+    return F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 "))
+
+
+def _bpe_types(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, sp, f): each word type of length >= 2 (per keys), spelled,
+    with its frequency; checkpointed, since every merge step reads it."""
+    return (docs.select(*keys, F.explode(F.split("text", " ")).alias("w"))
+            .filter(F.length("w") >= 2)
+            .groupBy(*keys, "w").agg(F.count("*").alias("f"))
+            .select(*keys, _bpe_spelled().alias("sp"), "f")
+            .localCheckpoint())
+
+
+def _bpe_pairs(cur: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, p1, p2, f): every adjacent symbol pair of each spelled
+    type, weighted by the type's frequency f."""
+    syms = F.split(F.trim(F.col("sp")), " ")
+    return (cur.filter(F.size(syms) >= 2)
+            .select(*keys, "f", F.explode(F.transform(
+                F.sequence(F.lit(1), F.size(syms) - 1),
+                lambda i: F.struct(
+                    F.element_at(syms, i).alias("p1"),
+                    F.element_at(syms, i + 1).alias("p2"))))
+                .alias("pr"))
+            .select(*keys, F.col("pr.p1").alias("p1"),
+                    F.col("pr.p2").alias("p2"), "f"))
+
+
+def _bpe_merged() -> Column:
+    """sp with the merge ' p1 p2 ' -> ' p1p2 ' applied; references the
+    columns sp/p1/p2 by name, so it rewrites any frame joined to the
+    winning pair."""
+    return F.replace(
+        F.col("sp"),
+        F.concat(F.lit(" "), F.col("p1"), F.lit(" "),
+                 F.col("p2"), F.lit(" ")),
+        F.concat(F.lit(" "), F.col("p1"), F.col("p2"),
+                 F.lit(" "))).alias("sp")
+
+
+_BPE_WF0_DUCK = """
+WITH wf0 AS (
+  SELECT ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS sp, f
+  FROM (SELECT w, COUNT(*) AS f
+        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        WHERE length(w) >= 2 GROUP BY w)
+)"""
+_BPE_COUNT_DUCK = "\n         CAST(SUM(f) AS BIGINT)"
+
+
+def _bpe_pc_duck(i: int, count: str, keys: str = "") -> str:
+    """CTE pc{i}: step i's weighted pair counts over wf{i-1}, grouped by
+    keys (a 'lang, ' prefix or nothing); count is the sum expression
+    with its leading whitespace."""
+    group = "1, 2, 3" if keys else "1, 2"
+    return f"""pc{i} AS (
+  SELECT {keys}t.sy[i] AS p1, t.sy[i + 1] AS p2,{count} AS pair_count
+  FROM (SELECT {keys}string_split(trim(sp), ' ') AS sy, f FROM wf{i - 1}) t,
+       LATERAL (SELECT unnest(generate_series(1, len(t.sy) - 1)) AS i)
+  WHERE len(t.sy) >= 2
+  GROUP BY {group}
+)"""
+
+
+def _bpe_wf_duck(i: int) -> str:
+    """CTE wf{i}: wf{i-1} with the single winning pair of t{i} merged."""
+    return f"""wf{i} AS (
+  SELECT replace(sp,
+                 ' ' || (SELECT p1 FROM t{i}) || ' '
+                     || (SELECT p2 FROM t{i}) || ' ',
+                 ' ' || (SELECT p1 FROM t{i})
+                     || (SELECT p2 FROM t{i}) || ' ') AS sp, f
+  FROM wf{i - 1}
+)"""
+
+
 def d30_bpe_merge_steps(spark: SparkSession, sf: str) -> DataFrame:
     """BPE tokenizer training, first 3 merge steps: (step, p1, p2,
     pair_count) for each chosen merge — the iterative loop d27's one-shot
@@ -1700,28 +1785,11 @@ def d30_bpe_merge_steps(spark: SparkSession, sf: str) -> DataFrame:
     localCheckpoint'ed once and each step's merge is a broadcast of the
     single winning pair). The corpus is scanned exactly once.
     """
-    wf = (t(spark, sf, "documents")
-          .select(F.explode(F.split("text", " ")).alias("w"))
-          .filter(F.length("w") >= 2)
-          .groupBy("w").agg(F.count("*").alias("f"))
-          .select(F.concat(F.lit(" "),
-                           F.regexp_replace("w", "(.)", "$1 ")).alias("sp"),
-                  "f")
-          .localCheckpoint())
     steps: list[DataFrame] = []
-    cur = wf
+    cur = _bpe_types(t(spark, sf, "documents"))
     for step in range(1, _BPE_STEPS + 1):
-        syms = F.split(F.trim(F.col("sp")), " ")
-        prs = (cur.filter(F.size(syms) >= 2)
-               .select("f", F.explode(F.transform(
-                   F.sequence(F.lit(1), F.size(syms) - 1),
-                   lambda i: F.struct(
-                       F.element_at(syms, i).alias("p1"),
-                       F.element_at(syms, i + 1).alias("p2"))))
-                   .alias("pr"))
-               .select(F.col("pr.p1").alias("p1"),
-                       F.col("pr.p2").alias("p2"), "f"))
-        agg = prs.groupBy("p1", "p2").agg(F.sum("f").alias("pair_count"))
+        agg = (_bpe_pairs(cur).groupBy("p1", "p2")
+               .agg(F.sum("f").alias("pair_count")))
         # top-1 as a one-row min(struct(...)) aggregate (the d54 round-8
         # rewrite): same winner by lexicographic struct comparison
         # (-pair_count asc == pair_count desc, then p1, p2 asc), zero
@@ -1736,12 +1804,7 @@ def d30_bpe_merge_steps(spark: SparkSession, sf: str) -> DataFrame:
                        (-F.col("w.neg")).cast("long").alias("pair_count")))
         steps.append(top)
         cur = (cur.crossJoin(F.broadcast(top.select("p1", "p2")))
-               .select(F.replace(
-                   F.col("sp"),
-                   F.concat(F.lit(" "), F.col("p1"), F.lit(" "),
-                            F.col("p2"), F.lit(" ")),
-                   F.concat(F.lit(" "), F.col("p1"), F.col("p2"),
-                            F.lit(" "))).alias("sp"), "f"))
+               .select(_bpe_merged(), "f"))
     out = steps[0]
     for s in steps[1:]:
         out = out.unionByName(s)
@@ -1749,35 +1812,15 @@ def d30_bpe_merge_steps(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _d30_sql() -> str:
-    parts = ["""
-WITH wf0 AS (
-  SELECT ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS sp, f
-  FROM (SELECT w, COUNT(*) AS f
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        WHERE length(w) >= 2 GROUP BY w)
-)"""]
+    parts = [_BPE_WF0_DUCK]
     for i in range(1, _BPE_STEPS + 1):
         parts.append(f""",
-pc{i} AS (
-  SELECT t.sy[i] AS p1, t.sy[i + 1] AS p2,
-         CAST(SUM(f) AS BIGINT) AS pair_count
-  FROM (SELECT string_split(trim(sp), ' ') AS sy, f FROM wf{i - 1}) t,
-       LATERAL (SELECT unnest(generate_series(1, len(t.sy) - 1)) AS i)
-  WHERE len(t.sy) >= 2
-  GROUP BY 1, 2
-),
+{_bpe_pc_duck(i, _BPE_COUNT_DUCK)},
 t{i} AS (
   SELECT CAST({i} AS BIGINT) AS step, p1, p2, pair_count FROM pc{i}
   ORDER BY pair_count DESC, p1, p2 LIMIT 1
 ),
-wf{i} AS (
-  SELECT replace(sp,
-                 ' ' || (SELECT p1 FROM t{i}) || ' '
-                     || (SELECT p2 FROM t{i}) || ' ',
-                 ' ' || (SELECT p1 FROM t{i})
-                     || (SELECT p2 FROM t{i}) || ' ') AS sp, f
-  FROM wf{i - 1}
-)""")
+{_bpe_wf_duck(i)}""")
     union = " UNION ALL ".join(f"SELECT * FROM t{i}"
                                for i in range(1, _BPE_STEPS + 1))
     parts.append(f"\n{union}")
@@ -2107,16 +2150,7 @@ def d35_sketch_overlap(spark: SparkSession, sf: str) -> DataFrame:
         docs = (t(spark, sf, "documents")
                 .filter(F.col("source") == name)
                 .select("doc_id", "text"))
-        toks = F.split(F.col("text"), " ")
-        rows = docs.select(
-            "doc_id", F.size(toks).alias("sz"),
-            F.posexplode(toks).alias("pos", "tok"))
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        grams = (rows.select(
-            "pos", "sz",
-            F.concat_ws(" ", F.col("tok"), F.lead("tok", 1).over(w),
-                        F.lead("tok", 2).over(w)).alias("g"))
-            .filter(F.col("pos") <= F.col("sz") - 3))
+        grams = _positional_grams(docs, 3, "doc_id")
         h = (F.conv(F.substring(F.md5(F.col("g").cast("binary")), 1, 15),
                     16, 10).cast("long"))
         segs[name] = grams.select(h.alias("hv")).distinct().localCheckpoint()
@@ -2397,30 +2431,10 @@ def d39_bpe_per_lang(spark: SparkSession, sf: str) -> DataFrame:
     first; each step aggregates pairs off types only and applies each
     lang's single winning merge via a broadcast join on lang.
     """
-    docs = t(spark, sf, "documents")
-    wf = (docs
-          .select("lang", F.explode(F.split("text", " ")).alias("w"))
-          .filter(F.length("w") >= 2)
-          .groupBy("lang", "w").agg(F.count("*").alias("f"))
-          .select("lang",
-                  F.concat(F.lit(" "),
-                           F.regexp_replace("w", "(.)", "$1 ")).alias("sp"),
-                  "f")
-          .localCheckpoint())
     steps: list[DataFrame] = []
-    cur = wf
+    cur = _bpe_types(t(spark, sf, "documents"), "lang")
     for step in range(1, _D39_STEPS + 1):
-        syms = F.split(F.trim(F.col("sp")), " ")
-        prs = (cur.filter(F.size(syms) >= 2)
-               .select("lang", "f", F.explode(F.transform(
-                   F.sequence(F.lit(1), F.size(syms) - 1),
-                   lambda i: F.struct(
-                       F.element_at(syms, i).alias("p1"),
-                       F.element_at(syms, i + 1).alias("p2"))))
-                   .alias("pr"))
-               .select("lang", F.col("pr.p1").alias("p1"),
-                       F.col("pr.p2").alias("p2"), "f"))
-        agg = prs.groupBy("lang", "p1", "p2").agg(
+        agg = _bpe_pairs(cur, "lang").groupBy("lang", "p1", "p2").agg(
             F.sum("f").alias("pair_count"))
         top = (agg.withColumn("rn", F.row_number().over(
             Window.partitionBy("lang")
@@ -2430,12 +2444,7 @@ def d39_bpe_per_lang(spark: SparkSession, sf: str) -> DataFrame:
                     "p1", "p2", "pair_count"))
         steps.append(top)
         cur = (cur.join(F.broadcast(top.select("lang", "p1", "p2")), "lang")
-               .select("lang", F.replace(
-                   F.col("sp"),
-                   F.concat(F.lit(" "), F.col("p1"), F.lit(" "),
-                            F.col("p2"), F.lit(" ")),
-                   F.concat(F.lit(" "), F.col("p1"), F.col("p2"),
-                            F.lit(" "))).alias("sp"), "f"))
+               .select("lang", _bpe_merged(), "f"))
     out = steps[0]
     for s in steps[1:]:
         out = out.unionByName(s)
@@ -2453,14 +2462,7 @@ WITH wf0 AS (
 )"""]
     for i in range(1, _D39_STEPS + 1):
         parts.append(f""",
-pc{i} AS (
-  SELECT lang, t.sy[i] AS p1, t.sy[i + 1] AS p2,
-         CAST(SUM(f) AS BIGINT) AS pair_count
-  FROM (SELECT lang, string_split(trim(sp), ' ') AS sy, f FROM wf{i - 1}) t,
-       LATERAL (SELECT unnest(generate_series(1, len(t.sy) - 1)) AS i)
-  WHERE len(t.sy) >= 2
-  GROUP BY 1, 2, 3
-),
+{_bpe_pc_duck(i, _BPE_COUNT_DUCK, "lang, ")},
 t{i} AS (
   SELECT lang, CAST({i} AS BIGINT) AS step, p1, p2, pair_count FROM pc{i}
   QUALIFY row_number() OVER (PARTITION BY lang
@@ -3330,18 +3332,10 @@ def d52_internal_repetition(spark: SparkSession, sf: str) -> DataFrame:
     df = t(spark, sf, "documents")
     df = df.repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    toks = F.split(F.col("text"), " ")
-    tok_rows = df.select(
-        F.col("doc_id").alias("doc"), F.size(toks).alias("sz"),
-        F.posexplode(toks).alias("pos", "tok"))
-    w = Window.partitionBy("doc").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, k)]
     from etl_docker_spark.llm.dedup import _base_hash
-    grams = (tok_rows.select("doc", "sz", "pos",
-                             F.concat_ws(" ", *leads).alias("s"))
-             .filter(F.col("pos") <= F.col("sz") - k)
+    grams = (_positional_grams(df, k, "doc")
              .select("doc", F.col("pos").cast("long").alias("p"),
-                     _base_hash(F.col("s")).alias("h")))
+                     _base_hash(F.col("g")).alias("h")))
     m = (grams.alias("a").join(grams.alias("b"),
                                (F.col("a.doc") == F.col("b.doc"))
                                & (F.col("a.h") == F.col("b.h"))
@@ -3446,27 +3440,13 @@ def d54_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
     at 100 TB the type table join is the whole cost, and it is a plain
     shuffle-hash join on the word."""
     docs = t(spark, sf, "documents")
-    to_sp = F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 "))
-    wf = (docs.select(F.explode(F.split("text", " ")).alias("w"))
-          .filter(F.length("w") >= 2)
-          .groupBy("w").agg(F.count("*").alias("f"))
-          .select(to_sp.alias("sp"), "f")
-          .localCheckpoint())
+    wf = _bpe_types(docs)
     wt = (docs.select(F.explode(F.split("text", " ")).alias("w"))
           .distinct()
-          .select("w", to_sp.alias("sp"))
+          .select("w", _bpe_spelled().alias("sp"))
           .localCheckpoint())
     for step in range(1, _D54_STEPS + 1):
-        syms = F.split(F.trim(F.col("sp")), " ")
-        prs = (wf.filter(F.size(syms) >= 2)
-               .select("f", F.explode(F.transform(
-                   F.sequence(F.lit(1), F.size(syms) - 1),
-                   lambda i: F.struct(
-                       F.element_at(syms, i).alias("p1"),
-                       F.element_at(syms, i + 1).alias("p2"))))
-                   .alias("pr"))
-               .select(F.col("pr.p1").alias("p1"),
-                       F.col("pr.p2").alias("p2"), "f"))
+        prs = _bpe_pairs(wf)
         # top-1 as a ONE-ROW aggregate, not a global row_number window:
         # min(struct(-count, p1, p2)) is lexicographic (max count, then
         # min p1, min p2) — same winner, zero WindowExec nodes, so bench
@@ -3481,19 +3461,8 @@ def d54_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
                    F.col("p2").alias("p2"))).alias("t"))
                .select(F.col("t.p1").alias("p1"),
                        F.col("t.p2").alias("p2")))
-
-        def merged() -> Column:
-            # Rewrites whatever frame the caller selects on: references
-            # the post-crossJoin columns sp/p1/p2 by name only.
-            return F.replace(
-                F.col("sp"),
-                F.concat(F.lit(" "), F.col("p1"), F.lit(" "),
-                         F.col("p2"), F.lit(" ")),
-                F.concat(F.lit(" "), F.col("p1"), F.col("p2"),
-                         F.lit(" "))).alias("sp")
-
-        wf = (wf.crossJoin(F.broadcast(top)).select(merged(), "f"))
-        wt = (wt.crossJoin(F.broadcast(top)).select("w", merged()))
+        wf = (wf.crossJoin(F.broadcast(top)).select(_bpe_merged(), "f"))
+        wt = (wt.crossJoin(F.broadcast(top)).select("w", _bpe_merged()))
     sym = wt.select(
         "w", F.size(F.split(F.trim(F.col("sp")), " "))
         .cast("long").alias("n_sym"))
@@ -3510,13 +3479,7 @@ def d54_bpe_encode(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _d54_sql() -> str:
-    parts = ["""
-WITH wf0 AS (
-  SELECT ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS sp, f
-  FROM (SELECT w, COUNT(*) AS f
-        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-        WHERE length(w) >= 2 GROUP BY w)
-),
+    parts = [_BPE_WF0_DUCK + """,
 wt0 AS (
   SELECT w, ' ' || regexp_replace(w, '(.)', '\\1 ', 'g') AS sp
   FROM (SELECT DISTINCT unnest(string_split(text, ' ')) AS w
@@ -3524,24 +3487,11 @@ wt0 AS (
 )"""]
     for i in range(1, _D54_STEPS + 1):
         parts.append(f""",
-pc{i} AS (
-  SELECT t.sy[i] AS p1, t.sy[i + 1] AS p2, SUM(f) AS pair_count
-  FROM (SELECT string_split(trim(sp), ' ') AS sy, f FROM wf{i - 1}) t,
-       LATERAL (SELECT unnest(generate_series(1, len(t.sy) - 1)) AS i)
-  WHERE len(t.sy) >= 2
-  GROUP BY 1, 2
-),
+{_bpe_pc_duck(i, " SUM(f)")},
 t{i} AS (
   SELECT p1, p2 FROM pc{i} ORDER BY pair_count DESC, p1, p2 LIMIT 1
 ),
-wf{i} AS (
-  SELECT replace(sp,
-                 ' ' || (SELECT p1 FROM t{i}) || ' '
-                     || (SELECT p2 FROM t{i}) || ' ',
-                 ' ' || (SELECT p1 FROM t{i})
-                     || (SELECT p2 FROM t{i}) || ' ') AS sp, f
-  FROM wf{i - 1}
-),
+{_bpe_wf_duck(i)},
 wt{i} AS (
   SELECT w, replace(sp,
                     ' ' || (SELECT p1 FROM t{i}) || ' '
@@ -3603,17 +3553,9 @@ def d55_self_dedup_curation(spark: SparkSession, sf: str) -> DataFrame:
     df = t(spark, sf, "documents")
     df = df.repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id"))
-    toks = F.split(F.col("text"), " ")
-    tok_rows = df.select(
-        F.col("doc_id").alias("doc"), F.size(toks).alias("sz"),
-        F.posexplode(toks).alias("pos", "tok"))
-    w = Window.partitionBy("doc").orderBy("pos")
-    leads = [F.col("tok")] + [F.lead("tok", i).over(w) for i in range(1, k)]
-    grams = (tok_rows.select("doc", "sz", "pos",
-                             F.concat_ws(" ", *leads).alias("s"))
-             .filter(F.col("pos") <= F.col("sz") - k)
+    grams = (_positional_grams(df, k, "doc")
              .select("doc", F.col("pos").cast("long").alias("p"),
-                     _base_hash(F.col("s")).alias("h")))
+                     _base_hash(F.col("g")).alias("h")))
     dup_pos = (grams.alias("a").join(
         grams.alias("b"),
         (F.col("a.doc") == F.col("b.doc")) & (F.col("a.h") == F.col("b.h"))
@@ -4465,11 +4407,12 @@ def d61_threshold_yield_curve(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("cell"))
 
 
-# Oracle: re-derives d60's trained scores end-to-end (training included),
-# then the same grid histogram + top-down running totals.
-D61_SQL = rf"""
-WITH labeled AS (
-  SELECT doc_id, text,
+def _d61_labeled_ctes(cols: str) -> str:
+    """CTEs labeled, occ, prior/counts/w: d60's rule labels (exact
+    duplicates are 0), their feature occurrences carrying cols, and the
+    weights trained on all of them."""
+    return rf"""labeled AS (
+  SELECT {cols}, text,
 {_D60_RULES_DUCK}
               WHEN row_number() OVER (PARTITION BY md5(text)
                                       ORDER BY doc_id) > 1 THEN 0
@@ -4477,8 +4420,14 @@ WITH labeled AS (
          {_D60_FEATS_DUCK} AS feats
   FROM documents
 ),
-{_d60_occ_cte('doc_id, n_tokens, y', 'labeled')},
-{_d60_weight_ctes('occ')},
+{_d60_occ_cte(f'{cols}, n_tokens, y', 'labeled')},
+{_d60_weight_ctes('occ')}"""
+
+
+# Oracle: re-derives d60's trained scores end-to-end (training included),
+# then the same grid histogram + top-down running totals.
+D61_SQL = rf"""
+WITH {_d61_labeled_ctes('doc_id')},
 scored AS (
   SELECT doc_id, any_value(n_tokens) AS n_tokens,
          CAST(COUNT(*) AS BIGINT) AS n_feats,
@@ -4654,17 +4603,7 @@ ORDER BY lang
 # as in D61), joins lang back, then the same histogram -> cumulative ->
 # per-lang arg_max pick. All-integer arithmetic throughout.
 D62_SQL = rf"""
-WITH labeled AS (
-  SELECT doc_id, lang, text,
-{_D60_RULES_DUCK}
-              WHEN row_number() OVER (PARTITION BY md5(text)
-                                      ORDER BY doc_id) > 1 THEN 0
-              ELSE 1 END AS y,
-         {_D60_FEATS_DUCK} AS feats
-  FROM documents
-),
-{_d60_occ_cte('doc_id, lang, n_tokens, y', 'labeled')},
-{_d60_weight_ctes('occ')},
+WITH {_d61_labeled_ctes('doc_id, lang')},
 scored AS (
   SELECT doc_id, any_value(lang) AS lang,
          any_value(n_tokens) AS n_tokens,
@@ -4911,10 +4850,12 @@ def d65_holdout_calibrated_thresholds(spark: SparkSession,
     return _calibrated_knife(spark, per_doc)
 
 
-def _d65_sql() -> str:
-    return rf"""
-WITH labeled AS (
-  SELECT doc_id, lang, text,
+def _d65_split_ctes(cols: str, lab_cols: str) -> str:
+    """CTEs labeled, lab, occ: d60's rule labels with d63's train/holdout
+    split (exact duplicates are 0), and the feature occurrences of lab,
+    which carries lab_cols."""
+    return rf"""labeled AS (
+  SELECT {cols}, text,
 {_D60_RULES_DUCK}
               ELSE 1 END AS y0,
 {_D63_SPLIT_DUCK}
@@ -4922,14 +4863,19 @@ WITH labeled AS (
   FROM documents
 ),
 lab AS (
-  SELECT doc_id, lang, n_tokens, split, feats,
+  SELECT {lab_cols}, split, feats,
          CASE WHEN y0 = 0 THEN 0
               WHEN row_number() OVER (PARTITION BY md5(text)
                                       ORDER BY doc_id) > 1 THEN 0
               ELSE 1 END AS y
   FROM labeled
 ),
-{_d60_occ_cte('doc_id, lang, n_tokens, split, y', 'lab')},
+{_d60_occ_cte(f'{lab_cols}, split, y', 'lab')}"""
+
+
+def _d65_sql() -> str:
+    return rf"""
+WITH {_d65_split_ctes('doc_id, lang', 'doc_id, lang, n_tokens')},
 {_d60_weight_ctes("occ WHERE split = 'train'")},
 scored AS (
   SELECT o.doc_id, any_value(o.lang) AS lang,
@@ -4952,6 +4898,13 @@ _D66_K = 40
 _D66_MAXTRACK = 8192
 
 
+def _lang_tok_buckets(spark: SparkSession, sf: str) -> DataFrame:
+    """(lang, b): the md5 bucket of every space-split token occurrence."""
+    toks = (t(spark, sf, "documents")
+            .select("lang", F.explode(F.split("text", " ")).alias("tok")))
+    return toks.select("lang", F.expr(_TOK_BUCKET_SPARK).alias("b"))
+
+
 def d66_heavy_hitter_buckets(spark: SparkSession, sf: str) -> DataFrame:
     """Per-language heavy-hitter token buckets via `approx_top_k` (the
     round-8 probe find left un-queried because its k-boundary tie-break
@@ -4971,11 +4924,7 @@ def d66_heavy_hitter_buckets(spark: SparkSession, sf: str) -> DataFrame:
     DETERMINISTIC set (a blocklist build, a stop-token table) should
     publish the strict-majority stratum, not the raw k rows.
     """
-    docs = t(spark, sf, "documents")
-    toks = docs.select("lang",
-                       F.explode(F.split("text", " ")).alias("tok"))
-    sk = (toks.select("lang", F.expr(_TOK_BUCKET_SPARK).alias("b"))
-          .groupBy("lang")
+    sk = (_lang_tok_buckets(spark, sf).groupBy("lang")
           .agg(F.expr(f"approx_top_k(b, {_D66_K}, {_D66_MAXTRACK})")
                .alias("tk")))
     bounded = sk.select(
@@ -5040,11 +4989,7 @@ def d67_hll_lang_coverage(spark: SparkSession, sf: str) -> DataFrame:
     Gate exactness: see _D67_LGK. The triangle join is constant-size
     (5x5 sketch states) — allowlisted BNLJ like d64's pair join.
     """
-    docs = t(spark, sf, "documents")
-    toks = docs.select("lang",
-                       F.explode(F.split("text", " ")).alias("tok"))
-    sk = (toks.select("lang", F.expr(_TOK_BUCKET_SPARK).alias("b"))
-          .groupBy("lang")
+    sk = (_lang_tok_buckets(spark, sf).groupBy("lang")
           .agg(F.expr(f"hll_sketch_agg(b, {_D67_LGK})").alias("sk")))
     own = sk.select("lang",
                     F.expr("hll_sketch_estimate(sk)").cast("long")
@@ -5168,23 +5113,7 @@ w{tag} AS (
 
 def _d68_sql() -> str:
     return rf"""
-WITH labeled AS (
-  SELECT doc_id, text,
-{_D60_RULES_DUCK}
-              ELSE 1 END AS y0,
-{_D63_SPLIT_DUCK}
-         {_D60_FEATS_DUCK} AS feats
-  FROM documents
-),
-lab AS (
-  SELECT doc_id, split, feats,
-         CASE WHEN y0 = 0 THEN 0
-              WHEN row_number() OVER (PARTITION BY md5(text)
-                                      ORDER BY doc_id) > 1 THEN 0
-              ELSE 1 END AS y
-  FROM labeled
-),
-{_d60_occ_cte('doc_id, split, y', 'lab')},
+WITH {_d65_split_ctes('doc_id', 'doc_id')},
 {_d68_weight_ctes('full', 'occ')},
 {_d68_weight_ctes('tr', "occ WHERE split = 'train'")},
 scored AS (
@@ -5407,6 +5336,18 @@ _D71_KEYLEN = 20          # variant fan is ~(KEYLEN^2)/2 per key: ~231 at 20
 _D71_ALIAS_OFFSET = 10_000_000
 
 
+# d71's first edit at p1, by op (substitute 'q', delete, insert 'x'):
+# the CASE arms both engines evaluate (Spark through F.expr)
+_D71_EDIT1_ARMS = """
+           WHEN 0 THEN concat(substring(key, 1, p1 - 1), 'q',
+                              substring(key, p1 + 1))
+           WHEN 1 THEN concat(substring(key, 1, p1 - 1),
+                              substring(key, p1 + 1))
+           ELSE concat(substring(key, 1, p1 - 1), 'x',
+                       substring(key, p1))
+         END"""
+
+
 def d71_fuzzy_dedup_depth2(spark: SparkSession, sf: str) -> DataFrame:
     """Entity-resolution fuzzy dedup, general edit distance <= 2:
     deterministic typo'd aliases (1 or 2 of substitute/delete/insert,
@@ -5437,15 +5378,7 @@ def d71_fuzzy_dedup_depth2(spark: SparkSession, sf: str) -> DataFrame:
     # id div 4 mod 3), then for id % 8 == 0 a second edit — always a
     # substitution at a different position ON THE EDITED STRING, giving
     # true distance-2 pairs (sub+sub, del+sub, ins+sub).
-    edit1 = """
-      CASE pmod(id div 4, 3)
-        WHEN 0 THEN concat(substring(key, 1, p1 - 1), 'q',
-                           substring(key, p1 + 1))
-        WHEN 1 THEN concat(substring(key, 1, p1 - 1),
-                           substring(key, p1 + 1))
-        ELSE concat(substring(key, 1, p1 - 1), 'x',
-                    substring(key, p1))
-      END"""
+    edit1 = f"CASE pmod(id div 4, 3){_D71_EDIT1_ARMS}"
     aliases = (base.filter(F.expr("id % 4 = 0"))
                .withColumn("p1", F.expr("pmod(id * 7, length(key)) + 1"))
                .withColumn("k1", F.expr(edit1))
@@ -5534,14 +5467,7 @@ e1 AS (
 ),
 e1b AS (
   SELECT id, key, p1,
-         CASE (id // 4) % 3
-           WHEN 0 THEN concat(substring(key, 1, p1 - 1), 'q',
-                              substring(key, p1 + 1))
-           WHEN 1 THEN concat(substring(key, 1, p1 - 1),
-                              substring(key, p1 + 1))
-           ELSE concat(substring(key, 1, p1 - 1), 'x',
-                       substring(key, p1))
-         END AS k1
+         CASE (id // 4) % 3{_D71_EDIT1_ARMS} AS k1
   FROM e1
 ),
 e2 AS (
@@ -5601,7 +5527,7 @@ FROM verified
 # pairwise edit distance >= 2, no deletion of one equals another, and no
 # 'q'/'x' (the substitution/insertion characters) anywhere — so every
 # injected corruption is at true token distance EXACTLY 1 and never
-# lands on a vocabulary word (tests/test_plans_round10c.py pins all
+# lands on a vocabulary word (tests/test_plans_d.py pins all
 # three properties)
 _D73_VOCAB = ("alder birch cedar delta ember ferro grove helio indigo "
               "jasper kappa lemon mango nylon ocean piano river stone "
@@ -5781,15 +5707,26 @@ def _d73_duck_tokens() -> str:
     return ", ".join(toks)
 
 
-D73_SQL = f"""
-WITH base AS (
+# d73/d75 oracle: the customer names as four tokens each (base, named),
+# and the one-edit corruption ct of the picked token tok at position p
+_D73_NAMED_CTES = f"""base AS (
   SELECT CAST(c_custkey AS BIGINT) AS id,
          CAST(regexp_replace(c_name, '[^0-9]', '', 'g') AS BIGINT) AS nid
   FROM customer
 ),
 named AS (
   SELECT id, {_d73_duck_tokens()} FROM base
-),
+)"""
+_D73_CORRUPT_DUCK = """         CASE (id // 16) % 3
+           WHEN 0 THEN substring(tok, 1, p - 1) || 'q'
+                       || substring(tok, p + 1)
+           WHEN 1 THEN substring(tok, 1, p - 1) || substring(tok, p + 1)
+           ELSE substring(tok, 1, p - 1) || 'x' || substring(tok, p)
+         END AS ct"""
+
+
+D73_SQL = f"""
+WITH {_D73_NAMED_CTES},
 picked AS (
   SELECT id, t1, t2, t3, t4,
          ((id // 4) % 4) + 1 AS ti,
@@ -5803,12 +5740,7 @@ edited AS (
 ),
 corrupted AS (
   SELECT id, t1, t2, t3, t4, ti,
-         CASE (id // 16) % 3
-           WHEN 0 THEN substring(tok, 1, p - 1) || 'q'
-                       || substring(tok, p + 1)
-           WHEN 1 THEN substring(tok, 1, p - 1) || substring(tok, p + 1)
-           ELSE substring(tok, 1, p - 1) || 'x' || substring(tok, p)
-         END AS ct
+{_D73_CORRUPT_DUCK}
   FROM edited
 ),
 aliases AS (
@@ -6061,7 +5993,7 @@ def d75_transposed_typo_dedup(spark: SparkSession, sf: str) -> DataFrame:
     residual multiset (vocabulary frequency cannot inflate candidate
     volume — names must agree on every other token, in any order), and
     the final crossJoin is 1-row x 1-row stats assembly (pinned
-    no-cartesian in tests/test_plans_round11b.py).
+    no-cartesian in tests/test_plans_d.py).
     """
     corpus = _d75_corpus(spark, sf)
     verified = _d75_verified_pairs(corpus)
@@ -6086,14 +6018,7 @@ def d75_transposed_typo_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # corpus + brute-force scoring CTE members
-_D75_ORACLE_CTES = f"""base AS (
-  SELECT CAST(c_custkey AS BIGINT) AS id,
-         CAST(regexp_replace(c_name, '[^0-9]', '', 'g') AS BIGINT) AS nid
-  FROM customer
-),
-named AS (
-  SELECT id, {_d73_duck_tokens()} FROM base
-),
+_D75_ORACLE_CTES = f"""{_D73_NAMED_CTES},
 listed AS (
   SELECT id, [t1, t2, t3, t4] AS toks FROM named
 ),
@@ -6115,12 +6040,7 @@ rt_edited AS (
 ),
 rt_corrupted AS (
   SELECT id, toks, ti,
-         CASE (id // 16) % 3
-           WHEN 0 THEN substring(tok, 1, p - 1) || 'q'
-                       || substring(tok, p + 1)
-           WHEN 1 THEN substring(tok, 1, p - 1) || substring(tok, p + 1)
-           ELSE substring(tok, 1, p - 1) || 'x' || substring(tok, p)
-         END AS ct
+{_D73_CORRUPT_DUCK}
   FROM rt_edited
 ),
 rot_typo AS (

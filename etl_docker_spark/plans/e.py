@@ -98,11 +98,12 @@ FROM pairs WHERE cos_raw >= 0.4
 # ---------------------------------------------------------------- e03 recall
 
 
-def e03_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
-    """ANN quality measurement: how many exact top-5 neighbors the IVF
-    bucketing (same floor-grid as e02) retains per query — the recall side
-    of the speed/recall trade, computed inside the engine."""
-    from etl_docker_spark.llm.similarity import brute_force_knn, bucket_expr
+def _grid_recall_frames(spark: SparkSession, sf: str
+                        ) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(exact, bucketed, qb) for the e02 grid's recall checks: the exact
+    top-5 (query_id, neighbor_id) of vectors 0-7, every vector's (b1, b2)
+    cell, and those queries' own cells."""
+    from etl_docker_spark.llm.similarity import bucket_expr
 
     emb = t(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 8)
@@ -115,9 +116,22 @@ def e03_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
     )
     qb = (bucketed.filter(F.col("vec_id") < 8)
           .select(F.col("vec_id").alias("query_id"), "b1", "b2"))
-    cand = (qb.join(bucketed.withColumnRenamed("vec_id", "neighbor_id"), ["b1", "b2"])
+    return exact, bucketed, qb
+
+
+def _cell_candidates(qcells: DataFrame, bucketed: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id): every other vector in a probed cell."""
+    return (qcells.join(bucketed.withColumnRenamed("vec_id", "neighbor_id"), ["b1", "b2"])
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id"))
+
+
+def e03_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
+    """ANN quality measurement: how many exact top-5 neighbors the IVF
+    bucketing (same floor-grid as e02) retains per query — the recall side
+    of the speed/recall trade, computed inside the engine."""
+    exact, bucketed, qb = _grid_recall_frames(spark, sf)
+    cand = _cell_candidates(qb, bucketed)
     hits = exact.join(cand, ["query_id", "neighbor_id"], "left_semi")
     return (exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
             .join(hits.groupBy("query_id").agg(F.count("*").alias("n_hits")),
@@ -149,30 +163,14 @@ def e04_multiprobe_recall(spark: SparkSession, sf: str) -> DataFrame:
     ENUMERATED so candidate generation stays an equi-join at any probe
     radius (llm.similarity.probe_cells) — the scalable multi-probe shape.
     """
-    from etl_docker_spark.llm.similarity import (
-        brute_force_knn, bucket_expr, probe_cells)
+    from etl_docker_spark.llm.similarity import probe_cells
 
-    emb = t(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 8)
-    exact = brute_force_knn(emb, queries, k=5).select("query_id", "neighbor_id")
-
-    bucketed = emb.select(
-        F.col("vec_id"),
-        bucket_expr(F.col("embedding"), 1).alias("b1"),
-        bucket_expr(F.col("embedding"), 2).alias("b2"),
-    )
-    qb = (bucketed.filter(F.col("vec_id") < 8)
-          .select(F.col("vec_id").alias("query_id"), "b1", "b2"))
+    exact, bucketed, qb = _grid_recall_frames(spark, sf)
     q9 = (qb.select("query_id",
                     F.explode(probe_cells(F.col("b1"), F.col("b2"), 1)).alias("c"))
           .select("query_id", F.col("c.b1").alias("b1"), F.col("c.b2").alias("b2")))
-    cand1 = (q9
-             .join(bucketed.withColumnRenamed("vec_id", "neighbor_id"), ["b1", "b2"])
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .select("query_id", "neighbor_id"))
-    cand0 = (qb.join(bucketed.withColumnRenamed("vec_id", "neighbor_id"), ["b1", "b2"])
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .select("query_id", "neighbor_id"))
+    cand1 = _cell_candidates(q9, bucketed)
+    cand0 = _cell_candidates(qb, bucketed)
     h0 = (exact.join(cand0, ["query_id", "neighbor_id"], "left_semi")
           .groupBy("query_id").agg(F.count("*").alias("n_hits_p0")))
     h1 = (exact.join(cand1, ["query_id", "neighbor_id"], "left_semi")
@@ -252,38 +250,57 @@ def _ivf_train_on(e: DataFrame) -> DataFrame:
             F.zip_with(qv, cv, lambda x, y: (x - y) * (x - y)),
             F.lit(0).cast("long"), lambda a, v: a + v)
 
-    from pyspark.sql import Window
+    a1 = _seed_assignment(e, c0, int_dist)
+    return _nearest_centroid(a1.select("vec_id", "qv"), _centroid_means(a1))
 
-    w = Window.partitionBy("vec_id")
-    a1 = (e.crossJoin(F.broadcast(c0))
-          .select("vec_id", "qv", F.col("cid"),
-                  int_dist(F.col("qv"), F.col("cv")).alias("dist"))
-          .withColumn("rn", F.row_number().over(
-              w.orderBy(F.asc("dist"), F.asc("cid"))))
-          .filter(F.col("rn") == 1)
-          .select("vec_id", "qv", F.col("cid").alias("cluster")))
 
+def _seed_assignment(e: DataFrame, c0: DataFrame, int_dist) -> DataFrame:
+    """(vec_id, qv, cluster): Lloyd's first assignment of each (vec_id, qv)
+    row to its nearest seed (cid, cv) under the integer distance int_dist,
+    ties to the lower cid."""
+    return (e.crossJoin(F.broadcast(c0))
+            .select("vec_id", "qv", F.col("cid"),
+                    int_dist(F.col("qv"), F.col("cv")).alias("dist"))
+            .withColumn("rn", F.row_number().over(
+                Window.partitionBy("vec_id")
+                .orderBy(F.asc("dist"), F.asc("cid"))))
+            .filter(F.col("rn") == 1)
+            .select("vec_id", "qv", F.col("cid").alias("cluster")))
+
+
+def _centroid_means(a1: DataFrame) -> DataFrame:
+    """(cluster, cv): each cluster's exact per-dim mean (integer sum /
+    count in DOUBLE) of its members' qv, as an array in dim order."""
     comp = a1.select("cluster", F.posexplode("qv").alias("dim", "val"))
     cent = (comp.groupBy("cluster", "dim")
             .agg((F.sum("val").cast("double") / F.count("*")).alias("m")))
-    cent_l = (cent.groupBy("cluster")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                  lambda s: s["m"]).alias("cv")))
+    return (cent.groupBy("cluster")
+            .agg(F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda s: s["m"]).alias("cv")))
 
-    def dbl_dist(qv, cv):
-        return F.aggregate(
-            F.zip_with(qv, cv,
-                       lambda x, y: (x.cast("double") - y)
-                       * (x.cast("double") - y)),
-            F.lit(0.0), lambda a, v: a + v)
 
-    return (a1.select("vec_id", "qv")
-            .crossJoin(F.broadcast(cent_l))
+def _dbl_dist(qv, cv):
+    """Left-fold double squared distance between an integer vector and a
+    centroid — zip_with/aggregate (HOF) on purpose: the unrolled-chain
+    variant is measurably slower (see llm/similarity.py), and the fold
+    order is what the oracle's list_reduce mirrors."""
+    return F.aggregate(
+        F.zip_with(qv, cv,
+                   lambda x, y: (x.cast("double") - y)
+                   * (x.cast("double") - y)),
+        F.lit(0.0), lambda a, v: a + v)
+
+
+def _nearest_centroid(v: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cluster): each (vec_id, qv) row's nearest centroid
+    (cluster, cv) by `_dbl_dist`, ties to the lower cluster."""
+    return (v.crossJoin(F.broadcast(cents))
             .select("vec_id", F.col("cluster"),
-                    dbl_dist(F.col("qv"), F.col("cv")).alias("dist"))
+                    _dbl_dist(F.col("qv"), F.col("cv")).alias("dist"))
             .withColumn("rn", F.row_number().over(
-                w.orderBy(F.asc("dist"), F.asc("cluster"))))
+                Window.partitionBy("vec_id")
+                .orderBy(F.asc("dist"), F.asc("cluster"))))
             .filter(F.col("rn") == 1)
             .select("vec_id", "cluster"))
 
@@ -364,6 +381,19 @@ emb AS (
 ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id))"""
 
 
+def _cos_top_k_duck(k: int, cols: str = "") -> str:
+    """The final SELECT of a cosine search oracle: each query's k best
+    rows of `scored` (cos_raw desc, then neighbor_id), carrying the
+    extra output columns cols (a trailing ', ' included)."""
+    return f"""SELECT query_id, neighbor_id, {cols}round(cos_raw, 8) AS cosine,
+       CAST(row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos_raw DESC, neighbor_id ASC)
+            AS BIGINT) AS rank
+FROM scored
+QUALIFY rank <= {k}
+"""
+
+
 def _cell_knn_ctes(nq: int) -> str:
     """The queries vec_id < `nq` (`q`) and the cosine of each against
     every other vector of its cell (`scored`, left open for a candidate
@@ -383,6 +413,48 @@ scored AS (
 # ---------------------------------------------------------------- e06
 
 
+def _cell_vectors(spark: SparkSession, sf: str, *cols: str) -> DataFrame:
+    """(vec_id, *cols, embedding, n2, cluster): every vector with its
+    squared norm and its e05 cell (the memoized assignments)."""
+    from etl_docker_spark.llm.similarity import norm2_expr
+
+    assign = e05_assignments(spark, sf)
+    e = t(spark, sf, "embeddings").select(
+        "vec_id", *cols, "embedding",
+        norm2_expr(F.col("embedding")).alias("n2"))
+    return e.join(assign, "vec_id")
+
+
+def _cell_cosine(ea: DataFrame, cand: DataFrame, nq: int,
+                 *cols: str) -> DataFrame:
+    """(query_id, neighbor_id, *cols, cosine): the queries (vectors below
+    nq in `_cell_vectors` frame ea) broadcast into their cells, scored by
+    exact cosine against every other candidate row of cand in the cell."""
+    from etl_docker_spark.llm.similarity import dot_expr
+
+    q = (ea.filter(F.col("vec_id") < nq)
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv"),
+                 F.col("n2").alias("qn2"), "cluster"))
+    return (cand.join(F.broadcast(q), "cluster")
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", F.col("vec_id").alias("neighbor_id"), *cols,
+                    (dot_expr(F.col("qv"), F.col("embedding"))
+                     / F.sqrt(F.col("qn2") * F.col("n2"))).alias("cosine")))
+
+
+def _cell_top_k(scored: DataFrame, k: int, *cols: str) -> DataFrame:
+    """Each query's k best rows of a (query_id, neighbor_id, *cols,
+    cosine) frame such as `_cell_cosine`'s, ranked by cosine desc then
+    neighbor_id, with the cosine rounded to 8 places."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", *cols,
+                    F.round("cosine", 8).alias("cosine"), "rank"))
+
+
 def e06_trained_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
     """ANN search over the TRAINED index: corpus and queries are assigned to
     e05's k-means cells, candidates share the query's cell, exact cosine
@@ -396,33 +468,11 @@ def e06_trained_ivf_search(spark: SparkSession, sf: str) -> DataFrame:
     assignment frame is localCheckpointed once and reused by both the
     corpus and query sides (single training pass).
     """
-    from etl_docker_spark.llm.similarity import norm2_expr
     from etl_docker_spark.plans._util import ensure_session_confs
 
     ensure_session_confs(spark)
-    assign = e05_assignments(spark, sf)
-    e = t(spark, sf, "embeddings").select(
-        "vec_id", "embedding", norm2_expr(F.col("embedding")).alias("n2"))
-    ea = e.join(assign, "vec_id")
-    q = (ea.filter(F.col("vec_id") < _KM_K)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("n2").alias("qn2"), "cluster"))
-    from etl_docker_spark.llm.similarity import dot_expr
-
-    from pyspark.sql import Window
-
-    scored = (ea.join(F.broadcast(q), "cluster")
-              .filter(F.col("vec_id") != F.col("query_id"))
-              .select("query_id", F.col("vec_id").alias("neighbor_id"),
-                      (dot_expr(F.col("qv"), F.col("embedding"))
-                       / F.sqrt(F.col("qn2") * F.col("n2"))).alias("cosine")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id",
-                    F.round("cosine", 8).alias("cosine"), "rank"))
+    ea = _cell_vectors(spark, sf)
+    return _cell_top_k(_cell_cosine(ea, ea, _KM_K), 5)
 
 
 E06_SQL = f"""
@@ -434,13 +484,7 @@ emb AS (
 ea AS (SELECT emb.*, assign.cluster FROM emb JOIN assign USING (vec_id)),
 {_cell_knn_ctes(_KM_K)}
 )
-SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
+{_cos_top_k_duck(5)}"""
 
 
 # ---------------------------------------------------------------- e07
@@ -633,24 +677,11 @@ _PQ_Q = 1 << 20       # same component quantization as e05
 _PQ_DIMS = 16
 
 
-def _pq_dbl_dist(qv, cv):
-    """Left-fold double squared distance over a 16-dim subvector —
-    zip_with/aggregate (HOF) on purpose: the unrolled-chain variant is
-    measurably slower (see llm/similarity.py), and the fold order is what
-    the oracle's list_reduce mirrors."""
-    return F.aggregate(
-        F.zip_with(qv, cv,
-                   lambda x, y: (x.cast("double") - y)
-                   * (x.cast("double") - y)),
-        F.lit(0.0), lambda a, v: a + v)
-
-
-def _pq_train(sub: DataFrame, w: Window) -> tuple[DataFrame, DataFrame]:
-    """One subspace's k-means coding: e05's two-Lloyd-iteration scheme
-    (integer first-assignment, exact-mean centroids, double re-assignment)
-    over a 16-dim quantized subvector. Input: (vec_id, qv); returns
-    (codes, centroids) — codes (vec_id, cluster), centroids (cluster, cv
-    as array<double>)."""
+def _pq_train(sub: DataFrame) -> DataFrame:
+    """One subspace's k-means codebook: e05's Lloyd scheme (integer
+    first-assignment, exact-mean centroids) over a 16-dim quantized
+    subvector. Input: (vec_id, qv); returns the centroids (cluster, cv as
+    array<double>), which `_nearest_centroid` codes against."""
     c0 = (sub.filter(F.col("vec_id") < _PQ_K)
           .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv")))
 
@@ -661,30 +692,7 @@ def _pq_train(sub: DataFrame, w: Window) -> tuple[DataFrame, DataFrame]:
             acc = acc + d * d
         return acc
 
-    a1 = (sub.crossJoin(F.broadcast(c0))
-          .select("vec_id", "qv", "cid",
-                  int_dist(F.col("qv"), F.col("cv")).alias("dist"))
-          .withColumn("rn", F.row_number().over(
-              w.orderBy(F.asc("dist"), F.asc("cid"))))
-          .filter(F.col("rn") == 1)
-          .select("vec_id", "qv", F.col("cid").alias("cluster")))
-    comp = a1.select("cluster", F.posexplode("qv").alias("dim", "val"))
-    cent = (comp.groupBy("cluster", "dim")
-            .agg((F.sum("val").cast("double") / F.count("*")).alias("m")))
-    cent_l = (cent.groupBy("cluster")
-              .agg(F.transform(
-                  F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                  lambda s: s["m"]).alias("cv")))
-
-    codes = (a1.select("vec_id", "qv")
-             .crossJoin(F.broadcast(cent_l))
-             .select("vec_id", "cluster",
-                     _pq_dbl_dist(F.col("qv"), F.col("cv")).alias("dist"))
-             .withColumn("rn", F.row_number().over(
-                 w.orderBy(F.asc("dist"), F.asc("cluster"))))
-             .filter(F.col("rn") == 1)
-             .select("vec_id", F.col("cluster")))
-    return codes, cent_l
+    return _centroid_means(_seed_assignment(sub, c0, int_dist))
 
 
 def _pq_base(spark: SparkSession, sf: str) -> DataFrame:
@@ -708,29 +716,18 @@ def _pq_base(spark: SparkSession, sf: str) -> DataFrame:
 def _pq_trained(spark: SparkSession, sf: str,
                 s: int) -> tuple[DataFrame, DataFrame]:
     """Memoized (codes, centroids) for subspace `s`: the training pass
-    (_pq_train's Lloyd iterations) runs once per session; the code frame
-    is the second assignment rebuilt from the pinned centroids (the same
-    expressions _pq_train uses, so values are identical). Queries that
-    share the index (e09/e10/e11/e12) stop re-deriving it — the
-    train-once/serve-many contract a real ANN index has."""
+    (`_pq_train`) runs once per session; the code frame is the second
+    Lloyd assignment (`_nearest_centroid`) against the pinned centroids.
+    Queries that share the index (e09/e10/e11/e12) stop re-deriving it —
+    the train-once/serve-many contract a real ANN index has."""
     from etl_docker_spark.llm.index_cache import memo_frame
 
     base = _pq_base(spark, sf)
     sub = base.select("vec_id", F.col(f"qv{s}").alias("qv"))
-    w = Window.partitionBy("vec_id")
     cents = memo_frame(spark, f"pq_cents:{s}:{sf}",
-                       lambda: _pq_train(sub, w)[1], sf_dir=sf)
-
-    def build_codes() -> DataFrame:
-        return (sub.crossJoin(F.broadcast(cents))
-                .select("vec_id", "cluster",
-                        _pq_dbl_dist(F.col("qv"), F.col("cv")).alias("dist"))
-                .withColumn("rn", F.row_number().over(
-                    w.orderBy(F.asc("dist"), F.asc("cluster"))))
-                .filter(F.col("rn") == 1)
-                .select("vec_id", F.col("cluster")))
-
-    return memo_frame(spark, f"pq_codes:{s}:{sf}", build_codes,
+                       lambda: _pq_train(sub), sf_dir=sf)
+    return memo_frame(spark, f"pq_codes:{s}:{sf}",
+                      lambda: _nearest_centroid(sub, cents),
                       sf_dir=sf), cents
 
 
@@ -859,7 +856,7 @@ def _adc_tables(spark: SparkSession,
         dts.append(
             q.crossJoin(F.broadcast(cents))
             .select("query_id", F.col("cluster").alias(f"code{s}"),
-                    _pq_dbl_dist(F.col("qvq"), F.col("cv")).alias(f"d{s}")))
+                    _dbl_dist(F.col("qvq"), F.col("cv")).alias(f"d{s}")))
         codes = codes.withColumnRenamed("cluster", f"code{s}")
         out = codes if out is None else out.join(codes, "vec_id")
     return out, dts
@@ -1068,6 +1065,22 @@ _SQ_K = 5
 _SQ_Q = 1024
 
 
+def _sq8_components(spark: SparkSession, sf: str
+                    ) -> tuple[DataFrame, DataFrame]:
+    """(comps, q) for SQ8: every vector's floor-quantized components
+    (id, d, qd), d 1-based, and those of the query vectors id < _SQ_NQ
+    as (qid, d, q_qd)."""
+    emb = t(spark, sf, "embeddings")
+    comps = (emb.select(F.col("vec_id").alias("id"),
+                        F.posexplode("embedding").alias("pos", "val"))
+             .select("id", (F.col("pos") + 1).alias("d"),
+                     F.floor(F.col("val").cast("double") * _SQ_Q)
+                     .cast("long").alias("qd")))
+    q = (comps.filter(F.col("id") < _SQ_NQ)
+         .select(F.col("id").alias("qid"), "d", F.col("qd").alias("q_qd")))
+    return comps, q
+
+
 def e13_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
     """Scalar-quantization (SQ8) ANN search in exact integer arithmetic.
 
@@ -1084,12 +1097,7 @@ def e13_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
     into the scoring join; one (query, corpus) shuffle for the score
     aggregate; top-k by window, ties broken by id.
     """
-    emb = t(spark, sf, "embeddings")
-    comps = (emb.select(F.col("vec_id").alias("id"),
-                        F.posexplode("embedding").alias("pos", "val"))
-             .select("id", (F.col("pos") + 1).alias("d"),
-                     F.floor(F.col("val").cast("double") * _SQ_Q)
-                     .cast("long").alias("qd")))
+    comps, q = _sq8_components(spark, sf)
     stats = comps.groupBy("d").agg(F.min("qd").alias("mn"),
                                    F.max("qd").alias("mx"))
     recon = (comps.join(F.broadcast(stats), "d")
@@ -1097,8 +1105,6 @@ def e13_sq8_search(spark: SparkSession, sf: str) -> DataFrame:
                      F.expr("mn + ((((qd - mn) * 255)"
                             " div greatest(mx - mn, 1)) * (mx - mn))"
                             " div 255").alias("r")))
-    q = (comps.filter(F.col("id") < _SQ_NQ)
-         .select(F.col("id").alias("qid"), "d", F.col("qd").alias("q_qd")))
     scored = (recon.join(F.broadcast(q), "d")
               .filter(F.col("id") != F.col("qid"))
               .groupBy("qid", "id")
@@ -1152,14 +1158,7 @@ def e14_sq8_recall(spark: SparkSession, sf: str) -> DataFrame:
     query. Closes the compression family's measurement set: e03 (grid
     IVF), e12 (IVFPQ), e14 (SQ8).
     """
-    emb = t(spark, sf, "embeddings")
-    comps = (emb.select(F.col("vec_id").alias("id"),
-                        F.posexplode("embedding").alias("pos", "val"))
-             .select("id", (F.col("pos") + 1).alias("d"),
-                     F.floor(F.col("val").cast("double") * _SQ_Q)
-                     .cast("long").alias("qd")))
-    q = (comps.filter(F.col("id") < _SQ_NQ)
-         .select(F.col("id").alias("qid"), "d", F.col("qd").alias("q_qd")))
+    comps, q = _sq8_components(spark, sf)
     exact_scored = (comps.join(F.broadcast(q), "d")
                     .filter(F.col("id") != F.col("qid"))
                     .groupBy("qid", "id")
@@ -1234,30 +1233,10 @@ def e15_filtered_knn(spark: SparkSession, sf: str) -> DataFrame:
     directly divides the scoring work — the property that makes
     filter-during-search the scalable formulation.
     """
-    from etl_docker_spark.llm.similarity import dot_expr, norm2_expr
-
-    assign = e05_assignments(spark, sf)
-    e = t(spark, sf, "embeddings").select(
-        "vec_id", "label", "embedding",
-        norm2_expr(F.col("embedding")).alias("n2"))
-    ea = e.join(assign, "vec_id")
-    q = (ea.filter(F.col("vec_id") < _E15_NQ)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("n2").alias("qn2"), "cluster"))
-    cand = (ea.filter(F.col("label") % 3 == 1)
-            .join(F.broadcast(q), "cluster")
-            .filter(F.col("vec_id") != F.col("query_id")))
-    scored = cand.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"), "label",
-        (dot_expr(F.col("qv"), F.col("embedding"))
-         / F.sqrt(F.col("qn2") * F.col("n2"))).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= _E15_K)
-            .select("query_id", "neighbor_id", "label",
-                    F.round("cosine", 8).alias("cosine"), "rank"))
+    ea = _cell_vectors(spark, sf, "label")
+    cand = ea.filter(F.col("label") % 3 == 1)
+    return _cell_top_k(_cell_cosine(ea, cand, _E15_NQ, "label"), _E15_K,
+                       "label")
 
 
 def _e15_sql() -> str:
@@ -1280,13 +1259,7 @@ scored AS (
   FROM ea JOIN q ON ea.cluster = q.cluster AND ea.vec_id <> q.query_id
   WHERE ea.label % 3 = 1
 )
-SELECT query_id, neighbor_id, label, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {_E15_K}
-"""
+{_cos_top_k_duck(_E15_K, "label, ")}"""
 
 
 # ---------------------------------------------------------------- e16
@@ -1308,22 +1281,8 @@ def e16_range_search(spark: SparkSession, sf: str) -> DataFrame:
     Reuses the memoized cell assignments (index_cache): zero training
     cost after any e05-family query has run.
     """
-    from etl_docker_spark.llm.similarity import dot_expr, norm2_expr
-
-    assign = e05_assignments(spark, sf)
-    e = t(spark, sf, "embeddings").select(
-        "vec_id", "embedding", norm2_expr(F.col("embedding")).alias("n2"))
-    ea = e.join(assign, "vec_id")
-    q = (ea.filter(F.col("vec_id") < _E16_NQ)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("n2").alias("qn2"), "cluster"))
-    cand = (ea.join(F.broadcast(q), "cluster")
-            .filter(F.col("vec_id") != F.col("query_id")))
-    scored = cand.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        (dot_expr(F.col("qv"), F.col("embedding"))
-         / F.sqrt(F.col("qn2") * F.col("n2"))).alias("cosine"))
+    ea = _cell_vectors(spark, sf)
+    scored = _cell_cosine(ea, ea, _E16_NQ)
     return (scored.filter(F.col("cosine") >= _E16_TAU)
             .select("query_id", "neighbor_id",
                     F.round("cosine", 8).alias("cosine")))
@@ -1417,31 +1376,11 @@ def e18_tombstone_search(spark: SparkSession, sf: str) -> DataFrame:
     e17 (occupancy rebalance): together they are the compact-later,
     serve-correct-now contract of a production vector index.
     """
-    from etl_docker_spark.llm.similarity import dot_expr, norm2_expr
-
-    assign = e05_assignments(spark, sf)
-    e = t(spark, sf, "embeddings").select(
-        "vec_id", "embedding", norm2_expr(F.col("embedding")).alias("n2"))
-    ea = e.join(assign, "vec_id")
+    ea = _cell_vectors(spark, sf)
     tombstones = (ea.filter(F.pmod("vec_id", F.lit(13)) == 0)
                   .select("vec_id"))
-    q = (ea.filter(F.col("vec_id") < _E18_NQ)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("qv"),
-                 F.col("n2").alias("qn2"), "cluster"))
-    cand = (ea.join(F.broadcast(tombstones), "vec_id", "left_anti")
-            .join(F.broadcast(q), "cluster")
-            .filter(F.col("vec_id") != F.col("query_id")))
-    scored = cand.select(
-        "query_id", F.col("vec_id").alias("neighbor_id"),
-        (dot_expr(F.col("qv"), F.col("embedding"))
-         / F.sqrt(F.col("qn2") * F.col("n2"))).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= _E18_K)
-            .select("query_id", "neighbor_id",
-                    F.round("cosine", 8).alias("cosine"), "rank"))
+    live = ea.join(F.broadcast(tombstones), "vec_id", "left_anti")
+    return _cell_top_k(_cell_cosine(ea, live, _E18_NQ), _E18_K)
 
 
 def _e18_sql() -> str:
@@ -1450,13 +1389,7 @@ WITH {_E05_EA_CTES},
 {_cell_knn_ctes(_E18_NQ)}
   WHERE ea.vec_id % 13 <> 0
 )
-SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= {_E18_K}
-"""
+{_cos_top_k_duck(_E18_K)}"""
 
 
 # ---------------------------------------------------------------- e19
@@ -1708,15 +1641,7 @@ def e21_base_delta_serving(spark: SparkSession, sf: str) -> DataFrame:
                       (dot_expr(F.col("qv"), F.col("embedding"))
                        / F.sqrt(F.col("qn2") * F.col("n2")))
                       .alias("cosine")))
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "neighbor_id", "segment",
-                    F.round("cosine", 8).alias("cosine"), "rank"))
+    return _cell_top_k(scored, 5, "segment")
 
 
 def _e21_sql() -> str:
@@ -1755,13 +1680,7 @@ scored AS (
          {_DOT2.format(a='qv', b='embedding')} / sqrt(qn2 * n2) AS cos_raw
   FROM cand
 )
-SELECT query_id, neighbor_id, segment, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS rank
-FROM scored
-QUALIFY rank <= 5
-"""
+{_cos_top_k_duck(5, "segment, ")}"""
 
 
 # ---------------------------------------------------------------- e22
@@ -1770,6 +1689,53 @@ _E22_PREFIX = 16     # matryoshka prefix dimensions used for the shortlist
 _E22_SHORTLIST = 32  # prefix-scored candidates refined per query
 _E22_K = 5           # exact-ranked results returned
 _E22_NQ = 8          # queries = vec_id < 8, as in e01/e19
+
+
+def _exact_rerank(emb: DataFrame, shortlist: DataFrame, nq: int, k: int,
+                  *cols: str) -> DataFrame:
+    """The exact stage of a two-stage search: each shortlisted (query_id,
+    neighbor_id, *cols) row rejoins the raw embeddings of the query
+    (vec_id < nq, broadcast) and the neighbor, and each query keeps its k
+    best by full cosine (ties to the lower neighbor_id)."""
+    from etl_docker_spark.llm.similarity import cosine_expr
+
+    qv = (emb.filter(F.col("vec_id") < nq)
+          .select(F.col("vec_id").alias("query_id"),
+                  F.col("embedding").alias("qv")))
+    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
+                    F.col("embedding").alias("nv"))
+    exact = (shortlist.join(nv, "neighbor_id")
+             .join(F.broadcast(qv), "query_id")
+             .select("query_id", "neighbor_id", *cols,
+                     cosine_expr(F.col("nv"), F.col("qv")).alias("cos_raw")))
+    wq = Window.partitionBy("query_id")
+    return (exact.withColumn("exact_rank", F.row_number().over(
+        wq.orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))).cast("long"))
+        .filter(F.col("exact_rank") <= k)
+        .select("query_id", "neighbor_id",
+                F.round("cos_raw", 8).alias("cosine"),
+                "exact_rank", *cols))
+
+
+def _exact_rerank_duck(dot: str, cols: str, k: int) -> str:
+    """CTE exact and the final SELECT: the oracle twin of `_exact_rerank`
+    over the shortlist CTE `short` (nv, qv and cols), with dot the
+    `_DOT`/`_DOT2` fold template."""
+    return f"""exact AS (
+  SELECT query_id, neighbor_id, {cols},
+         {dot.format(a='nv', b='qv')}
+           / sqrt({dot.format(a='nv', b='nv')}
+                  * {dot.format(a='qv', b='qv')}) AS cos_raw
+  FROM short
+)
+SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
+       CAST(row_number() OVER (PARTITION BY query_id
+                               ORDER BY cos_raw DESC, neighbor_id ASC)
+            AS BIGINT) AS exact_rank,
+       {cols}
+FROM exact
+QUALIFY exact_rank <= {k}
+"""
 
 
 def e22_matryoshka_search(spark: SparkSession, sf: str) -> DataFrame:
@@ -1791,8 +1757,7 @@ def e22_matryoshka_search(spark: SparkSession, sf: str) -> DataFrame:
     prefix_rank near the shortlist edge is the evidence for widening
     (e20's sweep logic applies unchanged).
     """
-    from etl_docker_spark.llm.similarity import (cosine_expr, dot_expr,
-                                                 fan_out, norm2_expr)
+    from etl_docker_spark.llm.similarity import dot_expr, fan_out, norm2_expr
 
     emb = t(spark, sf, "embeddings")
     pq = F.slice("embedding", 1, _E22_PREFIX)
@@ -1814,21 +1779,7 @@ def e22_matryoshka_search(spark: SparkSession, sf: str) -> DataFrame:
         .filter(F.col("prefix_rank") <= _E22_SHORTLIST)
         .select("query_id", "neighbor_id", "prefix_rank"))
 
-    qv = (emb.filter(F.col("vec_id") < _E22_NQ)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("qv")))
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("nv"))
-    exact = (shortlist.join(nv, "neighbor_id")
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "neighbor_id", "prefix_rank",
-                     cosine_expr(F.col("nv"), F.col("qv")).alias("cos_raw")))
-    return (exact.withColumn("exact_rank", F.row_number().over(
-        wq.orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))).cast("long"))
-        .filter(F.col("exact_rank") <= _E22_K)
-        .select("query_id", "neighbor_id",
-                F.round("cos_raw", 8).alias("cosine"),
-                "exact_rank", "prefix_rank"))
+    return _exact_rerank(emb, shortlist, _E22_NQ, _E22_K, "prefix_rank")
 
 
 E22_SQL = f"""
@@ -1854,21 +1805,7 @@ short AS (
   FROM scored
   QUALIFY prefix_rank <= {_E22_SHORTLIST}
 ),
-exact AS (
-  SELECT query_id, neighbor_id, prefix_rank,
-         {_DOT.format(a='nv', b='qv')}
-           / sqrt({_DOT.format(a='nv', b='nv')}
-                  * {_DOT.format(a='qv', b='qv')}) AS cos_raw
-  FROM short
-)
-SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS exact_rank,
-       prefix_rank
-FROM exact
-QUALIFY exact_rank <= {_E22_K}
-"""
+{_exact_rerank_duck(_DOT, "prefix_rank", _E22_K)}"""
 
 
 # ---------------------------------------------------------------- e23
@@ -1907,7 +1844,7 @@ def e23_binary_hamming_search(spark: SparkSession, sf: str) -> DataFrame:
     both ranks per survivor, so shortlist-edge evidence (e20's sweep
     logic) applies unchanged.
     """
-    from etl_docker_spark.llm.similarity import cosine_expr, fan_out
+    from etl_docker_spark.llm.similarity import fan_out
 
     emb = t(spark, sf, "embeddings")
     sigs = emb.select("vec_id", sig_half(0).alias("lo"),
@@ -1927,27 +1864,28 @@ def e23_binary_hamming_search(spark: SparkSession, sf: str) -> DataFrame:
             wq.orderBy(F.asc("hamming"), F.asc("neighbor_id"))).cast("long"))
         .filter(F.col("ham_rank") <= _E23_SHORTLIST))
 
-    qv = (emb.filter(F.col("vec_id") < _E23_NQ)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("qv")))
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("nv"))
-    exact = (shortlist.join(nv, "neighbor_id")
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "neighbor_id", "hamming", "ham_rank",
-                     cosine_expr(F.col("nv"), F.col("qv")).alias("cos_raw")))
-    return (exact.withColumn("exact_rank", F.row_number().over(
-        wq.orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))).cast("long"))
-        .filter(F.col("exact_rank") <= _E23_K)
-        .select("query_id", "neighbor_id",
-                F.round("cos_raw", 8).alias("cosine"),
-                "exact_rank", "hamming", "ham_rank"))
+    return _exact_rerank(emb, shortlist, _E23_NQ, _E23_K,
+                         "hamming", "ham_rank")
 
 
 _E23_HALF = ("list_reduce(list_transform(generate_series({lo} + 1, "
              "{lo} + 32), i -> CASE WHEN embedding[i] > 0 THEN "
              "(CAST(1 AS BIGINT) << (i - {lo} - 1)) ELSE "
              "CAST(0 AS BIGINT) END), (a, b) -> a | b)")
+
+
+def _ham_short_duck(src: str, n: int) -> str:
+    """CTE short: the n nearest candidates of each query in src by
+    Hamming distance (ties to the lower neighbor_id), as ham_rank."""
+    return f"""short AS (
+  SELECT query_id, neighbor_id, nv, qv, hamming,
+         CAST(row_number() OVER (PARTITION BY query_id
+                                 ORDER BY hamming ASC, neighbor_id ASC)
+              AS BIGINT) AS ham_rank
+  FROM {src}
+  QUALIFY ham_rank <= {n}
+)"""
+
 
 E23_SQL = f"""
 WITH sig AS (
@@ -1967,29 +1905,8 @@ scored AS (
   FROM sig s CROSS JOIN q
   WHERE s.vec_id <> q.query_id
 ),
-short AS (
-  SELECT query_id, neighbor_id, nv, qv, hamming,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY hamming ASC, neighbor_id ASC)
-              AS BIGINT) AS ham_rank
-  FROM scored
-  QUALIFY ham_rank <= {_E23_SHORTLIST}
-),
-exact AS (
-  SELECT query_id, neighbor_id, hamming, ham_rank,
-         {_DOT.format(a='nv', b='qv')}
-           / sqrt({_DOT.format(a='nv', b='nv')}
-                  * {_DOT.format(a='qv', b='qv')}) AS cos_raw
-  FROM short
-)
-SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS exact_rank,
-       hamming, ham_rank
-FROM exact
-QUALIFY exact_rank <= {_E23_K}
-"""
+{_ham_short_duck('scored', _E23_SHORTLIST)},
+{_exact_rerank_duck(_DOT, "hamming, ham_rank", _E23_K)}"""
 
 
 # ---------------------------------------------------------------- e24
@@ -2017,7 +1934,6 @@ def e24_ivf_binary_funnel(spark: SparkSession, sf: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from etl_docker_spark.llm.similarity import cosine_expr
     from etl_docker_spark.plans._util import ensure_session_confs
 
     ensure_session_confs(spark)
@@ -2041,20 +1957,8 @@ def e24_ivf_binary_funnel(spark: SparkSession, sf: str) -> DataFrame:
                  wq.orderBy(F.asc("hamming"), F.asc("neighbor_id")))
                  .cast("long"))
              .filter(F.col("ham_rank") <= _E24_SHORT))
-    qv = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"))
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"),
-                    F.col("embedding").alias("nv"))
-    exact = (short.join(nv, "neighbor_id")
-             .join(F.broadcast(qv), "query_id")
-             .select("query_id", "neighbor_id", "hamming", "ham_rank",
-                     cosine_expr(F.col("nv"), F.col("qv")).alias("cos_raw")))
-    return (exact.withColumn("exact_rank", F.row_number().over(
-        wq.orderBy(F.desc("cos_raw"), F.asc("neighbor_id"))).cast("long"))
-        .filter(F.col("exact_rank") <= _E24_K)
-        .select("query_id", "neighbor_id",
-                F.round("cos_raw", 8).alias("cosine"),
-                "exact_rank", "hamming", "ham_rank"))
+    return _exact_rerank(emb, short, 8, _E24_K,
+                         "hamming", "ham_rank")
 
 
 def _e24_sql() -> str:
@@ -2077,29 +1981,8 @@ cand AS (
               AS BIGINT) AS hamming
   FROM sig s JOIN q ON s.cluster = q.cluster AND s.vec_id <> q.query_id
 ),
-short AS (
-  SELECT query_id, neighbor_id, nv, qv, hamming,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY hamming ASC, neighbor_id ASC)
-              AS BIGINT) AS ham_rank
-  FROM cand
-  QUALIFY ham_rank <= {_E24_SHORT}
-),
-exact AS (
-  SELECT query_id, neighbor_id, hamming, ham_rank,
-         {_DOT2.format(a='nv', b='qv')}
-           / sqrt({_DOT2.format(a='nv', b='nv')}
-                  * {_DOT2.format(a='qv', b='qv')}) AS cos_raw
-  FROM short
-)
-SELECT query_id, neighbor_id, round(cos_raw, 8) AS cosine,
-       CAST(row_number() OVER (PARTITION BY query_id
-                               ORDER BY cos_raw DESC, neighbor_id ASC)
-            AS BIGINT) AS exact_rank,
-       hamming, ham_rank
-FROM exact
-QUALIFY exact_rank <= {_E24_K}
-"""
+{_ham_short_duck('cand', _E24_SHORT)},
+{_exact_rerank_duck(_DOT2, "hamming, ham_rank", _E24_K)}"""
 
 
 QUERIES = {

@@ -12,6 +12,8 @@ maps each query name to its `(builder, oracle)` pair.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -2156,12 +2158,24 @@ FROM agg
 """
 
 
-_Q54_PS = """
+# q54's SQL for both engines: Spark integer division is `div`, DuckDB's
+# is `//`; src is the lineitem table or view.
+_Q54_SQL = """
+WITH ps AS (
     SELECT l_partkey, l_suppkey,
            CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * 10000
                          AS BIGINT)) {div} COUNT(*) AS BIGINT) AS avg_price_i4,
            COUNT(*) AS n_lines
     FROM {src} GROUP BY l_partkey, l_suppkey
+),
+multi AS (
+  SELECT l_partkey FROM ps GROUP BY l_partkey HAVING COUNT(*) >= 2
+)
+SELECT ps.l_partkey, ps.l_suppkey, ps.avg_price_i4, ps.n_lines
+FROM ps JOIN multi ON ps.l_partkey = multi.l_partkey
+WHERE ps.avg_price_i4 = (
+    SELECT MIN(ps2.avg_price_i4) FROM ps ps2
+    WHERE ps2.l_partkey = ps.l_partkey)
 """
 
 
@@ -2177,31 +2191,10 @@ def q54_min_cost_supplier(spark: SparkSession, sf: str) -> DataFrame:
     grouped HAVING on the same frame.
     """
     t(spark, sf, "lineitem").createOrReplaceTempView("q54_lineitem")
-    ps = _Q54_PS.format(div="div", src="q54_lineitem")
-    return spark.sql(f"""
-        WITH ps AS ({ps}),
-        multi AS (
-          SELECT l_partkey FROM ps GROUP BY l_partkey HAVING COUNT(*) >= 2
-        )
-        SELECT ps.l_partkey, ps.l_suppkey, ps.avg_price_i4, ps.n_lines
-        FROM ps JOIN multi ON ps.l_partkey = multi.l_partkey
-        WHERE ps.avg_price_i4 = (
-            SELECT MIN(ps2.avg_price_i4) FROM ps ps2
-            WHERE ps2.l_partkey = ps.l_partkey)
-    """)
+    return spark.sql(_Q54_SQL.format(div="div", src="q54_lineitem"))
 
 
-Q54_SQL = f"""
-WITH ps AS ({_Q54_PS.format(div="//", src="lineitem")}),
-multi AS (
-  SELECT l_partkey FROM ps GROUP BY l_partkey HAVING COUNT(*) >= 2
-)
-SELECT ps.l_partkey, ps.l_suppkey, ps.avg_price_i4, ps.n_lines
-FROM ps JOIN multi ON ps.l_partkey = multi.l_partkey
-WHERE ps.avg_price_i4 = (
-    SELECT MIN(ps2.avg_price_i4) FROM ps ps2
-    WHERE ps2.l_partkey = ps.l_partkey)
-"""
+Q54_SQL = _Q54_SQL.format(div="//", src="lineitem")
 
 
 # ---------------------------------------------------------------- q55
@@ -2521,16 +2514,13 @@ def q60_quarantine_routing(spark: SparkSession, sf: str) -> DataFrame:
     equality with the filter-twin oracle proves the router dropped
     nothing, duplicated nothing, and persisted every bad row.
     """
-    import shutil
-    import tempfile
-
     from etl_docker_spark.sinks.writers import route_rows_to_quarantine
 
     ev = t(spark, sf, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     valid = (F.col("event_type") != "error") & (k <= 90)
-    work = tempfile.mkdtemp(prefix="q60_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q60_", ignore_cleanup_errors=True) as work:
         clean = route_rows_to_quarantine(
             ev, valid, f"{work}/quarantine", log_path=f"{work}/audit",
             load_table="events")
@@ -2541,8 +2531,6 @@ def q60_quarantine_routing(spark: SparkSession, sf: str) -> DataFrame:
                .withColumn("n_quarantined",
                            F.lit(n_quarantined).cast("long")))
         return out.localCheckpoint()  # pin before the workdir is deleted
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q60_SQL = """
@@ -2577,9 +2565,6 @@ def q61_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
     Amounts travel as integer micros (pre-serialization round), so no
     double makes a text round-trip.
     """
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     from etl_docker_spark.sources.files import read_jsonl_with_quarantine
@@ -2593,8 +2578,8 @@ def q61_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                   F.concat(F.lit('{"event_id":'),
                            F.col("event_id").cast("string"))
                   ).otherwise(payload)
-    work = tempfile.mkdtemp(prefix="q61_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q61_", ignore_cleanup_errors=True) as work:
         ev.select(line.alias("value")).write.mode("overwrite").text(work)
         schema = T.StructType([
             T.StructField("event_id", T.LongType()),
@@ -2611,8 +2596,6 @@ def q61_jsonl_ingest(spark: SparkSession, sf: str) -> DataFrame:
                     .alias("n_users"))
                .withColumn("n_corrupt", F.lit(n_corrupt).cast("long")))
         return out.localCheckpoint()  # pin before the drop dir is deleted
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q61_SQL = """
@@ -2693,6 +2676,26 @@ FROM hits GROUP BY win_id, w_start
 # ---------------------------------------------------------------- q63
 
 
+_Q63_SQL = """
+WITH o95 AS (
+  SELECT o_custkey FROM {src}
+  WHERE o_orderdate >= DATE '1995-01-01'
+    AND o_orderdate < DATE '1996-01-01'
+),
+urgent AS (
+  SELECT o_custkey FROM {src} WHERE o_orderpriority = '1-URGENT'
+)
+SELECT 'both' AS segment, CAST(COUNT(*) AS BIGINT) AS n_customers
+FROM (SELECT * FROM o95 INTERSECT SELECT * FROM urgent)
+UNION ALL
+SELECT '1995_only', CAST(COUNT(*) AS BIGINT)
+FROM (SELECT * FROM o95 EXCEPT SELECT * FROM urgent)
+UNION ALL
+SELECT 'urgent_only', CAST(COUNT(*) AS BIGINT)
+FROM (SELECT * FROM urgent EXCEPT SELECT * FROM o95)
+"""
+
+
 def q63_set_operations(spark: SparkSession, sf: str) -> DataFrame:
     """ANSI set-operation surface: INTERSECT and EXCEPT (set semantics)
     over customer key sets, with the counts of each region surfaced.
@@ -2704,46 +2707,10 @@ def q63_set_operations(spark: SparkSession, sf: str) -> DataFrame:
     orders vs customers with URGENT-priority orders ever.
     """
     t(spark, sf, "orders").createOrReplaceTempView("q63_orders")
-    return spark.sql("""
-        WITH o95 AS (
-          SELECT o_custkey FROM q63_orders
-          WHERE o_orderdate >= DATE'1995-01-01'
-            AND o_orderdate < DATE'1996-01-01'
-        ),
-        urgent AS (
-          SELECT o_custkey FROM q63_orders
-          WHERE o_orderpriority = '1-URGENT'
-        )
-        SELECT 'both' AS segment,
-               CAST(COUNT(*) AS BIGINT) AS n_customers
-        FROM (SELECT * FROM o95 INTERSECT SELECT * FROM urgent)
-        UNION ALL
-        SELECT '1995_only', CAST(COUNT(*) AS BIGINT)
-        FROM (SELECT * FROM o95 EXCEPT SELECT * FROM urgent)
-        UNION ALL
-        SELECT 'urgent_only', CAST(COUNT(*) AS BIGINT)
-        FROM (SELECT * FROM urgent EXCEPT SELECT * FROM o95)
-    """)
+    return spark.sql(_Q63_SQL.format(src="q63_orders"))
 
 
-Q63_SQL = """
-WITH o95 AS (
-  SELECT o_custkey FROM orders
-  WHERE o_orderdate >= DATE '1995-01-01'
-    AND o_orderdate < DATE '1996-01-01'
-),
-urgent AS (
-  SELECT o_custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-)
-SELECT 'both' AS segment, CAST(COUNT(*) AS BIGINT) AS n_customers
-FROM (SELECT * FROM o95 INTERSECT SELECT * FROM urgent)
-UNION ALL
-SELECT '1995_only', CAST(COUNT(*) AS BIGINT)
-FROM (SELECT * FROM o95 EXCEPT SELECT * FROM urgent)
-UNION ALL
-SELECT 'urgent_only', CAST(COUNT(*) AS BIGINT)
-FROM (SELECT * FROM urgent EXCEPT SELECT * FROM o95)
-"""
+Q63_SQL = _Q63_SQL.format(src="orders")
 
 # ---------------------------------------------------------------- q64
 
@@ -2990,16 +2957,13 @@ def q69_dag_audit_trail(spark: SparkSession, sf: str) -> DataFrame:
     recording, and dependency-skip — proving the DAG semantics
     end-to-end rather than via unit asserts. `sf` is unused.
     """
-    import shutil
-    import tempfile
-
     from etl_docker_spark.orchestration import JobContext, Task, run_dag
     from etl_docker_spark.pipelines.incremental import ITEMS_WINDOWED
     from etl_docker_spark.sources.fake_api import fetch_items_windowed
     from etl_docker_spark.sources.rest import paginated_read_driver
 
-    work = tempfile.mkdtemp(prefix="q69_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q69_", ignore_cleanup_errors=True) as work:
         ctx = JobContext(spark=spark, warehouse=f"{work}/wh",
                          log_path=f"{work}/audit",
                          quarantine=f"{work}/quar")
@@ -3036,8 +3000,6 @@ def q69_dag_audit_trail(spark: SparkSession, sf: str) -> DataFrame:
             F.col("error_msg").isNotNull().alias("has_error"))
             .localCheckpoint())  # pin before the workdir is deleted
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q69_SQL = """
@@ -3075,16 +3037,14 @@ def q70_incremental_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
     the endpoint and the bookmark table ARE the inputs.
     """
     import datetime as dt
-    import shutil
-    import tempfile
 
     from etl_docker_spark.orchestration import Bookmarks, JobContext
     from etl_docker_spark.pipelines.incremental import (
         JOB_NAME, read_target, run_items_incremental)
     from etl_docker_spark.sources.fake_api import fetch_items_windowed
 
-    work = tempfile.mkdtemp(prefix="q70_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q70_", ignore_cleanup_errors=True) as work:
         ctx = JobContext(spark=spark, warehouse=f"{work}/wh",
                          log_path=f"{work}/audit",
                          quarantine=f"{work}/quar")
@@ -3104,8 +3064,6 @@ def q70_incremental_lifecycle(spark: SparkSession, sf: str) -> DataFrame:
                .withColumn("bookmark_end", F.lit(mark.isoformat()))
                .localCheckpoint())  # pin before the workdir is deleted
         return out
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q70_SQL = """
@@ -3328,9 +3286,6 @@ def q74_partition_reload(spark: SparkSession, sf: str) -> DataFrame:
     day, counts diverge. tests/test_formats.py pins the operator on a
     toy frame; this pins it at gate scale through the parquet
     round-trip."""
-    import shutil
-    import tempfile
-
     from etl_docker_spark.sinks.writers import overwrite_partitions_dynamic
 
     ev = (t(spark, sf, "events")
@@ -3345,8 +3300,8 @@ def q74_partition_reload(spark: SparkSession, sf: str) -> DataFrame:
             F.count("*").cast("long").alias("n_events"),
             F.sum("cents").alias("total_cents"))
 
-    work = tempfile.mkdtemp(prefix="q74_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q74_", ignore_cleanup_errors=True) as work:
         rollup(ev).write.mode("overwrite").partitionBy("day").parquet(work)
         patch = rollup(ev.filter((F.col("day") == _Q74_PATCH_DAY)
                                  & (F.col("event_type") != "view")))
@@ -3354,8 +3309,6 @@ def q74_partition_reload(spark: SparkSession, sf: str) -> DataFrame:
         return (spark.read.parquet(work)
                 .select("day", "event_type", "n_events", "total_cents")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q74_SQL = f"""
@@ -3387,9 +3340,6 @@ def q75_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     pins both on this exact frame; this gate pins that what survives
     the pruned, pushed scan aggregates to the same numbers as the
     logical query (the oracle never sees ORC)."""
-    import shutil
-    import tempfile
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_Q75_CUTOFF).cast("timestamp"))
           .select("event_id", "event_type", "user_id",
@@ -3397,8 +3347,8 @@ def q75_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                   .alias("day"),
                   F.round(F.col("value") * 100, 0).cast("long")
                   .alias("cents")))
-    work = tempfile.mkdtemp(prefix="q75_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q75_", ignore_cleanup_errors=True) as work:
         ev.write.mode("overwrite").partitionBy("event_type").orc(work)
         back = (spark.read.orc(work)
                 .filter(F.col("event_type").isin("purchase", "view")
@@ -3409,8 +3359,6 @@ def q75_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                      F.countDistinct("user_id").cast("long")
                      .alias("n_users"))
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q75_SQL = f"""
@@ -3443,9 +3391,6 @@ def q76_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
     'LEGACY' via coalesce, so a reader that dropped v1 files, failed to
     merge footers, or back-filled the column wrongly diverges from the
     oracle."""
-    import shutil
-    import tempfile
-
     orders = t(spark, sf, "orders")
     cut = F.lit(_Q76_CUTOFF).cast("timestamp")
     v1 = (orders.filter(F.col("o_orderdate") < cut)
@@ -3457,8 +3402,8 @@ def q76_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
                   (dec("o_totalprice") * 100).cast("long")
                   .alias("total_cents"),
                   "o_orderpriority"))
-    work = tempfile.mkdtemp(prefix="q76_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q76_", ignore_cleanup_errors=True) as work:
         v1.write.mode("overwrite").parquet(work)
         v2.write.mode("append").parquet(work)
         merged = spark.read.option("mergeSchema", "true").parquet(work)
@@ -3469,8 +3414,6 @@ def q76_schema_evolution(spark: SparkSession, sf: str) -> DataFrame:
                      F.sum("total_cents").cast("long").alias("total_cents"))
                 .orderBy("priority")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q76_SQL = f"""
@@ -3543,9 +3486,6 @@ def q78_observed_metrics(spark: SparkSession, sf: str) -> DataFrame:
     frame, same pattern as q69's audit-trail gate); the data pass
     itself lands in a throwaway parquet sink, exactly like the
     production job it models."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Observation
 
     ev = (t(spark, sf, "events")
@@ -3562,11 +3502,9 @@ def q78_observed_metrics(spark: SparkSession, sf: str) -> DataFrame:
         F.max("cents").cast("long").alias("max_cents"),
         F.count(F.when(F.col("event_type") == "error", 1)).cast("long")
         .alias("n_errors"))
-    work = tempfile.mkdtemp(prefix="q78_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q78_", ignore_cleanup_errors=True) as work:
         tagged.write.mode("overwrite").parquet(work)  # the single pass
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
     m = obs.get
     return spark.createDataFrame(
         [(m["n_rows"], m["total_cents"], m["min_cents"], m["max_cents"],
@@ -3706,9 +3644,6 @@ def q81_xml_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     ONCE into parquet (exactly what this query's write+read models) and
     never query it in place; per-file parallelism still applies (one
     task per file, the same ingest shape as q61's JSONL)."""
-    import shutil
-    import tempfile
-
     ev = (t(spark, sf, "events")
           .filter(F.col("ts") < F.lit(_Q81_CUTOFF).cast("timestamp"))
           .select(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd")
@@ -3718,8 +3653,8 @@ def q81_xml_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     rollup = (ev.groupBy("day", "event_type")
               .agg(F.struct(F.count("*").cast("long").alias("n"),
                             F.sum("cents").alias("c")).alias("m")))
-    work = tempfile.mkdtemp(prefix="q81_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q81_", ignore_cleanup_errors=True) as work:
         rollup.write.format("xml").option("rootTag", "days") \
             .option("rowTag", "rec").mode("overwrite").save(work)
         back = (spark.read.format("xml").option("rowTag", "rec")
@@ -3731,8 +3666,6 @@ def q81_xml_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
                             F.col("m.c").alias("total_cents"))
                 .orderBy("day", "event_type")
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q81_SQL = f"""
@@ -4005,14 +3938,9 @@ def q86_dynamic_partition_pruning(spark: SparkSession, sf: str) -> DataFrame:
     tests/test_round4c.py pins the dynamicpruning expression on this
     exact frame, and this gate pins that the pruned scan aggregates to
     the same numbers as the logical join."""
-    import shutil
-    import tempfile
-
-    work = tempfile.mkdtemp(prefix="q86_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q86_", ignore_cleanup_errors=True) as work:
         return _q86_frames(spark, sf, work).localCheckpoint()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q86_SQL = """
@@ -4671,8 +4599,6 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
     skips JSON parsing forever.
     """
     import os
-    import shutil
-    import tempfile
 
     items = _order_items(spark, sf)
     orders = t(spark, sf, "orders")
@@ -4688,8 +4614,8 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
                 "to_variant_object(named_struct("
                 "'okey', o_orderkey, 'prio', o_orderpriority, "
                 "'items', items))").alias("v")))
-    work = tempfile.mkdtemp(prefix="q95_")
-    try:
+    with tempfile.TemporaryDirectory(
+            prefix="q95_", ignore_cleanup_errors=True) as work:
         path = os.path.join(work, "docs")
         docs.write.mode("overwrite").parquet(path)
         back = spark.read.parquet(path)
@@ -4707,8 +4633,6 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
                 .orderBy("prio")
                 # the variant scan must finish before the temp dir dies
                 .localCheckpoint())
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 Q95_SQL = """

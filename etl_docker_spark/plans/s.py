@@ -194,10 +194,10 @@ FROM events
 
 
 def _view_buy_join(spark: SparkSession, sf: str, how: str) -> DataFrame:
-    """The stream-stream interval join of s05 (inner), s17 (left outer)
-    and s20 (full outer): each watermarked view event joined (`how`) to
-    the same user's watermarked purchases within the following 6 h, with
-    the purchase's lag as `delta_us`."""
+    """The stream-stream interval join of s05 and s23 (inner), s17 (left
+    outer) and s20 (full outer): each watermarked view event joined
+    (`how`) to the same user's watermarked purchases within the following
+    6 h, with the purchase's lag as `delta_us`."""
     ev = _events_stream(spark, sf)
     views = (ev.filter(F.col("event_type") == "view")
              .select(F.col("user_id").alias("v_user"),
@@ -707,7 +707,6 @@ GROUP BY 1, 2
 # The first ten event days. Staged one file per day, they replay as ten
 # micro-batches: the feed whose timing s14-s29 pin.
 _TEN_DAY_CUTOFF = "2024-01-11"
-_S27_CUTOFF = _TEN_DAY_CUTOFF  # imported by tests/test_plans_s.py
 
 
 def _cents() -> Column:
@@ -1026,23 +1025,27 @@ def s17_stream_outer_join(spark: SparkSession, sf: str) -> DataFrame:
 # the view (`v`) and purchase (`b`) sides, the final watermark (`wm`,
 # the MIN over both sides of max event time - 1 min), the matched pairs,
 # and (`_UNMATCHED_VIEWS`) the views the watermark has closed unmatched.
-_VIEW_BUY_CTES = """v AS (
-  SELECT user_id, event_id AS view_id, ts AS vts
-  FROM events WHERE event_type = 'view'
-),
-b AS (
+# S23 shares the purchase side and watermark (`_BUY_WM_CTES`) and the
+# join condition (`_VIEW_BUY_ON`).
+_BUY_WM_CTES = """b AS (
   SELECT user_id AS bu, event_id AS purchase_id, ts AS bts
   FROM events WHERE event_type = 'purchase'
 ),
 wm AS (
   SELECT least((SELECT MAX(vts) FROM v), (SELECT MAX(bts) FROM b))
          - INTERVAL 1 MINUTE AS w
+)"""
+_VIEW_BUY_ON = """  FROM v JOIN b ON v.user_id = b.bu
+   AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR"""
+_VIEW_BUY_CTES = f"""v AS (
+  SELECT user_id, event_id AS view_id, ts AS vts
+  FROM events WHERE event_type = 'view'
 ),
+{_BUY_WM_CTES},
 matched AS (
   SELECT v.user_id, v.view_id, b.purchase_id,
          epoch_us(b.bts) - epoch_us(v.vts) AS delta_us
-  FROM v JOIN b ON v.user_id = b.bu
-   AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR
+{_VIEW_BUY_ON}
 )"""
 _UNMATCHED_VIEWS = """  SELECT v.user_id, v.view_id,
          CAST(NULL AS BIGINT) AS purchase_id,
@@ -1060,6 +1063,32 @@ unmatched AS (
 {_UNMATCHED_VIEWS}
 )
 SELECT * FROM matched UNION ALL SELECT * FROM unmatched
+"""
+
+
+def _daily_counts(stream: DataFrame, *aggs: Column) -> DataFrame:
+    """(w, event_type, n_events, *aggs): each 1-day event-time window's
+    per-type event count and aggs, under a 1 min watermark on ts."""
+    return (stream.withWatermark("ts", "1 minute")
+            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+            .agg(F.count("*").cast("long").alias("n_events"), *aggs))
+
+
+def _daily_cents(stream: DataFrame) -> DataFrame:
+    """(day, event_type, n_events, total_cents) of a `_cents()` feed."""
+    return (_daily_counts(stream, F.sum("cents").alias("total_cents"))
+            .select(F.col("w.start").alias("day"), "event_type",
+                    "n_events", "total_cents"))
+
+
+# The S18/S25 oracle tail: per-type totals of the days of `ev` (day,
+# event_type, cents) that the final watermark `wm` has closed.
+_CLOSED_DAY_TOTALS = """SELECT e.day, e.event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_events,
+       CAST(SUM(e.cents) AS BIGINT) AS total_cents
+FROM ev e, wm
+WHERE e.day + INTERVAL 1 DAY <= wm.w
+GROUP BY e.day, e.event_type
 """
 
 
@@ -1101,12 +1130,7 @@ def s18_stream_checkpoint_resume(spark: SparkSession, sf: str) -> DataFrame:
         for f in late:
             os.replace(os.path.join(arrivals, f), os.path.join(held, f))
         stream = day_file_stream(spark, arrivals)
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events"),
-                    F.sum("cents").alias("total_cents"))
-               .select(F.col("w.start").alias("day"), "event_type",
-                       "n_events", "total_cents"))
+        agg = _daily_cents(stream)
         sink = os.path.join(work, "sink")
         writer = (agg.writeStream.outputMode("append").format("parquet")
                   .option("path", sink)
@@ -1128,13 +1152,7 @@ WITH ev AS (
   FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 1 MINUTE AS w FROM ev)
-SELECT e.day, e.event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(e.cents) AS BIGINT) AS total_cents
-FROM ev e, wm
-WHERE e.day + INTERVAL 1 DAY <= wm.w
-GROUP BY e.day, e.event_type
-"""
+{_CLOSED_DAY_TOTALS}"""
 
 
 # ---------------------------------------------------------------- s19
@@ -1279,9 +1297,7 @@ def s21_stream_state_accounting(spark: SparkSession, sf: str) -> DataFrame:
     """
     feed = _ten_day_feed(spark, sf, "ts", "event_type")
     with staged_day_stream(feed, "s21") as (stream, _):
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events")))
+        agg = _daily_counts(stream)
         name = sink_name("s21", sf)
         # track_rows: this query GATES numRowsTotal — keep the exact
         # state-row metric despite its per-commit counting cost
@@ -1398,23 +1414,7 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
     the batch join + the same window cutoff — equality proves the
     propagated watermark closed exactly the right windows through TWO
     stateful operators."""
-    ev = _events_stream(spark, sf)
-    views = (ev.filter(F.col("event_type") == "view")
-             .select(F.col("user_id").alias("v_user"),
-                     F.col("ts").alias("view_ts"))
-             .withWatermark("view_ts", "1 minute"))
-    buys = (ev.filter(F.col("event_type") == "purchase")
-            .select(F.col("user_id").alias("b_user"),
-                    F.col("event_id").alias("purchase_id"),
-                    F.col("ts").alias("buy_ts"))
-            .withWatermark("buy_ts", "1 minute"))
-    joined = views.join(
-        buys,
-        F.expr("""v_user = b_user
-                  AND buy_ts >= view_ts
-                  AND buy_ts <= view_ts + interval 6 hours"""),
-        "inner")
-    daily = (joined
+    daily = (_view_buy_join(spark, sf, "inner")
              .groupBy(F.window("buy_ts", "1 day").alias("w"))
              .agg(F.count("*").cast("long").alias("n_conversions"),
                   F.sum("purchase_id").cast("long").alias("pid_checksum"))
@@ -1423,22 +1423,14 @@ def s23_stream_join_then_agg(spark: SparkSession, sf: str) -> DataFrame:
     return memory_stream(daily, "s23", "append", sf).localCheckpoint()
 
 
-S23_SQL = """
+S23_SQL = f"""
 WITH v AS (
   SELECT user_id, ts AS vts FROM events WHERE event_type = 'view'
 ),
-b AS (
-  SELECT user_id AS bu, event_id AS purchase_id, ts AS bts
-  FROM events WHERE event_type = 'purchase'
-),
-wm AS (
-  SELECT least((SELECT MAX(vts) FROM v), (SELECT MAX(bts) FROM b))
-         - INTERVAL 1 MINUTE AS w
-),
+{_BUY_WM_CTES},
 m AS (
   SELECT b.purchase_id, CAST(date_trunc('day', b.bts) AS TIMESTAMP) AS day
-  FROM v JOIN b ON v.user_id = b.bu
-   AND b.bts >= v.vts AND b.bts <= v.vts + INTERVAL 6 HOUR
+{_VIEW_BUY_ON}
 )
 SELECT m.day, CAST(COUNT(*) AS BIGINT) AS n_conversions,
        CAST(SUM(m.purchase_id) AS BIGINT) AS pid_checksum
@@ -1577,13 +1569,7 @@ WITH ev AS (
   FROM events WHERE ts < TIMESTAMP '{_TEN_DAY_CUTOFF} 00:00:00'
 ),
 wm AS (SELECT MAX(ts) - INTERVAL 2 DAY AS w FROM ev)
-SELECT e.day, e.event_type,
-       CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(e.cents) AS BIGINT) AS total_cents
-FROM ev e, wm
-WHERE e.day + INTERVAL 1 DAY <= wm.w
-GROUP BY e.day, e.event_type
-"""
+{_CLOSED_DAY_TOTALS}"""
 
 
 # ---------------------------------------------------------------- s26
@@ -1611,9 +1597,7 @@ def s26_state_datasource(spark: SparkSession, sf: str) -> DataFrame:
     """
     feed = _ten_day_feed(spark, sf, "ts", "event_type")
     with staged_day_stream(feed, "s26") as (stream, work):
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events")))
+        agg = _daily_counts(stream)
         ckpt = os.path.join(work, "ckpt")
         with stream_state_partitions(spark, sf):
             finish_stream(agg.writeStream.outputMode("append").format("noop")
@@ -1683,9 +1667,7 @@ def s27_state_changefeed(spark: SparkSession, sf: str) -> DataFrame:
     """
     feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
     with staged_day_stream(feed, "s27") as (stream, work):
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events")))
+        agg = _daily_counts(stream)
         ckpt = os.path.join(work, "ckpt")
         with stream_state_partitions(spark, sf), \
                 scoped_conf(spark, _CHANGELOG_KEY, "true"):
@@ -1760,12 +1742,7 @@ def s28_foreachbatch_idempotent(spark: SparkSession, sf: str) -> DataFrame:
     """
     feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
     with staged_day_stream(feed, "s28") as (stream, work):
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events"),
-                    F.sum("cents").alias("total_cents"))
-               .select(F.col("w.start").alias("day"), "event_type",
-                       "n_events", "total_cents"))
+        agg = _daily_cents(stream)
         sink = os.path.join(work, "sink")
         ckpt = os.path.join(work, "ckpt")
 
@@ -1844,9 +1821,7 @@ def s29_changefeed_metrics_reconcile(spark: SparkSession,
     feed = _ten_day_feed(spark, sf, "ts", "event_type", _cents())
     with staged_day_stream(feed, "s29") as (stream, work):
         n_days = len(os.listdir(os.path.join(work, "arrivals")))
-        agg = (stream.withWatermark("ts", "1 minute")
-               .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-               .agg(F.count("*").cast("long").alias("n_events")))
+        agg = _daily_counts(stream)
         ckpt = os.path.join(work, "ckpt")
         # track_rows: the reconcile gate reads numRowsUpdated/Removed;
         # keep row tracking exact rather than relying on the untracked
@@ -2046,12 +2021,10 @@ def s31_stream_variant_landing(spark: SparkSession, sf: str) -> DataFrame:
         F.expr("variant_get(v, '$.k', 'bigint')").alias("k"),
         F.expr("try_variant_get(v, '$.no_such_key', 'bigint')")
         .alias("absent"))
-    agg = (extracted.withWatermark("ts", "1 minute")
-           .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-           .agg(F.count("*").cast("long").alias("n_events"),
-                F.sum("k").cast("long").alias("sum_k"),
-                F.sum(F.when(F.col("absent").isNull(), 1).otherwise(0))
-                .cast("long").alias("n_missing"))
+    agg = (_daily_counts(
+        extracted, F.sum("k").cast("long").alias("sum_k"),
+        F.sum(F.when(F.col("absent").isNull(), 1).otherwise(0))
+        .cast("long").alias("n_missing"))
            .select(F.col("w.start").alias("window_start"),
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "sum_k", "n_missing"))
@@ -2097,12 +2070,10 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     """
     stream = _events_stream(spark, sf)
     bucket = F.expr(md5_bucket_sql("CAST(user_id AS STRING)", _D64_DOMAIN))
-    agg = (stream.select("ts", "event_type", bucket.alias("b"))
-           .withWatermark("ts", "1 minute")
-           .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-           .agg(F.count("*").cast("long").alias("n_events"),
-                F.expr(f"hll_sketch_estimate(hll_sketch_agg(b, {_D67_LGK}))")
-                .cast("long").alias("n_user_buckets"))
+    agg = (_daily_counts(
+        stream.select("ts", "event_type", bucket.alias("b")),
+        F.expr(f"hll_sketch_estimate(hll_sketch_agg(b, {_D67_LGK}))")
+        .cast("long").alias("n_user_buckets"))
            .select(F.col("w.start").alias("window_start"),
                    F.col("w.end").alias("window_end"),
                    "event_type", "n_events", "n_user_buckets"))

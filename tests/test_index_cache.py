@@ -202,3 +202,52 @@ def test_logic_change_invalidates_fingerprint(tmp_path, monkeypatch):
     monkeypatch.setattr(ic, "_FP_CACHE", {})
     fp2 = ic.corpus_fingerprint(corpus)
     assert fp1 != fp2
+
+
+def test_unreadable_artifact_is_rebuilt_and_logged(spark, tmp_path,
+                                                   monkeypatch, caplog):
+    """An artifact dir that holds _SUCCESS but a garbage data file is
+    dropped and rebuilt to the same rows, and the fallback is logged."""
+    import logging
+    import os
+
+    from etl_docker_spark.llm import index_cache as ic
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "cache"))
+    corpus = _mini_corpus(tmp_path)
+    path = ic._artifact_dir("garbage_rt", corpus)
+    os.makedirs(path)
+    open(os.path.join(path, "_SUCCESS"), "w").close()
+    with open(os.path.join(path, "part-0.parquet"), "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    ic.clear_session_memo()
+    with caplog.at_level(logging.WARNING, logger=ic.__name__):
+        served = ic.memo_frame(
+            spark, "garbage_rt",
+            lambda: spark.range(3).select(F.col("id").alias("v")),
+            sf_dir=corpus)
+    assert sorted(r["v"] for r in served.collect()) == [0, 1, 2]
+    assert any("garbage_rt" in r.getMessage() and "retrain" in r.getMessage()
+               for r in caplog.records)
+
+
+def test_failed_artifact_write_is_logged(spark, tmp_path, monkeypatch,
+                                         caplog):
+    """A cache root that cannot be written still serves the built frame,
+    and says that the artifact was not persisted."""
+    import logging
+
+    from etl_docker_spark.llm import index_cache as ic
+
+    blocker = tmp_path / "not_a_dir"
+    blocker.write_text("")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(blocker / "cache"))
+    corpus = _mini_corpus(tmp_path)
+
+    ic.clear_session_memo()
+    with caplog.at_level(logging.WARNING, logger=ic.__name__):
+        served = ic.memo_frame(spark, "unwritable_rt",
+                               lambda: spark.range(2), sf_dir=corpus)
+    assert served.count() == 2
+    assert any("not persisted" in r.getMessage() for r in caplog.records)

@@ -409,6 +409,43 @@ def test_no_bare_conf_set_outside_util():
     assert not offenders, offenders
 
 
+
+# ROADMAP item 6's count of repeated plan code may not rise above this
+# ceiling (lower it when a change shares more).
+_REPEATED_WINDOW_CEILING = 52
+
+
+def test_repeated_plan_windows_stay_under_ceiling():
+    """The lines of plans/*.py covered by a repeated 6-line window:
+    stripped lines, at least 5 of the 6 non-trivial (not blank, not a
+    comment, not punctuation only), and occurring twice or more in the
+    same module. A fragment written twice should be one helper or
+    constant, so the total may only go down."""
+    import os
+
+    import etl_docker_spark.plans as plans_pkg
+
+    def trivial(line: str) -> bool:
+        return (not line or line.startswith("#")
+                or not re.sub(r"[\W_]", "", line))
+
+    plans_dir = os.path.dirname(plans_pkg.__file__)
+    covered = {}
+    for fname in sorted(os.listdir(plans_dir)):
+        if not fname.endswith(".py"):
+            continue
+        with open(os.path.join(plans_dir, fname)) as f:
+            lines = [line.strip() for line in f]
+        starts: dict[tuple[str, ...], list[int]] = {}
+        for i in range(len(lines) - 5):
+            window = tuple(lines[i:i + 6])
+            if sum(not trivial(line) for line in window) >= 5:
+                starts.setdefault(window, []).append(i)
+        covered[fname] = len({i + j for found in starts.values()
+                              if len(found) > 1
+                              for i in found for j in range(6)})
+    assert sum(covered.values()) <= _REPEATED_WINDOW_CEILING, covered
+
 def test_state_partitions_for_sizes_by_source_bytes(spark, tmp_path):
     """~512 KB of events parquet per state store, clamped to [1, cores]:
     one store on the smoke corpus, `min(cores, k)` for a ~k x 512 KB

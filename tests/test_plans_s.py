@@ -72,13 +72,13 @@ def test_s28_matches_batch_aggregate(spark):
     from pyspark.sql import functions as F
 
     from etl_docker_spark.plans._util import t
-    from etl_docker_spark.plans.s import (_S27_CUTOFF,
+    from etl_docker_spark.plans.s import (_TEN_DAY_CUTOFF,
                                           s28_foreachbatch_idempotent)
 
     got = {(r.day, r.event_type): (r.n_events, r.total_cents)
            for r in s28_foreachbatch_idempotent(spark, SF_SMOKE).collect()}
     batch = (t(spark, SF_SMOKE, "events")
-             .filter(F.col("ts") < F.lit(_S27_CUTOFF).cast("timestamp"))
+             .filter(F.col("ts") < F.lit(_TEN_DAY_CUTOFF).cast("timestamp"))
              .groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
              .agg(F.count("*").cast("long").alias("n"),
                   F.sum(F.round(F.col("value") * 100, 0).cast("long"))

@@ -95,8 +95,9 @@ def test_ttl_evicts_idle_state(spark, tmp_path):
 
 
 def test_no_ttl_state_survives_idleness(spark, tmp_path):
-    """Control: with ttl_ms=None the same traffic pattern keeps user 2's
-    state — proving the eviction above is the TTL's doing."""
+    """Control: running_user_totals, which has no TTL, keeps user 2's
+    state under the same traffic pattern — proving the eviction above is
+    the TTL's doing."""
     import datetime as dt
 
     src = str(tmp_path / "nottl_src")
