@@ -11,7 +11,6 @@ from etl_docker_spark.functions.strings import (
     prefix_pad_unless_contains,
     remap_values,
     split_into,
-    str_prefix,
 )
 from etl_docker_spark.functions.dates import (
     date_window,
@@ -25,8 +24,6 @@ from etl_docker_spark.functions.amounts import (
     conditional_negate,
     deleted_flag,
     fiscal_profit,
-    round4,
-    row_profit,
 )
 from etl_docker_spark.functions.nested import (
     fiscal_address_field,
@@ -48,9 +45,6 @@ __all__ = [
     "parse_ts_mixed",
     "prefix_pad_unless_contains",
     "remap_values",
-    "round4",
-    "row_profit",
     "split_into",
-    "str_prefix",
     "struct_field_or",
 ]

@@ -3,8 +3,9 @@
 Reference behaviors (cites into /root/reference/dags/CotyData_IPN.py):
 - F14 fiscal profit (NetoFinal/1.21)*0.21 for invoice types 3, 8: :107-108
 - F15 conditional sign flips (discounts for types 1-3; credit notes): :110-113, 136-139, 155-160
-- F16 row products/differences (cost, profit): :129, 133
-- F17 round(4): :134
+- F16 row products/differences (cost, profit) and F17 round(4), :129-134,
+  are plain column arithmetic and `F.round(.., 4)`, written inline in
+  pipelines/sales_documents.transform_sales_details
 - F19 deleted-flag from timestamp comparison with null rule: :705-708
 """
 
@@ -27,16 +28,6 @@ def conditional_negate(col: Column | str, cond: Column) -> Column:
     """F15: flip sign where `cond` holds (credit notes, sale-type discounts)."""
     c = _c(col)
     return F.when(cond, -c).otherwise(c)
-
-
-def row_profit(subtotal: Column | str, cost: Column | str) -> Column:
-    """F16: profit = subtotal - cost (plain column arithmetic, no UDF)."""
-    return _c(subtotal) - _c(cost)
-
-
-def round4(col: Column | str) -> Column:
-    """F17: round to 4 decimals (the reference's money precision)."""
-    return F.round(_c(col), 4)
 
 
 def deleted_flag(deletion_ts: Column | str, undeletion_ts: Column | str) -> Column:

@@ -2,7 +2,8 @@
 
 Reference behaviors (file:line cites are into /root/reference/dags/):
 - F1 split-into-two: CotyData_IPN.py:99
-- F2 prefix slice: Funciones_CotyData.py:210, CotyData_IPN.py:1749
+- F2 prefix slice: Funciones_CotyData.py:210, CotyData_IPN.py:1749 (a plain
+  `F.substring` where used: pipelines/enrichment.py, functions/dates.py)
 - F3 pad client codes: Funciones_CotyData.py:154-158
 - F4 concat with separator: Funciones_CotyData.py:277, CotyData_IPN.py:354-359
 - F5 empty-string -> NULL: CotyData_IPN.py:97, 337, 1125-1127
@@ -22,12 +23,6 @@ def split_into(col: Column | str, sep: str, n: int) -> list[Column]:
     c = F.col(col) if isinstance(col, str) else col
     parts = F.split(c, sep)
     return [parts.getItem(i) for i in range(n)]
-
-
-def str_prefix(col: Column | str, length: int) -> Column:
-    """F2: leading `length` characters."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(c, 1, length)
 
 
 def prefix_pad_unless_contains(col: Column | str, prefix: str, marker: str) -> Column:

@@ -19,7 +19,6 @@ from etl_docker_spark.llm.text import (
 from etl_docker_spark.llm.dedup import (
     exact_dup_groups,
     minhash_lsh_pairs,
-    ngram_jaccard_pair_cols,
     shingles_of,
     simhash64,
     simhash_near_dup_pairs,
@@ -40,7 +39,6 @@ __all__ = [
     "exact_dup_groups",
     "lang_guess",
     "minhash_lsh_pairs",
-    "ngram_jaccard_pair_cols",
     "poly_fingerprint",
     "shingles_of",
     "simhash64",

@@ -357,13 +357,6 @@ def _token_bits(t: Column) -> Column:
     return F.array(*bits(h0), *bits(h1))
 
 
-def ngram_jaccard_pair_cols(sh_a: Column, sh_b: Column) -> Column:
-    """Exact Jaccard similarity of two shingle-set columns (double)."""
-    inter = F.size(F.array_intersect(sh_a, sh_b)).cast("long")
-    union = (F.size(sh_a) + F.size(sh_b)).cast("long") - inter
-    return inter / union
-
-
 def auto_suffix_buckets(median_set_size: float,
                         lo: int = 16, hi: int = 1024) -> int:
     """The d57 design rule (SCALE.md round-6 stress table), productized:

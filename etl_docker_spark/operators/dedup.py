@@ -15,11 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dedup_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """A3: whole-row (or subset-keyed, any-winner) distinct."""
-    return df.dropDuplicates(list(subset)) if subset else df.distinct()
-
-
 def dedup_first(df: DataFrame, keys: Sequence[str],
                 order_by: Sequence[Column | str]) -> DataFrame:
     """A4 with determinism: keep the first row per key under `order_by`.

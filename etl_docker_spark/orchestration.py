@@ -37,7 +37,6 @@ from typing import Any
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_docker_spark.functions import date_window
@@ -176,16 +175,21 @@ class Bookmarks:
     """Per-job incremental high-water marks in a tiny parquet table."""
 
     def __init__(self, ctx: JobContext) -> None:
-        self.ctx = ctx
         self.path = ctx.bookmarks_path
 
     def last_window_end(self, job: str) -> dt.date | None:
+        """`job`'s latest recorded window end, or None. The table is read
+        on the driver with pyarrow, as `advance` writes it, so it starts
+        no Spark job; pyarrow skips `_`- and `.`-prefixed files."""
         if not os.path.exists(self.path):
             return None
-        df = self.ctx.spark.read.parquet(self.path)
-        row = (df.filter(F.col("job") == job)
-               .agg(F.max("window_end").alias("m")).first())
-        return row.m if row and row.m else None
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        table = pq.read_table(self.path, schema=to_arrow_schema(BOOKMARK_SCHEMA))
+        ends = table.filter(pc.equal(table["job"], job))["window_end"]
+        return pc.max(ends).as_py()
 
     def next_window(self, job: str, run_date: dt.date | None = None) -> tuple[dt.date, dt.date]:
         """Resume from the bookmark; first run falls back to the reference's
@@ -213,9 +217,3 @@ class Bookmarks:
         row (sinks.writers.append_row), no Spark job."""
         append_row(self.path, {"job": job, "window_end": window_end},
                    BOOKMARK_SCHEMA)
-
-
-MASTER_DATA_ORDER = (
-    "families", "categories", "trademarks", "attribute_categories",
-    "attributes", "suppliers", "clients", "items", "oc_categories",
-)

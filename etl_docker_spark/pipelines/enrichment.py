@@ -53,15 +53,6 @@ def categoria_remito_movimiento(df: DataFrame, categorias: DataFrame,
             .drop("__code"))
 
 
-def sucursal_two_hop(df: DataFrame, sucursales: DataFrame, campo_desc: str) -> DataFrame:
-    """J5 (:112-135): desc -> sucursal code -> razón social, two chained
-    broadcast joins (the reference does two loop-assign passes)."""
-    hop1 = sucursales.select(
-        F.col("DESCRIPCION_SUCURSAL").alias(campo_desc), "CODIGO_SUCURSAL")
-    hop2 = sucursales.select("CODIGO_SUCURSAL", "ID_RAZON_SOCIAL")
-    return two_hop_enrich(df, hop1, [campo_desc], hop2, ["CODIGO_SUCURSAL"], how="left")
-
-
 def _map_lookup(df: DataFrame, dim: DataFrame, desc_col_in_dim: str,
                 code_col: str, nombre_campo: str, keep_input: bool = False) -> DataFrame:
     """The `.map(dict)` left-lookup shape shared by the J4 family: unmatched

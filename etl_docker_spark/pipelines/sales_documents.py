@@ -35,23 +35,6 @@ CREDIT_NOTE_TYPES = (8, 10, 11, 12, 17, 20, 27, 28, 29, 37, 38, 39, 43, 44, 45, 
 SALE_TYPES_NEGATE_DISCOUNT = (1, 2, 3)
 FISCAL_PROFIT_TYPES = (3, 8)
 
-HEADER_RENAMES = {
-    "SaleID": "ID_VENTA",
-    "InvoiceType": "ID_COMPROBANTE_TIPO",
-    "CompanyID": "ID_RAZON_SOCIAL",
-    "StoreID": "CODIGO_SUCURSAL",
-    "Neto": "VENTA_SUBTOTAL",
-    "DiscountAmt": "DESCUENTO1",
-    "GeneralDiscountAmt": "DESCUENTO2",
-    "NetoFinal": "NETO_GRAVADO_VENTA",
-    "IVAAmt": "IVA_VENTA",
-    "RechargeAmt": "RECARGO_VENTA",
-    "InvoiceTotal": "TOTAL_VENTA",
-    "CustomerCode": "ID_CLIENTE",
-    "InvoiceTimeChr": "VENTA_HORA",
-    "SalesOrderNumber": "NUMERO_NOTA_VENTA",
-}
-
 
 def credit_note_keys(headers: DataFrame) -> DataFrame:
     """SaleIDs of credit-note documents (:70-80) — kept distributed."""

@@ -5,6 +5,6 @@ DuckDB runs on the same parquet tables. `oracle is None` marks genuinely
 non-SQL-expressible operators (driver falls back to a rows-only check).
 """
 
-from etl_docker_spark.plans.registry import QUERIES, QuerySpec, get_query
+from etl_docker_spark.plans.registry import QUERIES, QuerySpec
 
-__all__ = ["QUERIES", "QuerySpec", "get_query"]
+__all__ = ["QUERIES", "QuerySpec"]

@@ -3236,7 +3236,7 @@ def q73_bucketed_cojoin(spark: SparkSession, sf: str) -> DataFrame:
     plans with ZERO Exchange below the join — the shuffle is paid once
     at write time, then never again on any number of downstream joins.
     That trade is the core of every serious 100 TB star-schema layout;
-    `tests/test_round4b.py` pins the no-Exchange property on this exact
+    `tests/test_plans_q.py` pins the no-Exchange property on this exact
     frame, and this gate pins that the bucketed write+read+join path is
     value-identical to the logical join (the oracle never sees buckets).
 
@@ -3336,7 +3336,7 @@ def q75_orc_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     prove value parity THROUGH its write+read path, not just accept the
     reader's output). The read back applies a partition filter
     (event_type, pruned at planning) and a value filter (cents, pushed
-    into the ORC reader as a search argument) — `tests/test_round4c.py`
+    into the ORC reader as a search argument) — `tests/test_plans_q.py`
     pins both on this exact frame; this gate pins that what survives
     the pruned, pushed scan aggregates to the same numbers as the
     logical query (the oracle never sees ORC)."""
@@ -3935,7 +3935,7 @@ def q86_dynamic_partition_pruning(spark: SparkSession, sf: str) -> DataFrame:
     other partition's files entirely. At 100 TB this is THE mechanism
     that makes star-schema date-dim filters cheap (scan 2/7 of the
     fact, not all of it filtered after read);
-    tests/test_round4c.py pins the dynamicpruning expression on this
+    tests/test_plans_q.py pins the dynamicpruning expression on this
     exact frame, and this gate pins that the pruned scan aggregates to
     the same numbers as the logical join."""
     with tempfile.TemporaryDirectory(
@@ -4590,7 +4590,7 @@ def q95_variant_persistence(spark: SparkSession, sf: str) -> DataFrame:
     to parquet, read them back, recover the per-priority rollup via
     variant_get, and pin it against the oracle's direct relational
     computation. Construction parity with q94's parse_json(to_json(..))
-    path is pinned separately in tests/test_round8.py.
+    path is pinned separately in tests/test_plans_q.py.
 
     Scale shape: the write is the workload (one items aggregation
     shuffle, then a parallel parquet write); reads after it are

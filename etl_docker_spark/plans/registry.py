@@ -66,7 +66,3 @@ def _build() -> dict[str, QuerySpec]:
 
 
 QUERIES: dict[str, QuerySpec] = _build()
-
-
-def get_query(name: str) -> QuerySpec:
-    return QUERIES[name]

@@ -2063,7 +2063,7 @@ def s32_stream_hll_cardinality(spark: SparkSession, sf: str) -> DataFrame:
     partitions, and the estimate is read once per emitted row. Gate
     exactness: user ids fold into d64's bounded 3000-bucket domain, so
     every sketch stays in its coupon-exact phase (_D67_LGK = 16,
-    exact through 8192 — tests/test_round9.py pins the boundary) and
+    exact through 8192 — tests/test_plans_d.py pins the boundary) and
     the oracle pins estimates as plain COUNT(DISTINCT ...). At a real
     100 TB feed you would drop the bucketing and accept the ±0.8%
     HLL error — the plan does not change, only the exactness argument.

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = "user_id long, n_events long, total_value double, last_ts timestamp"
 _TOTALS_RAW_SCHEMA = ("user_id long, n_events long, total_value double, "
                       "last_us long")
 STATE_SCHEMA = "n long, total double"
@@ -124,8 +123,6 @@ def running_user_totals(stream: DataFrame) -> DataFrame:
                       F.timestamp_micros("last_us").alias("last_ts"))
 
 
-KEYED_TTL_SCHEMA = ("state_key string, n_events long, total_cents long, "
-                    "last_ts timestamp")
 _KEYED_TTL_RAW_SCHEMA = ("state_key string, n_events long, "
                          "total_cents long, last_us long")
 KEYED_TTL_STATE = "n long, cents long"
@@ -196,9 +193,6 @@ def keyed_ttl_totals(stream: DataFrame, ttl_ms: int) -> DataFrame:
                       F.timestamp_micros("last_us").alias("last_ts"))
 
 
-SESSION_CLOSE_SCHEMA = ("state_key string, session_start timestamp, "
-                        "session_end timestamp, n_events long, "
-                        "total_cents long")
 _SESSION_RAW_SCHEMA = ("state_key string, start_ms long, end_ms long, "
                        "n_events long, total_cents long")
 SESSION_STATE = "start long, end long, n long, cents long"

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import itertools
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from etl_docker_spark.llm import (
@@ -331,3 +335,294 @@ def test_release_local_checkpoint_logs_its_fallback(caplog):
     assert rec.levelno == logging.WARNING
     assert "not released" in rec.getMessage()
     assert "AttributeError" in rec.getMessage()
+
+
+def test_shingle_rows_matches_shingles_of(spark):
+    """The codegen shingler and the array-lambda shingler agree on the
+    distinct gram set per document (including the short-doc partial-shingle
+    contract)."""
+    from etl_docker_spark.llm.dedup import shingle_rows, shingles_of
+
+    rows = [(1, "a b c d e"), (2, "a b"), (3, "x"), (4, "p q r")]
+    df = spark.createDataFrame(rows, ["doc_id", "text"])
+    fast = (shingle_rows(df, "doc_id", "text", 3)
+            .groupBy("doc").agg(F.sort_array(F.collect_set("s")).alias("g")))
+    slow = df.select(
+        F.col("doc_id").alias("doc"),
+        F.sort_array(shingles_of(F.split("text", " "), 3)).alias("g"))
+    assert {r["doc"]: r["g"] for r in fast.collect()} == \
+           {r["doc"]: r["g"] for r in slow.collect()}
+
+
+def _py_shingle_hashes(text: str, n: int = 3) -> set[int]:
+    """Python twin of shingle_rows + _base_hash (incl. short-doc rule)."""
+    import hashlib
+
+    toks = text.split(" ")
+    if len(toks) < n:
+        grams = [" ".join(toks)]
+    else:
+        grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+    return {int(hashlib.md5(g.encode()).hexdigest()[:8], 16)
+            for g in grams}
+
+
+def test_prefix_filter_jaccard_matches_bruteforce(spark):
+    import itertools
+    import random
+
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    rng = random.Random(11)
+    vocab = [f"w{i}" for i in range(30)]
+    docs = []
+    for i in range(40):
+        base = [rng.choice(vocab) for _ in range(rng.randint(1, 12))]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.5:  # planted near-dup: small edit
+            mut = list(base)
+            if mut and rng.random() < 0.7:
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((100 + i, " ".join(mut)))
+
+    expected = set()
+    hsets = {i: _py_shingle_hashes(t) for i, t in docs}
+    for (a, ha), (b, hb) in itertools.combinations(sorted(hsets.items()), 2):
+        inter = len(ha & hb)
+        union = len(ha | hb)
+        if 2 * inter >= union:
+            expected.add((a, b, inter, union))
+
+    df = spark.createDataFrame(docs, "doc_id long, text string").repartition(4)
+    got = {(r.doc_a, r.doc_b, r.inter_n, r.union_n)
+           for r in prefix_filter_jaccard_pairs(df, "doc_id", "text").collect()}
+    assert got == expected
+    assert expected  # the planted near-dups must produce pairs
+
+
+@pytest.mark.parametrize("t_num,t_den", [(3, 10), (7, 10), (1, 1)])
+def test_prefix_filter_jaccard_general_threshold(spark, t_num, t_den):
+    """Completeness of the prefix bound at thresholds other than the
+    d47 default — same brute-force comparison, exact rational compare."""
+    import itertools
+    import random
+
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    rng = random.Random(23 + t_num)
+    vocab = [f"w{i}" for i in range(25)]
+    docs = []
+    for i in range(30):
+        base = [rng.choice(vocab) for _ in range(rng.randint(1, 10))]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.6:
+            mut = list(base)
+            if rng.random() < 0.7:
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((100 + i, " ".join(mut)))
+
+    hsets = {i: _py_shingle_hashes(t) for i, t in docs}
+    expected = set()
+    for (a, ha), (b, hb) in itertools.combinations(sorted(hsets.items()), 2):
+        inter, union = len(ha & hb), len(ha | hb)
+        if t_den * inter >= t_num * union:
+            expected.add((a, b, inter, union))
+
+    df = spark.createDataFrame(docs, "doc_id long, text string").repartition(4)
+    got = {(r.doc_a, r.doc_b, r.inter_n, r.union_n)
+           for r in prefix_filter_jaccard_pairs(
+               df, "doc_id", "text", t_num=t_num, t_den=t_den).collect()}
+    assert got == expected
+
+
+@pytest.mark.parametrize("t_num,t_den", [(3, 10), (1, 2), (7, 10), (1, 1)])
+def test_positional_jaccard_matches_bruteforce(spark, t_num, t_den):
+    """PPJoin positional filter is exactness-preserving at arbitrary
+    rational thresholds: output == brute-force all-pairs Jaccard."""
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    rng = random.Random(23)
+    vocab = [f"w{i}" for i in range(25)]
+    docs = []
+    for i in range(40):
+        base = [rng.choice(vocab) for _ in range(rng.randint(1, 14))]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.6:
+            mut = list(base)
+            if mut and rng.random() < 0.7:
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((100 + i, " ".join(mut)))
+
+    expected = set()
+    hsets = {i: _py_shingle_hashes(t) for i, t in docs}
+    for (a, ha), (b, hb) in itertools.combinations(sorted(hsets.items()), 2):
+        inter, union = len(ha & hb), len(ha | hb)
+        if t_den * inter >= t_num * union:
+            expected.add((a, b, inter, union))
+
+    df = spark.createDataFrame(docs, "doc_id long, text string") \
+        .repartition(4)
+    got = {(r.doc_a, r.doc_b, r.inter_n, r.union_n)
+           for r in prefix_filter_jaccard_pairs(
+               df, "doc_id", "text", t_num=t_num, t_den=t_den,
+               positional=True).collect()}
+    assert got == expected
+    assert expected  # planted near-dups must produce pairs
+
+
+def test_positional_filter_only_prunes(spark):
+    """The positional path's VERIFIED output equals the plain prefix
+    path's on the same corpus (the filter may only discard candidates
+    that could never verify)."""
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    rng = random.Random(5)
+    vocab = [f"t{i}" for i in range(18)]
+    docs = [(i, " ".join(rng.choice(vocab)
+                         for _ in range(rng.randint(2, 10))))
+            for i in range(60)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    plain = {tuple(r) for r in prefix_filter_jaccard_pairs(
+        df, "doc_id", "text", t_num=7, t_den=10).collect()}
+    pos = {tuple(r) for r in prefix_filter_jaccard_pairs(
+        df, "doc_id", "text", t_num=7, t_den=10,
+        positional=True).collect()}
+    assert pos == plain
+
+
+def test_substring_runs_match_bruteforce(spark):
+    """Diagonal-streak runs == brute-force longest-common-substring (in
+    tokens) on a corpus with planted shared paragraphs, including the
+    total gram-match count."""
+    from etl_docker_spark.llm.dedup import substring_run_pairs
+
+    rng = random.Random(31)
+    vocab = [f"w{i}" for i in range(40)]
+    para = [rng.choice(vocab) for _ in range(12)]  # planted 12-token run
+    docs = []
+    for i in range(30):
+        body = [rng.choice(vocab) for _ in range(rng.randint(3, 25))]
+        if i % 3 == 0:  # embed the paragraph at a random offset
+            at = rng.randint(0, len(body))
+            body = body[:at] + para + body[at:]
+        docs.append((i, " ".join(body)))
+
+    k, min_run = 5, 8
+    toks = {i: t.split(" ") for i, t in docs}
+
+    def grams(ts):
+        return [tuple(ts[j:j + k]) for j in range(len(ts) - k + 1)]
+
+    expected = {}
+    for (a, ta), (b, tb) in itertools.combinations(sorted(toks.items()), 2):
+        ga, gb = grams(ta), grams(tb)
+        matches = [(i, j) for i, x in enumerate(ga)
+                   for j, y in enumerate(gb) if x == y]
+        if not matches:
+            continue
+        # longest streak per diagonal
+        best = 0
+        by_diag: dict[int, list[int]] = {}
+        for i, j in matches:
+            by_diag.setdefault(i - j, []).append(i)
+        for d, ps in by_diag.items():
+            ps.sort()
+            streak = run = 1
+            for prev, cur in zip(ps, ps[1:]):
+                run = run + 1 if cur == prev + 1 else 1
+                streak = max(streak, run)
+            best = max(best, streak)
+        if best + k - 1 >= min_run:
+            expected[(a, b)] = (best + k - 1, len(matches))
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {(r.doc_a, r.doc_b): (r.max_run_tokens, r.n_gram_matches)
+           for r in substring_run_pairs(df, "doc_id", "text",
+                                        k=k, min_run=min_run).collect()}
+    assert got == expected
+    assert expected  # the planted paragraphs must surface
+
+
+@pytest.mark.parametrize("t_num,t_den,k", [(3, 10, 4), (1, 2, 8),
+                                           (7, 10, 8), (7, 10, 32), (1, 1, 16)])
+def test_suffix_jaccard_matches_bruteforce(spark, t_num, t_den, k):
+    """The K-bucket suffix filter is exactness-preserving at arbitrary
+    rational thresholds and bucket counts: output == brute-force
+    all-pairs Jaccard (small K deliberately stresses the bound — fewer
+    buckets make it coarser, never unsound)."""
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    rng = random.Random(29)
+    vocab = [f"w{i}" for i in range(25)]
+    docs = []
+    for i in range(40):
+        base = [rng.choice(vocab) for _ in range(rng.randint(1, 14))]
+        docs.append((i, " ".join(base)))
+        if rng.random() < 0.6:
+            mut = list(base)
+            if mut and rng.random() < 0.7:
+                mut[rng.randrange(len(mut))] = rng.choice(vocab)
+            docs.append((100 + i, " ".join(mut)))
+
+    expected = set()
+    hsets = {i: _py_shingle_hashes(t) for i, t in docs}
+    for (a, ha), (b, hb) in itertools.combinations(sorted(hsets.items()), 2):
+        inter, union = len(ha & hb), len(ha | hb)
+        if t_den * inter >= t_num * union:
+            expected.add((a, b, inter, union))
+
+    df = spark.createDataFrame(docs, "doc_id long, text string") \
+        .repartition(4)
+    got = {(r.doc_a, r.doc_b, r.inter_n, r.union_n)
+           for r in prefix_filter_jaccard_pairs(
+               df, "doc_id", "text", t_num=t_num, t_den=t_den,
+               positional=True, suffix_buckets=k).collect()}
+    assert got == expected
+
+
+def test_suffix_filter_shrinks_candidates(spark):
+    """The suffix filter's candidate set is a subset of the positional
+    one AND still a superset of the qualifying pairs (the two containments
+    that make it a sound shrinker)."""
+    from etl_docker_spark.llm.dedup import (_jaccard_candidates,
+                                            prefix_filter_jaccard_pairs)
+
+    rng = random.Random(31)
+    vocab = [f"w{i}" for i in range(40)]
+    docs = [(i, " ".join(rng.choice(vocab)
+                         for _ in range(rng.randint(4, 20))))
+            for i in range(120)]
+    df = spark.createDataFrame(docs, "doc_id long, text string") \
+        .repartition(4)
+
+    pos, _ = _jaccard_candidates(df, "doc_id", "text", 3, 7, 10, True, 0)
+    suf, _ = _jaccard_candidates(df, "doc_id", "text", 3, 7, 10, True, 16)
+    pos_set = {(r.doc_a, r.doc_b) for r in pos.collect()}
+    suf_set = {(r.doc_a, r.doc_b) for r in suf.collect()}
+    true_set = {(r.doc_a, r.doc_b)
+                for r in prefix_filter_jaccard_pairs(
+                    df, "doc_id", "text", t_num=7, t_den=10).collect()}
+    assert suf_set <= pos_set
+    assert true_set <= suf_set
+
+
+def test_auto_suffix_buckets_rule():
+    """Pure sizing rule: nearest power of two in log space, clamped."""
+    from etl_docker_spark.llm.dedup import auto_suffix_buckets
+
+    assert auto_suffix_buckets(330) == 256   # the d57 corpus (log2=8.37)
+    assert auto_suffix_buckets(256) == 256
+    assert auto_suffix_buckets(400) == 512   # log2=8.64 rounds up
+    assert auto_suffix_buckets(3) == 16      # clamp low
+    assert auto_suffix_buckets(10 ** 6) == 1024  # clamp high
+    assert auto_suffix_buckets(None) == 16
+
+
+def test_suffix_buckets_rejects_unknown_string(spark):
+    import pytest as _pytest
+    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
+
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    with _pytest.raises(ValueError, match="'banana'"):
+        prefix_filter_jaccard_pairs(df, "doc_id", "text",
+                                    suffix_buckets="banana").count()

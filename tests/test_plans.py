@@ -446,6 +446,52 @@ def test_repeated_plan_windows_stay_under_ceiling():
                               for i in found for j in range(6)})
     assert sum(covered.values()) <= _REPEATED_WINDOW_CEILING, covered
 
+
+def test_no_round_test_files_or_single_use_engine_names():
+    """Tests are grouped by family or module, never by the round that
+    wrote them; and every top-level function, class or constant under
+    etl_docker_spark/ is used: its name occurs (word-bounded) at least
+    twice across the tree's .py files, `__init__.py` re-exports not
+    counted, so a definition nothing reads shows up here."""
+    import ast
+    import collections
+    import glob
+    import os
+
+    tests_dir = os.path.dirname(os.path.abspath(__file__))
+    root = os.path.dirname(tests_dir)
+    assert not glob.glob(os.path.join(tests_dir, "test_round*.py"))
+
+    sources = {}
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames
+                       if not d.startswith(".") and d != "__pycache__"]
+        for fname in filenames:
+            if fname.endswith(".py") and fname != "__init__.py":
+                path = os.path.join(dirpath, fname)
+                with open(path, encoding="utf-8") as f:
+                    sources[path] = f.read()
+    engine_dir = os.path.join(root, "etl_docker_spark") + os.sep
+    defined = set()
+    for path, src in sources.items():
+        if not path.startswith(engine_dir):
+            continue
+        for node in ast.parse(src).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defined.add(node.name)
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = (node.targets if isinstance(node, ast.Assign)
+                           else [node.target])
+                defined.update(n.id for tgt in targets for n in ast.walk(tgt)
+                               if isinstance(n, ast.Name))
+    counts = collections.Counter(
+        re.findall(r"\w+", "\n".join(sources.values())))
+    single_use = sorted(n for n in defined
+                        if not n.startswith("__") and counts[n] < 2)
+    assert not single_use, single_use
+
+
 def test_state_partitions_for_sizes_by_source_bytes(spark, tmp_path):
     """~512 KB of events parquet per state store, clamped to [1, cores]:
     one store on the smoke corpus, `min(cores, k)` for a ~k x 512 KB

@@ -207,6 +207,12 @@ def main() -> None:
           "a data-sized frame — must be empty everywhere; see "
           "operators/prefix.py).")
     print()
+    print("Two rows vary between runs of the same code, because AQE picks a "
+          "different final plan: `e04_multiprobe_recall` (4 or 7 shuffles, "
+          "13 or 15 wscg) and `d65_holdout_calibrated_thresholds` (5 or 6 "
+          "shuffles, 9 or 10 wscg). A diff in those two rows between two "
+          "audits is therefore no regression signal.")
+    print()
     print("| query | shuffles | bcast | shuffle-joins | wscg | pushdown | bnlj | cartesian | global-window |")
     print("|---|---|---|---|---|---|---|---|---|")
     streaming, failures = [], []
