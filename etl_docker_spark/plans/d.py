@@ -3820,7 +3820,7 @@ _D57_POOL_X = 4       # pool size = 4x corpus size (keeps dfreq ~15 at any N)
 _D57_CLONE_MOD = 50   # doc_id % 50 == 1 -> clone of doc_id - 1
 _D57_K = 256          # the K auto-sizing must pick here: ~330-token sets,
                       # nearest pow2 in log space (pinned by
-                      # tests/test_plans_d.py::test_d57_auto_k_matches_rule)
+                      # tests/test_round6.py::test_d57_auto_k_matches_rule)
 _D57_GATE_DOCS = 2000  # gate-corpus cap: the GATE pins exactness, which a
                        # bounded corpus fully exercises (q91's slice idiom);
                        # full-corpus candidate VOLUME was measured once

@@ -526,7 +526,7 @@ def g07_bounded_sssp(spark: SparkSession, sf: str) -> DataFrame:
     the oracle's UNION ALL recursion inside the degree-capped K^hops
     bound at any corpus size. The relax loop is
     `operators/graph.py:bounded_sssp` (brute-force-pinned in
-    tests/test_operators.py).
+    tests/test_round6.py).
     """
     from etl_docker_spark.operators.graph import bounded_sssp
 

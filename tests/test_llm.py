@@ -604,25 +604,3 @@ def test_suffix_filter_shrinks_candidates(spark):
                     df, "doc_id", "text", t_num=7, t_den=10).collect()}
     assert suf_set <= pos_set
     assert true_set <= suf_set
-
-
-def test_auto_suffix_buckets_rule():
-    """Pure sizing rule: nearest power of two in log space, clamped."""
-    from etl_docker_spark.llm.dedup import auto_suffix_buckets
-
-    assert auto_suffix_buckets(330) == 256   # the d57 corpus (log2=8.37)
-    assert auto_suffix_buckets(256) == 256
-    assert auto_suffix_buckets(400) == 512   # log2=8.64 rounds up
-    assert auto_suffix_buckets(3) == 16      # clamp low
-    assert auto_suffix_buckets(10 ** 6) == 1024  # clamp high
-    assert auto_suffix_buckets(None) == 16
-
-
-def test_suffix_buckets_rejects_unknown_string(spark):
-    import pytest as _pytest
-    from etl_docker_spark.llm.dedup import prefix_filter_jaccard_pairs
-
-    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="'banana'"):
-        prefix_filter_jaccard_pairs(df, "doc_id", "text",
-                                    suffix_buckets="banana").count()

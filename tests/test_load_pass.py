@@ -118,6 +118,15 @@ def test_bookmark_advance_starts_no_spark_job(spark, tmp_path):
     assert bm.last_window_end("items") == dt.date(2024, 3, 12)
 
 
+def test_bookmark_read_starts_no_spark_job(spark, tmp_path):
+    bm = Bookmarks(_ctx(spark, tmp_path))
+    bm.advance("items", dt.date(2024, 3, 12))
+    with jobs_started(spark, "bookmark_read") as started:
+        end = bm.last_window_end("items")
+    assert started == []
+    assert end == dt.date(2024, 3, 12)
+
+
 def test_bookmarks_from_spark_and_driver_read_back_alike(spark, tmp_path):
     ctx = _ctx(spark, tmp_path)
     bm = Bookmarks(ctx)
