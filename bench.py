@@ -5,7 +5,8 @@ no driver-side collection — the same shape as writing results to a table).
 
 Output contract (the driver captures only the LAST ~2,000 characters of
 stdout, so the printed payload must be SMALL):
-  - per-query timings -> a RUN-STAMPED file under bench_runs/ (gitignored).
+  - per-query timings, and the codegen compiles of each query's cold and
+    warm reps -> a RUN-STAMPED file under bench_runs/ (gitignored).
     bench.py never writes the committed BENCH_QUERIES.json itself — only
     tools/merge_bench.py does, from one or more run files (VERDICT r8
     item 4: a driver-invoked single run used to overwrite the committed
@@ -185,6 +186,36 @@ def summary_payload(total: float, sf: float, n_queries: int, reps: int,
     return payload
 
 
+def run_once(spark, sf_dir: str, spec) -> float:
+    """Wall of one query: its builder plus a full run into the noop sink."""
+    start = time.perf_counter()
+    df = spec.builder(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - start
+
+
+def time_query(spark, sf_dir: str, spec, reps: int) -> tuple[float, list[int]]:
+    """Best-of-`reps` wall of one query, and the classes Spark's codegen
+    compiled in each rep (`CodegenMetrics`, read outside the timed
+    region). The first rep is the query's cold rep, the rest its warm
+    reps; a warm rep that compiles is one whose classes the cache lost."""
+    from etl_docker_spark.session import compiled_classes
+
+    walls, compiles = [], []
+    for _ in range(reps):
+        before = compiled_classes(spark)
+        walls.append(run_once(spark, sf_dir, spec))
+        compiles.append(compiled_classes(spark) - before)
+    return min(walls), compiles
+
+
+def codegen_layer(compiles: dict[str, list[int]]) -> dict:
+    """Per query: the classes compiled in its cold rep and in each warm
+    rep, as the run file records them next to the walls."""
+    return {name: {"cold": c[0], "warm": c[1:]}
+            for name, c in compiles.items()}
+
+
 def _warm_streaming(spark, sf_dir: str, queries) -> None:
     """One throwaway s01 run: the micro-batch and state-store code paths
     JIT on first use, and the s-family's walls converge ~2.5x from cold
@@ -299,22 +330,13 @@ def main() -> None:
     # which would otherwise dominate sub-second queries
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
 
-    def run_once(spec) -> float:
-        start = time.perf_counter()
-        df = spec.builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - start
-
-    def time_query(spec) -> float:
-        return min(run_once(spec) for _ in range(reps))
-
     anchor_spec = QUERIES.get(SENTINEL_ANCHOR)
     anchor_times: list[float] = []
 
     def probe_anchor(tag: str) -> None:
         if anchor_spec is None:
             return
-        wall = time_query(anchor_spec)
+        wall, _ = time_query(spark, sf_dir, anchor_spec, reps)
         anchor_times.append(wall)
         print(f"[bench] sentinel {tag}: {wall:.3f}s", file=sys.stderr)
 
@@ -327,14 +349,15 @@ def main() -> None:
     # should measure the BOX, not leftover warmup (a slow START with a
     # fast END is warmup; the round-6 contamination was the reverse).
     if anchor_spec is not None:
-        prev = run_once(anchor_spec)
+        prev = run_once(spark, sf_dir, anchor_spec)
         for _ in range(4):
-            cur = run_once(anchor_spec)
+            cur = run_once(spark, sf_dir, anchor_spec)
             if cur >= prev * 0.85:
                 break
             prev = cur
     probe_anchor("start")
     timings: dict[str, float] = {}
+    compiles: dict[str, list[int]] = {}
     total = 0.0
     aborted = False
     names = list(QUERIES)
@@ -376,10 +399,11 @@ def main() -> None:
                       f"{SENTINEL_MAX_SPREAD}x", file=sys.stderr)
                 aborted = True
                 break
-        best = time_query(QUERIES[name])
+        best, compiles[name] = time_query(spark, sf_dir, QUERIES[name], reps)
         timings[name] = round(best, 3)
         total += best
-        print(f"[bench] {name}: {timings[name]}s", file=sys.stderr)
+        print(f"[bench] {name}: {timings[name]}s, codegen compiles "
+              f"{compiles[name]}", file=sys.stderr)
     if not aborted:
         probe_anchor("end")
 
@@ -403,7 +427,8 @@ def main() -> None:
         run_record = {"sf": sf, "reps": reps,
                       "artifact_cache": artifact_state,
                       "sentinel_spread": spread,
-                      "total_sec": round(total, 3), "queries": timings}
+                      "total_sec": round(total, 3), "queries": timings,
+                      "codegen_compiles": codegen_layer(compiles)}
         if slice_spec:
             run_record["slice"] = slice_spec
         if verdict.warmup_carveout:

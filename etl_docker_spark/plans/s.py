@@ -18,6 +18,7 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_docker_spark.catalog import table_schema
 from etl_docker_spark.plans._util import (_D64_DOMAIN, _D67_LGK, _DAY_US,
                                           _HLL_ALPHA_NUM, _HLL_M, _HLL_RHO_MAX,
                                           day_file_stream, dec, dsum,
@@ -44,18 +45,17 @@ def _events_stream(spark: SparkSession, sf: str):
     from pyspark.sql import types as T
 
     path = f"{sf}/events.parquet"
-    is_dir = os.path.isdir(path)
-    # schema from a batch probe (footer read), not hardcoded: the driver's
-    # testdata stores ts as int64-nanos, generated corpora may store a real
-    # timestamp — the stream must mirror whichever this corpus has
-    if is_dir:
-        probe = spark.read.parquet(path)
-        stream = spark.readStream.schema(probe.schema).parquet(path)
+    # schema from the catalog's batch probe (footer read, once per table
+    # path), not hardcoded: the driver's testdata stores ts as int64-nanos,
+    # generated corpora may store a real timestamp — the stream must mirror
+    # whichever this corpus has
+    schema = table_schema(spark, sf, "events")
+    if os.path.isdir(path):
+        stream = spark.readStream.schema(schema).parquet(path)
     else:
-        probe = spark.read.option("pathGlobFilter", "events.parquet").parquet(sf)
-        stream = (spark.readStream.schema(probe.schema)
+        stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "events.parquet").parquet(sf))
-    ts_type = probe.schema["ts"].dataType
+    ts_type = schema["ts"].dataType
     if isinstance(ts_type, T.LongType):
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif isinstance(ts_type, T.TimestampNTZType):

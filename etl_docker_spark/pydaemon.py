@@ -31,6 +31,33 @@ import sys
 
 # The archives Spark puts on the worker PYTHONPATH.
 _SPARK_ARCHIVE = re.compile(r"pyspark\.zip|py4j-.*\.zip|spark-core.*\.jar")
+_VERSION = re.compile(r"""__version__[^=\n]*=\s*['"]([^'"]+)['"]""")
+
+
+def _version_of(source: str) -> str | None:
+    """The `__version__` string a pyspark/version.py source assigns."""
+    m = _VERSION.search(source)
+    return m.group(1) if m else None
+
+
+def _archives_match_installed(spec, archives: list[str]) -> bool:
+    """True when the installed pyspark (`spec`) has a version and every
+    pyspark.zip among `archives` carries that same version in its
+    pyspark/version.py. An unreadable archive counts as a mismatch."""
+    import zipfile
+    try:
+        with open(os.path.join(os.path.dirname(spec.origin),
+                               "version.py")) as fh:
+            installed = _version_of(fh.read())
+        for p in archives:
+            if os.path.basename(p) == "pyspark.zip":
+                with zipfile.ZipFile(p) as z:
+                    src = z.read("pyspark/version.py").decode()
+                if _version_of(src) != installed:
+                    return False
+    except (OSError, KeyError, UnicodeDecodeError, zipfile.BadZipFile):
+        return False
+    return installed is not None
 
 
 def _strip_zip_sys_paths() -> None:
@@ -45,8 +72,10 @@ def _strip_zip_sys_paths() -> None:
     the majority of all worker CPU — spent re-parsing pyspark.zip's
     directory, per task, forever. Directory-based finders invalidate in
     O(1); the installed pyspark/py4j are the same release the driver
-    itself runs. Any other archive (a user's `--py-files` deps.zip) may
-    hold modules found nowhere else, so it stays."""
+    itself runs, which is checked: when the installed pyspark's version
+    differs from the one in pyspark.zip, every archive stays. Any other
+    archive (a user's `--py-files` deps.zip) may hold modules found
+    nowhere else, so it stays."""
     import importlib.util
     removed: list[tuple[int, str]] = []
     for i in range(len(sys.path) - 1, -1, -1):
@@ -58,10 +87,14 @@ def _strip_zip_sys_paths() -> None:
             removed.append((i, p))
             del sys.path[i]
             sys.path_importer_cache.pop(p, None)
-    if removed and (importlib.util.find_spec("pyspark") is None
-                    or importlib.util.find_spec("py4j") is None):
-        # no installed pyspark/py4j distribution — archives are load-
-        # bearing on this deployment, restore them all untouched
+    if not removed:
+        return
+    spec = importlib.util.find_spec("pyspark")
+    if (spec is None or importlib.util.find_spec("py4j") is None
+            or not _archives_match_installed(spec, [p for _, p in removed])):
+        # no installed pyspark/py4j distribution, or one of another
+        # release — archives are load-bearing on this deployment,
+        # restore them all untouched
         for i, p in sorted(removed):
             sys.path.insert(i, p)
 

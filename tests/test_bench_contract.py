@@ -233,3 +233,31 @@ def test_driver_heap_default_fits_the_host(monkeypatch):
     assert bench.default_driver_mem() == "7g"
     monkeypatch.setattr(bench, "mem_total_bytes", lambda: 128 * 2 ** 30)
     assert bench.default_driver_mem() == "24g"
+
+
+def test_run_file_records_codegen_compiles_next_to_walls():
+    """Each query's codegen layer: classes compiled in its cold rep and
+    in each warm rep, keyed like the walls; merge tooling still reads
+    the walls of such a run."""
+    from tools.merge_bench import merge
+
+    layer = bench.codegen_layer({"q01": [17, 0, 0], "d71": [40, 2, 0]})
+    assert layer == {"q01": {"cold": 17, "warm": [0, 0]},
+                     "d71": {"cold": 40, "warm": [2, 0]}}
+    run = dict(_run(2.0, {"q01": 1.0, "d71": 1.0}), codegen_compiles=layer)
+    assert merge([run])["queries"] == {"q01": 1.0, "d71": 1.0}
+
+
+def test_time_query_counts_compiles_per_rep(spark):
+    """A plan no earlier query generated compiles in its cold rep and,
+    reused from the codegen cache, in no warm rep."""
+    class Spec:
+        @staticmethod
+        def builder(spark, sf_dir):
+            return spark.range(1).selectExpr("id * 7919 + 104729 AS v")
+
+    wall, compiles = bench.time_query(spark, "", Spec, 3)
+    assert wall > 0
+    assert len(compiles) == 3
+    assert compiles[0] >= 1
+    assert compiles[1:] == [0, 0]

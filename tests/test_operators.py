@@ -3,6 +3,7 @@ skyline and the graph operators (connected components)."""
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pandas as pd
@@ -202,3 +203,86 @@ def test_two_phase_cc_long_chain(spark):
     lab = connected_components_two_phase(df)
     got = {(r.node, r.label) for r in lab.collect()}
     assert got == {(i, 0) for i in range(601)}
+
+
+def _w(a: int, b: int) -> int:
+    """The symmetric md5 edge weight g07 uses, in Python."""
+    lo, hi = min(a, b), max(a, b)
+    h = int(hashlib.md5(f"{lo}_{hi}".encode()).hexdigest()[:8], 16)
+    return h % 99 + 1
+
+
+def _py_bounded_sssp(edges, seeds, max_hops):
+    """Brute-force: min cost over all paths of 1..max_hops edges, by
+    exhaustive path extension (exponential, fine at test size)."""
+    adj = {}
+    for a, b, w in edges:
+        adj.setdefault(a, []).append((b, w))
+    out = {}
+    for s in seeds:
+        paths = {(s,): 0}
+        for _ in range(max_hops):
+            nxt = {}
+            for p, c in paths.items():
+                for v, w in adj.get(p[-1], []):
+                    nxt[p + (v,)] = c + w
+            for p, c in nxt.items():
+                key = (s, p[-1])
+                if c < out.get(key, float("inf")):
+                    out[key] = c
+            paths = nxt
+    return out
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_bounded_sssp_matches_bruteforce(spark, seed):
+    """bounded_sssp == exhaustive path enumeration with the same hop cap
+    on random directed weighted graphs (including unreachable nodes and
+    cheaper-longer-path cases the hop cap must exclude)."""
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.operators.graph import bounded_sssp
+
+    rng = random.Random(seed)
+    n = 40
+    edges = set()
+    while len(edges) < 120:
+        a, b = rng.randrange(n), rng.randrange(n)
+        if a != b:
+            edges.add((a, b))
+    rows = [(a, b, _w(a, b)) for a, b in sorted(edges)]
+    hops = 3
+
+    expected = _py_bounded_sssp(rows, [0, 1, 2], hops)
+    df = spark.createDataFrame(rows, "a long, b long, w long").repartition(4)
+    got = {(r.seed, r.node): r.cost
+           for r in bounded_sssp(df, F.col("a") < 3, hops).collect()}
+    assert got == expected
+
+
+def test_bounded_sssp_early_exit(spark):
+    """On a graph that converges in one round, extra hop budget changes
+    nothing (the early-exit path) and costs match by hand."""
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.operators.graph import bounded_sssp
+
+    rows = [(0, 1, 5), (1, 2, 7)]
+    df = spark.createDataFrame(rows, "a long, b long, w long")
+    got = {(r.seed, r.node): r.cost
+           for r in bounded_sssp(df, F.col("a") == 0, 10).collect()}
+    assert got == {(0, 1): 5, (0, 2): 12}
+
+
+def test_bounded_sssp_rejects_nonpositive_hops(spark):
+    """max_hops < 1 cannot be honored (the initial frame is already the
+    1-hop relaxation) and must raise instead of silently returning it."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.operators.graph import bounded_sssp
+
+    df = spark.createDataFrame([(0, 1, 5)], "a long, b long, w long")
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="max_hops"):
+            bounded_sssp(df, F.col("a") == 0, bad)

@@ -332,3 +332,69 @@ def test_unicode_ci_ai_equates_accent_and_case(spark):
         ('búíldíng'),('BUILDING'),('building'),('BúíldíNG') AS t(x)
     """).collect()[0][0]
     assert n == 1
+
+
+def test_q58_tolerance_actually_binds(spark):
+    """The within_tol column is a real comparison, not a constant: at the
+    smoke SF every group passes AND the exact counts are genuine."""
+    from etl_docker_spark.plans.q import q58_approx_distinct
+
+    rows = q58_approx_distinct(spark, SF_SMOKE).collect()
+    assert len(rows) > 0
+    assert all(r["within_tol"] for r in rows)
+    assert all(r["exact_users"] > 0 for r in rows)
+
+
+def test_q59_bounds_bracket_exact_percentile(spark):
+    from etl_docker_spark.plans.q import q59_approx_percentile
+
+    rows = q59_approx_percentile(spark, SF_SMOKE).collect()
+    assert len(rows) > 0
+    for r in rows:
+        assert r["p50_ok"] and r["p90_ok"] and r["p99_ok"]
+
+
+def test_q92_installments_conserve_totals(spark):
+    """Per-order installment schedules sum exactly to the order's cents
+    (the no-lost-cent contract), checked via the gated aggregate: the
+    sum over installment buckets equals the corpus-wide total cents."""
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.plans._util import t
+    from etl_docker_spark.plans.q import q92_sql_table_function
+
+    out = q92_sql_table_function(spark, SF_SMOKE)
+    got = out.agg(F.sum("total_cents").alias("s")).first().s
+    want = (t(spark, SF_SMOKE, "orders")
+            .select(F.expr(
+                "CAST(CAST(o_totalprice AS DECIMAL(12,4)) * 100 AS BIGINT)")
+                .alias("c"))
+            .agg(F.sum("c").alias("s")).first().s)
+    assert got == want
+    # every order contributes to installment 1
+    n1 = out.filter("inst = 1").first().n_orders
+    assert n1 == t(spark, SF_SMOKE, "orders").count()
+
+
+def test_q93_interval_path_equals_integer_path(spark):
+    """Spark's interval-typed SUM/extract must equal plain integer epoch
+    arithmetic computed in the same engine (the cross-STYLE agreement
+    the oracle then pins cross-engine)."""
+    from pyspark.sql import functions as F
+
+    from etl_docker_spark.plans._util import t
+    from etl_docker_spark.plans.q import q93_interval_battery
+
+    got = {r.o_orderpriority: (r.total_gap_secs, r.max_gap_secs)
+           for r in q93_interval_battery(spark, SF_SMOKE).collect()}
+    li = t(spark, SF_SMOKE, "lineitem").select("l_orderkey", "l_shipdate")
+    orders = t(spark, SF_SMOKE, "orders")
+    want = {r.o_orderpriority: (r.tot, r.mx)
+            for r in li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .groupBy("o_orderpriority")
+            .agg(F.sum(F.unix_timestamp("l_shipdate")
+                       - F.unix_timestamp("o_orderdate")).alias("tot"),
+                 F.max(F.unix_timestamp("l_shipdate")
+                       - F.unix_timestamp("o_orderdate")).alias("mx"))
+            .collect()}
+    assert got == want

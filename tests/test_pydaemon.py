@@ -78,6 +78,33 @@ def test_daemon_keeps_a_user_archive_importable(tmp_path):
     _import_daemon(archives + [deps, repo], code)
 
 
+def test_daemon_keeps_archives_of_another_pyspark_release(tmp_path):
+    """pyspark.zip is stripped only when it is the installed release: a
+    copy whose pyspark/version.py names another version keeps every
+    Spark archive on sys.path, so the workers import from the archives."""
+    import zipfile
+
+    archives = _spark_archives()
+    fake = str(tmp_path / "pyspark.zip")
+    with zipfile.ZipFile(archives[0]) as src, \
+            zipfile.ZipFile(fake, "w") as dst:
+        for item in src.infolist():
+            data = src.read(item)
+            if item.filename == "pyspark/version.py":
+                data = b'__version__: str = "0.0.1"\n'
+            dst.writestr(item, data)
+    archives[0] = fake
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        f"assert set({archives!r}) <= set(sys.path), sys.path\n"
+        "import pyspark\n"
+        f"assert pyspark.__file__.startswith({fake!r}), pyspark.__file__\n"
+        "print('DAEMON_IMPORT_OK')\n"
+    )
+    _import_daemon(archives + [repo], code)
+
+
 def test_session_wires_daemon_and_pythonpath(spark):
     assert spark.conf.get("spark.python.daemon.module") == \
         "etl_docker_spark.pydaemon"
