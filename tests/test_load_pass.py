@@ -284,25 +284,3 @@ def test_incomplete_next_is_dropped(spark, tmp_path, old_moved_aside):
     assert sorted(map(tuple, read_table(spark, path).collect())) == [(1, "a")]
     assert _leftovers(tmp_path) == []
     assert read_table(spark, str(tmp_path / "absent")) is None
-
-
-def test_route_rows_to_quarantine_splits_and_audits(spark, tmp_path):
-    from etl_docker_spark.sinks.writers import route_rows_to_quarantine
-
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 7 == 0).alias("bad_flag"))
-    qdir, log = str(tmp_path / "quar"), str(tmp_path / "audit")
-    clean = route_rows_to_quarantine(
-        df, ~F.col("bad_flag"), qdir, log_path=log, load_table="probe")
-
-    clean_ids = {r["id"] for r in clean.collect()}
-    quar_ids = {r["id"] for r in spark.read.parquet(qdir).collect()}
-    assert clean_ids == {i for i in range(100) if i % 7 != 0}
-    assert quar_ids == {i for i in range(100) if i % 7 == 0}
-    assert clean_ids.isdisjoint(quar_ids)
-    assert len(clean_ids) + len(quar_ids) == 100
-
-    audit = spark.read.parquet(log).collect()
-    assert len(audit) == 1
-    assert audit[0]["load_table"] == "probe"
-    assert audit[0]["total_records"] == len(quar_ids)

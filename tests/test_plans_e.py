@@ -1,38 +1,10 @@
-"""Embedding-search (e family) query tests: invariants of e17-e24
-beyond the value gate (cell rebalance, tombstones, the binary-signature
-primitive and the lossless rerank stages of e23/e24)."""
+"""Embedding-search (e family) query tests: invariants of e23/e24
+beyond the value gate (the binary-signature primitive and the lossless
+rerank stages)."""
 
 from __future__ import annotations
 
 from tests.conftest import SF_SMOKE
-
-
-def test_e17_rebalance_engages_both_branches(spark):
-    """The rebalance cap must sit between gate-corpus min and max cluster
-    occupancy so the gate exercises split AND keep paths (the guarantee
-    the e17 docstring claims)."""
-    from etl_docker_spark.plans.e import e17_cell_rebalance
-
-    rows = e17_cell_rebalance(spark, SF_SMOKE).collect()
-    assert any(r["was_split"] for r in rows)
-    assert any(not r["was_split"] for r in rows)
-    # conservation: every vector lands in exactly one serving cell
-    from etl_docker_spark.catalog import load_table
-    n_vecs = load_table(spark, SF_SMOKE, "embeddings").count()
-    assert sum(r["n_vectors"] for r in rows) == n_vecs
-
-
-def test_e18_tombstones_never_served(spark):
-    from etl_docker_spark.plans.e import e18_tombstone_search
-
-    rows = e18_tombstone_search(spark, SF_SMOKE).collect()
-    assert len(rows) > 0
-    assert all(r["neighbor_id"] % 13 != 0 for r in rows)
-    # every query still gets a full top-k (rank recomputed, not filtered)
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r["rank"])
-    assert all(sorted(v) == list(range(1, len(v) + 1)) for v in by_q.values())
 
 
 def test_binary_signature_matches_python(spark):

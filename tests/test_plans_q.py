@@ -334,26 +334,6 @@ def test_unicode_ci_ai_equates_accent_and_case(spark):
     assert n == 1
 
 
-def test_q58_tolerance_actually_binds(spark):
-    """The within_tol column is a real comparison, not a constant: at the
-    smoke SF every group passes AND the exact counts are genuine."""
-    from etl_docker_spark.plans.q import q58_approx_distinct
-
-    rows = q58_approx_distinct(spark, SF_SMOKE).collect()
-    assert len(rows) > 0
-    assert all(r["within_tol"] for r in rows)
-    assert all(r["exact_users"] > 0 for r in rows)
-
-
-def test_q59_bounds_bracket_exact_percentile(spark):
-    from etl_docker_spark.plans.q import q59_approx_percentile
-
-    rows = q59_approx_percentile(spark, SF_SMOKE).collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r["p50_ok"] and r["p90_ok"] and r["p99_ok"]
-
-
 def test_q92_installments_conserve_totals(spark):
     """Per-order installment schedules sum exactly to the order's cents
     (the no-lost-cent contract), checked via the gated aggregate: the
